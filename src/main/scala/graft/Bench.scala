@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 /** Driver-run benchmark: every declared query at SPARK_GRAFT_SF_DIR, one
   * JSON line on stdout (driver contract).
   *
-  * Each query is forced through the noop sink so the FULL plan executes
-  * (a bare count() would let Catalyst prune the projected columns and
-  * under-report scan/compute cost). One warmup query amortizes JVM/codegen
-  * startup out of the first measurement.
+  * Each query runs through [[force]], after one [[warmUp]].
   *
   * Per query the MEDIAN of SPARK_GRAFT_REPS (default 3) runs is reported:
   * single-shot timings on a shared host carry a documented ±40% noise band
@@ -20,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   * the suite. `total` = sum of query medians + the stage build.
   *
   * Next to each wall-clock median, `task_sec` carries the summed executor
-  * task run time (SparkListener onTaskEnd, executorRunTime) of the SAME
+  * task run time (graft.obs.QueryProfile, executorRunTime) of the SAME
   * rep whose wall-clock was the median. Wall-clock on a shared host moves
   * with external load; summed task time is work actually executed —
   * round-over-round comparisons should prefer it (`task_total` at the
@@ -28,87 +27,73 @@ import org.apache.spark.sql.SparkSession
   * include their source-write/read-back scaffolding in both numbers.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    // Rehearsal knob: on a real cluster shuffle partitions grow with the
-    // data (the fixed-32 default models the driver's local[32] gate, not a
-    // 100 TB deployment). The sf10 scale runs use this to measure the
-    // partition-scaling law directly — same code, partitions sized to SF.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // perf harness: no hash oracle runs here, and at rehearsal SFs
-      // (sf1/sf10) aggregate sums legitimately cross the 2^53·1e-6
-      // terminal-DOUBLE bound the correctness gate enforces — the guard
-      // belongs to Verify, not to throughput measurement
-      .config(queries.Protocol.GuardConfKey, "off")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** One entry's median rep: (wall, task, gc) seconds; -1 = failed. */
+  type Timing = (Double, Double, Double)
 
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+  /** Stdout is read back from a ~2,000-char tail. The delta line and the
+    * compact totals line together stay within this many chars, so the
+    * totals line, printed last, always survives in that tail whole.
+    */
+  val TailBudget = 1900
 
-    // warmup: JIT + codegen + parquet footers + shuffle/sort/exchange paths
+  /** Forces the FULL plan through the noop sink (a bare count() would let
+    * Catalyst prune the projected columns and under-report scan/compute
+    * cost).
+    */
+  def force(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** JIT + codegen + parquet footers + shuffle/sort/exchange paths, so the
+    * first measurement does not pay JVM/codegen startup.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
     try {
       import org.apache.spark.sql.functions._
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet").limit(10000)
       force(li.groupBy("l_returnflag").agg(sum("l_quantity")).orderBy("l_returnflag"))
     } catch { case _: Throwable => }
 
-    // summed executor task run time, attributed per run by snapshotting
-    // around it (queries run sequentially; the bus is drained at each edge)
-    val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    // jvmGCTime attribution: executorRunTime INCLUDES time the task spent
-    // blocked in GC, so a heap-pressured suite inflates task_sec without
-    // any extra work executed. gc_sec separates the two — a query whose
-    // full-suite task_sec is 3× its isolated run but whose gc share grew
-    // the same 3× is suffering the harness heap, not a plan regression
-    // (exactly the r8→r9 q164/q215 ambiguity this field was added for).
-    val gcMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) { taskMs.addAndGet(m.executorRunTime); gcMs.addAndGet(m.jvmGCTime) }
-      }
-    })
-    def drain(): Unit =
-      try org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark, 30000)
-      catch { case _: Throwable => }
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+    // Rehearsal knob: on a real cluster shuffle partitions grow with the
+    // data (the fixed-32 default models the driver's local[32] gate, not a
+    // 100 TB deployment). The sf10 scale runs use this to measure the
+    // partition-scaling law directly — same code, partitions sized to SF.
+    // The terminal guard is off: no hash oracle runs here, and at rehearsal
+    // SFs (sf1/sf10) aggregate sums legitimately cross the 2^53·1e-6
+    // terminal-DOUBLE bound the correctness gate enforces — the guard
+    // belongs to Verify, not to throughput measurement.
+    val spark = obs.Sessions.local(cpus, guard = false,
+      shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt))
+    warmUp(spark, sfDir)
 
-    def timed(run: () => Unit): (Double, Double, Double) = {
-      drain()
-      val task0 = taskMs.get
-      val gc0 = gcMs.get
-      val t0 = System.nanoTime()
-      val ok = try { run(); true } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] failed: ${e.getMessage}"); false
+    // Queries run sequentially, so each run's profile is its own work.
+    // gc_sec separates jvmGCTime out of task_sec: executorRunTime INCLUDES
+    // time a task spent blocked in GC, so a heap-pressured suite inflates
+    // task_sec without any extra work executed (the r8→r9 q164/q215
+    // ambiguity this field was added for).
+    def timed(run: () => Unit): Timing = {
+      val (ok, p) = obs.QueryProfile.during(spark, quietWindow = false) {
+        try { run(); true } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] failed: ${e.getMessage}"); false
+        }
       }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      drain()
-      val taskSec = (taskMs.get - task0) / 1e3
-      val gcSec = (gcMs.get - gc0) / 1e3
       // after timing: unpersist cost isn't the query's; the GC lets the
       // ContextCleaner reap dead broadcasts/shuffles between runs (their
       // cleanup is reference-triggered and otherwise lands inside a later
       // run's measurement)
       spark.catalog.clearCache()
       System.gc()
-      if (ok) (elapsed, taskSec, gcSec) else (-1.0, -1.0, -1.0)
+      if (ok) (p.wallSec, p.taskSec, p.gcSec) else (-1.0, -1.0, -1.0)
     }
     // a failed run reports -1, never a fast fake success — the baseline
     // gate must see breakage, not a speedup; one failure poisons the median.
     // task_sec/gc_sec report the SAME rep as the wall-clock median, so the
     // numbers describe one run.
-    def median(run: () => Unit): (Double, Double, Double) = {
+    def median(run: () => Unit): Timing = {
       val ts = (1 to reps).map(_ => timed(run))
       if (ts.exists(_._1 < 0)) (-1.0, -1.0, -1.0)
       else ts.sortBy(_._1).apply(ts.length / 2)
@@ -134,101 +119,108 @@ object Bench {
       .map { case (name, fn) =>
         name -> median(() => force(fn(spark, sfDir)))
       } :+ ("shared_stage_build" -> stageBuild) :+ ("copair_stage_build" -> copairBuild)
-    val qs = results.map { case (k, (w, _, _)) => "\"" + k + "\":" + w }
-      .mkString("{", ",", "}")
-    val task = results.map { case (k, (_, t, _)) => "\"" + k + "\":" + t }
-      .mkString("{", ",", "}")
-    val gc = results.map { case (k, (_, _, g)) => "\"" + k + "\":" + g }
-      .mkString("{", ",", "}")
+    def perQuery(f: Timing => Double) =
+      JObject(results.map { case (k, t) => k -> JDouble(f(t)) }.toList)
     val total = results.map(_._2._1).filter(_ >= 0).sum
-    val taskTotal = results.map(_._2._2).filter(_ >= 0).sum
-    val gcTotal = results.map(_._2._3).filter(_ >= 0).sum
-    // `queries` (driver contract) = WALL seconds; the same map is repeated
-    // under the explicit `wall_sec` key so a truncated or reordered tail can
-    // never be mistaken for the task-time map (the r4/r5 VERDICT caught
-    // exactly that unit mixup) — every per-query map in this line is
-    // labeled with its unit in its own key.
     // self-describing run config: the r9 scale rehearsals produced bench
     // files whose partition count and state-store provider had to be
     // reconstructed from shell history — record them in the line itself
     val provider = spark.conf
       .get("spark.sql.streaming.stateStore.providerClass", "")
       .split("\\.").lastOption.filter(_.nonEmpty).getOrElse("HDFSBackedStateStoreProvider")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""wall_total":$total,"task_total":$taskTotal,"gc_total":$gcTotal,""" +
-      s""""cpus":$cpus,"shuffle_partitions":$shufflePartitions,""" +
-      s""""state_provider":"$provider",""" +
-      s""""wall_sec":$qs,"task_sec":$task,"gc_sec":$gc,"queries":$qs,""" +
-      s""""sf":"$sfDir","reps":$reps}"""
-    println(full)
+    // `queries` (driver contract) = WALL seconds; the same map is repeated
+    // under the explicit `wall_sec` key so a truncated or reordered tail can
+    // never be mistaken for the task-time map (the r4/r5 VERDICT caught
+    // exactly that unit mixup) — every per-query map in this line is
+    // labeled with its unit in its own key.
+    val full = compact(render(JObject(
+      "metric" -> JString("total"), "value" -> JDouble(total), "unit" -> JString("sec"),
+      "wall_total" -> JDouble(total),
+      "task_total" -> JDouble(results.map(_._2._2).filter(_ >= 0).sum),
+      "gc_total" -> JDouble(results.map(_._2._3).filter(_ >= 0).sum),
+      "cpus" -> JInt(cpus),
+      "shuffle_partitions" -> JInt(spark.conf.get("spark.sql.shuffle.partitions").toInt),
+      "state_provider" -> JString(provider),
+      "wall_sec" -> perQuery(_._1), "task_sec" -> perQuery(_._2), "gc_sec" -> perQuery(_._3),
+      "queries" -> perQuery(_._1),
+      "sf" -> JString(sfDir), "reps" -> JInt(reps))))
     // The driver captures only a ~2000-char stdout TAIL: the full per-query
     // line (~25 KB for 230 queries) gets its head truncated there and can
     // never re-parse (BENCH_r05/r06 both recorded "parsed": null). So the
-    // full line also lands in out/bench.json deterministically, and the
-    // LAST thing printed is a compact summary line that fits the tail
-    // window whole — totals plus the slowest queries (the ones a baseline
-    // comparison actually reads; the complete map is in the file).
-    // BEFORE overwriting bench.json, load the previous run's per-query map:
-    // the closing "delta" line (r14, VERDICT item 2) reports round-over-round
-    // movers against it — the only per-query signal that can ever fit the
-    // driver's tail window whole.
-    val prevWall: Map[String, Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("out/bench.json")), "UTF-8")
-        val m = """"wall_sec":\{([^}]*)\}""".r.findFirstMatchIn(txt).map(_.group(1))
-        m.map(_.split(",").flatMap { kv =>
-          kv.split(":") match {
-            case Array(k, v) => Some(k.stripPrefix("\"").stripSuffix("\"") -> v.toDouble)
-            case _ => None
-          }
-        }.toMap).getOrElse(Map.empty)
-      } catch { case _: Throwable => Map.empty }
-    new java.io.File("out").mkdirs()
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("out/bench.json"), full + "\n")
-    val slowest = results.filter(_._2._1 >= 0).sortBy(-_._2._1).take(8)
-      .map { case (k, (w, _, _)) => "\"" + k + "\":" + math.round(w * 1000) / 1000.0 }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""wall_total":$total,"task_total":$taskTotal,""" +
-      s""""n_queries":${results.length},"queries":$slowest,""" +
-      s""""queries_truncated_to_slowest":8,""" +
-      s""""detail":"out/bench.json","sf":"$sfDir","reps":$reps}""")
-    // LAST line: per-query MOVERS vs the previous out/bench.json — queries
-    // whose wall changed >10% AND >0.15 s (absolute floor keeps planning
-    // noise on sub-second entries out), largest absolute delta first,
-    // truncated so the line always fits a 2 KB tail window. Values are
-    // [prev, now] rounded to ms. Totals ride along so the line alone
-    // supports a round-over-round verdict even when nothing moved.
-    if (prevWall.nonEmpty) {
-      def r3(x: Double) = math.round(x * 1000) / 1000.0
-      val movers = results.filter(_._2._1 >= 0).flatMap { case (k, (w, _, _)) =>
-        prevWall.get(k).filter(p => p > 0 &&
-          math.abs(w - p) / p > 0.10 && math.abs(w - p) > 0.15)
-          .map(p => (k, p, w))
-      }.sortBy { case (_, p, w) => -math.abs(w - p) }
-      val prevTotal = r3(prevWall.values.filter(_ >= 0).sum)
-      val head = s"""{"metric":"delta","unit":"sec","prev_total":$prevTotal,""" +
-        s""""total":${r3(total)},"n_movers":${movers.length},"movers":{"""
-      val tail2 = s"""},"sf":"$sfDir"}"""
-      val budget = 1900 - head.length - tail2.length
-      val items = new StringBuilder
-      var used = 0
-      var shown = 0
-      movers.foreach { case (k, p, w) =>
-        val item = "\"" + k + "\":[" + r3(p) + "," + r3(w) + "]"
-        val need = item.length + (if (shown > 0) 1 else 0)
-        if (used + need <= budget) {
-          if (shown > 0) items.append(",")
-          items.append(item); used += need; shown += 1
-        }
-      }
-      println(head + items.toString + tail2)
-    }
+    // full line also lands in out/bench.json, and the tail is the movers
+    // line vs the previous out/bench.json (read BEFORE it is overwritten)
+    // followed by the compact totals line.
+    val prevWall = previousWall(BenchFile)
+    java.nio.file.Files.createDirectories(BenchFile.getParent)
+    java.nio.file.Files.writeString(BenchFile, full + "\n")
+    println(full)
+    tailLines(results, prevWall, sfDir, reps).foreach(println)
     // Providers first, session second: a still-loaded RocksDB provider
     // SIGSEGVs in its JNI log callback if the JVM exits under it (see
     // GraftSqlBridge.stopStateStores).
     org.apache.spark.sql.GraftSqlBridge.stopStateStores()
     spark.stop()
+  }
+
+  private val BenchFile = java.nio.file.Paths.get("out/bench.json")
+
+  /** The `wall_sec` map of a bench.json line; empty if there is none. */
+  def previousWall(path: java.nio.file.Path): Map[String, Double] =
+    try {
+      parse(java.nio.file.Files.readString(path)) \ "wall_sec" match {
+        case JObject(fs) => fs.collect {
+          case (k, JDouble(v)) => k -> v
+          case (k, JInt(v)) => k -> v.toDouble
+        }.toMap
+        case _ => Map.empty
+      }
+    } catch { case _: Exception => Map.empty }
+
+  /** The stdout tail, in print order.
+    *
+    * First (only when there is a previous run) the `{"metric":"delta"}`
+    * movers line: entries whose wall changed >10% AND >0.15 s (the absolute
+    * floor keeps planning noise on sub-second entries out), largest
+    * absolute delta first, as `[prev, now]` rounded to ms, with both totals
+    * so it supports a round-over-round verdict even when nothing moved.
+    * LAST the compact totals line: totals plus the slowest 8 entries (the
+    * complete map is in out/bench.json). Movers are dropped until both
+    * lines fit [[TailBudget]].
+    */
+  def tailLines(results: Seq[(String, Timing)], prevWall: Map[String, Double],
+      sfDir: String, reps: Int): Seq[String] = {
+    def r3(x: Double) = JDouble(math.round(x * 1000) / 1000.0)
+    val ok = results.filter(_._2._1 >= 0)
+    val total = ok.map(_._2._1).sum
+    val slowest = ok.sortBy(-_._2._1).take(8).map { case (k, t) => k -> r3(t._1) }
+    val totals = compact(render(JObject(
+      "metric" -> JString("total"), "value" -> JDouble(total), "unit" -> JString("sec"),
+      "wall_total" -> JDouble(total),
+      "task_total" -> JDouble(results.map(_._2._2).filter(_ >= 0).sum),
+      "n_queries" -> JInt(results.length), "queries" -> JObject(slowest.toList),
+      "queries_truncated_to_slowest" -> JInt(8),
+      "detail" -> JString("out/bench.json"), "sf" -> JString(sfDir), "reps" -> JInt(reps))))
+    if (prevWall.isEmpty) Seq(totals)
+    else {
+      val movers = ok.flatMap { case (k, t) =>
+        prevWall.get(k).filter(p => p > 0 &&
+          math.abs(t._1 - p) / p > 0.10 && math.abs(t._1 - p) > 0.15)
+          .map(p => (k, p, t._1))
+      }.sortBy { case (_, p, w) => -math.abs(w - p) }
+      def delta(shown: List[JField]) = compact(render(JObject(
+        "metric" -> JString("delta"), "unit" -> JString("sec"),
+        "prev_total" -> r3(prevWall.values.filter(_ >= 0).sum), "total" -> r3(total),
+        "n_movers" -> JInt(movers.length), "movers" -> JObject(shown), "sf" -> JString(sfDir))))
+      val budget = TailBudget - totals.length - 1 // the newline between the two
+      var used = delta(Nil).length
+      val shown = List.newBuilder[JField]
+      var first = true
+      movers.foreach { case (k, p, w) =>
+        val item: JField = k -> JArray(List(r3(p), r3(w)))
+        val need = compact(render(JObject(item))).length - 2 + (if (first) 0 else 1)
+        if (used + need <= budget) { shown += item; used += need; first = false }
+      }
+      Seq(delta(shown.result()), totals)
+    }
   }
 }

@@ -173,7 +173,7 @@ object AnnIvf {
       }
       .start()
 
-  import graft.streaming.BucketedStore
+  import graft.streaming.{BucketedStore, Concurrently}
   import graft.streaming.BucketedStore.StoreSpec
 
   /** StoreSpec of the dir-based inverted-list store (bucketed by cluster —
@@ -229,9 +229,10 @@ object AnnIvf {
     try {
       // materialize the shared batch frame ONCE, then overlap the two
       // order-independent table appends as concurrent driver jobs
-      // (guide §2.6; appendBatch is conf-free so they cannot race)
+      // (guide §2.6; appendBatch is conf-free: dynamic overwrite runs in a
+      // conf-frozen child session, so they cannot race)
       fresh.count()
-      BucketedStore.appendConcurrently(Seq(
+      Concurrently(spark)(Seq(
         () => BucketedStore.appendBatch(fresh, storeSpec(dir, width), batchId),
         () => BucketedStore.appendBatch(
           fresh.select(col("vec_id")).dropDuplicates("vec_id"),
@@ -331,10 +332,10 @@ object AnnIvf {
       // order-independent table appends (lists/ids/codes) as concurrent
       // driver jobs (guide §2.6) — replay converges from any crash point
       // between them exactly as it did when they ran back to back, and
-      // appendBatch is conf-free (static partition INSERT) so concurrent
-      // writes cannot race a session conf.
+      // appendBatch is conf-free (dynamic overwrite runs in a conf-frozen
+      // child session) so concurrent writes cannot race a session conf.
       fresh.count()
-      BucketedStore.appendConcurrently(Seq(
+      Concurrently(spark)(Seq(
         () => BucketedStore.appendBatch(fresh, storeSpec(dir, width), batchId),
         () => BucketedStore.appendBatch(
           fresh.select(col("vec_id")).dropDuplicates("vec_id"),

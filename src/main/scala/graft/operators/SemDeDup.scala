@@ -46,7 +46,7 @@ object SemDeDup {
   /** The CLUSTER-COUNT SCALE LAW behind the declared paths (r14, VERDICT
     * item 5): the in-cluster pair stage is Σ n_c·(n_c−1) ≈ n²/k rows — at
     * FIXED k that is a quadratic trap (measured 2,581 task-s at sf1,
-    * ~100× the sf0.1 gate, in tools/DiagSemDeDup). The paper's discipline
+    * ~100× the sf0.1 gate). The paper's discipline
     * (Abbas et al. 2023: k ∝ corpus — 11k clusters for LAION) keeps n/k,
     * the per-cluster population, constant, so pair work grows LINEARLY
     * per decade. `spark.graft.semdedup.docsPerCluster = d` wires that law:
@@ -57,8 +57,10 @@ object SemDeDup {
     * the pair-row bound it buys.
     */
   def clusterCount(docs: DataFrame, base: Int = 16): Int = {
-    val per = docs.sparkSession.conf
-      .get("spark.graft.semdedup.docsPerCluster", "0").toLong
+    val key = "spark.graft.semdedup.docsPerCluster"
+    val raw = docs.sparkSession.conf.get(key, "0")
+    val per = raw.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"$key must be an integer (docs per cluster), got '$raw'"))
     if (per <= 0L) base
     else {
       val n = docs.count()

@@ -322,33 +322,6 @@ object BucketedStore {
       c
     })
 
-  /** Run independent per-batch store writes as CONCURRENT driver jobs
-    * (guide §2.6): a multi-table sink's appends (IVF lists / ids / codes)
-    * are order-independent — replay converges from any crash point between
-    * them — so running them sequentially just serializes three small
-    * write jobs' scheduling+commit latencies back to back. Requires every
-    * task to be conf-mutation-free (which [[appendBatch]] now is — static
-    * partition INSERT, no session conf touched); any failure propagates
-    * (its cause, not the ExecutionException wrapper) so foreachBatch
-    * retries the batch exactly as the sequential shape did. Spark's
-    * scheduler interleaves the jobs' tasks; with 2-3 writes in flight the
-    * later jobs back-fill the earlier ones' straggler tails.
-    */
-  def appendConcurrently(writes: Seq[() => Unit]): Unit =
-    if (writes.size <= 1) writes.foreach(_())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(writes.size)
-      try {
-        val futs = writes.map(w => pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = w()
-        }))
-        futs.foreach { f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        }
-      } finally pool.shutdown()
-    }
-
   /** One-shot full (re)build: clear the dir, write everything as one
     * consolidated base partition. The write-then-swap is NOT atomic (this
     * is a build step, not a streaming append); rebuild-on-failure is the

@@ -86,7 +86,7 @@ object DupSpanIndex {
       // job's history read PRUNES the batch's own partition
       // (strictlyBefore's `_batch < batchId` partition conjunct), so the
       // concurrent rewrite of that partition is invisible to it.
-      BucketedStore.appendConcurrently(Seq(
+      Concurrently(spark)(Seq(
         () => Loader.writeBatchIdempotent(flagged, hitsDir, batchId),
         () => BucketedStore.appendBatch(
           g.select(col("gh"), col("doc_id"), col("pos")),

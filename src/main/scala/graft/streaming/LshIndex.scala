@@ -175,7 +175,7 @@ object LshIndex {
       // store append landing its partition mid-overlap is invisible to it.
       val fresh = bban.dropDuplicates("doc_id", "band_idx")
         .select(col("doc_id"), col("sig"), col("band_idx"), col("band"))
-      BucketedStore.appendConcurrently(Seq(
+      Concurrently(spark)(Seq(
         () => Loader.writeBatchIdempotent(pairs, pairsDir, batchId, markersDir),
         () => BucketedStore.appendBatch(fresh, storeSpec(storeDir, width), batchId),
         // id sidecar (batch-sized write): keeps the NEXT batch's re-arrival

@@ -78,8 +78,9 @@ object RetrievalIndex {
         .select(col("doc_id"), col("dl"), explode(col("tk")).as("t"))
         .groupBy(col("t"), col("doc_id"), col("dl")).agg(count(lit(1)).as("c"))
       // three independently replay-idempotent writes — overlap them as
-      // concurrent driver jobs (guide §2.6; all three are conf-free)
-      BucketedStore.appendConcurrently(Seq(
+      // concurrent driver jobs (guide §2.6; all three are conf-free: dynamic
+      // overwrite runs in a conf-frozen child session)
+      Concurrently(spark)(Seq(
         () => BucketedStore.appendBatch(postings, postingsSpec(dir, width), batchId),
         () => BucketedStore.appendBatch(
           fresh.select(col("doc_id")), idsSpec(dir, width), batchId),

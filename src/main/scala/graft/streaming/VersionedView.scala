@@ -230,7 +230,7 @@ object VersionedView {
               org.apache.spark.sql.functions.coalesce(col("_old_live"), z)).as("dn"),
             org.apache.spark.sql.functions.sum(col("_v") -
               org.apache.spark.sql.functions.coalesce(col("_old_v"), z)).as("dsum"))
-        val (aggStaged, stateStaged) = concurrently(
+        val Seq(aggStaged, stateStaged) = Concurrently(sp)(Seq(
           () => prepareVersion(sp, aggOut, batchId, {
             case None => deltas
             case Some(a) => graft.operators.MergeInto.merge(a, deltas, Seq("g"),
@@ -242,7 +242,7 @@ object VersionedView {
               checkCardinality = false)
           }),
           () => prepareVersion(sp, stateOut, batchId,
-            applyAppliedToState(batch, applied, keys)))
+            applyAppliedToState(batch, applied, keys))))
         // publish order is the replay invariant: agg FIRST, state second
         // (see the class doc) — only the POINTER SWAPS are ordered; the
         // heavy writes above ran concurrently (guide §2.6).
@@ -266,22 +266,6 @@ object VersionedView {
     case Some(c) => c
       .join(applied.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(applied.select(c.columns.map(col).toIndexedSeq: _*))
-  }
-
-  /** Run two independent view PREPARES as concurrent driver jobs (§2.6) —
-    * safe because a prepare changes nothing visible; the caller sequences
-    * the publishes.
-    */
-  private def concurrently[A, B](a: () => A, b: () => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val fa = pool.submit(new java.util.concurrent.Callable[A] { def call(): A = a() })
-      val fb = pool.submit(new java.util.concurrent.Callable[B] { def call(): B = b() })
-      def get[T](f: java.util.concurrent.Future[T]): T =
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      (get(fa), get(fb))
-    } finally pool.shutdown()
   }
 
   /** RETRACTABLE streaming MIN/MAX — the NON-INVERTIBLE aggregate case,
@@ -323,7 +307,7 @@ object VersionedView {
         val deltas = adds.unionByName(retracts)
           .groupBy(col("g"), col("v"))
           .agg(org.apache.spark.sql.functions.sum(col("dcnt")).as("dcnt"))
-        val (idxStaged, stateStaged) = concurrently(
+        val Seq(idxStaged, stateStaged) = Concurrently(sp)(Seq(
           () => prepareVersion(sp, idxOut, batchId, { curIdx =>
             // COMPACT at publish: a (g, v) row whose live multiplicity
             // drained to 0 carries no information, and under adversarial
@@ -342,7 +326,7 @@ object VersionedView {
             merged.filter(col("dcnt") =!= 0L)
           }),
           () => prepareVersion(sp, stateOut, batchId,
-            applyAppliedToState(batch, applied, keys)))
+            applyAppliedToState(batch, applied, keys))))
         idxStaged.foreach(publishVersion(sp, idxOut, _))
         stateStaged.foreach(publishVersion(sp, stateOut, _))
       } finally applied.unpersist()

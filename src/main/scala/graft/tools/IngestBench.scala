@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.model.TradeTick
@@ -13,11 +12,7 @@ import graft.streaming.Ingest
 object IngestBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(2000000)
-    val sp = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    sp.sparkContext.setLogLevel("ERROR")
+    val sp = graft.obs.Sessions.local(32)
     import sp.implicits._
 
     val base = 1710000000000L

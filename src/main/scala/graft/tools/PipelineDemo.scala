@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -16,12 +15,7 @@ import graft.streaming.{Ingest, Loader, Stateful}
   */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val sp = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    sp.sparkContext.setLogLevel("ERROR")
+    val sp = graft.obs.Sessions.local(4)
     import sp.implicits._
     implicit val ctx = sp.sqlContext
 

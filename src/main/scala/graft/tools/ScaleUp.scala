@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
@@ -49,14 +49,7 @@ object ScaleUp {
     // shingle, so cross-copy shingle overlap stays negligible.
     val rot = if (args.length > 3) args(3) else "abcdefghij"
     require(rot.toSet.size == rot.length, "rotation alphabet must be distinct letters")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.obs.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
 
     def maxOf(df: DataFrame, c: String): Long =
       df.agg(max(col(c))).collect()(0).getLong(0) + 1L

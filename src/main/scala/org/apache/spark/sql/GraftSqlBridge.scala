@@ -73,10 +73,16 @@ object GraftSqlBridge {
 
   /** Block until the listener bus has delivered all queued events —
     * `private[spark]`, needed to attribute SparkListener task metrics to
-    * the query that just ran (Bench's task-time accounting).
+    * the query that just ran (graft.obs.QueryProfile).
     */
   def drainListenerBus(spark: SparkSession, timeoutMs: Long): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
+
+  /** The query an SQL execution ran (`private[sql]` on the event), so a
+    * listener can keep the final, post-AQE plan of what it observed.
+    */
+  def queryExecution(e: execution.ui.SparkListenerSQLExecutionEnd): Option[execution.QueryExecution] =
+    Option(e.qe)
 
   /** Orderly shutdown of all loaded state-store providers BEFORE the JVM
     * starts exiting. With the RocksDB provider, native background threads

@@ -380,7 +380,7 @@ class BucketedStoreSpec extends AnyFunSuite {
         // each round: 3 sibling stores append batch b concurrently, plus a
         // REPLAY of batch b-1 racing a strictly-before snapshot read of the
         // same store (the overlapped-sink shape DupSpanIndex/LshIndex use)
-        BucketedStore.appendConcurrently(
+        graft.streaming.Concurrently(spark)(
           specs.map(s => () =>
             BucketedStore.appendBatch(mk(b * 40L, b * 40L + 40), s, b.toLong)) :+
           (() => BucketedStore.appendBatch(
@@ -396,5 +396,23 @@ class BucketedStoreSpec extends AnyFunSuite {
     assert(!observedDynamic.get, "a concurrent append flipped the session conf")
     assert(spark.conf.getOption(confKey) == before)
     specs.foreach(s => assert(rows(s).size == 160, s"store ${s.dir} lost rows"))
+  }
+
+  test("a failed concurrent write stops its siblings before the error surfaces") {
+    // foreachBatch retries a batch as soon as the sink throws; a sibling
+    // write of that batch still in flight would then race its own retry
+    val siblingRunning = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val siblingStarted = new java.util.concurrent.CountDownLatch(1)
+    val err = intercept[IllegalStateException] {
+      graft.streaming.Concurrently(spark)(Seq(
+        () => { siblingStarted.await(); throw new IllegalStateException("write failed") },
+        () => {
+          siblingRunning.set(true)
+          siblingStarted.countDown()
+          try Thread.sleep(60000) finally siblingRunning.set(false)
+        }))
+    }
+    assert(err.getMessage == "write failed")
+    assert(!siblingRunning.get, "a sibling write was still running when the helper threw")
   }
 }

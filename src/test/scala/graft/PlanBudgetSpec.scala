@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.tools.PlanCount
+import graft.obs.PlanCount
 
 /** REGRESSION-TESTED plan shapes — the executable form of PLANS.md's hand
   * audit, per the round-7 review: nothing previously FAILED when a plan

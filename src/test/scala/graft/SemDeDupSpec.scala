@@ -68,6 +68,10 @@ class SemDeDupSpec extends AnyFunSuite {
       assert(SemDeDup.clusterCount(docs, 16) == 20) // ceil(200/10)
       spark.conf.set(key, "1000")
       assert(SemDeDup.clusterCount(docs, 16) == 16) // floor at base
+      // a malformed value names the key and the value, not a bare NumberFormatException
+      spark.conf.set(key, "10k")
+      val bad = intercept[IllegalArgumentException](SemDeDup.clusterCount(docs, 16))
+      assert(bad.getMessage.contains(key) && bad.getMessage.contains("10k"))
       // and what the law BUYS: the pair stage is Σ n_c·(n_c−1); growing k
       // with the corpus must shrink it vs the fixed-k gate shape. Pair-row
       // bound measured through the same argmax assignment markDropped uses.

@@ -4,18 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole suite (forked JVM, build.sbt). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = obs.Sessions.local(4)
 
   lazy val sf0001 = "/root/testdata/sf0.001"
 
@@ -23,30 +12,8 @@ object TestSpark {
     java.nio.file.Files.createTempDirectory(prefix).toString
 
   /** Total shuffle-WRITE records across `body` — the runtime work-budget
-    * instrument shared by PlanBudgetSpec / IncrementalCCSpec / LshIndexSpec:
-    * drain the listener bus (stage events arrive after the action returns),
-    * then settle on a quiet window.
+    * instrument shared by PlanBudgetSpec / IncrementalCCSpec / LshIndexSpec.
     */
-  def shuffleRecordsDuring(body: => Unit): Long = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    val records = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        records.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
-    def settle(): Long = {
-      try org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark, 30000)
-      catch { case _: Throwable => }
-      var (prev, n) = (-1L, 0)
-      while (n < 3) {
-        Thread.sleep(200)
-        val cur = records.get()
-        if (cur == prev) n += 1 else { prev = cur; n = 0 }
-      }
-      records.get()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { val before = settle(); body; settle() - before }
-    finally spark.sparkContext.removeSparkListener(listener)
-  }
+  def shuffleRecordsDuring(body: => Unit): Long =
+    obs.QueryProfile.during(spark)(body)._2.shuffleWriteRecords
 }
