@@ -66,7 +66,8 @@ object Verify {
     // Storage hygiene: after a full sequential run nothing may stay cached —
     // the query paths use written parquet stages, not persist(), and the
     // only block-storage users (ConnectedComponents' transient edge persist
-    // and localCheckpoints) release on completion via the ContextCleaner.
+    // and block-mode Materialize pins) release on completion via the
+    // ContextCleaner.
     // Drain (reference-triggered cleanup needs a GC) and report; a leak here
     // means a long-lived session would accumulate executor memory.
     spark.catalog.clearCache()

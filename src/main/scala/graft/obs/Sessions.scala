@@ -27,6 +27,8 @@ object Sessions {
       .setIfMissing("spark.sql.adaptive.enabled", "true")
       .setIfMissing("spark.sql.session.timeZone", "UTC")
       .setIfMissing("spark.ui.enabled", "false")
+      // durable Materialize pins are reclaimed once their frames are collected
+      .setIfMissing("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     if (!guard) conf.setIfMissing(graft.queries.Protocol.GuardConfKey, "off")
     val spark = SparkSession.builder().config(conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components by min-label propagation with pointer
@@ -28,10 +28,11 @@ import org.apache.spark.sql.functions._
   * rounds there vs 5 contracted, and blew the 25-round budget.
   *
   * Scale notes (100 TB):
-  *   - `edges` is persisted so each round touches the deduplicated edge
-  *     list, never the upstream candidate generator; min() is map-side
-  *     combinable so hub nodes don't skew step (1).
-  *   - The convergence probe rides the checkpoint job as an `observe()`
+  *   - `edges` is persisted (pinned in durable mode) so each round
+  *     touches the deduplicated edge list, never the upstream candidate
+  *     generator; min() is map-side combinable so hub nodes don't skew
+  *     step (1).
+  *   - The convergence probe rides the pin job as an `observe()`
   *     metric (labels only ever decrease, so Σ label is strictly monotone
   *     until the fixpoint) — zero extra jobs or driver round-trips.
   *   - l₁ is materialized once per round; the pointer-double join consumes
@@ -51,98 +52,57 @@ object ConnectedComponents {
     *                 covers any plausible corpus (2^25 pointer depth)
     * @param hotLabelThreshold pointer-double probe keys with at least this
     *                 many rows are resolved via broadcast instead of shuffle
-    * @param reliableDir when Some(dir), per-round materialization goes to
-    *                 PARQUET under dir (durable spill on the cluster's
-    *                 distributed FS) instead of localCheckpoint blocks —
-    *                 the executor-loss-tolerant mode for long multi-round
-    *                 runs over a 100 TB corpus, where losing one executor
-    *                 mid-round must not restart the whole iteration (a lost
-    *                 localCheckpoint block has NO lineage to recompute
-    *                 from; a parquet round file re-reads). Costs one
-    *                 write+read per round; default None keeps the
-    *                 block-store fast path for short-lived jobs.
     * @return (node, rep) — rep is the minimum node id reachable from node;
     *         every node that appears in `pairs` gets a row
     */
   def apply(pairs: DataFrame, maxIters: Int = 25,
-      hotLabelThreshold: Long = 100000L,
-      reliableDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
+      hotLabelThreshold: Long = 100000L): DataFrame = {
     val e0 = pairs.toDF("u", "v")
     val edgesPlan = e0.union(e0.select(col("v"), col("u")))
       .toDF("src", "dst")
       .distinct()
-    // reliable mode spills the deduplicated edge list too: each round's
+    // Durable mode pins the deduplicated edge list too: each round's
     // neighbor-min re-reads it, and persist() blocks are exactly as
-    // executor-loss-fragile as localCheckpoint's
-    val edges = reliableDir match {
-      case None => edgesPlan.persist()
-      case Some(dir) =>
-        edgesPlan.write.mode("overwrite").parquet(s"$dir/cc_edges")
-        spark.read.parquet(s"$dir/cc_edges")
-    }
-    // Each round's result is materialized (eager): the pointer-double
+    // executor-loss-fragile as localCheckpoint's. Block mode keeps the
+    // lazy persist (no eager job).
+    val (edges, edgeCount) =
+      if (Materialize.durable(pairs.sparkSession)) {
+        val p = Materialize.pin(edgesPlan, "cc_edges")
+        (p.df, p.rows)
+      } else {
+        val e = edgesPlan.persist()
+        (e, e.count())
+      }
+    // Each round's result is pinned (Materialize.pin): the pointer-double
     // join references l₁ TWICE, so without materialization the neighbor-min
     // subplan runs twice per round and the logical plan doubles per round
-    // (planning itself goes exponential). localCheckpoint materializes the
-    // round and restarts lineage from the stored blocks; `reliableDir`
-    // swaps in a parquet write+read per round — same shape, durable files.
-    // The convergence probe rides the materialization job either way (one
-    // action per round, no extra pass).
+    // (planning itself goes exponential). The convergence probe rides the
+    // pin job (one action per round, no extra pass).
     // Seed with round 1's neighbor-min already applied: label₀(n) =
     // min(n, min neighbor) — one aggregation instead of a distinct plus a
     // full propagate round (every node appears as src of the bidirectional
     // edge list, so the groupBy also enumerates the node set).
-    // Block-mode checkpoints are STATS-CLAMPED (r13): localCheckpoint
-    // copies the origin plan's sizeInBytes onto the LogicalRDD, and the
-    // pointer-double join of a round with itself SQUARES it per round —
-    // seeded from a streaming micro-batch (huge default stats) the
-    // estimate BigInts hit millions of bits and Catalyst's stats rewrite
-    // grinds the driver (the pathology that forced the q250/q252 sinks
-    // into per-round parquet spill). Rewriting each round's stats from
-    // its OBSERVED row count (×64 B/row — two longs + row overhead,
-    // deliberately generous) makes block mode safe at any seed, so the
-    // streaming sinks get localCheckpoint latency instead of a parquet
-    // write+read per round; `reliableDir` remains the executor-loss-
-    // tolerant deployment mode.
-    def clamp(df: DataFrame, rows: Long): DataFrame =
-      org.apache.spark.sql.GraftSqlBridge.withStats(df,
-        BigInt(math.max(rows, 1L)) * 64, Some(BigInt(rows)))
-    def checkpointObserved(df: DataFrame, name: String): (DataFrame, Long, Long) = {
-      val obs = Observation(name)
-      val observed = df
-        .observe(obs, sum(col("label")).as("s"), count(lit(1)).as("n"))
-      val out0 = reliableDir match {
-        case None => observed.localCheckpoint(true)
-        case Some(dir) =>
-          observed.write.mode("overwrite").parquet(s"$dir/$name")
-          spark.read.parquet(s"$dir/$name")
-      }
-      val m = obs.get
-      // sum() over an empty frame is NULL — treat as 0 (degenerate empty graph)
-      val s = Option(m("s")).fold(0L)(_.asInstanceOf[Long])
-      val n = m("n").asInstanceOf[Long]
-      val out = if (reliableDir.isEmpty) clamp(out0, n) else out0
-      (out, s, n)
+    // Pins are STATS-CLAMPED (r13): a pin's LogicalRDD carries the origin
+    // plan's sizeInBytes, and the pointer-double join of a round with
+    // itself SQUARES it per round — seeded from a streaming micro-batch
+    // (huge default stats) the estimate BigInts hit millions of bits and
+    // Catalyst's stats rewrite grinds the driver. Rewriting each round's
+    // stats from its OBSERVED row count (×64 B/row — two longs + row
+    // overhead, deliberately generous) makes the rounds safe at any seed.
+    def pin(df: DataFrame, tag: String, extra: Column*): Pinned = {
+      val p = Materialize.pin(df, tag, extra: _*)
+      p.copy(df = org.apache.spark.sql.GraftSqlBridge.withStats(p.df,
+        BigInt(math.max(p.rows, 1L)) * 64, Some(BigInt(p.rows))))
     }
-    def checkpointCounted(df: DataFrame, name: String): (DataFrame, Long) = {
-      val obs = Observation(name)
-      val observed = df.observe(obs, count(lit(1)).as("n"))
-      val out0 = reliableDir match {
-        case None => observed.localCheckpoint(true)
-        case Some(dir) =>
-          observed.write.mode("overwrite").parquet(s"$dir/$name")
-          spark.read.parquet(s"$dir/$name")
-      }
-      val n = obs.get("n").asInstanceOf[Long]
-      val out = if (reliableDir.isEmpty) clamp(out0, n) else out0
-      (out, n)
-    }
-    var (labels, _, _) = checkpointObserved(
+    // Σ label, the convergence probe; sum() over an empty frame is NULL —
+    // treat as 0 (degenerate empty graph)
+    val labelSumCol = sum(col("label")).as("s")
+    def labelSum(m: Map[String, Any]): Long = Option(m("s")).fold(0L)(_.asInstanceOf[Long])
+    var labels = pin(
       edges.groupBy(col("src").as("node"))
         .agg(min(col("dst")).as("nbr"))
         .select(col("node"), least(col("node"), col("nbr")).as("label")),
-      "cc_seed")
+      "cc_seed").df
     // One pointer jump l'(n) = l(l(n)): labels are always node ids, so the
     // label table has a row for every label value; left+coalesce is only a
     // safety net. Hot labels (≥ threshold probe rows) resolve through a
@@ -150,7 +110,7 @@ object ConnectedComponents {
     // (label, l(label)) pair per hot label, id-type-generic (no driver
     // materialization) — so no shuffle key ever carries a giant component's
     // full row set. The split is gated on the label table's total row count
-    // (observed on its checkpoint job): below threshold — e.g. any
+    // (observed on its pin job): below threshold — e.g. any
     // test-scale run — no label can be hot and the plain join runs with
     // zero extra cost.
     def jump(cur: DataFrame, curRows: Long): DataFrame = {
@@ -183,18 +143,19 @@ object ConnectedComponents {
     // nodes, from q250's edge stream) needed 59 rounds against the
     // documented O(log n) and tripped maxIters; contracted, it converges
     // in 5 (verified by exact simulation and the q250 gate).
-    var (cEdges, cEdgeCount) = (edges, edges.count())
+    var (cEdges, cEdgeCount) = (edges, edgeCount)
     var iter = 0
     while (cEdgeCount > 0 && iter < maxIters) {
       // (1) rep-level neighbor-min over the CONTRACTED graph, applied to
       // every node through its label (join on label = contracted src).
       val nbrMin = cEdges.groupBy(col("src").as("label"))
         .agg(min(col("dst")).as("nbr"))
-      var (cur, curSum, curRows) = checkpointObserved(
+      val l1 = pin(
         labels.join(nbrMin, Seq("label"), "left")
           .select(col("node"),
             least(col("label"), coalesce(col("nbr"), col("label"))).as("label")),
-        s"cc_l1_$iter")
+        s"cc_l1_$iter", labelSumCol)
+      var (cur, curRows, curSum) = (l1.df, l1.rows, labelSum(l1.metrics))
       // (2) FULL PATH COMPRESSION: jump to the pointer fixpoint — each
       // jump squares the remaining pointer depth, so O(log depth)
       // node-sized joins.
@@ -209,10 +170,10 @@ object ConnectedComponents {
         require(inner < 64,
           s"connectedComponents: path compression did not converge after " +
             s"$inner jumps in round $iter (label-sum no longer monotone?)")
-        val (next, nextSum, nextRows) =
-          checkpointObserved(jump(cur, curRows), s"cc_j_${iter}_$inner")
+        val next = pin(jump(cur, curRows), s"cc_j_${iter}_$inner", labelSumCol)
+        val nextSum = labelSum(next.metrics)
         compressed = nextSum == curSum
-        cur = next; curSum = nextSum; curRows = nextRows
+        cur = next.df; curSum = nextSum; curRows = next.rows
         inner += 1
       }
       labels = cur
@@ -221,7 +182,7 @@ object ConnectedComponents {
       // ⟺ converged (and the single label per component is necessarily the
       // min member id — the min node's label can never exceed itself).
       val l = labels
-      val (ce, cen) = checkpointCounted(
+      val Pinned(ce, cen, _) = pin(
         cEdges
           .join(l.select(col("node").as("src"), col("label").as("ls")), Seq("src"))
           .join(l.select(col("node").as("dst"), col("label").as("ld")), Seq("dst"))

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Generic iterative-fixpoint executor — the engine's hand-rolled twin of a
   * recursive CTE (`WITH RECURSIVE anchor UNION ALL step`). Spark 4 executes
@@ -9,20 +8,18 @@ import org.apache.spark.sql.functions._
   * planner and materializes every iteration; this operator exposes the same
   * semantics as a library call with two properties the built-in loop lacks:
   *
-  *   - **Lineage truncation per round.** Each frontier is materialized
-  *     (localCheckpoint blocks, or durable parquet in `reliableDir` mode) so
-  *     round N's plan never embeds rounds 0..N-1 — without it the step plan
-  *     nests once per round and planning itself goes super-linear.
-  *   - **Executor-loss tolerance.** `reliableDir` spills every frontier to
-  *     the cluster's distributed FS (same trade as
-  *     [[ConnectedComponents]]'s reliable mode): a lost executor re-reads a
-  *     round file instead of restarting the whole recursion — the difference
-  *     between "documented" and "works" for a multi-hour 100 TB walk.
+  *   - **Lineage truncation per round.** Each frontier is pinned
+  *     ([[Materialize.pin]]) so round N's plan never embeds rounds 0..N-1 —
+  *     without it the step plan nests once per round and planning itself
+  *     goes super-linear.
+  *   - **Executor-loss tolerance.** Under `spark.graft.materialize=durable`
+  *     every frontier is a reliable checkpoint: a lost executor re-reads a
+  *     round's files instead of restarting the whole recursion — the
+  *     difference between "documented" and "works" for a multi-hour 100 TB
+  *     walk.
   *
-  * The emptiness probe rides each round's materialization job as an
-  * `observe()` count — one action per round, no extra pass. The final result
-  * in reliable mode is ONE parquet scan over all round files (not an N-way
-  * in-memory union), so downstream aggregation sees a plain multi-file scan.
+  * The emptiness probe rides each round's pin job as an observed count —
+  * one action per round, no extra pass.
   */
 object IterativeFixpoint {
 
@@ -31,26 +28,12 @@ object IterativeFixpoint {
     *                 must preserve the anchor's schema
     * @param maxRounds hard recursion bound (mirrors
     *                 `spark.sql.cteRecursionLevelLimit`'s role)
-    * @param reliableDir when Some(dir), per-round frontiers spill to parquet
-    *                 under dir — executor-loss-tolerant mode
     * @return the union of every round's frontier (rounds 0..K, K = first
     *         empty frontier), exactly the recursive CTE's result set
     */
   def iterate(anchor: DataFrame, step: DataFrame => DataFrame,
-      maxRounds: Int = 100, reliableDir: Option[String] = None): DataFrame = {
-    val spark = anchor.sparkSession
-    def materialize(df: DataFrame, name: String): (DataFrame, Long) = {
-      val obs = Observation(name)
-      val observed = df.observe(obs, count(lit(1)).as("n"))
-      val out = reliableDir match {
-        case None => observed.localCheckpoint(true)
-        case Some(dir) =>
-          observed.write.mode("overwrite").parquet(s"$dir/$name")
-          spark.read.parquet(s"$dir/$name")
-      }
-      (out, obs.get("n").asInstanceOf[Long])
-    }
-    var (frontier, n) = materialize(anchor, "fix_round_0")
+      maxRounds: Int = 100): DataFrame = {
+    var Pinned(frontier, n, _) = Materialize.pin(anchor, "fix_round_0")
     val anchorSchema = frontier.schema
     val rounds = scala.collection.mutable.ArrayBuffer(frontier)
     var round = 0
@@ -61,18 +44,13 @@ object IterativeFixpoint {
         anchorSchema.map(f => (f.name, f.dataType)),
         s"step changed the frontier schema at round $round: " +
           s"${nextPlan.schema.simpleString} vs ${anchorSchema.simpleString}")
-      val (next, nextN) = materialize(nextPlan, s"fix_round_$round")
-      frontier = next
-      n = nextN
-      if (n > 0) rounds += next
+      val next = Materialize.pin(nextPlan, s"fix_round_$round")
+      frontier = next.df
+      n = next.rows
+      if (n > 0) rounds += frontier
     }
     require(n == 0, s"iterative fixpoint: frontier still non-empty after " +
       s"$maxRounds rounds ($n rows)")
-    reliableDir match {
-      // one scan over all round files — not an N-way union plan
-      case Some(dir) =>
-        spark.read.parquet(rounds.indices.map(i => s"$dir/fix_round_$i"): _*)
-      case None => rounds.reduce(_ union _)
-    }
+    rounds.reduce(_ union _)
   }
 }

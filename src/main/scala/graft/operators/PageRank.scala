@@ -26,20 +26,17 @@ import graft.functions.ColumnOps.idiv
   * Shape at 100 TB: the rank vector is node-sized and re-shuffled on `src`
   * each round (one hash join per iteration against the edge list, which can
   * be pre-partitioned on src and reused); the per-round aggregate shuffles
-  * only (dst, partial-sum) rows. `localCheckpoint` truncates the iteration
-  * lineage exactly as in [[ConnectedComponents]]; pass `reliableDir` for the
-  * executor-loss-tolerant parquet-spill variant at real cluster scale.
+  * only (dst, partial-sum) rows. Each round is pinned ([[Materialize.pin]],
+  * durable under `spark.graft.materialize=durable`) to truncate the
+  * iteration lineage exactly as in [[ConnectedComponents]].
   */
 object PageRank {
 
   /** @param edges DataFrame with columns (src: long-ish, dst same type, w: long > 0)
     * @param iters number of full recurrence rounds (≥ 0)
-    * @param reliableDir when Some(dir), per-round ranks spill to parquet
-    *                    (fault-tolerant) instead of localCheckpoint blocks
     * @return (v, pr_micro: bigint) — one row per node appearing as src or dst
     */
-  def run(edges: DataFrame, iters: Int, reliableDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
+  def run(edges: DataFrame, iters: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
     val outw = e.groupBy(col("src")).agg(sum(col("w")).as("ow"))
     val ew = e.join(outw, "src") // (src, dst, w, ow) — built once, reused per round
@@ -47,27 +44,19 @@ object PageRank {
     // N as a 1-row broadcast, never a driver-side collect
     val nAgg = broadcast(nodes.agg(count(lit(1)).as("n_nodes")))
 
-    def persistRound(df: DataFrame, round: Int): DataFrame = reliableDir match {
-      case Some(dir) =>
-        val p = s"$dir/pr_$round"
-        df.write.mode("overwrite").parquet(p)
-        spark.read.parquet(p)
-      case None => df.localCheckpoint()
-    }
-
-    var pr = persistRound(
+    var pr = Materialize.pin(
       nodes.crossJoin(nAgg)
-        .select(col("v"), idiv(lit(1000000L), col("n_nodes")).as("pr")), 0)
+        .select(col("v"), idiv(lit(1000000L), col("n_nodes")).as("pr")), "pr_0").df
     for (round <- 1 to iters) {
       val contrib = pr.join(ew, pr("v") === ew("src"))
         .select(col("dst").as("v"),
           idiv(lit(17L) * col("pr") * col("w"), lit(20L) * col("ow")).as("c"))
         .groupBy(col("v")).agg(sum(col("c")).as("s"))
-      pr = persistRound(
+      pr = Materialize.pin(
         nodes.crossJoin(nAgg).join(contrib, Seq("v"), "left")
           .select(col("v"),
             (idiv(lit(150000L), col("n_nodes")) + coalesce(col("s"), lit(0L))).as("pr")),
-        round)
+        s"pr_$round").df
     }
     pr
   }

@@ -92,31 +92,20 @@ object DedupQueries extends QueryModule {
     * the pinned frames are doc_id lists — bytes per surviving doc, safe at
     * any corpus size.
     *
-    * `reliableDir` picks HOW a tier pins (r14): None = localCheckpoint
-    * blocks (fast; dies with an executor), Some(dir) = durable parquet
-    * write+read-back (the 100 TB deployment mode — a lost executor costs
-    * one tier's rebuild, not the cascade; the same block-vs-reliable split
-    * ConnectedComponents/IterativeFixpoint already offer). Same rows
-    * either way — DedupCascadeModesSpec pins parity.
+    * Each tier pins through [[graft.operators.Materialize.pin]], so
+    * `spark.graft.materialize=durable` makes a lost executor cost one
+    * tier's rebuild, not the cascade.
     */
   private[graft] def dedupCascade(s: org.apache.spark.sql.SparkSession,
-      dir: String, reliableDir: Option[String]): org.apache.spark.sql.DataFrame = {
-    var tierNo = 0
-    def pin(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      reliableDir match {
-        case None => df.localCheckpoint(true)
-        case Some(base) =>
-          tierNo += 1
-          val p = s"$base/tier_$tierNo"
-          df.write.mode("overwrite").parquet(p)
-          s.read.parquet(p)
-      }
+      dir: String): org.apache.spark.sql.DataFrame = {
+    def pin(df: org.apache.spark.sql.DataFrame, tier: String) =
+      graft.operators.Materialize.pin(df, s"q215_$tier").df
     val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("n_chars"))
     val wEx = org.apache.spark.sql.expressions.Window
       .partitionBy(md5(col("text"))).orderBy(col("doc_id"))
     val exactD = pin(docs.withColumn("rn", row_number().over(wEx))
-      .filter(col("rn") > 1).select(col("doc_id")))
+      .filter(col("rn") > 1).select(col("doc_id")), "exact")
     val s1 = docs.join(exactD, Seq("doc_id"), "left_anti")
     val bowToks = array_sort(array_distinct(filter(
       split(lower(col("text")), "[^a-z0-9]+"), t => t =!= lit(""))))
@@ -124,7 +113,7 @@ object DedupQueries extends QueryModule {
       .partitionBy(col("fp")).orderBy(col("doc_id"))
     val bowD = pin(s1.withColumn("fp", md5(array_join(bowToks, " ")))
       .withColumn("rn", row_number().over(wBow))
-      .filter(col("rn") > 1).select(col("doc_id")))
+      .filter(col("rn") > 1).select(col("doc_id")), "bow")
     val s2 = s1.join(bowD, Seq("doc_id"), "left_anti")
     val recs2 = s2.select(col("doc_id"),
       graft.functions.TextFunctions.shingles3(col("text")).as("tk"))
@@ -132,13 +121,13 @@ object DedupQueries extends QueryModule {
       .containmentJoin(recs2, "doc_id", "tk", 9, 10)
       .where(col("sb") > col("sa") ||
         (col("sb") === col("sa") && col("id_b") < col("id_a")))
-      .select(col("id_a").as("doc_id")).distinct())
+      .select(col("id_a").as("doc_id")).distinct(), "contain")
     val s3 = s2.join(containD, Seq("doc_id"), "left_anti")
-    val s3ids = pin(s3.select(col("doc_id")))
+    val s3ids = pin(s3.select(col("doc_id")), "s3")
     val nearD = pin(lshNearPairs(s, dir)
       .join(s3ids.withColumnRenamed("doc_id", "id_a"), Seq("id_a"), "left_semi")
       .join(s3ids.withColumnRenamed("doc_id", "id_b"), Seq("id_b"), "left_semi")
-      .select(col("id_b").as("doc_id")).distinct())
+      .select(col("id_b").as("doc_id")).distinct(), "near")
     val s4 = s3.join(nearD, Seq("doc_id"), "left_anti")
     // tier 5 (round 13): SEMANTIC dedup over the lexical survivors —
     // SemDeDup's embed → argmax-cluster → domination pass (q287's
@@ -147,10 +136,10 @@ object DedupQueries extends QueryModule {
     val semAssigned = pin(graft.operators.SemDeDup
       .assignArgmax(graft.operators.SemDeDup.embedBow(s4,
         graft.operators.SemDeDup.clusterCount(s4, 16)))
-      .join(s4.select(col("doc_id"), col("n_chars")), Seq("doc_id")))
+      .join(s4.select(col("doc_id"), col("n_chars")), Seq("doc_id")), "sem_assigned")
     val semD = pin(graft.operators.SemDeDup
       .markDropped(semAssigned, 990000L, "n_chars")
-      .filter(col("dropped")).select(col("doc_id")))
+      .filter(col("dropped")).select(col("doc_id")), "sem")
     val kept = s4.join(semD, Seq("doc_id"), "left_anti")
     def tier(name: String, df: org.apache.spark.sql.DataFrame) =
       df.agg(big(count(lit(1))).as("n")).select(lit(name).as("tier"), col("n"))
@@ -510,15 +499,7 @@ object DedupQueries extends QueryModule {
     // reports 0). This is the production ordering: each tier's cost is
     // amortized by the volume the cheaper tiers already removed.
     Declared("q215_dedup_cascade",
-      // GRAFT_DEDUP_RELIABLE=1 routes the tier pins through durable parquet
-      // spill instead of localCheckpoint blocks — the executor-loss-tolerant
-      // deployment mode (r14, mirroring GRAFT_CC_RELIABLE: at 100 TB a lost
-      // executor must cost one tier's rebuild, not the whole cascade).
-      // DedupCascadeModesSpec pins result parity; the gate keeps the fast
-      // block default.
-      (s, dir) => dedupCascade(s, dir,
-        reliableDir = if (sys.env.get("GRAFT_DEDUP_RELIABLE").contains("1"))
-          Some(SharedStages.scratchDir("q215-tiers")) else None),
+      (s, dir) => dedupCascade(s, dir),
       Some(duckSig +
         """,
           |exact_d AS (

@@ -6,6 +6,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.functions.ColumnOps.{idiv, ppm}
 import graft.model.Tables
+import graft.operators.Materialize.pin
 import Protocol._
 
 /** Graph-traversal and profile statistics ([EXT], SURVEY §2.2): BFS
@@ -22,7 +23,7 @@ object GraphStatQueries extends QueryModule {
     // counts, plus an unreached bucket at hop -1 when non-empty. The
     // frontier loop is the ConnectedComponents/PageRank recipe: each
     // round is an EQUI join frontier⋈edges on the vertex key + an
-    // anti-join against the visited set, localCheckpointed so round N's
+    // anti-join against the visited set, pinned so round N's
     // plan never embeds rounds 0..N-1. The fixture graph's diameter is
     // ≤3 at every SF; the oracle unrolls four hops and would mismatch
     // loudly (not silently truncate) if data ever grew a longer path,
@@ -53,21 +54,21 @@ object GraphStatQueries extends QueryModule {
         // bounded driver scalar: the source vertex id (a model object,
         // same sanction as IVF centroids)
         val src = nodes.agg(min(col("pk"))).head().getLong(0)
-        var visited = Seq((src, 0L)).toDF("pk", "hop").localCheckpoint(true)
-        var frontier = visited.select(col("pk")).localCheckpoint(true)
+        var visited = pin(Seq((src, 0L)).toDF("pk", "hop"), "q189_visited_0").df
+        var frontier = pin(visited.select(col("pk")), "q189_frontier_0").df
         var round = 0L
         var n = 1L
         while (n > 0 && round < 50) {
           round += 1
-          val nxt = frontier.join(e, frontier("pk") === e("pa"))
+          // the hop's row count rides its pin job — no separate count()
+          val nxt = pin(frontier.join(e, frontier("pk") === e("pa"))
             .select(col("pb").as("pk")).distinct()
             .join(visited, Seq("pk"), "left_anti")
-            .withColumn("hop", lit(round))
-            .localCheckpoint(true)
-          n = nxt.count()
+            .withColumn("hop", lit(round)), s"q189_hop_$round")
+          n = nxt.rows
           if (n > 0) {
-            visited = visited.union(nxt).localCheckpoint(true)
-            frontier = nxt.select(col("pk"))
+            visited = pin(visited.union(nxt.df), s"q189_visited_$round").df
+            frontier = nxt.df.select(col("pk"))
           }
         }
         require(n == 0, s"q189: frontier still non-empty after $round rounds")
@@ -622,7 +623,7 @@ object GraphStatQueries extends QueryModule {
     //
     // Shape at 100 TB: the support-2 edge build is the q189 equi-join;
     // each peel round is two equi semi-joins frontier⋈edges + a
-    // counter aggregate, localCheckpointed so round N's plan never
+    // counter aggregate, pinned so round N's plan never
     // embeds rounds 0..N-1; node sets only shrink. Peel rounds for a
     // power-law graph are O(degeneracy) — single digits in practice.
     Declared("q205_kcore",
@@ -645,7 +646,7 @@ object GraphStatQueries extends QueryModule {
         // round: per-round work stayed edge-table-sized at any scale.
         // Edges are symmetric (both directions present), so endpoint
         // filtering is two semi joins and the degree count groups by pa.
-        var live = e.localCheckpoint(true)
+        var live = pin(e, "q205_live_0").df
         var n = -1L
         var changed = true
         var rounds = 0
@@ -655,15 +656,14 @@ object GraphStatQueries extends QueryModule {
             .groupBy(col("pa")).agg(count(lit(1)).as("d"))
             .where(col("d") >= k)
             .select(col("pa").as("pk"))
-          val nxt = live
+          // the live-edge count rides the pin job — no separate count()
+          val nxt = pin(live
             .join(cur, live("pa") === cur("pk"), "left_semi")
             .join(cur.withColumnRenamed("pk", "pkb"),
-              live("pb") === col("pkb"), "left_semi")
-            .localCheckpoint(true)
-          val m = nxt.count()
-          changed = m != n
-          live = nxt
-          n = m
+              live("pb") === col("pkb"), "left_semi"), s"q205_live_$rounds")
+          changed = nxt.rows != n
+          live = nxt.df
+          n = nxt.rows
         }
         require(rounds < 40, "q205: k-core peel did not converge in 40 rounds")
         live.groupBy(col("pa").as("pk"))

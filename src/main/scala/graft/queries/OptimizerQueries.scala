@@ -75,8 +75,8 @@ object OptimizerQueries extends QueryModule {
     // l_orderkey BEFORE the fact side's shuffle, so ~97 % of lineitem rows
     // drop pre-exchange instead of riding the shuffle to die in the join.
     //
-    // The builder materializes under the scoped confs (eager
-    // localCheckpoint) so the gate run actually executes the bloom-pruned
+    // The builder materializes under the scoped confs (an eager
+    // Materialize.pin) so the gate run actually executes the bloom-pruned
     // plan; the result is conf-independent and the oracle runs the plain
     // join. OptimizerLeverSpec pins `might_contain` in the scoped plan,
     // its absence in the default plan, and result equality between the two.
@@ -87,7 +87,7 @@ object OptimizerQueries extends QueryModule {
     // pays.
     Declared("q152_bloom_join",
       (s, dir) => withConfs(s, bloomConfs: _*) {
-        bloomJoinPlan(s, dir).localCheckpoint(true)
+        graft.operators.Materialize.pin(bloomJoinPlan(s, dir), "q152_bloom").df
       },
       Some("""SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_items,
              |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,6)) * (1 - CAST(l_discount AS DECIMAL(18,6)))), 6) AS DECIMAL(18,6)) AS revenue

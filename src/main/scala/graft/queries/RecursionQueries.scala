@@ -20,9 +20,10 @@ import graft.operators.IterativeFixpoint
   *
   * Scale story: each hop is an equi-join on (o_custkey, rn) — partitioned,
   * never all-pairs; the fixpoint twin adds per-round lineage truncation and
-  * a durable parquet spill mode (executor-loss-tolerant) that the built-in
-  * UnionLoop lacks. RecursionSpec pins the UnionLoop physical node for
-  * q116, block/reliable parity for the operator, and the step-schema guard.
+  * durable pins (`spark.graft.materialize=durable`, executor-loss-tolerant)
+  * that the built-in UnionLoop lacks. RecursionSpec pins the UnionLoop
+  * physical node for q116 and the step-schema guard; MaterializeSpec pins
+  * block ≡ durable parity for the operator.
   */
 object RecursionQueries extends QueryModule {
 
@@ -106,7 +107,7 @@ object RecursionQueries extends QueryModule {
   }
 
   /** IterativeFixpoint twin of q116. `ord` is window-numbered once and
-    * localCheckpointed — every round's hop join re-reads the stored blocks
+    * landed as a bucketed table — every round's hop join re-reads it
     * instead of recomputing the window (the one subplan shared by all
     * rounds). Depth bound 30 covers the fixture's ≤25-order chains; a
     * violation fails loudly rather than truncating silently.
@@ -133,15 +134,9 @@ object RecursionQueries extends QueryModule {
     //     iteration) lets the subset partitioning co-locate a join keyed
     //     (o_custkey, rn): the frontier alone shuffles to match the
     //     buckets, frontier-sized and shrinking.
-    // Per-round frontier materialization (r14): BLOCK mode by default —
-    // localCheckpoint gives the same fresh lineage-truncated relation per
-    // round without a parquet write+read per round (~25 rounds × 2 jobs +
-    // FS commits was most of q117's wall). GRAFT_FIXPOINT_RELIABLE=1
-    // restores the durable parquet spill (the executor-loss-tolerant
-    // choice for a multi-hour 100 TB walk — a lost executor re-reads a
-    // round file instead of restarting the recursion), the same
-    // block-vs-durable split as GRAFT_CC_RELIABLE / GRAFT_DEDUP_RELIABLE.
-    // RecursionSpec pins block ≡ reliable result parity.
+    // Per-round frontiers are pinned (Materialize.pin via
+    // IterativeFixpoint): a fresh lineage-truncated relation per round,
+    // in memory blocks unless the session asks for durable pins.
     val tbl = "q117_ord_bucketed"
     s.sql(s"DROP TABLE IF EXISTS $tbl")
     // a crashed previous run can leave the managed dir without the
@@ -166,7 +161,7 @@ object RecursionQueries extends QueryModule {
     s.conf.set(coPart, "false")
     val chain = try {
       // iterate() plans every round join eagerly inside this scope; the
-      // returned chain is a plain parquet union + agg, conf-independent
+      // returned chain is a plain union of pinned rounds, conf-independent
       IterativeFixpoint.iterate(
         anchor,
         f => f.as("f").join(ord.as("o"),
@@ -175,9 +170,7 @@ object RecursionQueries extends QueryModule {
           .select(col("o.o_custkey").as("o_custkey"), col("o.rn").as("rn"),
             (col("f.depth") + lit(1L)).as("depth"),
             (col("f.cum") + col("o.price")).cast(Protocol.D).as("cum")),
-        maxRounds = 30,
-        reliableDir = if (sys.env.get("GRAFT_FIXPOINT_RELIABLE").contains("1"))
-          Some(SharedStages.scratchDir("q117-rounds")) else None)
+        maxRounds = 30)
     } finally s.conf.set(coPart, coPartSaved)
     chain.groupBy(col("depth"))
       .agg(Protocol.big(count(lit(1))).as("n_chains"),

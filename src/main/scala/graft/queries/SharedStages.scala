@@ -261,13 +261,7 @@ object SharedStages {
         .filter(col("u") =!= col("v"))
       val nearEdges = lshPairs(s, dir)
         .select(col("id_a").as("u"), col("id_b").as("v"))
-      // GRAFT_CC_RELIABLE=1 routes the iterative rounds through durable
-      // parquet spill instead of localCheckpoint blocks — the
-      // executor-loss-tolerant deployment mode (ScaleOpsSpec pins label
-      // parity between the two paths; the gate keeps the fast default)
-      graft.operators.ConnectedComponents(exactEdges.unionByName(nearEdges),
-        reliableDir = if (sys.env.get("GRAFT_CC_RELIABLE").contains("1"))
-          Some(scratchDir("cc-reliable")) else None)
+      graft.operators.ConnectedComponents(exactEdges.unionByName(nearEdges))
         .select(col("node").as("doc_id"), col("rep"))
     }
 

@@ -36,27 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalCC {
 
-  /** foreachBatch sink over an edge stream with LONG columns (`u`, `v`).
-    * Read the map back with [[VersionedView.read]] (columns node, rep).
-    *
-    * The inner CC runs in BLOCK mode (localCheckpoint rounds) by default
-    * since r13: the stats-squaring pathology that originally forced these
-    * sinks into per-round parquet spill — `localCheckpoint` carries the
-    * origin plan's sizeInBytes onto each round's LogicalRDD, and the
-    * pointer-double self-join SQUARES it per round until Catalyst's stats
-    * rewrite grinds the stream-execution thread — is fixed at the source:
-    * ConnectedComponents clamps every block-mode round's stats to its
-    * observed row count (GraftSqlBridge.withStats), so nothing compounds
-    * at any seed. That removes a parquet write+read (2 jobs + FS commits)
-    * per CC round per micro-batch, the bulk of these sinks' wall time.
-    * `GRAFT_CC_RELIABLE=1` restores the durable parquet-spill mode (the
-    * executor-loss-tolerant choice for long multi-round runs at 100 TB,
-    * where losing one executor mid-round must not restart the iteration).
-    */
-  private def ccWorkDir(stateOut: String): Option[String] =
-    if (sys.env.get("GRAFT_CC_RELIABLE").contains("1"))
-      Some(s"$stateOut/_ccwork") else None
-
   /** DELETION-capable incremental CC over a CDC edge stream with columns
     * (`u`, `v`, `op` ∈ {I, D}) — the fully-dynamic extension [[ccSink]]
     * deliberately excludes (its map is insertion-only by contract). A
@@ -102,7 +81,6 @@ object IncrementalCC {
   def ccDeleteSink(stateOut: String, edgesOut: String): (DataFrame, Long) => Unit = {
     (batch, batchId) => {
       val sp = batch.sparkSession
-      val ccWork = ccWorkDir(stateOut)
       val deltas = batch
         .select(least(col("u"), col("v")).cast("long").as("a"),
           greatest(col("u"), col("v")).cast("long").as("b"),
@@ -145,11 +123,10 @@ object IncrementalCC {
         case (None, _) =>
           // first batch: CC over whatever net-lives
           graft.operators.ConnectedComponents(
-            storeNow.filter(col("cnt") > 0L).select(col("a"), col("b")),
-            reliableDir = ccWork)
+            storeNow.filter(col("cnt") > 0L).select(col("a"), col("b")))
         case (Some(st), false) =>
           // insertion fast path — ccSink's contraction, on born edges only
-          incrementalInsert(st, born, ccWork)
+          incrementalInsert(st, born)
         case (Some(st), true) =>
           val diedNodes = died.select(col("a").as("node"))
             .unionByName(died.select(col("b").as("node"))).distinct()
@@ -178,8 +155,7 @@ object IncrementalCC {
             .select(coalesce(col("ma"), col("a")).as("u"),
               coalesce(col("mb"), col("b")).as("v"))
             .filter(col("u") =!= col("v"))
-          val ccRes = graft.operators
-            .ConnectedComponents(contracted, reliableDir = ccWork)
+          val ccRes = graft.operators.ConnectedComponents(contracted)
           val remap = ccRes.select(col("node").as("old"), col("rep").as("nr"))
           // untouched members relabel through their rep's stand-in label
           val untouchedMembers = st.join(touchedReps, Seq("rep"), "left_anti")
@@ -202,8 +178,7 @@ object IncrementalCC {
     * no-deletion fast path shares it: contract `edges` through the current
     * map `st`, CC the contracted graph, relabel + insert.
     */
-  private def incrementalInsert(st: DataFrame, edges: DataFrame,
-      ccWork: Option[String]): DataFrame = {
+  private def incrementalInsert(st: DataFrame, edges: DataFrame): DataFrame = {
     val repOf = st.select(col("node"), col("rep"))
     val contracted = edges
       .join(repOf.select(col("node").as("u"), col("rep").as("ru")), Seq("u"), "left")
@@ -211,8 +186,7 @@ object IncrementalCC {
       .select(coalesce(col("ru"), col("u")).as("u"),
         coalesce(col("rv"), col("v")).as("v"))
       .filter(col("u") =!= col("v"))
-    val remap = graft.operators
-      .ConnectedComponents(contracted, reliableDir = ccWork)
+    val remap = graft.operators.ConnectedComponents(contracted)
       .select(col("node").as("old"), col("rep").as("new_rep"))
       .filter(col("old") =!= col("new_rep"))
     val relabeled = st
@@ -227,9 +201,18 @@ object IncrementalCC {
     relabeled.unionByName(fresh)
   }
 
+  /** foreachBatch sink over an edge stream with LONG columns (`u`, `v`).
+    * Read the map back with [[VersionedView.read]] (columns node, rep).
+    *
+    * The inner CC pins its rounds through [[graft.operators.Materialize]]
+    * (block by default; `spark.graft.materialize=durable` on the session
+    * that starts the stream makes them reliable checkpoints). Its rounds
+    * are stats-clamped to their observed row counts, so a streaming
+    * micro-batch's huge default stats never compound across the
+    * pointer-double self-joins.
+    */
   def ccSink(stateOut: String): (DataFrame, Long) => Unit =
     VersionedView.versionedSinkShared(stateOut) { (batch, cur) =>
-      val ccWork = ccWorkDir(stateOut)
       // self-loops carry no connectivity and are dropped up front, so a
       // node appearing ONLY in self-loops is consistently absent from the
       // map in both the first-batch and incremental branches
@@ -237,32 +220,8 @@ object IncrementalCC {
         col("v").cast("long").as("v"))
         .filter(col("u") =!= col("v"))
       cur match {
-        case None =>
-          graft.operators.ConnectedComponents(edges, reliableDir = ccWork)
-        case Some(st) =>
-          val repOf = st.select(col("node"), col("rep"))
-          val contracted = edges
-            .join(repOf.select(col("node").as("u"), col("rep").as("ru")), Seq("u"), "left")
-            .join(repOf.select(col("node").as("v"), col("rep").as("rv")), Seq("v"), "left")
-            .select(coalesce(col("ru"), col("u")).as("u"),
-              coalesce(col("rv"), col("v")).as("v"))
-            .filter(col("u") =!= col("v"))
-          val remap = graft.operators
-            .ConnectedComponents(contracted, reliableDir = ccWork)
-            .select(col("node").as("old"), col("rep").as("new_rep"))
-            .filter(col("old") =!= col("new_rep"))
-          // 3a. relabel existing members whose rep merged into a new one
-          val relabeled = st
-            .join(remap.withColumnRenamed("old", "rep"), Seq("rep"), "left")
-            .select(col("node"), coalesce(col("new_rep"), col("rep")).as("rep"))
-          // 3b. insert batch nodes unseen so far, with their resolved rep
-          val batchNodes = edges.select(col("u").as("node"))
-            .unionByName(edges.select(col("v").as("node"))).distinct()
-          val fresh = batchNodes
-            .join(st.select(col("node")), Seq("node"), "left_anti")
-            .join(remap.withColumnRenamed("old", "node"), Seq("node"), "left")
-            .select(col("node"), coalesce(col("new_rep"), col("node")).as("rep"))
-          relabeled.unionByName(fresh)
+        case None => graft.operators.ConnectedComponents(edges)
+        case Some(st) => incrementalInsert(st, edges)
       }
     }
 }

@@ -44,8 +44,8 @@ object GraftSqlBridge {
   /** Rewrites a checkpointed Dataset's `LogicalRDD` to carry FRESH
     * statistics instead of the origin plan's (r13, guide §7.3).
     *
-    * Why: `localCheckpoint` copies the ORIGIN plan's sizeInBytes estimate
-    * onto the LogicalRDD. An iterative operator that joins a round's
+    * Why: a checkpoint (block or reliable) copies the ORIGIN plan's
+    * sizeInBytes estimate onto the LogicalRDD. An iterative operator that joins a round's
     * checkpoint WITH ITSELF (ConnectedComponents' pointer-double step)
     * SQUARES that estimate every round; seeded from a streaming
     * micro-batch (default, i.e. huge, stats) the BigInts reach millions of

@@ -7,8 +7,8 @@ import graft.operators.IterativeFixpoint
 
 /** Pins for the recursive-query surface (q116/q117): the built-in recursion
   * must execute as Spark 4's UnionLoop node (not a per-row re-evaluation),
-  * and the IterativeFixpoint twin must be mode-agnostic (block vs durable
-  * parquet spill) with loud guards on schema drift and non-termination.
+  * and the IterativeFixpoint twin must guard loudly against schema drift
+  * and non-termination (its block ≡ durable parity lives in MaterializeSpec).
   * Result identity between q116 and q117 is owned by the oracle gate (both
   * share one DuckDB SQL text).
   */
@@ -21,25 +21,6 @@ class RecursionSpec extends AnyFunSuite {
     val df = graft.SparkEntry.queries("q116_recursive_chain")(spark, dir)
     val phys = df.queryExecution.executedPlan.toString
     assert(phys.contains("UnionLoop"), s"recursion not planned as UnionLoop:\n$phys")
-  }
-
-  test("fixpoint: reliable parquet-spill mode matches block mode") {
-    import spark.implicits._
-    // tiny functional graph: n -> n+3 until > 20, from anchors {1, 2}
-    val anchor = Seq((1, 0), (2, 0)).toDF("node", "depth")
-    def step(f: org.apache.spark.sql.DataFrame) =
-      f.filter(col("node") + 3 <= 20)
-        .select((col("node") + 3).as("node"), (col("depth") + 1).as("depth"))
-    val block = IterativeFixpoint.iterate(anchor, step, maxRounds = 10)
-      .collect().map(r => (r.getInt(0), r.getInt(1))).sorted
-    val tmp = java.nio.file.Files.createTempDirectory("fixpoint").toString
-    val reliable = IterativeFixpoint.iterate(anchor, step, maxRounds = 10,
-        reliableDir = Some(tmp))
-      .collect().map(r => (r.getInt(0), r.getInt(1))).sorted
-    assert(block.nonEmpty && block.sameElements(reliable),
-      s"block=${block.toSeq} reliable=${reliable.toSeq}")
-    // round files exist — the durable trail a lost executor re-reads
-    assert(new java.io.File(s"$tmp/fix_round_1").exists())
   }
 
   test("fixpoint: step schema drift fails loudly") {

@@ -108,21 +108,6 @@ class RetrievalSpec extends AnyFunSuite {
     }
   }
 
-  test("PageRank reliableDir parquet-spill rounds produce the block-path ranks") {
-    import spark.implicits._
-    val edges = Seq(
-      (0L, 1L, 3L), (1L, 2L, 1L), (2L, 0L, 2L), (0L, 2L, 1L), (3L, 0L, 5L)
-    ).toDF("src", "dst", "w")
-    val block = graft.operators.PageRank.run(edges, iters = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dir = tmpDir("prspill")
-    val spill = graft.operators.PageRank.run(edges, iters = 3, reliableDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(spill == block, s"reliableDir ranks diverged: $spill vs $block")
-    // the durable round files exist (what a mid-walk executor loss re-reads)
-    assert(new java.io.File(s"$dir/pr_3").exists(), "final round parquet missing")
-  }
-
   test("q138 PageRank plan: per-round contribution joins are equi-joins, no cartesian") {
     val p = SparkEntry.queries("q138_pagerank")(spark, dir)
       .queryExecution.executedPlan.toString

@@ -63,27 +63,6 @@ class ScaleOpsSpec extends AnyFunSuite {
       "hot-label broadcast join never appeared in any executed plan")
   }
 
-  test("ConnectedComponents reliable parquet-spill path: same labels as block path") {
-    import spark.implicits._
-    val star = (1 until 500).map(i => (0L, i.toLong))
-    val chain = (0 until 40).map(i => (5000L + i, 5000L + i + 1))
-    val edges = (star ++ chain).toDF("u", "v")
-    val dir = tmpDir("cc-reliable")
-    val reliable = graft.operators.ConnectedComponents(edges,
-      reliableDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val default = graft.operators.ConnectedComponents(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(reliable == default)
-    assert(reliable(499L) == 0L && reliable(5040L) == 5000L)
-    // the rounds genuinely went through durable files, not blocks
-    val files = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      .iterator().asScala.map(_.getFileName.toString).toSeq
-    assert(files.contains("cc_edges") && files.exists(_.startsWith("cc_j_")) &&
-      files.exists(_.startsWith("cc_edges_")),
-      s"no spill dirs written: $files")
-  }
-
   test("bucketed twin tables join with ZERO shuffle exchanges") {
     BucketedTables.bucketFacts(spark, sf0001, buckets = 4)
     // disable broadcast so the plan must rely on bucketing for co-location
