@@ -43,7 +43,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    immutable segments — a failed batch re-runs byte-identically.
   *
   * UNLIKE TickSocketSource (driver-side buffer, natural for one live TCP
-  * connection), records here never touch the driver: each InputPartition
+  * connection; its partitions carry the rows, as many as the trigger's
+  * bytes call for), records here never touch the driver: each InputPartition
   * ships (dir, partition, range) and EXECUTORS read the segment files —
   * the scalable shape when the log lives on shared storage. Reader
   * parallelism = topic partitions, Kafka's own model.

@@ -9,6 +9,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -36,7 +37,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *    a single batch unboundedly after a stall;
   *  - rows ship to executors inside the InputPartition (same as the
   *    builtin socket source) — correct for a feed whose natural ingest
-  *    point is one driver connection; fan-out happens in the partitions.
+  *    point is one driver connection;
+  *  - a trigger's slice count follows its BYTES, by the rule Spark's file
+  *    scan applies to splits (see `TickSocketStream.sliceCount`):
+  *    `numPartitions` is the parallelism TARGET a large backlog fans out
+  *    to, not a fixed count, and a trigger under
+  *    `spark.sql.files.openCostInBytes` (4 MB by default) is ONE slice.
+  *    Each slice is one task downstream — in a landing sink one parquet
+  *    write task, whose fixed cost (Spark ships the whole Hadoop
+  *    Configuration inside every file-write task) is far larger than the
+  *    parse and transform of a live trigger's 10-150 KB.
   */
 class TickSocketProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -63,6 +73,7 @@ private[sources] class TickSocketTable(options: CaseInsensitiveStringMap)
   private val trustStore = Option(options.get("trustStore"))
   private val trustStorePassword = options.getOrDefault("trustStorePassword", "changeit")
   require(port > 0, "TickSocketProvider requires a `port` option")
+  require(slices > 0, s"numPartitions must be positive, got $slices")
   require(Set("tcp", "ws", "wss")(transport),
     s"transport must be tcp, ws or wss, got '$transport'")
 
@@ -272,8 +283,13 @@ private[sources] class TickSocketStream(
     require(base + buffer.size >= e,
       s"feed did not deliver range [$s,$e) within 60s (have ${base + buffer.size})")
     val rows = buffer.slice((s - base).toInt, (e - base).toInt).toArray
-    val step = math.max(1, (rows.length + slices - 1) / slices)
-    rows.grouped(step).map(g => TickLineSlice(g): InputPartition).toArray
+    // a non-empty trigger is at least one slice, even of blank lines: its
+    // rows must reach the parser (and fail the batch), never be committed
+    // unread
+    val n = if (rows.isEmpty) 0 else TickSocketStream.sliceCount(
+      rows.iterator.map(_.length.toLong).sum, slices, SQLConf.get).toInt min rows.length
+    def cut(i: Int) = (i.toLong * rows.length / n).toInt
+    Array.tabulate[InputPartition](n)(i => TickLineSlice(rows.slice(cut(i), cut(i + 1))))
   }
 
   override def commit(end: Offset): Unit = synchronized {
@@ -293,6 +309,24 @@ private[sources] class TickSocketStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new TickLineReaderFactory
+}
+
+private[sources] object TickSocketStream {
+
+  /** Slices for a non-empty trigger of `bytes` buffered line bytes, by the
+    * split rule Spark's file scan applies (`FilePartition.maxSplitBytes`)
+    * with `target` (`numPartitions`) as the parallelism target:
+    * split = min(maxPartitionBytes, max(openCostInBytes, ⌈bytes / target⌉)),
+    * slices = max(1, ⌈bytes / split⌉). A trigger under the open cost is one
+    * slice, a larger one at most `target` slices until each would pass
+    * maxPartitionBytes. DEPLOY.md's "Live socket source" bullet has the
+    * measurements behind it.
+    */
+  def sliceCount(bytes: Long, target: Int, conf: SQLConf): Long = {
+    val split = math.min(conf.filesMaxPartitionBytes,
+      math.max(math.max(conf.filesOpenCostInBytes, 1L), (bytes + target - 1) / target))
+    math.max(1L, (bytes + split - 1) / split)
+  }
 }
 
 /** Parses the reference's 6-field TSV framing (`main.py:61-67`):

@@ -311,16 +311,31 @@ object BucketedStore {
     * every append: `partitionOverwriteMode=dynamic` is its permanent state,
     * so the parent's conf is never touched and concurrent appends cannot
     * race each other. The child shares the context, catalog and extensions;
-    * only the SQLConf is private.
+    * only the SQLConf is private. Keyed WEAKLY: the child holds no
+    * reference to its parent, so a parent session nobody uses any more is
+    * collected together with its child.
     */
-  private val dynChildren =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+  private val dynChildren = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SparkSession]())
   private def dynamicOverwriteSession(spark: SparkSession): SparkSession =
     dynChildren.computeIfAbsent(spark, s => {
       val c = s.newSession()
       c.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       c
     })
+
+  /** Drop a store's table registration. Relation caches are PER SESSION,
+    * so the child's cached relation of the table is refreshed first:
+    * otherwise the child's next `insertInto` would still resolve the
+    * dropped table's schema and file index after an [[overwrite]] or a
+    * [[compact]] re-registers it.
+    */
+  private def dropTable(spark: SparkSession, tbl: String): Unit = {
+    Option(dynChildren.get(spark)).foreach { child =>
+      if (spark.catalog.tableExists(tbl)) child.catalog.refreshTable(tbl)
+    }
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
 
   /** One-shot full (re)build: clear the dir, write everything as one
     * consolidated base partition. The write-then-swap is NOT atomic (this
@@ -330,7 +345,7 @@ object BucketedStore {
   def overwrite(df: DataFrame, spec: StoreSpec): Unit = {
     val spark = df.sparkSession
     val f = fs(spark, spec.dir)
-    spark.sql(s"DROP TABLE IF EXISTS ${tableName(spec.dir)}")
+    dropTable(spark, tableName(spec.dir))
     f.delete(new Path(spec.dir), true)
     appendBatch(df, spec, -1L)
   }
@@ -603,7 +618,7 @@ object BucketedStore {
     // the consolidated rewrite is sorted per bucket, and it is now the
     // ONLY partition — a legacy unsorted store earns the marker here
     writeMarker(f, spec.dir, SortedMarker, 1L)
-    spark.sql(s"DROP TABLE IF EXISTS ${tableName(spec.dir)}")
+    dropTable(spark, tableName(spec.dir))
     tryRegister(spark, spec)
     // INTENT dies before COMMIT: a crash between the deletes leaves
     // commit-only (rolls forward, idempotent); the reverse order would
@@ -633,7 +648,7 @@ object BucketedStore {
           spark.sql(s"DROP TABLE IF EXISTS ${tableName(spec.dir)}_compacting")
           // a non-mutating reader may have registered the table WITH the
           // orphan partition — drop it so the next use re-registers clean
-          spark.sql(s"DROP TABLE IF EXISTS ${tableName(spec.dir)}")
+          dropTable(spark, tableName(spec.dir))
           f.delete(marker(spec.dir, IntentMarker), false)
           f.delete(marker(spec.dir, UpToMarker), false)
         case None => ()

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.collection.immutable.ListMap
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -102,8 +104,12 @@ object Loader {
           "below the feed's compaction frontier; if this is a first-time " +
           "batch its rows were dropped — reprocess into a fresh feed dir.")
     if (!fs.exists(marker) && !folded) {
-      df.withColumn("_src_batch", lit(batchId)) // survives feed compaction
-        .withColumn("_batch", lit(batchId))
+      // one projection, one analyzer pass over the micro-batch plan;
+      // `_src_batch` survives feed compaction. Dynamic overwrite of the
+      // batch's partition, not a direct write to `_batch=<id>`: the direct
+      // write lands a schema-only file for an EMPTY batch, and an empty
+      // feed must stay file-less (readTableIfAny)
+      df.withColumns(ListMap("_src_batch" -> lit(batchId), "_batch" -> lit(batchId)))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("_batch")

@@ -415,4 +415,57 @@ class BucketedStoreSpec extends AnyFunSuite {
     assert(err.getMessage == "write failed")
     assert(!siblingRunning.get, "a sibling write was still running when the helper threw")
   }
+
+  test("a session nobody uses any more is not kept alive by its append child") {
+    // appends run in a conf-frozen child session cached per parent; the
+    // cache must not pin every parent (and child) for the process lifetime
+    def appendFromThrowawaySession(): java.lang.ref.WeakReference[AnyRef] = {
+      val parent = spark.newSession()
+      // AQE's stage threads inherit the session that was active when they
+      // were spawned and keep it for their pool's 60 s keep-alive; without
+      // AQE the parent's own jobs run on this thread alone
+      parent.conf.set("spark.sql.adaptive.enabled", "false")
+      val s = spec(tmpDir("bs-weak"))
+      def batch(from: Long) = parent.range(from, from + 20).select(
+        col("id").as("k"), (col("id") % 7).as("grp"), concat(lit("v"), col("id")).as("payload"))
+      BucketedStore.appendBatch(batch(0), s, 0L) // creates the table
+      BucketedStore.appendBatch(batch(20), s, 1L) // runs in the child
+      assert(BucketedStore.read(parent, s).get.count() == 40)
+      new java.lang.ref.WeakReference[AnyRef](parent)
+    }
+    val ref = appendFromThrowawaySession()
+    val deadline = System.currentTimeMillis() + 30000
+    while (ref.get != null && System.currentTimeMillis() < deadline) {
+      System.gc()
+      Thread.sleep(50)
+    }
+    assert(ref.get == null, "an unused parent session is still reachable")
+  }
+
+  test("appends after overwrite resolve the rebuilt table, not the child's cached relation") {
+    // the child session keeps its own relation cache. A successful insert
+    // refreshes it on the way out, but a FAILED one (a sibling write
+    // cancelled mid-batch) leaves the analyzed relation cached; once
+    // `overwrite` drops and re-creates the table with a new column, that
+    // stale entry would resolve the next insertInto against the dropped
+    // table's schema
+    val s = spec(tmpDir("bs-stale"))
+    BucketedStore.appendBatch(mk(0, 20), s, 0L)
+    BucketedStore.appendBatch(mk(20, 40), s, 1L)
+    intercept[Exception] {
+      BucketedStore.appendBatch(
+        mk(40, 60).withColumn("payload", expr("if(k >= 0, raise_error('boom'), payload)")), s, 2L)
+    }
+    def wide(from: Long, until: Long) = mk(from, until).withColumn("extra", col("k") * 2)
+    BucketedStore.overwrite(wide(0, 40), s)
+    BucketedStore.appendBatch(wide(40, 60), s, 2L)
+    val got = BucketedStore.read(spark, s).get
+    assert(got.columns.contains("extra"))
+    assert(got.count() == 60)
+    assert(got.filter(col("extra") =!= col("k") * 2).count() == 0)
+    // and the same after a compaction re-registers it
+    BucketedStore.compact(spark, s)
+    BucketedStore.appendBatch(wide(60, 80), s, 3L)
+    assert(rows(s).size == 80)
+  }
 }

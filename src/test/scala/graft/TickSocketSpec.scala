@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,8 +21,9 @@ class TickSocketSpec extends AnyFunSuite {
     try spark.read.parquet(out).count()
     catch { case _: Throwable => 0L } // sink dir not created / mid-overwrite
 
-  private def runUntil(port: Int, out: String, ck: String, minRows: Long): Unit = {
-    val stream = spark.readStream.format("graft.sources.TickSocketProvider")
+  private def runUntil(port: Int, out: String, ck: String, minRows: Long,
+      session: SparkSession): Unit = {
+    val stream = session.readStream.format("graft.sources.TickSocketProvider")
       .option("port", port.toString)
       .option("maxPerTrigger", "500")
       .option("numPartitions", "4")
@@ -44,18 +46,22 @@ class TickSocketSpec extends AnyFunSuite {
     } finally q.stop() // the mid-stream kill
   }
 
-  test("socket source: kill mid-stream + restart from checkpoint = no dup, no loss") {
-    val base = tmpDir("ticksock")
+  /** Kill a query mid-stream, restart it from its checkpoint against a
+    * fresh server, and check the reassembled sink is exactly the sequence
+    * prefix. Returns the sink dir.
+    */
+  private def killAndRestart(prefix: String, session: SparkSession): String = {
+    val base = tmpDir(prefix)
     val (out, ck) = (s"$base/out", s"$base/ck")
 
     val s1 = new TickSocketServer().start()
-    try runUntil(s1.port, out, ck, minRows = 1500) finally s1.close()
+    try runUntil(s1.port, out, ck, minRows = 1500, session) finally s1.close()
 
     // restart: only the CHECKPOINT carries position; the new server knows
     // nothing until the source asks it to RESUME from the recovered offset
     val s2 = new TickSocketServer().start()
     try {
-      runUntil(s2.port, out, ck, minRows = 4000)
+      runUntil(s2.port, out, ck, minRows = 4000, session)
       assert(s2.lastResume > 0,
         "restarted source did not resume mid-stream (RESUME 0 = replayed from scratch)")
     } finally s2.close()
@@ -71,13 +77,92 @@ class TickSocketSpec extends AnyFunSuite {
     assert(lo == 0L, s"stream did not start at sequence 0 (lo=$lo)")
     assert(hi == n - 1, s"gap in recovered stream: max=$hi over $n rows")
     assert(n >= 4000)
+    out
+  }
+
+  /** (rows, part files) of every landed `batch=<id>` dir: each slice of a
+    * trigger is one write task, and each write task one part file.
+    */
+  private def slicesPerBatch(out: String): Map[Long, (Long, Int)] = {
+    val rows = spark.read.parquet(out).groupBy("batch").count().collect()
+      .map(r => r.getAs[Number](0).longValue -> r.getLong(1)).toMap
+    rows.map { case (id, n) =>
+      val parts = new java.io.File(s"$out/batch=$id").listFiles()
+        .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      id -> (n, parts)
+    }
+  }
+
+  test("socket source: kill mid-stream + restart from checkpoint = no dup, no loss") {
+    val out = killAndRestart("ticksock", spark)
+
+    // a trigger of ≤ 500 ticks is ~40 KB, far under the 4 MB open cost:
+    // the byte-sized split rule plans ONE slice, so one write task per batch
+    val batches = slicesPerBatch(out)
+    assert(batches.nonEmpty)
+    batches.foreach { case (id, (n, parts)) =>
+      assert(parts == 1, s"batch $id ($n rows) landed through $parts slices, not 1")
+    }
 
     // content integrity: a sampled row matches the deterministic formula
-    val sample = got.filter(col("tradeId") === 1234L)
+    val sample = spark.read.parquet(out).filter(col("tradeId") === 1234L)
       .select("symbol", "price", "qty", "tradeTimeMs", "isBuyerMaker").collect().head
     val (_, sym, p, q, t, m) = graft.sources.TickGen.at(1234L, 1710000000000L, 10L)
     assert(sample.getString(0) == sym && sample.getString(1) == p &&
       sample.getString(2) == q && sample.getLong(3) == t && sample.getBoolean(4) == m)
+  }
+
+  test("socket source: a tiny openCostInBytes fans each trigger out to numPartitions slices") {
+    // the other side of the split rule: with a 1-byte open cost the split
+    // size is bytes / numPartitions, so every batch of ≥ 4 rows is 4 slices
+    val child = spark.newSession()
+    child.conf.set("spark.sql.files.openCostInBytes", "1")
+    val out = killAndRestart("ticksock-fan", child)
+    val batches = slicesPerBatch(out)
+    assert(batches.values.exists(_._1 >= 4))
+    batches.foreach { case (id, (n, parts)) =>
+      assert(parts == math.min(4L, n), s"batch $id ($n rows) landed through $parts slices, not 4")
+    }
+  }
+
+  test("socket source: numPartitions below 1 fails naming the option") {
+    val e = intercept[IllegalArgumentException] {
+      spark.readStream.format("graft.sources.TickSocketProvider")
+        .option("port", "1").option("numPartitions", "0").load()
+    }
+    assert(e.getMessage.contains("numPartitions"), e.getMessage)
+  }
+
+  test("socket source: a trigger of only blank lines fails the batch, never commits unread") {
+    // zero line bytes must still plan a slice, so the parser sees the rows
+    val server = new java.net.ServerSocket(0, 8, java.net.InetAddress.getLoopbackAddress)
+    val feed = new Thread(() => {
+      val conn = server.accept()
+      try {
+        conn.getInputStream.read() // the client's RESUME line has started
+        val out = conn.getOutputStream
+        out.write(("\n" * 50).getBytes); out.flush()
+        Thread.sleep(60000)
+      } catch { case _: Exception => } finally conn.close()
+    })
+    feed.setDaemon(true); feed.start()
+    val base = tmpDir("ticksock-blank")
+    val q = spark.readStream.format("graft.sources.TickSocketProvider")
+      .option("port", server.getLocalPort.toString).load()
+      .writeStream
+      .trigger(Trigger.ProcessingTime(50))
+      .option("checkpointLocation", s"$base/ck")
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        batch.write.mode("overwrite").parquet(s"$base/out/batch=$id")
+      }
+      .start()
+    try {
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.awaitTermination(60000)
+      }
+      assert(e.getMessage.contains("NumberFormatException"), e.getMessage)
+      assert(sinkCount(s"$base/out") == 0L)
+    } finally { q.stop(); server.close(); feed.interrupt() }
   }
 
   test("socket source: upstream dies mid-stream, reader auto-reconnects with RESUME") {
