@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{GraftSqlBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -14,6 +14,11 @@ import graft.functions.{CosineSimilarity, DotProduct, JaroWinklerSimilarity, Shi
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // runs before the session's SharedState exists, so this static default
+    // reaches the session; an explicit value wins (DEPLOY.md "Generated-code
+    // cache")
+    GraftSqlBridge.setContextConfIfMissing(
+      GraftExtensions.CodegenCacheKey, GraftExtensions.CodegenCacheEntries.toString)
     ext.injectFunction((
       FunctionIdentifier("cosine_similarity"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
@@ -58,6 +63,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  /** Spark's generated-class cache size: static, read once per JVM. */
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** The engine default for [[CodegenCacheKey]]: one `operator_batch`
+    * benchmark pass alone needs 275 distinct classes, and Spark's 100
+    * evicts each before its next use.
+    */
+  val CodegenCacheEntries = 1000
+
   /** Arity-checked builder with array<double> coercion: the expressions
     * assume double-backed arrays, but SQL callers naturally pass e.g. the
     * fixtures' native array<float> embedding column — reading a float-backed

@@ -2,6 +2,7 @@ package graft.obs
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
@@ -36,9 +37,16 @@ final case class StageProfile(id: Int, name: String, tasks: Long,
   * wall-vs-task split alone cannot attribute. `lastQuery` is the last SQL
   * execution that finished in the block (for a forced DataFrame, the write
   * itself), so its plan is the final, post-AQE one.
+  *
+  * `codegenClasses` counts the generated classes compiled in the block (the
+  * JVM-wide count of Spark's compile-time histogram, so a concurrent query
+  * shows too); a warm block that reruns known plans should read 0.
+  * `codegenMs` estimates their compile time as count × the histogram's
+  * sampled mean, since Spark keeps no exact sum.
   */
 final case class QueryProfile(wallSec: Double, jobs: Int, driverGapSec: Double,
-    stages: Seq[StageProfile], lastQuery: Option[QueryExecution]) {
+    stages: Seq[StageProfile], lastQuery: Option[QueryExecution],
+    codegenClasses: Long, codegenMs: Double) {
 
   def taskSec: Double = stages.map(_.runMs).sum / 1e3
   def cpuSec: Double = stages.map(_.cpuMs).sum / 1e3
@@ -55,6 +63,7 @@ final case class QueryProfile(wallSec: Double, jobs: Int, driverGapSec: Double,
       "wall_sec" -> JDouble(wallSec), "task_sec" -> JDouble(taskSec),
       "cpu_sec" -> JDouble(cpuSec), "gc_sec" -> JDouble(gcSec),
       "jobs" -> JInt(jobs), "driver_gap_sec" -> JDouble(driverGapSec),
+      "codegen_classes" -> JLong(codegenClasses), "codegen_ms" -> JDouble(codegenMs),
       "stages" -> JInt(stages.size), "tasks" -> sum(_.tasks),
       "shuffle_read_bytes" -> sum(_.shuffleReadBytes),
       "shuffle_write_bytes" -> sum(_.shuffleWriteBytes),
@@ -94,12 +103,21 @@ object QueryProfile {
     try {
       settle()
       rec.reset()
+      val (n0, ms0) = compiled()
       val t0 = System.nanoTime()
       val out = body
       val t1 = System.nanoTime()
+      val (n1, ms1) = compiled()
       settle()
-      (out, rec.profile(t0, t1))
+      (out, rec.profile(t0, t1, n1 - n0, math.max(0.0, ms1 - ms0)))
     } finally spark.sparkContext.removeSparkListener(rec)
+  }
+
+  /** Classes compiled so far in this JVM, and their estimated total ms. */
+  private def compiled(): (Long, Double) = {
+    val h = CodegenMetrics.METRIC_COMPILATION_TIME
+    val n = h.getCount
+    (n, n * h.getSnapshot.getMean)
   }
 
   // per-stage counters, in StageProfile field order after id and name
@@ -164,7 +182,8 @@ object QueryProfile {
     }
 
     /** Wall time minus the union of job intervals clipped to [t0, t1]. */
-    def profile(t0: Long, t1: Long): QueryProfile = synchronized {
+    def profile(t0: Long, t1: Long, codegenClasses: Long,
+        codegenMs: Double): QueryProfile = synchronized {
       val spans = jobSpans.toSeq
         .map { case (a, b) => (math.max(a, t0), math.min(b, t1)) }
         .filter(p => p._2 > p._1).sortBy(_._1)
@@ -178,7 +197,7 @@ object QueryProfile {
         StageProfile(id, names.getOrElse(id, "?"), a(Tasks), a(Run), a(Cpu) / 1000000L, a(Gc),
           a(ShRB), a(ShRR), a(ShWB), a(ShWR), a(Spill), a(Out))
       }
-      QueryProfile(wall, jobs, wall - covered / 1e9, ss, lastQuery)
+      QueryProfile(wall, jobs, wall - covered / 1e9, ss, lastQuery, codegenClasses, codegenMs)
     }
   }
 }

@@ -109,7 +109,9 @@ object Loader {
       // batch's partition, not a direct write to `_batch=<id>`: the direct
       // write lands a schema-only file for an EMPTY batch, and an empty
       // feed must stay file-less (readTableIfAny)
-      df.withColumns(ListMap("_src_batch" -> lit(batchId), "_batch" -> lit(batchId)))
+      // not lit(batchId): an inlined literal compiles new classes per trigger
+      val id = graft.functions.LongParam.column(batchId)
+      df.withColumns(ListMap("_src_batch" -> id, "_batch" -> id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("_batch")

@@ -11,8 +11,9 @@ import graft.queries.SharedStages
 /** Where each named entry's time goes: runs it once through the noop sink
   * after Bench's warm-up and prints one JSON line per entry — wall, task,
   * CPU and GC seconds, job count, driver gap (wall not covered by any
-  * running job), shuffle/spill/output totals, and the 10 stages with the
-  * most task time (graft.obs.QueryProfile).
+  * running job), generated classes compiled and their compile ms,
+  * shuffle/spill/output totals, and the 10 stages with the most task time
+  * (graft.obs.QueryProfile).
   *
   * `--plan DIR` also writes each entry's final (post-AQE) formatted
   * physical plan to `DIR/<name>.txt`.

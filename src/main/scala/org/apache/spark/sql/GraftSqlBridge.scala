@@ -71,6 +71,13 @@ object GraftSqlBridge {
     }
   }
 
+  /** Sets `key` on the running SparkContext's conf unless it is already set
+    * (`SparkContext.conf` is `private[spark]`). A static SQL conf set here
+    * before a session's SharedState exists reaches that session.
+    */
+  def setContextConfIfMissing(key: String, value: String): Unit =
+    org.apache.spark.SparkContext.getActive.foreach(_.conf.setIfMissing(key, value))
+
   /** Block until the listener bus has delivered all queued events —
     * `private[spark]`, needed to attribute SparkListener task metrics to
     * the query that just ran (graft.obs.QueryProfile).
