@@ -55,18 +55,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+    val cpus = obs.Sessions.envInt("SPARK_GRAFT_CPUS", 32)
+    val reps = obs.Sessions.envInt("SPARK_GRAFT_REPS", 3)
     // Rehearsal knob: on a real cluster shuffle partitions grow with the
     // data (the fixed-32 default models the driver's local[32] gate, not a
-    // 100 TB deployment). The sf10 scale runs use this to measure the
-    // partition-scaling law directly — same code, partitions sized to SF.
+    // 100 TB deployment). The sf10 scale runs size them to the SF with
+    // `-Dspark.sql.shuffle.partitions=N` (a system property wins over the
+    // session default), measuring the partition-scaling law directly.
     // The terminal guard is off: no hash oracle runs here, and at rehearsal
     // SFs (sf1/sf10) aggregate sums legitimately cross the 2^53·1e-6
     // terminal-DOUBLE bound the correctness gate enforces — the guard
     // belongs to Verify, not to throughput measurement.
-    val spark = obs.Sessions.local(cpus, guard = false,
-      shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt))
+    val spark = obs.Sessions.local(cpus, guard = false)
     warmUp(spark, sfDir)
 
     // Queries run sequentially, so each run's profile is its own work.

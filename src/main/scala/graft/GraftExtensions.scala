@@ -19,6 +19,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // cache")
     GraftSqlBridge.setContextConfIfMissing(
       GraftExtensions.CodegenCacheKey, GraftExtensions.CodegenCacheEntries.toString)
+    // Spark's per-session artifact classloaders (a Spark Connect feature the
+    // engine does not use) key the codegen cache per session; with one
+    // classloader a session clone (graft.obs.Sessions.withConf) runs on the
+    // classes its parent compiled (DEPLOY.md "Scoped confs")
+    GraftSqlBridge.setContextConfIfMissing("spark.sql.artifact.isolation.enabled", "false")
     ext.injectFunction((
       FunctionIdentifier("cosine_similarity"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),

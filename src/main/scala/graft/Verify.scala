@@ -7,7 +7,7 @@ object Verify {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [queryName...]")
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // empty = all declared queries
-    val spark = obs.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = obs.Sessions.local(obs.Sessions.envInt("SPARK_GRAFT_CPUS", 4))
     new java.io.File(outDir).mkdirs()
     // Finalized schema per query, used to mirror the terminal DOUBLE/BIGINT
     // representation onto the oracle side (Protocol.wrapOracleTypes).

@@ -59,24 +59,9 @@ object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = if (name == "events") loadEvents(spark, dir) else spark.read.parquet(path(dir, name))
+    val df = spark.read.parquet(path(dir, name))
     expect(name, df)
     normalizeTimestamps(spark, df)
-  }
-
-  /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark's vectorized reader
-    * rejects outright. Read it as a long (legacy nanosAsLong) and truncate to
-    * microseconds with integer division — exactly what DuckDB's µs timestamps
-    * do on ingest, so both engines see identical instants. Integer `div`
-    * (not `/`) because ns-since-epoch exceeds a double's 53-bit mantissa.
-    */
-  private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(path(dir, "events"))
-    raw.schema("ts").dataType match {
-      case LongType => raw.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-      case _ => raw
-    }
   }
 
   /** Fixture timestamps are parquet µs with isAdjustedToUTC=false (naive
@@ -87,8 +72,9 @@ object Tables {
     * TimestampType here, at the one load chokepoint. The cast interprets
     * the wall time in the session time zone; every entry point pins the
     * session to UTC (guarded below), so the resulting instants are the
-    * naive values read as UTC — bit-identical to the oracle's rendering and
-    * to the pre-regeneration TIMESTAMP(NANOS)→µs path.
+    * naive values read as UTC — bit-identical to the oracle's rendering.
+    * A TIMESTAMP(NANOS) column is not read: Spark's parquet reader rejects
+    * it (DEPLOY.md "Scoped confs").
     */
   private def normalizeTimestamps(spark: SparkSession, df: DataFrame): DataFrame = {
     val ntz = df.schema.fields.filter(_.dataType == TimestampNTZType)

@@ -229,8 +229,7 @@ object AnnIvf {
     try {
       // materialize the shared batch frame ONCE, then overlap the two
       // order-independent table appends as concurrent driver jobs
-      // (guide §2.6; appendBatch is conf-free: dynamic overwrite runs in a
-      // conf-frozen child session, so they cannot race)
+      // (guide §2.6; appendBatch never writes the session's conf)
       fresh.count()
       Concurrently(spark)(Seq(
         () => BucketedStore.appendBatch(fresh, storeSpec(dir, width), batchId),
@@ -332,8 +331,7 @@ object AnnIvf {
       // order-independent table appends (lists/ids/codes) as concurrent
       // driver jobs (guide §2.6) — replay converges from any crash point
       // between them exactly as it did when they ran back to back, and
-      // appendBatch is conf-free (dynamic overwrite runs in a conf-frozen
-      // child session) so concurrent writes cannot race a session conf.
+      // appendBatch never writes the session's conf.
       fresh.count()
       Concurrently(spark)(Seq(
         () => BucketedStore.appendBatch(fresh, storeSpec(dir, width), batchId),

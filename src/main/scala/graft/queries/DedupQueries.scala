@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions.cosine
 import graft.model.Tables
+import graft.obs.Sessions
 import Protocol._
 
 /** Near-duplicate detection suite (SURVEY §2.2 [EXT]): MinHash+LSH, SimHash,
@@ -762,8 +763,8 @@ object DedupQueries extends QueryModule {
           (s"$base/src", s"$base/idx", s"$base/hits", s"$base/ck")
         graft.streaming.LshIndex.buildStaticIndex(bench, idx)
         corpus.repartition(4).write.mode("overwrite").parquet(src)
-        SharedStages.withShufflePartitions(s, 8) {
-          val q = s.readStream.schema(corpus.schema)
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val q = c.readStream.schema(corpus.schema)
             .option("maxFilesPerTrigger", "1").parquet(src)
             .writeStream
             .outputMode("append")
@@ -805,18 +806,20 @@ object DedupQueries extends QueryModule {
     // case ingest-time decontamination alone can never catch.
     Declared("q254_decontaminate_backfill",
       (s, dir) => {
-        val docs = Tables.load(s, dir, "documents").select("doc_id", "text")
-        val corpus = docs.filter(col("doc_id") % 97 =!= 0 && col("doc_id") % 89 =!= 0)
-        val bench2 = docs.filter(col("doc_id") % 97 === 0 || col("doc_id") % 89 === 0)
         val base = SharedStages.scratchDir("q254")
         val (store, pairs, idx, hits) =
           (s"$base/store", s"$base/pairs", s"$base/idx2", s"$base/hits")
-        SharedStages.withShufflePartitions(s, 8) {
+        // the batches and the backfill size their stores from the session
+        // they run in, so their inputs are built from the scoped one
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val docs = Tables.load(c, dir, "documents").select("doc_id", "text")
+          val corpus = docs.filter(col("doc_id") % 97 =!= 0 && col("doc_id") % 89 =!= 0)
+          val bench2 = docs.filter(col("doc_id") % 97 === 0 || col("doc_id") % 89 === 0)
           for (b <- 0L until 4L)
             graft.streaming.LshIndex.processBatch(
               corpus.filter(pmod(col("doc_id"), lit(4L)) === b), store, pairs, b)
           graft.streaming.LshIndex.backfillDecontaminate(
-            s, store, bench2, idx, hits, revisionId = 0L)
+            c, store, bench2, idx, hits, revisionId = 0L)
             .orderBy(col("doc_id"), col("bench_id"))
         }
       },

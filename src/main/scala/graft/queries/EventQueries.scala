@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.ColumnOps.idiv
 import graft.model.Tables
+import graft.obs.Sessions
 import Protocol._
 
 /** Declared queries over the `events` table — the batch mirror of the
@@ -34,8 +35,8 @@ object EventQueries extends QueryModule {
       val (src, st, idx, ck) =
         (s"$out/src", s"$out/state", s"$out/idx", s"$out/ck")
       changes.repartition(4).write.mode("overwrite").parquet(src)
-      SharedStages.withShufflePartitions(s, 8) {
-        val q = s.readStream.schema(changes.schema)
+      Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+        val q = c.readStream.schema(changes.schema)
           .option("maxFilesPerTrigger", "1").parquet(src)
           .writeStream
           .outputMode("append")
@@ -147,14 +148,14 @@ object EventQueries extends QueryModule {
         val base = SharedStages.scratchDir("q66")
         val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
         events.repartition(4).write.mode("overwrite").parquet(src)
-        val stream = s.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-        val agg = stream
-          .groupBy(window(col("ts"), "1 minute"), col("event_type"))
-          .agg(count(lit(1)).as("n"), out6(sum(dec(col("value")))).as("sum_value"))
-          .select(tsec(col("window").getField("start")).as("w"),
-            col("event_type"), col("n"), col("sum_value"))
-        SharedStages.withShufflePartitions(s, 8) {
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val stream = c.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", "1").parquet(src)
+          val agg = stream
+            .groupBy(window(col("ts"), "1 minute"), col("event_type"))
+            .agg(count(lit(1)).as("n"), out6(sum(dec(col("value")))).as("sum_value"))
+            .select(tsec(col("window").getField("start")).as("w"),
+              col("event_type"), col("n"), col("sum_value"))
           val q = agg.writeStream
             .outputMode("complete")
             .trigger(Trigger.AvailableNow())
@@ -191,8 +192,8 @@ object EventQueries extends QueryModule {
         val base = SharedStages.scratchDir("q70")
         val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
         docs.repartition(4).write.mode("overwrite").parquet(src)
-        SharedStages.withShufflePartitions(s, 8) {
-          val q = s.readStream.schema(docs.schema)
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val q = c.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", "1").parquet(src)
             .dropDuplicates("h")
             .writeStream
@@ -237,8 +238,8 @@ object EventQueries extends QueryModule {
         val base = SharedStages.scratchDir("q71")
         val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
         ev.repartition(4).write.mode("overwrite").parquet(src)
-        SharedStages.withShufflePartitions(s, 8) {
-          val q = s.readStream.schema(ev.schema)
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val q = c.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", "1").parquet(src)
             .join(userDim, "user_id")
             .writeStream
@@ -324,11 +325,11 @@ object EventQueries extends QueryModule {
         val base = SharedStages.scratchDir("q76")
         val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
         events.repartition(4).write.mode("overwrite").parquet(src)
-        val agg = s.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-          .agg(count(lit(1)).as("n_events"))
-        SharedStages.withShufflePartitions(s, 8) {
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val agg = c.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", "1").parquet(src)
+            .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+            .agg(count(lit(1)).as("n_events"))
           val q = agg.writeStream
             .outputMode("complete")
             .trigger(Trigger.AvailableNow())
@@ -373,13 +374,13 @@ object EventQueries extends QueryModule {
         val base = SharedStages.scratchDir("q92")
         val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
         events.repartition(4).write.mode("overwrite").parquet(src)
-        val agg = s.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .groupBy(window(col("ts"), "1 minute"), col("event_type"))
-          .agg(count(lit(1)).as("n"), out6(sum(dec(col("value")))).as("sum_value"))
-          .select(tsec(col("window").getField("start")).as("w"),
-            col("event_type"), col("n"), col("sum_value"))
-        SharedStages.withShufflePartitions(s, 8) {
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val agg = c.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", "1").parquet(src)
+            .groupBy(window(col("ts"), "1 minute"), col("event_type"))
+            .agg(count(lit(1)).as("n"), out6(sum(dec(col("value")))).as("sum_value"))
+            .select(tsec(col("window").getField("start")).as("w"),
+              col("event_type"), col("n"), col("sum_value"))
           val q = agg.writeStream
             .outputMode("update")
             .trigger(Trigger.AvailableNow())
@@ -440,11 +441,11 @@ object EventQueries extends QueryModule {
             0.toByte, 0L, 0.0)).toDF("key", "ts", "side", "id", "v")
         }
         writeOne(pusher, "zz_pusher")
-        val stream = s.readStream.schema(asofEv.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .as[graft.streaming.Stateful.AsOfEv](
-            org.apache.spark.sql.Encoders.product[graft.streaming.Stateful.AsOfEv])
-        SharedStages.withShufflePartitions(s, 8) {
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val stream = c.readStream.schema(asofEv.schema)
+            .option("maxFilesPerTrigger", "1").parquet(src)
+            .as[graft.streaming.Stateful.AsOfEv](
+              org.apache.spark.sql.Encoders.product[graft.streaming.Stateful.AsOfEv])
           val q = graft.streaming.Stateful.asOfJoinStream(stream, delay = "87600 hours")
             .toDF()
             .writeStream
@@ -490,13 +491,13 @@ object EventQueries extends QueryModule {
         val base = SharedStages.scratchDir("q85")
         val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
         events.repartition(4).write.mode("overwrite").parquet(src)
-        val agg = s.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .groupBy(window(col("ts"), "10 minutes", "1 minute").as("w"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(tsec(col("w").getField("start")).as("w_start"),
-            col("event_type"), col("n"))
-        SharedStages.withShufflePartitions(s, 8) {
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val agg = c.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", "1").parquet(src)
+            .groupBy(window(col("ts"), "10 minutes", "1 minute").as("w"), col("event_type"))
+            .agg(count(lit(1)).as("n"))
+            .select(tsec(col("w").getField("start")).as("w_start"),
+              col("event_type"), col("n"))
           val q = agg.writeStream
             .outputMode("complete")
             .trigger(Trigger.AvailableNow())
@@ -538,11 +539,11 @@ object EventQueries extends QueryModule {
         val base = SharedStages.scratchDir("q94")
         val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
         ev.repartition(4).write.mode("overwrite").parquet(src)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .as[graft.streaming.Stateful.FunnelEv](
-            org.apache.spark.sql.Encoders.product[graft.streaming.Stateful.FunnelEv])
-        SharedStages.withShufflePartitions(s, 8) {
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val stream = c.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", "1").parquet(src)
+            .as[graft.streaming.Stateful.FunnelEv](
+              org.apache.spark.sql.Encoders.product[graft.streaming.Stateful.FunnelEv])
           val q = graft.streaming.Stateful.funnelStream(stream)
             .toDF()
             .writeStream
@@ -722,22 +723,22 @@ object EventQueries extends QueryModule {
             }
             flush()
           }
-        val stream = s.readStream.format("graft.sources.LogTopicProvider")
-          .option("path", topic)
-          .option("maxPerTrigger", "4000")
-          .load()
-        val parsed = stream
-          .select(split(col("value"), "\t").as("f"))
-          .select(
-            timestamp_micros(element_at(col("f"), 1).cast("long")).as("ts"),
-            element_at(col("f"), 2).as("event_type"),
-            element_at(col("f"), 3).cast("double").as("value"))
-        val agg = parsed
-          .groupBy(window(col("ts"), "1 minute"), col("event_type"))
-          .agg(count(lit(1)).as("n"), out6(sum(dec(col("value")))).as("sum_value"))
-          .select(tsec(col("window").getField("start")).as("w"),
-            col("event_type"), col("n"), col("sum_value"))
-        SharedStages.withShufflePartitions(s, 8) {
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val stream = c.readStream.format("graft.sources.LogTopicProvider")
+            .option("path", topic)
+            .option("maxPerTrigger", "4000")
+            .load()
+          val parsed = stream
+            .select(split(col("value"), "\t").as("f"))
+            .select(
+              timestamp_micros(element_at(col("f"), 1).cast("long")).as("ts"),
+              element_at(col("f"), 2).as("event_type"),
+              element_at(col("f"), 3).cast("double").as("value"))
+          val agg = parsed
+            .groupBy(window(col("ts"), "1 minute"), col("event_type"))
+            .agg(count(lit(1)).as("n"), out6(sum(dec(col("value")))).as("sum_value"))
+            .select(tsec(col("window").getField("start")).as("w"),
+              col("event_type"), col("n"), col("sum_value"))
           val q = agg.writeStream
             .outputMode("complete")
             .trigger(Trigger.AvailableNow())
@@ -1004,12 +1005,12 @@ object EventQueries extends QueryModule {
         val base = SharedStages.scratchDir("q149")
         val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
         events.repartition(4).write.mode("overwrite").parquet(src)
-        val stream = s.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-        val firstSeen = stream
-          .select(col("user_id"), idiv(unix_micros(col("ts")), lit(86400000000L)).as("d"))
-          .groupBy(col("user_id")).agg(min(col("d")).as("d0"))
-        SharedStages.withShufflePartitions(s, 8) {
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val stream = c.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", "1").parquet(src)
+          val firstSeen = stream
+            .select(col("user_id"), idiv(unix_micros(col("ts")), lit(86400000000L)).as("d"))
+            .groupBy(col("user_id")).agg(min(col("d")).as("d0"))
           val q = firstSeen.writeStream
             .outputMode("complete")
             .trigger(Trigger.AvailableNow())
@@ -1055,14 +1056,14 @@ object EventQueries extends QueryModule {
         val base = SharedStages.scratchDir("q165")
         val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
         withDups.repartition(4).write.mode("overwrite").parquet(src)
-        val agg = s.readStream.schema(withDups.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .dropDuplicates("event_id")
-          .groupBy(window(col("ts"), "1 minute"), col("event_type"))
-          .agg(count(lit(1)).as("n"), out6(sum(dec(col("value")))).as("sum_value"))
-          .select(tsec(col("window").getField("start")).as("w"),
-            col("event_type"), col("n"), col("sum_value"))
-        SharedStages.withShufflePartitions(s, 8) {
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val agg = c.readStream.schema(withDups.schema)
+            .option("maxFilesPerTrigger", "1").parquet(src)
+            .dropDuplicates("event_id")
+            .groupBy(window(col("ts"), "1 minute"), col("event_type"))
+            .agg(count(lit(1)).as("n"), out6(sum(dec(col("value")))).as("sum_value"))
+            .select(tsec(col("window").getField("start")).as("w"),
+              col("event_type"), col("n"), col("sum_value"))
           val q = agg.writeStream
             .outputMode("complete")
             .trigger(Trigger.AvailableNow())
@@ -1178,11 +1179,11 @@ object EventQueries extends QueryModule {
             0.toByte, -1L, 0.0)).toDF("key", "ts", "side", "id", "v")
         }
         writeOne(pusher, "zz_pusher")
-        val stream = s.readStream.schema(asofEv.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .as[graft.streaming.Stateful.AsOfEv](
-            org.apache.spark.sql.Encoders.product[graft.streaming.Stateful.AsOfEv])
-        SharedStages.withShufflePartitions(s, 8) {
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val stream = c.readStream.schema(asofEv.schema)
+            .option("maxFilesPerTrigger", "1").parquet(src)
+            .as[graft.streaming.Stateful.AsOfEv](
+              org.apache.spark.sql.Encoders.product[graft.streaming.Stateful.AsOfEv])
           val q = graft.streaming.Stateful.asOfJoinStream(stream, delay = "87600 hours")
             .toDF()
             .writeStream
@@ -1249,8 +1250,8 @@ object EventQueries extends QueryModule {
         val base = SharedStages.scratchDir("q240")
         val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
         changes.repartition(4).write.mode("overwrite").parquet(src)
-        SharedStages.withShufflePartitions(s, 8) {
-          val q = s.readStream.schema(changes.schema)
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val q = c.readStream.schema(changes.schema)
             .option("maxFilesPerTrigger", "1").parquet(src)
             .writeStream
             .outputMode("append")
@@ -1294,8 +1295,8 @@ object EventQueries extends QueryModule {
         val (src, st, agg, ck) =
           (s"$base/src", s"$base/state", s"$base/agg", s"$base/ck")
         changes.repartition(4).write.mode("overwrite").parquet(src)
-        SharedStages.withShufflePartitions(s, 8) {
-          val q = s.readStream.schema(changes.schema)
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val q = c.readStream.schema(changes.schema)
             .option("maxFilesPerTrigger", "1").parquet(src)
             .writeStream
             .outputMode("append")

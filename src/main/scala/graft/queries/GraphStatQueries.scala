@@ -6,6 +6,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.functions.ColumnOps.{idiv, ppm}
 import graft.model.Tables
+import graft.obs.Sessions
 import graft.operators.Materialize.pin
 import Protocol._
 
@@ -776,8 +777,8 @@ object GraphStatQueries extends QueryModule {
         val base = SharedStages.scratchDir("q250")
         val (src, st, ck) = (s"$base/src", s"$base/state", s"$base/ck")
         edges.repartition(4).write.mode("overwrite").parquet(src)
-        SharedStages.withShufflePartitions(s, 8) {
-          val q = s.readStream.schema(edges.schema)
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val q = c.readStream.schema(edges.schema)
             .option("maxFilesPerTrigger", "1").parquet(src)
             .writeStream
             .outputMode("append")
@@ -827,8 +828,8 @@ object GraphStatQueries extends QueryModule {
         val base = SharedStages.scratchDir("q252")
         val (src, st, es, ck) = (s"$base/src", s"$base/state", s"$base/edges", s"$base/ck")
         changes.repartition(4).write.mode("overwrite").parquet(src)
-        SharedStages.withShufflePartitions(s, 8) {
-          val q = s.readStream.schema(changes.schema)
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val q = c.readStream.schema(changes.schema)
             .option("maxFilesPerTrigger", "1").parquet(src)
             .writeStream
             .outputMode("append")

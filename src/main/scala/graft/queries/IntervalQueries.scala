@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.ColumnOps.idiv
 import graft.model.Tables
+import graft.obs.Sessions
 import Protocol._
 
 /** Interval and sequence analytics ([EXT], SURVEY §2.2): the
@@ -405,10 +406,10 @@ object IntervalQueries extends QueryModule {
             -1L, 0L)).toDF("key", "ts", "id", "delta")
         }
         writeOne(pusher, "zz_pusher")
-        val stream = s.readStream.schema(balEv.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .as[Stateful.BalEv](org.apache.spark.sql.Encoders.product[Stateful.BalEv])
-        SharedStages.withShufflePartitions(s, 8) {
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val stream = c.readStream.schema(balEv.schema)
+            .option("maxFilesPerTrigger", "1").parquet(src)
+            .as[Stateful.BalEv](org.apache.spark.sql.Encoders.product[Stateful.BalEv])
           val q = Stateful.clampedFoldStream(stream, delay = "87600 hours")
             .toDF()
             .writeStream
@@ -617,12 +618,12 @@ object IntervalQueries extends QueryModule {
         val base = SharedStages.scratchDir("q222")
         val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
         events.repartition(4).write.mode("overwrite").parquet(src)
-        val agg = s.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .groupBy(col("user_id"),
-            session_window(col("ts"), "1800000001 microseconds").as("w"))
-          .agg(count(lit(1)).as("n_events"))
-        SharedStages.withShufflePartitions(s, 8) {
+        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+          val agg = c.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", "1").parquet(src)
+            .groupBy(col("user_id"),
+              session_window(col("ts"), "1800000001 microseconds").as("w"))
+            .agg(count(lit(1)).as("n_events"))
           val q = agg.writeStream
             .outputMode("complete")
             .trigger(Trigger.AvailableNow())

@@ -16,18 +16,6 @@ import Protocol._
   */
 object OptimizerQueries extends QueryModule {
 
-  /** Scopes session confs for the duration of `body`, restoring previous
-    * values (or unsetting) after. Same sequential-execution assumption as
-    * SharedStages.withShufflePartitions — Verify/Bench run queries
-    * sequentially on the session by construction.
-    */
-  def withConfs[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
-    val saved = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
-    kvs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally saved.foreach { case (k, ov) => ov.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-  }
-
   /** The conf set that makes InjectRuntimeFilter fire at fixture scale: the
     * join must stay a shuffle join (broadcast would already prune via DPP /
     * the broadcast itself), and the application-side size floor (10 GB
@@ -75,10 +63,10 @@ object OptimizerQueries extends QueryModule {
     // l_orderkey BEFORE the fact side's shuffle, so ~97 % of lineitem rows
     // drop pre-exchange instead of riding the shuffle to die in the join.
     //
-    // The builder materializes under the scoped confs (an eager
-    // Materialize.pin) so the gate run actually executes the bloom-pruned
-    // plan; the result is conf-independent and the oracle runs the plain
-    // join. OptimizerLeverSpec pins `might_contain` in the scoped plan,
+    // The builder materializes on a session clone carrying the confs (an
+    // eager Materialize.pin) so the gate run actually executes the
+    // bloom-pruned plan; the result is conf-independent and the oracle runs
+    // the plain join. OptimizerLeverSpec pins `might_contain` in the scoped plan,
     // its absence in the default plan, and result equality between the two.
     //
     // Shape at 100 TB: THE semi-join-reduction lever for shuffle joins too
@@ -86,8 +74,8 @@ object OptimizerQueries extends QueryModule {
     // default 10 GB application floor restored it engages exactly where it
     // pays.
     Declared("q152_bloom_join",
-      (s, dir) => withConfs(s, bloomConfs: _*) {
-        graft.operators.Materialize.pin(bloomJoinPlan(s, dir), "q152_bloom").df
+      (s, dir) => graft.obs.Sessions.withConf(s, bloomConfs: _*) { c =>
+        graft.operators.Materialize.pin(bloomJoinPlan(c, dir), "q152_bloom").df
       },
       Some("""SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_items,
              |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,6)) * (1 - CAST(l_discount AS DECIMAL(18,6)))), 6) AS DECIMAL(18,6)) AS revenue

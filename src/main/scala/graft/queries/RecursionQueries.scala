@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
+import graft.obs.Sessions
 import graft.operators.IterativeFixpoint
 
 /** Recursive-query surface: a recursive CTE (Spark 4's `WITH RECURSIVE` /
@@ -59,12 +60,10 @@ object RecursionQueries extends QueryModule {
     // sf1 (1.5M orders) the DEFAULT cap kills a correct query
     // (RECURSION_ROW_LIMIT_EXCEEDED, found by the sf1 rehearsal). Size the
     // cap to the workload's KNOWN output bound (+1 anchor slack) instead
-    // of disabling it: an actual runaway still trips. Set on the session
-    // (not scoped): UnionLoopExec reads it at EXECUTION, which happens
-    // after this builder returns, so a save/restore scope would restore
-    // the default before the query ever runs.
+    // of disabling it: an actual runaway still trips. UnionLoopExec reads
+    // it at EXECUTION, after this builder returns, so the returned frame
+    // is built from a session clone that carries the cap.
     val bound = math.max(1000000L, orders.count() + 1L)
-    s.conf.set("spark.sql.cteRecursionRowLimit", bound.toString)
     // r14 (VERDICT item 3): UnionLoop re-plans and RE-EXECUTES the
     // recursion-step subtree every round, and with `ord` as a plain CTE
     // that meant ~25 rounds × (orders scan + full row_number window +
@@ -93,7 +92,7 @@ object RecursionQueries extends QueryModule {
       .repartition(8, col("o_custkey"), col("rn"))
       .write.bucketBy(8, "o_custkey", "rn").sortBy("o_custkey", "rn")
       .mode("overwrite").saveAsTable(tbl)
-    s.sql(
+    Sessions.withConf(s, "spark.sql.cteRecursionRowLimit" -> bound.toString)(_.sql(
       s"""WITH RECURSIVE chain AS (
          |  SELECT o_custkey, rn, CAST(0 AS BIGINT) AS depth, price AS cum
          |  FROM $tbl WHERE rn = 1
@@ -103,7 +102,7 @@ object RecursionQueries extends QueryModule {
          |)
          |SELECT depth, CAST(COUNT(*) AS BIGINT) AS n_chains,
          |  CAST(ROUND(SUM(cum), 6) AS DECIMAL(38,6)) AS cum_price
-         |FROM chain GROUP BY depth ORDER BY depth""".stripMargin)
+         |FROM chain GROUP BY depth ORDER BY depth""".stripMargin))
   }
 
   /** IterativeFixpoint twin of q116. `ord` is window-numbered once and
@@ -130,10 +129,10 @@ object RecursionQueries extends QueryModule {
     //     so the round join needs neither exchange NOR sort on ord;
     //   - repartition(8, o_custkey) before the write aligns write tasks
     //     with buckets — one file per bucket, keeping the sort usable;
-    //   - requireAllClusterKeysForCoPartition=false (scoped to the
-    //     iteration) lets the subset partitioning co-locate a join keyed
-    //     (o_custkey, rn): the frontier alone shuffles to match the
-    //     buckets, frontier-sized and shrinking.
+    //   - requireAllClusterKeysForCoPartition=false (on the session clone
+    //     the iteration runs in) lets the subset partitioning co-locate a
+    //     join keyed (o_custkey, rn): the frontier alone shuffles to match
+    //     the buckets, frontier-sized and shrinking.
     // Per-round frontiers are pinned (Materialize.pin via
     // IterativeFixpoint): a fresh lineage-truncated relation per round,
     // in memory blocks unless the session asks for durable pins.
@@ -152,16 +151,12 @@ object RecursionQueries extends QueryModule {
       .repartition(8, col("o_custkey"))
       .write.bucketBy(8, "o_custkey").sortBy("o_custkey", "rn")
       .mode("overwrite").saveAsTable(tbl)
-    val ord = s.table(tbl)
-    val anchor = ord.filter(col("rn") === 1)
-      .select(col("o_custkey"), col("rn"),
-        lit(0L).as("depth"), col("price").as("cum"))
-    val coPart = "spark.sql.requireAllClusterKeysForCoPartition"
-    val coPartSaved = s.conf.get(coPart, "true")
-    s.conf.set(coPart, "false")
-    val chain = try {
-      // iterate() plans every round join eagerly inside this scope; the
-      // returned chain is a plain union of pinned rounds, conf-independent
+    val chain = Sessions.withConf(s,
+        "spark.sql.requireAllClusterKeysForCoPartition" -> "false") { c =>
+      val ord = c.table(tbl)
+      val anchor = ord.filter(col("rn") === 1)
+        .select(col("o_custkey"), col("rn"),
+          lit(0L).as("depth"), col("price").as("cum"))
       IterativeFixpoint.iterate(
         anchor,
         f => f.as("f").join(ord.as("o"),
@@ -171,7 +166,7 @@ object RecursionQueries extends QueryModule {
             (col("f.depth") + lit(1L)).as("depth"),
             (col("f.cum") + col("o.price")).cast(Protocol.D).as("cum")),
         maxRounds = 30)
-    } finally s.conf.set(coPart, coPartSaved)
+    }
     chain.groupBy(col("depth"))
       .agg(Protocol.big(count(lit(1))).as("n_chains"),
         Protocol.out6(sum(col("cum"))).as("cum_price"))

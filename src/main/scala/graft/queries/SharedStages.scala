@@ -39,29 +39,17 @@ object SharedStages {
     d
   }
 
-  /** Runs `body` with `spark.sql.shuffle.partitions` scoped to `n`, restoring
-    * the session value after. The streaming REPLAY harnesses use this: a
-    * stateful micro-batch query materializes one state-store instance per
-    * shuffle partition per trigger, so the fixture replays (tens of
-    * thousands of rows across 4 triggers) pay pure per-instance overhead at
-    * the session's scan-sized setting — 8 is right for the harness, and a
-    * cluster deployment sizes it to cores as usual. Only the streaming
-    * section runs under the scope: the returned read-back DataFrame
-    * executes later at session settings.
-    *
-    * NOT concurrency-safe: this mutates the SESSION-global conf, so it
-    * assumes the declared queries run sequentially on the session (they do —
-    * Verify/Bench are sequential by construction). Concurrent callers on one
-    * session would race the set/restore and could leak the scoped value into
-    * unrelated plans; a harness that ever parallelizes queries must give
-    * each its own `spark.newSession()` (per-session conf view) instead.
+  /** The conf the streaming REPLAY harnesses run their stream under,
+    * through [[graft.obs.Sessions.withConf]]: a stateful micro-batch query
+    * materializes one state-store instance per shuffle partition per
+    * trigger, so the fixture replays (tens of thousands of rows across 4
+    * triggers) pay pure per-instance overhead at the session's scan-sized
+    * setting — 8 is right for the harness, and a cluster deployment sizes
+    * it to cores as usual. Only the stream is built from the scoped
+    * session: the returned read-back frame is built from the caller's and
+    * executes at its settings.
     */
-  def withShufflePartitions[T](s: org.apache.spark.sql.SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, saved)
-  }
+  val ReplayConf: (String, String) = "spark.sql.shuffle.partitions" -> "8"
 
   /** LATEST-ROW-WINS merge sink for the incremental materialized-view shape
     * shared by q92's rollup and q94's funnel — now the write-audit-publish

@@ -1,8 +1,11 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
+
+import graft.functions.LongParam
+import graft.obs.Sessions
 
 /** A persistent STREAMING INDEX STORE: a parquet table bucketed on its probe
   * join keys, partitioned by writing micro-batch (`_batch`), with
@@ -254,9 +257,11 @@ object BucketedStore {
     val tbl = tableName(spec.dir)
     if (!spark.catalog.tableExists(tbl)) tryRegister(spark, spec)
     val nb = effectiveBuckets(spark, spec)
+    // the id is a parameter of the generated code, not a literal inlined
+    // into it, so each batch reuses the classes compiled for the last one
     val aligned = df.repartition(nb, spec.bucketCols.map(col): _*)
-      .withColumn("_src_batch", lit(batchId)) // survives compaction
-      .withColumn("_batch", lit(batchId))
+      .withColumn("_src_batch", LongParam.column(batchId)) // survives compaction
+      .withColumn("_batch", LongParam.column(batchId))
     if (!spark.catalog.tableExists(tbl)) {
       // first write creates table + dir in one job; a crash mid-create is
       // replayed through the insertInto branch once the dir exists.
@@ -276,16 +281,11 @@ object BucketedStore {
       writeMarker(fs(spark, spec.dir), spec.dir, BucketsMarker, nb.toLong)
       writeMarker(fs(spark, spec.dir), spec.dir, SortedMarker, 1L)
     } else {
-      // Dynamic partition overwrite, conf-ISOLATED in a per-context CHILD
-      // SESSION (r14, VERDICT item 1). The previous shape set/restored the
-      // SESSION-GLOBAL partitionOverwriteMode around the insertInto — the
-      // same documented race as withShufflePartitions: two concurrent
-      // appends to SIBLING stores would flip/restore each other's conf
-      // mid-analysis, which is why the multi-table sinks could never
-      // overlap their writes. The child shares the SparkContext and the
-      // external catalog (the registered store tables) but owns its
-      // SQLConf; its mode is set ONCE at creation and never mutated, so
-      // any number of concurrent appends can share it safely.
+      // Dynamic partition overwrite, on a session clone carrying the mode:
+      // the caller's conf is never written, so concurrent appends to
+      // sibling stores cannot see each other's setting, and each append's
+      // fresh clone resolves the table anew (no cached relation of a
+      // dropped or re-created table survives between appends).
       //
       // Dynamic — not a static `PARTITION (_batch=N)` INSERT — is
       // LOAD-BEARING: several sinks legally derive a batch's append from
@@ -294,47 +294,16 @@ object BucketedStore {
       // (stage-and-commit); static overwrite deletes the partition up
       // front and rejects the plan (UNSUPPORTED_OVERWRITE.TABLE).
       val cols = spark.table(tbl).columns.toIndexedSeq // _batch last
-      val child = dynamicOverwriteSession(spark)
-      org.apache.spark.sql.GraftSqlBridge.ofRows(child,
-        org.apache.spark.sql.GraftSqlBridge.analyzed(
-          aligned.select(cols.map(col): _*)))
-        .write.mode("overwrite").insertInto(tbl)
-      // relation caches are PER SESSION: the child's write invalidated its
-      // own cached file listing, not the parent's — refresh the parent or
+      Sessions.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") { c =>
+        GraftSqlBridge.ofRows(c, GraftSqlBridge.analyzed(aligned.select(cols.map(col): _*)))
+          .write.mode("overwrite").insertInto(tbl)
+      }
+      // relation caches are PER SESSION: the clone's write invalidated its
+      // own cached file listing, not the caller's — refresh the caller's or
       // a replay's rewrite leaves its stale listing pointing at deleted
       // files (FILE_NOT_EXIST on the next read)
       spark.catalog.refreshTable(tbl)
     }
-  }
-
-  /** One conf-frozen child session per parent, created lazily and reused by
-    * every append: `partitionOverwriteMode=dynamic` is its permanent state,
-    * so the parent's conf is never touched and concurrent appends cannot
-    * race each other. The child shares the context, catalog and extensions;
-    * only the SQLConf is private. Keyed WEAKLY: the child holds no
-    * reference to its parent, so a parent session nobody uses any more is
-    * collected together with its child.
-    */
-  private val dynChildren = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, SparkSession]())
-  private def dynamicOverwriteSession(spark: SparkSession): SparkSession =
-    dynChildren.computeIfAbsent(spark, s => {
-      val c = s.newSession()
-      c.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      c
-    })
-
-  /** Drop a store's table registration. Relation caches are PER SESSION,
-    * so the child's cached relation of the table is refreshed first:
-    * otherwise the child's next `insertInto` would still resolve the
-    * dropped table's schema and file index after an [[overwrite]] or a
-    * [[compact]] re-registers it.
-    */
-  private def dropTable(spark: SparkSession, tbl: String): Unit = {
-    Option(dynChildren.get(spark)).foreach { child =>
-      if (spark.catalog.tableExists(tbl)) child.catalog.refreshTable(tbl)
-    }
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
   /** One-shot full (re)build: clear the dir, write everything as one
@@ -345,7 +314,7 @@ object BucketedStore {
   def overwrite(df: DataFrame, spec: StoreSpec): Unit = {
     val spark = df.sparkSession
     val f = fs(spark, spec.dir)
-    dropTable(spark, tableName(spec.dir))
+    spark.sql(s"DROP TABLE IF EXISTS ${tableName(spec.dir)}")
     f.delete(new Path(spec.dir), true)
     appendBatch(df, spec, -1L)
   }
@@ -565,34 +534,33 @@ object BucketedStore {
     // negative id — "earlier than everything", the documented legacy
     // semantics), so strictly-earlier and exclude-own-batch snapshots keep
     // working after the partition structure is folded away.
-    val tblDf = spark.table(tbl)
-      .filter(col("_batch") < 0 || col("_batch") <= upTo) // the fold bound
-    val withSrc =
-      if (tblDf.columns.contains("_src_batch"))
-        tblDf.withColumn("_src_batch", coalesce(col("_src_batch"), col("_batch")))
-      else tblDf.withColumn("_src_batch", col("_batch"))
-    val src = withSrc.drop("_batch")
-    val expect = src.count()
-    // Force the BUCKETED scan for the rewrite: task i reads exactly the
-    // files of bucket i and writes bucket i's one consolidated file — the
-    // whole compaction runs with ZERO exchange. Under the default
+    //
+    // The rewrite FORCES the bucketed scan (on a session clone, so the
+    // caller's conf stays as it is): task i reads exactly the files of
+    // bucket i and writes bucket i's one consolidated file — the whole
+    // compaction runs with ZERO exchange. Under the default
     // autoBucketedScan heuristic Spark drops the bucketed scan here (no
     // join to pay for it) while the planner still elides the aligning
     // repartition, and tasks end up writing several files per bucket —
     // which defeats the point of compacting. The repartition stays as the
     // alignment fallback for a source that is not bucket-scannable.
-    val auto = spark.conf.getOption("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    try {
+    val expect = Sessions.withConf(spark,
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") { cs =>
+      val tblDf = cs.table(tbl)
+        .filter(col("_batch") < 0 || col("_batch") <= upTo) // the fold bound
+      val withSrc =
+        if (tblDf.columns.contains("_src_batch"))
+          tblDf.withColumn("_src_batch", coalesce(col("_src_batch"), col("_batch")))
+        else tblDf.withColumn("_src_batch", col("_batch"))
+      val src = withSrc.drop("_batch")
+      val n = src.count()
       src.repartition(nb, spec.bucketCols.map(col): _*)
         .write.mode("overwrite").format("parquet")
         .bucketBy(nb, spec.bucketCols.head, spec.bucketCols.tail: _*)
         .sortBy(spec.bucketCols.head, spec.bucketCols.tail: _*)
         .option("path", scratch)
         .saveAsTable(scratchTbl)
-    } finally auto match {
-      case Some(v) => spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", v)
-      case None => spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
+      n
     }
     spark.sql(s"DROP TABLE $scratchTbl") // external: files stay
     val got = spark.read.parquet(scratch).count()
@@ -618,7 +586,7 @@ object BucketedStore {
     // the consolidated rewrite is sorted per bucket, and it is now the
     // ONLY partition — a legacy unsorted store earns the marker here
     writeMarker(f, spec.dir, SortedMarker, 1L)
-    dropTable(spark, tableName(spec.dir))
+    spark.sql(s"DROP TABLE IF EXISTS ${tableName(spec.dir)}")
     tryRegister(spark, spec)
     // INTENT dies before COMMIT: a crash between the deletes leaves
     // commit-only (rolls forward, idempotent); the reverse order would
@@ -648,7 +616,7 @@ object BucketedStore {
           spark.sql(s"DROP TABLE IF EXISTS ${tableName(spec.dir)}_compacting")
           // a non-mutating reader may have registered the table WITH the
           // orphan partition — drop it so the next use re-registers clean
-          dropTable(spark, tableName(spec.dir))
+          spark.sql(s"DROP TABLE IF EXISTS ${tableName(spec.dir)}")
           f.delete(marker(spec.dir, IntentMarker), false)
           f.delete(marker(spec.dir, UpToMarker), false)
         case None => ()

@@ -12,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   * back. Spark's scheduler interleaves the jobs' tasks; with 2-3 in flight
   * the later jobs back-fill the earlier ones' straggler tails.
   *
-  * Every task must be conf-free: [[BucketedStore.appendBatch]] is, because
-  * its dynamic overwrite runs in a conf-frozen child session.
+  * Every task must leave the session's conf alone; a task that needs a
+  * conf of its own takes it through [[graft.obs.Sessions.withConf]], as
+  * [[BucketedStore.appendBatch]] does (DEPLOY.md "Scoped confs").
   *
   * On the FIRST failure the siblings are stopped before the cause (not the
   * ExecutionException wrapper) is rethrown: their Spark jobs are cancelled

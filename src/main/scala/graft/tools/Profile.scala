@@ -36,7 +36,7 @@ object Profile {
       "usage: Profile <q1,q2,...|all|shared.dedupClusters|shared.copurchasePairs> [--plan DIR]")
     val planDir = args.lift(2).map(java.nio.file.Paths.get(_))
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Sessions.envInt("SPARK_GRAFT_CPUS", 32)
     val known = SparkEntry.queries ++ shared
     val names =
       if (args(0) == "all") SparkEntry.queries.keys.toSeq.sorted

@@ -49,7 +49,7 @@ object ScaleUp {
     // shingle, so cross-copy shingle overlap stays negligible.
     val rot = if (args.length > 3) args(3) else "abcdefghij"
     require(rot.toSet.size == rot.length, "rotation alphabet must be distinct letters")
-    val spark = graft.obs.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    val spark = graft.obs.Sessions.local(graft.obs.Sessions.envInt("SPARK_GRAFT_CPUS", 8))
 
     def maxOf(df: DataFrame, c: String): Long =
       df.agg(max(col(c))).collect()(0).getLong(0) + 1L

@@ -32,6 +32,30 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A copy of `spark`'s session state (runtime conf, temp views, functions,
+    * strategies) over the same SparkContext and SharedState
+    * (`cloneSession` is `private[sql]`).
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** Delivers a streaming event to `spark`'s StreamingQueryListeners
+    * (`postListenerEvent` is only on the classic manager).
+    */
+  def postStreamingEvent(spark: SparkSession, e: streaming.StreamingQueryListener.Event): Unit =
+    spark.asInstanceOf[classic.SparkSession].streams.postListenerEvent(e)
+
+  /** Unregisters from the SparkContext the streaming listener bus that
+    * holds `member` (a session's StreamingQueryManager registers one bus
+    * with the context and never removes it; the bus is private to the
+    * manager, so it is found through a listener it holds).
+    */
+  def dropStreamingBus(spark: SparkSession, member: streaming.StreamingQueryListener): Unit = {
+    val bus = spark.sparkContext.listenerBus
+    bus.findListenersByClass[execution.streaming.runtime.StreamingQueryListenerBus]()
+      .filter(_.listeners.contains(member)).foreach(bus.removeListener)
+  }
+
   /** Idempotently add a planner strategy to this session (the
     * non-extensions path; `spark.sql.extensions=graft.GraftExtensions`
     * installs the same strategies cluster-wide).

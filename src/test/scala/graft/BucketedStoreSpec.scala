@@ -16,8 +16,10 @@ import graft.streaming.BucketedStore.StoreSpec
 class BucketedStoreSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def mk(from: Long, until: Long) = {
-    spark.range(from, until).select(
+  private def mk(from: Long, until: Long): org.apache.spark.sql.DataFrame = mk(spark, from, until)
+
+  private def mk(s: org.apache.spark.sql.SparkSession, from: Long, until: Long) = {
+    s.range(from, until).select(
       col("id").as("k"),
       (col("id") % 7).as("grp"),
       concat(lit("v"), col("id")).as("payload"))
@@ -50,20 +52,13 @@ class BucketedStoreSpec extends AnyFunSuite {
   test("registration survives a catalog loss (driver restart) with zero store-side exchange") {
     val s = spec(tmpDir("bs-restart"))
     BucketedStore.appendBatch(mk(0, 200), s, 0L)
-    val probe = mk(500, 505)
-    def joinExchanges(): Int = {
-      val saved = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val j = probe.select(col("grp"), col("k").as("pk"))
-          .join(BucketedStore.read(spark, s).get.drop("_batch"), Seq("grp"))
-        j.collect()
-        "Exchange".r.findAllIn(j.queryExecution.executedPlan.toString).length
-      } finally {
-        spark.conf.set("spark.sql.adaptive.enabled", saved)
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      }
+    def joinExchanges(): Int = obs.Sessions.withConf(spark,
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") { c =>
+      val j = mk(c, 500, 505).select(col("grp"), col("k").as("pk"))
+        .join(BucketedStore.read(c, s).get.drop("_batch"), Seq("grp"))
+      j.collect()
+      "Exchange".r.findAllIn(j.queryExecution.executedPlan.toString).length
     }
     val healthy = joinExchanges()
     // simulate a NEW session: the in-memory catalog forgets the table, the
@@ -417,8 +412,8 @@ class BucketedStoreSpec extends AnyFunSuite {
   }
 
   test("a session nobody uses any more is not kept alive by its append child") {
-    // appends run in a conf-frozen child session cached per parent; the
-    // cache must not pin every parent (and child) for the process lifetime
+    // each append runs in a clone of its caller's session; nothing may keep
+    // the caller (or the clone) reachable once the append has returned
     def appendFromThrowawaySession(): java.lang.ref.WeakReference[AnyRef] = {
       val parent = spark.newSession()
       // AQE's stage threads inherit the session that was active when they
@@ -429,7 +424,7 @@ class BucketedStoreSpec extends AnyFunSuite {
       def batch(from: Long) = parent.range(from, from + 20).select(
         col("id").as("k"), (col("id") % 7).as("grp"), concat(lit("v"), col("id")).as("payload"))
       BucketedStore.appendBatch(batch(0), s, 0L) // creates the table
-      BucketedStore.appendBatch(batch(20), s, 1L) // runs in the child
+      BucketedStore.appendBatch(batch(20), s, 1L) // runs in a clone
       assert(BucketedStore.read(parent, s).get.count() == 40)
       new java.lang.ref.WeakReference[AnyRef](parent)
     }
@@ -443,12 +438,12 @@ class BucketedStoreSpec extends AnyFunSuite {
   }
 
   test("appends after overwrite resolve the rebuilt table, not the child's cached relation") {
-    // the child session keeps its own relation cache. A successful insert
-    // refreshes it on the way out, but a FAILED one (a sibling write
-    // cancelled mid-batch) leaves the analyzed relation cached; once
-    // `overwrite` drops and re-creates the table with a new column, that
-    // stale entry would resolve the next insertInto against the dropped
-    // table's schema
+    // the session an insert runs in keeps its own relation cache. A
+    // successful insert refreshes it on the way out, but a FAILED one (a
+    // sibling write cancelled mid-batch) leaves the analyzed relation
+    // cached; once `overwrite` drops and re-creates the table with a new
+    // column, an insert session that outlived the failure would resolve the
+    // next insertInto against the dropped table's schema
     val s = spec(tmpDir("bs-stale"))
     BucketedStore.appendBatch(mk(0, 20), s, 0L)
     BucketedStore.appendBatch(mk(20, 40), s, 1L)

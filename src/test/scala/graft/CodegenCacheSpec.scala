@@ -7,12 +7,13 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.TradeTick
 import graft.queries.SharedStages
-import graft.streaming.{Ingest, Loader}
+import graft.streaming.{BucketedStore, Ingest, Loader}
 
 /** Generated classes are compiled once and then served from Spark's codegen
   * cache: the extension sizes the cache to the engine's working set, and the
@@ -55,6 +56,17 @@ class CodegenCacheSpec extends AnyFunSuite {
     assert(classesFor(2) == 0)
   }
 
+  test("a session clone runs on the classes its parent compiled") {
+    // with per-session artifact classloaders every new session would
+    // compile its own copy of each class
+    def run(s: SparkSession) =
+      s.range(1000).selectExpr("id * 3 AS x").groupBy(col("x") % 5).count().collect()
+    run(spark)
+    val before = compiledSoFar
+    obs.Sessions.withConf(spark, "spark.graft.test.scope" -> "clone")(run)
+    assert(compiledSoFar - before == 0)
+  }
+
   test("the loader compiles no classes per trigger; the landed layout is unchanged") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
@@ -82,6 +94,32 @@ class CodegenCacheSpec extends AnyFunSuite {
     assert(raw.schema("_src_batch").dataType == LongType)
     assert(raw.filter($"_src_batch" === $"_batch").count() == triggers)
     assert(Loader.readTable(spark, table).count() == triggers)
+  }
+
+  test("a store sink compiles no classes per trigger") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val ms = MemoryStream[Long]
+    val spec = BucketedStore.StoreSpec(tmpDir("codegen-store"), Seq("grp"), 4)
+    val cp = tmpDir("codegen-store-cp")
+    val q = ms.toDF().select($"value".as("k"), ($"value" % 7).as("grp"))
+      .writeStream
+      .option("checkpointLocation", cp)
+      .foreachBatch { (df: DataFrame, id: Long) => BucketedStore.appendBatch(df, spec, id) }
+      .start()
+    val triggers = 12
+    val counts = try (0 until triggers).map { k =>
+      ms.addData(k * 10L until k * 10L + 10L)
+      q.processAllAvailable()
+      compiledSoFar
+    } finally q.stop()
+    // the first trigger creates the table, the second is the first append
+    // into it; every later trigger reuses the second one's classes
+    assert(counts.last - counts(1) == 0, s"compile counts per trigger: $counts")
+    val landed = BucketedStore.read(spark, spec).get
+    assert(landed.count() == triggers * 10L)
+    assert(landed.filter($"_src_batch" =!= $"_batch" || ($"k" / 10).cast("long") =!= $"_batch")
+      .count() == 0)
   }
 }
 

@@ -14,25 +14,31 @@ class OperatorSpec extends AnyFunSuite {
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
-  test("withShufflePartitions: scoped set/restore, and newSession isolates " +
-      "concurrent callers") {
-    import graft.queries.SharedStages
+  test("withConf: scopes live on a clone; the parent's conf is never written") {
+    import graft.obs.Sessions
     val key = "spark.sql.shuffle.partitions"
-    val before = spark.conf.get(key)
-    val inside = SharedStages.withShufflePartitions(spark, 3) { spark.conf.get(key) }
-    assert(inside == "3" && spark.conf.get(key) == before)
-    // restore holds even when the body throws
+    val parent = spark.newSession()
+    parent.conf.set("spark.graft.test.marker", "runtime") // set after creation
+    parent.range(3).createOrReplaceTempView("with_conf_view")
+    val before = parent.conf.getAll
+    val inside = Sessions.withConf(parent, key -> "3") { c =>
+      assert(parent.conf.getAll == before, "the parent's conf changed inside the body")
+      // the clone starts from the parent's runtime conf and temp views
+      assert(c.conf.get("spark.graft.test.marker") == "runtime")
+      assert(c.table("with_conf_view").count() == 3)
+      c.conf.get(key)
+    }
+    assert(inside == "3" && parent.conf.getAll == before)
+    // also when the body throws
     intercept[RuntimeException] {
-      SharedStages.withShufflePartitions(spark, 5) { throw new RuntimeException("boom") }
+      Sessions.withConf(parent, key -> "5") { _ => throw new RuntimeException("boom") }
     }
-    assert(spark.conf.get(key) == before)
-    // the documented concurrency remedy: a newSession has its OWN conf view,
-    // so a scope there never leaks into this session's plans
-    val other = spark.newSession()
-    SharedStages.withShufflePartitions(other, 7) {
-      assert(other.conf.get(key) == "7" && spark.conf.get(key) == before)
-    }
-    assert(other.conf.get(key) == before)
+    assert(parent.conf.getAll == before)
+    // a frame built from the clone keeps the clone's conf up to execution
+    val lenient = Sessions.withConf(parent, "spark.sql.ansi.enabled" -> "false")(
+      _.sql("SELECT CAST('x' AS INT) AS v"))
+    assert(lenient.collect().head.isNullAt(0))
+    assert(parent.conf.getAll == before)
   }
 
   test("as-of join: latest right row at-or-before, per key, inclusive ties") {

@@ -22,25 +22,15 @@ import org.scalatest.funsuite.AnyFunSuite
 class OptimizerLeversSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def withConfs[T](kvs: (String, String)*)(body: => T): T = {
-    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("selective dim filter injects a bloom filter on the fact side") {
-    withConfs(
+    obs.Sessions.withConf(spark,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       // the fixture scan is far below the 10 GB production default
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       // too big to broadcast — the shuffle-join case bloom filters exist for
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val li = graft.model.Tables.load(spark, sf0001, "lineitem")
-      val part = graft.model.Tables.load(spark, sf0001, "part")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") { c =>
+      val li = graft.model.Tables.load(c, sf0001, "lineitem")
+      val part = graft.model.Tables.load(c, sf0001, "part")
         .filter(col("p_brand") === "Brand#1")
       val joined = li.join(part, li("l_partkey") === part("p_partkey"))
         .groupBy(col("p_brand")).agg(sum(col("l_quantity")).as("qty"))
@@ -61,13 +51,13 @@ class OptimizerLeversSpec extends AnyFunSuite {
     graft.model.Tables.load(spark, sf0001, "customer")
       .write.mode("overwrite").saveAsTable("cbo_customer")
     try {
-      withConfs(
+      obs.Sessions.withConf(spark,
         "spark.sql.cbo.enabled" -> "true",
         // between the 1-row stats estimate and the pruned-scan size guess
-        "spark.sql.autoBroadcastJoinThreshold" -> "1KB") {
-        val orders = graft.model.Tables.load(spark, sf0001, "orders")
+        "spark.sql.autoBroadcastJoinThreshold" -> "1KB") { c =>
+        val orders = graft.model.Tables.load(c, sf0001, "orders")
         def plan(): String = {
-          val dim = spark.table("cbo_customer").filter(col("c_custkey") === 7)
+          val dim = c.table("cbo_customer").filter(col("c_custkey") === 7)
           orders.join(dim, orders("o_custkey") === dim("c_custkey"))
             .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))
             .queryExecution.executedPlan.toString
@@ -76,7 +66,7 @@ class OptimizerLeversSpec extends AnyFunSuite {
         val before = plan()
         assert(!before.contains("BroadcastHashJoin"),
           s"expected shuffle join before ANALYZE:\n$before")
-        spark.sql(
+        c.sql(
           "ANALYZE TABLE cbo_customer COMPUTE STATISTICS FOR ALL COLUMNS")
         // with ndv stats the c_custkey=7 estimate is ~1 row -> broadcast
         val after = plan()
@@ -98,15 +88,15 @@ class OptimizerLeversSpec extends AnyFunSuite {
     try {
       for (t <- Seq("cbo_li", "cbo_ord", "cbo_cust"))
         spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR ALL COLUMNS")
-      def topJoinLine(reorder: Boolean): String = withConfs(
+      def topJoinLine(reorder: Boolean): String = obs.Sessions.withConf(spark,
         "spark.sql.cbo.enabled" -> "true",
-        "spark.sql.cbo.joinReorder.enabled" -> reorder.toString) {
+        "spark.sql.cbo.joinReorder.enabled" -> reorder.toString) { c =>
         // written LEFT-DEEP with the fact-fact join first: (li ⋈ ord) ⋈ cust.
         // With stats + reorder, the planner should join the ~1-row filtered
         // customer to orders FIRST, making the TOP join the orderkey one.
-        val li = spark.table("cbo_li")
-        val ord = spark.table("cbo_ord")
-        val cust = spark.table("cbo_cust").filter(col("c_custkey") === 7)
+        val li = c.table("cbo_li")
+        val ord = c.table("cbo_ord")
+        val cust = c.table("cbo_cust").filter(col("c_custkey") === 7)
         val q = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
           .join(cust, ord("o_custkey") === cust("c_custkey"))
           .groupBy(col("c_mktsegment")).agg(count(lit(1)))
@@ -131,8 +121,8 @@ class OptimizerLeversSpec extends AnyFunSuite {
     // default session (10 GB application floor): no bloom on a fixture scan
     assert(!default.queryExecution.optimizedPlan.toString.contains("might_contain"))
     val defaultRows = default.collect()
-    OptimizerQueries.withConfs(spark, OptimizerQueries.bloomConfs: _*) {
-      val scoped = OptimizerQueries.bloomJoinPlan(spark, sf0001)
+    obs.Sessions.withConf(spark, OptimizerQueries.bloomConfs: _*) { c =>
+      val scoped = OptimizerQueries.bloomJoinPlan(c, sf0001)
       val opt = scoped.queryExecution.optimizedPlan.toString
       assert(opt.contains("might_contain"), s"no bloom filter under q152's confs:\n$opt")
       assert(opt.linesIterator.exists(l =>

@@ -107,9 +107,6 @@ class PlanBudgetSpec extends AnyFunSuite {
     ("q01_filter_project", 1, 0, 0))
 
   test("top-query physical plans match their pinned exchange/cache budgets") {
-    val conf = spark.conf
-    val aqeBefore = conf.get("spark.sql.adaptive.enabled", "true")
-    conf.set("spark.sql.adaptive.enabled", "false")
     // Insulation from sibling suites on the shared session: any suite that
     // built one of these queries left its persist()s registered in the
     // CacheManager, and Spark substitutes cached fragments into NEW plans
@@ -118,15 +115,15 @@ class PlanBudgetSpec extends AnyFunSuite {
     // nothing to do with the code under test. Verify/Bench sessions are
     // fresh, so the gate context always matches the cleared state.
     spark.catalog.clearCache()
-    try {
+    obs.Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false") { session =>
       val drift = budgets.flatMap { case (name, s, b, c) =>
-        val df = SparkEntry.queries(name)(spark, sf0001)
+        val df = SparkEntry.queries(name)(session, sf0001)
         val got = PlanCount.counts(df.queryExecution.executedPlan)
         if (got == ((s, b, c))) None
         else Some(s"$name: expected (shuffles=$s, broadcasts=$b, cacheReads=$c), got $got")
       }
       assert(drift.isEmpty, "plan-shape drift:\n" + drift.mkString("\n"))
-    } finally conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    }
   }
 
   /** RUNTIME budgets: total shuffle-WRITE records with auto-broadcast off
@@ -171,27 +168,19 @@ class PlanBudgetSpec extends AnyFunSuite {
     ("q116_recursive_chain", 230000L, "extra per-round rescan on top of UnionLoop's replanning?"))
 
   test("loop/iterative queries stay within their runtime shuffle-record budgets") {
-    val conf = spark.conf
-    val saved = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> conf.get(k, null))
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try {
+    obs.Sessions.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") { c =>
       val drift = runtimeBudgets.flatMap { case (name, budget, failureMode) =>
         spark.catalog.clearCache()
         var n = 0L
         val got = shuffleRecordsDuring {
-          n = SparkEntry.queries(name)(spark, sf0001).count()
+          n = SparkEntry.queries(name)(c, sf0001).count()
         }
         if (n > 0 && got > 0 && got < budget) None
         else Some(s"$name shuffled $got records (budget $budget, rows $n) — $failureMode")
       }
       assert(drift.isEmpty, "runtime shuffle-record drift:\n" + drift.mkString("\n"))
-    } finally {
-      saved.foreach { case (k, v) =>
-        if (v == null) conf.unset(k) else conf.set(k, v)
-      }
     }
   }
 }

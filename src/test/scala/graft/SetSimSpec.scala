@@ -72,22 +72,18 @@ class SetSimSpec extends AnyFunSuite {
       val b = Seq.fill(rnd.nextInt(40))(rnd.nextInt(60)).distinct.sorted
       (a, b)
     } :+ ((Seq.empty[Int], Seq(1, 2, 3))) :+ ((Seq(5), Seq(5)))
-    val df = rows.toDF("a", "b")
-      .withColumn("got", graft.functions.SortedIntersectCount(col("a"), col("b")))
-      .withColumn("want", size(array_intersect(col("a"), col("b"))).cast("long"))
+    def mismatches(s: org.apache.spark.sql.SparkSession): Long =
+      s.createDataFrame(rows).toDF("a", "b")
+        .withColumn("got", graft.functions.SortedIntersectCount(col("a"), col("b")))
+        .withColumn("want", size(array_intersect(col("a"), col("b"))).cast("long"))
+        .where(col("got") =!= col("want")).count()
     // codegen path (default) ...
-    assert(df.where(col("got") =!= col("want")).count() == 0)
+    assert(mismatches(spark) == 0)
     // ... and the interpreted eval path (expression codegen off entirely —
     // wholeStage=false alone still codegens projections)
-    val savedWs = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    val savedFm = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try assert(df.where(col("got") =!= col("want")).count() == 0)
-    finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", savedWs)
-      spark.conf.set("spark.sql.codegen.factoryMode", savedFm)
-    }
+    assert(obs.Sessions.withConf(spark,
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(mismatches) == 0)
     // null array propagates
     val n = Seq((Some(Seq(1, 2)), Option.empty[Seq[Int]])).toDF("a", "b")
       .select(graft.functions.SortedIntersectCount(col("a"), col("b")).as("c"))

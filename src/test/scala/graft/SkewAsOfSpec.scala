@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,8 +18,8 @@ class SkewAsOfSpec extends AnyFunSuite {
   import TestSpark._
 
   // one hot key owns ~95% of the probe side; references are small
-  private def fixture = {
-    import spark.implicits._
+  private def fixture(s: SparkSession) = {
+    import s.implicits._
     val probes = ((1 to 19000).map(_ => 1) ++ (1 to 1000).map(i => i % 50 + 2))
       .zipWithIndex.map { case (k, i) => (k, i.toLong * 10 + 5, i.toLong) }
       .toDF("k", "t", "pid")
@@ -36,13 +37,12 @@ class SkewAsOfSpec extends AnyFunSuite {
     "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 
   test("OptimizeSkewedJoin does NOT split AsOfJoinExec (documented limitation)") {
-    val (probes, refs) = fixture
-    val plan = try {
-      skewConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val plan = obs.Sessions.withConf(spark, skewConfs: _*) { c =>
+      val (probes, refs) = fixture(c)
       val j = AsOfJoin.backwardNative(probes, refs, Seq("k"), "t", Seq("rv"))
       assert(j.collect().length == 20000)
       j.queryExecution.executedPlan.toString
-    } finally skewConfs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
     assert(plan.contains("AsOfJoin"), s"native exec missing:\n${plan.take(1500)}")
     // the same confs make the stock SMJ test mark skew=true; the custom
     // node stays unsplit — this pin is the documentation
@@ -52,7 +52,7 @@ class SkewAsOfSpec extends AnyFunSuite {
   }
 
   test("salted as-of: exact parity with unsalted, hot key split across salts") {
-    val (probes, refs) = fixture
+    val (probes, refs) = fixture(spark)
     val plain = AsOfJoin.backwardNative(probes, refs, Seq("k"), "t", Seq("rv"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         Option(r.get(3)).map(_.toString), Option(r.getString(4)))).toSet

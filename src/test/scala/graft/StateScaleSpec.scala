@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SQLContext
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -266,12 +267,10 @@ class StateScaleSpec extends AnyFunSuite {
     // JVM exit.
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    implicit val ctx = spark.sqlContext
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.get(key, "")
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    try obs.Sessions.withConf(spark,
+        key -> "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") { c =>
+      implicit val ctx = c.sqlContext
       val ms = MemoryStream[(Long, Long, Double)]
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
       val q = ms.toDS().toDF("event_id", "min", "value")
@@ -298,7 +297,6 @@ class StateScaleSpec extends AnyFunSuite {
         assert(out.synchronized(out.toSet) == want)
       } finally q.stop()
     } finally {
-      if (saved.isEmpty) spark.conf.unset(key) else spark.conf.set(key, saved)
       // orderly native close on the shared session; later suites reload
       // providers on demand
       org.apache.spark.sql.GraftSqlBridge.stopStateStores()
@@ -313,22 +311,17 @@ class StateScaleSpec extends AnyFunSuite {
     // byte-identical under it — buffer merge order, timer expiry, and
     // state-encoder round-trips all cross the provider boundary.
     import spark.implicits._
-    implicit val ctx = spark.sqlContext
     val provKey = "spark.sql.streaming.stateStore.providerClass"
+    val inMemory =
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
     val rocks =
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-    def withProvider[T](p: Option[String])(body: => T): T = {
-      val saved = spark.conf.get(provKey, "")
-      p.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
-      try body finally {
-        if (saved.isEmpty) spark.conf.unset(provKey)
-        else spark.conf.set(provKey, saved)
-        org.apache.spark.sql.GraftSqlBridge.stopStateStores()
-      }
-    }
+    def withProvider[T](p: String)(body: SQLContext => T): T =
+      try obs.Sessions.withConf(spark, provKey -> p)(c => body(c.sqlContext))
+      finally org.apache.spark.sql.GraftSqlBridge.stopStateStores()
 
-    def runAsOf(): Vector[String] = {
+    def runAsOf(implicit ctx: SQLContext): Vector[String] = {
       val ms = MemoryStream[Stateful.AsOfEv]
       val out = scala.collection.mutable.ArrayBuffer.empty[Stateful.AsOfOut]
       val q = Stateful.asOfJoinStream(ms.toDS(), delay = "1 minute",
@@ -352,7 +345,7 @@ class StateScaleSpec extends AnyFunSuite {
       out.synchronized(out.map(_.toString).sorted.toVector)
     }
 
-    def runBal(): Vector[String] = {
+    def runBal(implicit ctx: SQLContext): Vector[String] = {
       val ms = MemoryStream[Stateful.BalEv]
       val out = scala.collection.mutable.ArrayBuffer.empty[Stateful.BalOut]
       val q = Stateful.clampedFoldStream(ms.toDS(), delay = "1 minute")
@@ -374,7 +367,7 @@ class StateScaleSpec extends AnyFunSuite {
       out.synchronized(out.map(_.toString).sorted.toVector)
     }
 
-    def runFunnel(): Vector[String] = {
+    def runFunnel(implicit ctx: SQLContext): Vector[String] = {
       val ms = MemoryStream[(Long, Long, Byte)]
       val out = scala.collection.mutable.ArrayBuffer.empty[String]
       val q = Stateful.funnelStream(
@@ -398,10 +391,10 @@ class StateScaleSpec extends AnyFunSuite {
       out.synchronized(out.sorted.toVector)
     }
 
-    for ((nm, run) <- Seq[(String, () => Vector[String])](
-        ("asof", runAsOf _), ("clamped_fold", runBal _), ("funnel", runFunnel _))) {
-      val mem = withProvider(None)(run())
-      val rdb = withProvider(Some(rocks))(run())
+    for ((nm, run) <- Seq[(String, SQLContext => Vector[String])](
+        ("asof", runAsOf(_)), ("clamped_fold", runBal(_)), ("funnel", runFunnel(_)))) {
+      val mem = withProvider(inMemory)(run)
+      val rdb = withProvider(rocks)(run)
       assert(mem.nonEmpty, s"$nm produced no output under the in-memory provider")
       assert(mem == rdb,
         s"$nm diverged under RocksDB: ${mem.size} in-memory rows vs ${rdb.size}")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,21 +15,15 @@ class WindowGuardSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  private def withGuard[A](on: Boolean)(body: => A): A = {
-    val prev = spark.conf.getOption(PartitionlessWindowGuard.ConfKey)
-    spark.conf.set(PartitionlessWindowGuard.ConfKey, on.toString)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(PartitionlessWindowGuard.ConfKey, v)
-      case None => spark.conf.unset(PartitionlessWindowGuard.ConfKey)
-    }
-  }
+  private def withGuard[A](on: Boolean)(body: SparkSession => A): A =
+    obs.Sessions.withConf(spark, PartitionlessWindowGuard.ConfKey -> on.toString)(body)
 
-  private def df = Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "v")
+  private def df(s: SparkSession) =
+    s.createDataFrame(Seq((1L, 10L), (2L, 20L), (3L, 30L))).toDF("k", "v")
 
   test("guard ON: global window fails at plan time, naming the expression") {
-    withGuard(true) {
-      val bad = df.withColumn("rn", row_number().over(Window.orderBy(col("k"))))
+    withGuard(true) { c =>
+      val bad = df(c).withColumn("rn", row_number().over(Window.orderBy(col("k"))))
       val e = intercept[Exception](bad.collect())
       def msgs(t: Throwable): Seq[String] =
         Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
@@ -38,12 +33,12 @@ class WindowGuardSpec extends AnyFunSuite {
   }
 
   test("guard ON: partitioned windows and GlobalCumSum pass untouched") {
-    withGuard(true) {
-      val ok = df.withColumn("rn",
+    withGuard(true) { c =>
+      val ok = df(c).withColumn("rn",
         row_number().over(Window.partitionBy(col("k") % 2).orderBy(col("k"))))
       assert(ok.count() == 3)
       val cum = graft.operators.GlobalCumSum.withCumSum(
-        df, Seq(col("k")), col("v"), "cv")
+        df(c), Seq(col("k")), col("v"), "cv")
       assert(cum.orderBy(col("k")).select(col("cv")).as[Long].collect()
         .toSeq == Seq(10L, 30L, 60L))
     }
@@ -52,8 +47,8 @@ class WindowGuardSpec extends AnyFunSuite {
   test("guard ON: UNORDERED global window (agg OVER ()) is flagged too") {
     // no orderSpec, but still one task for the whole input — the guard
     // must not be dodgeable by dropping the ORDER BY
-    withGuard(true) {
-      val bad = df.withColumn("tot",
+    withGuard(true) { c =>
+      val bad = df(c).withColumn("tot",
         sum(col("v")).over(Window.partitionBy()))
       val e = intercept[Exception](bad.collect())
       def msgs(t: Throwable): Seq[String] =
@@ -64,8 +59,8 @@ class WindowGuardSpec extends AnyFunSuite {
   }
 
   test("guard OFF (default): global window keeps stock WARN-only behavior") {
-    withGuard(false) {
-      val rn = df.withColumn("rn", row_number().over(Window.orderBy(col("k"))))
+    withGuard(false) { c =>
+      val rn = df(c).withColumn("rn", row_number().over(Window.orderBy(col("k"))))
       assert(rn.count() == 3)
     }
   }
@@ -76,12 +71,12 @@ class WindowGuardSpec extends AnyFunSuite {
     // (no partition-less windows in any declared query) mechanically,
     // not just by review. Execution included: the guard fires at plan
     // time, so a clean collect() is a clean bill.
-    withGuard(true) {
+    withGuard(true) { c =>
       for (q <- Seq("q200_clamped_balance", "q201_interval_union",
           "q202_longest_streak", "q204_daily_utilization", "q209_twa_balance",
           "q210_ship_latency", "q216_mann_whitney", "q217_spearman",
           "q218_kendall", "q220_lead_lag", "q223_lift_curve", "q225_roc_points"))
-        assert(SparkEntry.queries(q)(spark, sf0001).collect().nonEmpty,
+        assert(SparkEntry.queries(q)(c, sf0001).collect().nonEmpty,
           s"$q returned empty under the window guard")
     }
   }
