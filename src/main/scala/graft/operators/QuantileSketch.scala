@@ -32,7 +32,7 @@ import org.apache.spark.sql.types.DecimalType
   * written replay-idempotently on the Loader feed discipline; a query
   * folds the feed with one GROUP BY. Counts are linear, so the fold equals
   * the one-shot sketch EXACTLY under any batch split — q286 shares q285's
-  * oracle byte-for-byte. Replay across compaction rides the `_feed_frontier`
+  * oracle byte-for-byte. Replay across compaction rides the feed's frontier
   * for free; bounded maintenance folds ride `compactBatches(upTo)`.
   *
   * 100 TB shape: per batch one batch-sized aggregate whose output is a few

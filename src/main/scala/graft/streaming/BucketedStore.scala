@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 
@@ -46,11 +46,7 @@ import graft.obs.Sessions
   *    per-batch probe cost creeps back as open/seek overhead. `compact`
   *    rewrites the store as one consolidated `_batch=-N` partition with the
   *    SAME bucket spec (bucket-aligned repartition → one file per bucket),
-  *    crash-safe via intent/commit markers with recovery on next open: the
-  *    consolidated partition publishes via one atomic directory rename, and
-  *    the commit marker is the linearization point (crash before it ⇒ the
-  *    compaction never happened; crash after ⇒ recovery finishes the
-  *    source-partition deletes).
+  *    crash-safe by [[BatchLog]]'s fold protocol, the one the feeds use.
   *
   * Concurrency contract: SINGLE WRITER per store (the owning streaming
   * query's foreachBatch, which Spark serializes). Readers inside the same
@@ -86,16 +82,6 @@ object BucketedStore {
   def resolveWidth(spark: SparkSession, buckets: Int): Int =
     if (buckets > 0) buckets else sessionWidth(spark)
 
-  /** Partition id for consolidated data (full rebuilds, migrated legacy
-    * layouts, compaction output): strictly negative, below every real
-    * batch id, decreasing with each compaction so the consolidation never
-    * collides with a replayed batch's own-partition rewrite.
-    */
-  private def nextBasePartition(spark: SparkSession, spec: StoreSpec): Long = {
-    val ids = partitionIds(fs(spark, spec.dir), spec.dir)
-    math.min(0L, if (ids.isEmpty) 0L else ids.min) - 1L
-  }
-
   /** Catalog name for a dir — md5-derived so concurrent harnesses with
     * distinct scratch dirs never collide.
     */
@@ -103,22 +89,11 @@ object BucketedStore {
     "graft_store_" + org.apache.commons.codec.digest.DigestUtils
       .md5Hex(dir).take(16)
 
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def hasParquet(f: FileSystem, dir: String): Boolean = {
-    val p = new Path(dir)
-    f.exists(p) && { val it = f.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) found = it.next().getPath.getName.endsWith(".parquet")
-      found }
-  }
-
   /** All data-file names under the store — the files a probe must open; the
     * compaction specs pin this count bounded after `compact`.
     */
   def parquetFiles(spark: SparkSession, dir: String): Seq[String] = {
-    val f = fs(spark, dir)
+    val f = BatchLog.fs(spark, dir)
     val p = new Path(dir)
     if (!f.exists(p)) Seq.empty
     else {
@@ -130,14 +105,6 @@ object BucketedStore {
       }
       out.result()
     }
-  }
-
-  private[streaming] def partitionIds(f: FileSystem, dir: String): Seq[Long] = {
-    val p = new Path(dir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("_batch="))
-      .map(_.getPath.getName.stripPrefix("_batch=").toLong)
   }
 
   /** Open the store for reading: the registered bucketed table, registered
@@ -158,30 +125,20 @@ object BucketedStore {
     * read `_src_batch`, which survives the fold).
     */
   def read(spark: SparkSession, spec: StoreSpec): Option[DataFrame] = {
-    val f = fs(spark, spec.dir)
-    val pending: Option[(Long, Boolean)] =
-      readMarker(f, spec.dir, CommitMarker).map((_, true))
-        .orElse(readMarker(f, spec.dir, IntentMarker).map((_, false)))
+    val pending = BatchLog.pending(spark, spec.dir, BatchLog.StoreMarkers)
     val tbl = tableName(spec.dir)
     if (!spark.catalog.tableExists(tbl)) tryRegister(spark, spec)
     if (!spark.catalog.tableExists(tbl)) None
-    else Some(pending match {
-      case Some((c, true)) =>
-        // a foreign process's compaction committed AFTER this session
-        // registered the table: the session catalog has no partition
-        // `_batch=c` yet (RECOVER PARTITIONS only ran at registration), so
-        // filtering without a resync would prune to zero partitions and
-        // silently read an empty store. Resync is cheap (one dir listing)
-        // and only runs in the transient commit-pending window.
-        spark.sql(s"ALTER TABLE $tbl RECOVER PARTITIONS")
-        // a BOUNDED fold (upTo marker) leaves real partitions above the
-        // bound intact and unfolded — they stay visible next to the
-        // consolidation (with upTo = MaxValue this is just `=== c`)
-        val upTo = readMarker(f, spec.dir, UpToMarker).getOrElse(Long.MaxValue)
-        spark.table(tbl).filter(col("_batch") === c || col("_batch") > upTo)
-      case Some((c, false)) => spark.table(tbl).filter(col("_batch") =!= c)
-      case None => spark.table(tbl)
-    })
+    else {
+      // a foreign process's compaction committed AFTER this session
+      // registered the table: the session catalog has no partition
+      // `_batch=c` yet (RECOVER PARTITIONS only ran at registration), so
+      // filtering without a resync would prune to zero partitions and
+      // silently read an empty store. Resync is cheap (one dir listing)
+      // and only runs in the transient commit-pending window.
+      if (pending.exists(_.committed)) spark.sql(s"ALTER TABLE $tbl RECOVER PARTITIONS")
+      Some(BatchLog.view(spark.table(tbl), pending))
+    }
   }
 
   /** PATH-BASED (non-catalog) read of the store dir with the same
@@ -194,19 +151,8 @@ object BucketedStore {
     * both the consolidated partition and the source partitions are on disk.
     * The `_batch` filter is partition pruning on the path reader — free.
     */
-  def readFiles(spark: SparkSession, dir: String): DataFrame = {
-    val f = fs(spark, dir)
-    val df = spark.read.parquet(dir)
-    readMarker(f, dir, CommitMarker) match {
-      case Some(c) =>
-        val upTo = readMarker(f, dir, UpToMarker).getOrElse(Long.MaxValue)
-        df.filter(col("_batch") === c || col("_batch") > upTo)
-      case None => readMarker(f, dir, IntentMarker) match {
-        case Some(c) => df.filter(col("_batch") =!= c)
-        case None => df
-      }
-    }
-  }
+  def readFiles(spark: SparkSession, dir: String): DataFrame =
+    BatchLog.view(spark.read.parquet(dir), BatchLog.pending(spark, dir, BatchLog.StoreMarkers))
 
   /** Idempotent per-batch append: the batch's rows land in (and on replay
     * REPLACE) partition `_batch=batchId` via dynamic-partition-overwrite
@@ -231,29 +177,10 @@ object BucketedStore {
     */
   def appendBatch(df: DataFrame, spec: StoreSpec, batchId: Long): Unit = {
     val spark = df.sparkSession
-    recover(spark, spec)
-    // Frontier scope: REAL (≥ 0) batch ids only — the streaming micro-batch
-    // id space, which foreachBatch assigns monotonically. The guard cannot
-    // distinguish a replay from a first-time batch, so monotone assignment
-    // is part of the contract: a first-time id at or below the frontier
-    // would be dropped as a replay. NEGATIVE ids are deliberate publish
-    // channels (rebuild bases, migrations, backfill revisions) and stay
-    // writable after a compaction — their replay guard is the caller's
-    // marker protocol, and a feed that both publishes negative ids and
-    // compacts should use a dedicated dir (see compactBatches).
-    if (batchId >= 0 && compactionFrontier(spark, spec.dir).exists(batchId <= _)) {
-      // a correct replay of a folded batch — but also indistinguishable
-      // from a CONTRACT VIOLATION (a fresh checkpoint restarting ids at 0
-      // against an already-compacted store). Log loudly so an accidental
-      // reset is diagnosable instead of a silent drop.
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"appendBatch(${spec.dir}, batch=$batchId): no-op — batch id is at/" +
-          s"below the compaction frontier ${compactionFrontier(spark, spec.dir).get}. " +
-          "Correct for a replay of a folded batch; if this is a FIRST-TIME " +
-          "batch (checkpoint reset against a compacted store), its rows were " +
-          "just dropped — reprocess into a fresh store dir.")
-      return
-    }
+    BatchLog.recover(spark, layout(spec))
+    // a feed that both publishes negative ids and compacts should use a
+    // dedicated dir (see Loader.compactBatches)
+    if (BatchLog.replayed(spark, spec.dir, BatchLog.StoreMarkers, batchId)) return
     val tbl = tableName(spec.dir)
     if (!spark.catalog.tableExists(tbl)) tryRegister(spark, spec)
     val nb = effectiveBuckets(spark, spec)
@@ -278,8 +205,8 @@ object BucketedStore {
         .option("path", spec.dir)
         .saveAsTable(tbl)
       // stamp the creation width — layout state the dir carries forever
-      writeMarker(fs(spark, spec.dir), spec.dir, BucketsMarker, nb.toLong)
-      writeMarker(fs(spark, spec.dir), spec.dir, SortedMarker, 1L)
+      BatchLog.writeMarker(BatchLog.fs(spark, spec.dir), spec.dir, BucketsMarker, nb.toLong)
+      BatchLog.writeMarker(BatchLog.fs(spark, spec.dir), spec.dir, SortedMarker, 1L)
     } else {
       // Dynamic partition overwrite, on a session clone carrying the mode:
       // the caller's conf is never written, so concurrent appends to
@@ -313,19 +240,14 @@ object BucketedStore {
     */
   def overwrite(df: DataFrame, spec: StoreSpec): Unit = {
     val spark = df.sparkSession
-    val f = fs(spark, spec.dir)
+    val f = BatchLog.fs(spark, spec.dir)
     spark.sql(s"DROP TABLE IF EXISTS ${tableName(spec.dir)}")
     f.delete(new Path(spec.dir), true)
     appendBatch(df, spec, -1L)
   }
 
-  private def marker(dir: String, name: String) = new Path(dir, name)
-  private val IntentMarker = "_compact_intent"
-  private val CommitMarker = "_compact_commit"
-  private val UpToMarker = "_compact_upto"
   private val BucketsMarker = "_store_buckets"
   private val SortedMarker = "_store_sorted"
-  private val FrontierMarker = "_store_frontier"
 
   /** The row's ORIGINAL writing batch id — the column that SURVIVES
     * compaction. Stores written since round 12 carry `_src_batch` as a data
@@ -373,17 +295,12 @@ object BucketedStore {
   def excludeBatch(df: DataFrame, batchId: Long): DataFrame =
     df.filter(col("_batch") =!= batchId && srcBatchCol(df) =!= batchId)
 
-  /** The compaction FRONTIER: the highest REAL (≥ 0) batch id ever folded
-    * into a consolidated partition — permanent layout state like the width
-    * marker. A replayed batch at or below it is already inside the store
-    * (its rows ride in a consolidation, or — if the folding compaction
-    * rolled back — still in their own partition, which the roll-back never
-    * touches), so [[appendBatch]] treats such a replay as a no-op instead
-    * of writing a duplicate copy next to the consolidation. None ⇔ the
-    * store was never compacted over real batches.
+  /** The store's compaction FRONTIER ([[BatchLog.frontier]]): a replayed
+    * batch at or below it is already inside the store, so [[appendBatch]]
+    * no-ops it. None ⇔ the store was never compacted over real batches.
     */
   def compactionFrontier(spark: SparkSession, dir: String): Option[Long] =
-    readMarker(fs(spark, dir), dir, FrontierMarker)
+    BatchLog.frontier(spark, dir, BatchLog.StoreMarkers)
 
   /** The store's TRUE bucket count — self-described by a marker written at
     * creation, because bucket width is layout state: re-registering an
@@ -395,11 +312,11 @@ object BucketedStore {
     * stamped so the ambiguity never recurs).
     */
   private def effectiveBuckets(spark: SparkSession, spec: StoreSpec): Int = {
-    val f = fs(spark, spec.dir)
-    readMarker(f, spec.dir, BucketsMarker) match {
+    val f = BatchLog.fs(spark, spec.dir)
+    BatchLog.readMarker(f, spec.dir, BucketsMarker) match {
       case Some(n) => n.toInt
       case None =>
-        if (!hasParquet(f, spec.dir)) spec.buckets
+        if (!BatchLog.hasParquet(f, spec.dir)) spec.buckets
         else {
           // A markerless dir WITH data is a pre-marker legacy store whose
           // creation width is unknown — and since round 11 the opener's
@@ -413,7 +330,7 @@ object BucketedStore {
           // max-file-suffix+1) against sampled files and stamp the one
           // that verifies. Refusal beats corruption if none do.
           val n = verifyLegacyWidth(spark, spec)
-          writeMarker(f, spec.dir, BucketsMarker, n.toLong)
+          BatchLog.writeMarker(f, spec.dir, BucketsMarker, n.toLong)
           n
         }
     }
@@ -450,91 +367,42 @@ object BucketedStore {
           "passed explicitly so it can be stamped"))
   }
 
-  private[streaming] def writeMarker(f: FileSystem, dir: String, name: String, c: Long): Unit = {
-    val os = f.create(marker(dir, name), true)
-    try os.write(c.toString.getBytes("UTF-8")) finally os.close()
-  }
-
-  private[streaming] def readMarker(f: FileSystem, dir: String, name: String): Option[Long] = {
-    val p = marker(dir, name)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-      finally in.close()
-    }
-  }
-
-  /** Bucket-preserving compaction: rewrite the whole store as ONE
-    * consolidated partition (one file per bucket), then drop the source
-    * partitions — per-batch probe cost returns to O(buckets) file opens no
-    * matter how long the append history is. Crash-safe, single-writer:
-    *
-    *   1. intent marker (target partition id C)
-    *   2. consolidated bucketed rewrite into a scratch dir, row-count audit
-    *   3. one atomic rename: scratch → `_batch=C`
-    *   4. commit marker — the linearization point
-    *   5. delete source partitions, re-register, drop markers
-    *
-    * [[recover]] (run on every open) rolls an interrupted compaction back
-    * (no commit marker ⇒ delete the orphan `_batch=C`, nothing happened) or
-    * forward (commit marker ⇒ finish the deletes). Readers never see
-    * duplicates because reads go through [[read]], which recovers first.
-    *
-    * `upTo` BOUNDS the fold to real partitions with id ≤ upTo (negative
-    * consolidation/base partitions always fold). Maintenance sinks MUST
-    * pass their just-committed batch id here: after an old-checkpoint
-    * restore, the disk can hold a CRASH-PARTIAL partition whose id is
-    * above the replay position — an unbounded fold would swallow its
-    * partial rows into the consolidation and advance the frontier over it,
-    * turning the batch's eventual replay into a no-op (partial rows
-    * permanent, missing rows silently lost). Bounded, such later
-    * partitions stay intact on disk and their replay's partition rewrite
-    * still replaces them. The bound is persisted (`_compact_upto`) so
-    * crash recovery deletes exactly the folded sources, and the
-    * commit-pending read view keeps unfolded later partitions visible.
-    * The default (MaxValue) keeps the legacy whole-store fold for
-    * offline/manual compaction, where prefix-complete state is the
-    * caller's contract.
+  /** Bucket-preserving compaction: rewrite the store's partitions with
+    * real id ≤ `upTo` (all negative ones) as ONE consolidated partition —
+    * one file per bucket — then drop the sources, so per-batch probe cost
+    * returns to O(buckets) file opens no matter how long the append
+    * history is. Crash-safe and single-writer by [[BatchLog.fold]], which
+    * also documents the `upTo` bound maintenance sinks must pass (their
+    * just-committed batch id); the default folds the whole store. Readers
+    * never see duplicates: [[read]] views a pending fold through its
+    * markers.
     */
   def compact(spark: SparkSession, spec: StoreSpec,
-      upTo: Long = Long.MaxValue): Unit = {
-    recover(spark, spec)
-    val f = fs(spark, spec.dir)
-    if (!hasParquet(f, spec.dir)) return
-    val tbl = tableName(spec.dir)
-    if (!spark.catalog.tableExists(tbl)) tryRegister(spark, spec)
-    require(spark.catalog.tableExists(tbl),
-      s"compact: ${spec.dir} holds a layout this store cannot claim")
-    val allIds = partitionIds(f, spec.dir)
-    val foldIds = allIds.filter(id => id < 0 || id <= upTo)
-    if (foldIds.isEmpty) return // bound excludes everything: nothing to fold
-    val nb = effectiveBuckets(spark, spec)
-    val c = nextBasePartition(spark, spec)
-    writeMarker(f, spec.dir, IntentMarker, c)
-    writeMarker(f, spec.dir, UpToMarker, upTo)
-    // advance the frontier BEFORE anything moves: from here on the folded
-    // batches' rows are guaranteed present whichever way a crash falls
-    // (roll-back never touches the untouched source partitions; roll-forward
-    // keeps the consolidation), so a replay ≤ frontier is safely a no-op.
-    // Only ids inside the fold bound advance it — a later (possibly
-    // crash-partial, not-yet-replayed) partition must stay replayable.
-    foldIds.filter(_ >= 0).maxOption.foreach { maxReal =>
-      val next = math.max(maxReal,
-        readMarker(f, spec.dir, FrontierMarker).getOrElse(Long.MinValue))
-      writeMarker(f, spec.dir, FrontierMarker, next)
-    }
-    val scratch = spec.dir.stripSuffix("/") + "_compacting"
-    val scratchTbl = tbl + "_compacting"
-    spark.sql(s"DROP TABLE IF EXISTS $scratchTbl")
-    f.delete(new Path(scratch), true)
-    // preserve each row's ORIGINAL batch id through the consolidation:
-    // `_src_batch` rides as a data column (legacy rows materialize it from
-    // their partition id; rows inside a legacy consolidation keep its
-    // negative id — "earlier than everything", the documented legacy
-    // semantics), so strictly-earlier and exclude-own-batch snapshots keep
-    // working after the partition structure is folded away.
-    //
+      upTo: Long = Long.MaxValue): Unit =
+    BatchLog.fold(spark, layout(spec), upTo)
+
+  /** The store's half of [[BatchLog]]: the fold source is the registered
+    * bucketed table, the consolidation a bucketed sorted `saveAsTable`, and
+    * the catalog is resynced after a publish or a roll-back.
+    */
+  private def layout(spec: StoreSpec): BatchLog.Layout = new BatchLog.Layout {
+    val dir = spec.dir
+    val markers = BatchLog.StoreMarkers
+    private val tbl = tableName(spec.dir)
+    private val scratchTbl = tableName(BatchLog.scratchDir(spec.dir))
+
+    override def open(spark: SparkSession): Boolean =
+      BatchLog.hasParquet(BatchLog.fs(spark, dir), dir) && {
+        if (!spark.catalog.tableExists(tbl)) tryRegister(spark, spec)
+        require(spark.catalog.tableExists(tbl),
+          s"compact: ${spec.dir} holds a layout this store cannot claim")
+        true
+      }
+
+    // even ONE partition folds: that is how a legacy store earns one file
+    // per bucket and its sorted marker
+    def worthFolding(foldIds: Seq[Long]): Boolean = foldIds.nonEmpty
+
     // The rewrite FORCES the bucketed scan (on a session clone, so the
     // caller's conf stays as it is): task i reads exactly the files of
     // bucket i and writes bucket i's one consolidated file — the whole
@@ -544,83 +412,32 @@ object BucketedStore {
     // repartition, and tasks end up writing several files per bucket —
     // which defeats the point of compacting. The repartition stays as the
     // alignment fallback for a source that is not bucket-scannable.
-    val expect = Sessions.withConf(spark,
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") { cs =>
-      val tblDf = cs.table(tbl)
-        .filter(col("_batch") < 0 || col("_batch") <= upTo) // the fold bound
-      val withSrc =
-        if (tblDf.columns.contains("_src_batch"))
-          tblDf.withColumn("_src_batch", coalesce(col("_src_batch"), col("_batch")))
-        else tblDf.withColumn("_src_batch", col("_batch"))
-      val src = withSrc.drop("_batch")
-      val n = src.count()
-      src.repartition(nb, spec.bucketCols.map(col): _*)
+    def source[T](spark: SparkSession)(body: DataFrame => T): T =
+      Sessions.withConf(spark,
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")(c => body(c.table(tbl)))
+
+    def write(rows: DataFrame, scratch: String): Unit = {
+      val s = rows.sparkSession
+      val nb = effectiveBuckets(s, spec)
+      s.sql(s"DROP TABLE IF EXISTS $scratchTbl")
+      rows.repartition(nb, spec.bucketCols.map(col): _*)
         .write.mode("overwrite").format("parquet")
         .bucketBy(nb, spec.bucketCols.head, spec.bucketCols.tail: _*)
         .sortBy(spec.bucketCols.head, spec.bucketCols.tail: _*)
         .option("path", scratch)
         .saveAsTable(scratchTbl)
-      n
+      s.sql(s"DROP TABLE $scratchTbl") // external: files stay
     }
-    spark.sql(s"DROP TABLE $scratchTbl") // external: files stay
-    val got = spark.read.parquet(scratch).count()
-    require(got == expect, s"compaction audit failed: $expect rows in, $got out")
-    require(f.rename(new Path(scratch), new Path(spec.dir, s"_batch=$c")),
-      s"compaction publish rename failed: $scratch -> ${spec.dir}/_batch=$c")
-    writeMarker(f, spec.dir, CommitMarker, c)
-    finishCompaction(spark, spec, c)
-  }
 
-  /** Post-commit tail of [[compact]], shared with roll-forward recovery:
-    * delete every partition except the consolidated one, resync the
-    * catalog, drop the markers.
-    */
-  private def finishCompaction(spark: SparkSession, spec: StoreSpec, c: Long): Unit = {
-    val f = fs(spark, spec.dir)
-    // delete exactly the FOLDED sources: the persisted bound (MaxValue for
-    // unbounded/legacy folds) keeps real partitions above it — unfolded,
-    // possibly awaiting replay — alive on disk
-    val upTo = readMarker(f, spec.dir, UpToMarker).getOrElse(Long.MaxValue)
-    partitionIds(f, spec.dir).filter(id => id != c && (id < 0 || id <= upTo))
-      .foreach(id => f.delete(new Path(spec.dir, s"_batch=$id"), true))
-    // the consolidated rewrite is sorted per bucket, and it is now the
-    // ONLY partition — a legacy unsorted store earns the marker here
-    writeMarker(f, spec.dir, SortedMarker, 1L)
-    spark.sql(s"DROP TABLE IF EXISTS ${tableName(spec.dir)}")
-    tryRegister(spark, spec)
-    // INTENT dies before COMMIT: a crash between the deletes leaves
-    // commit-only (rolls forward, idempotent); the reverse order would
-    // leave intent-only AFTER the source partitions are gone, and the
-    // next open's "rollback" would delete the consolidated partition —
-    // the store's only remaining copy.
-    f.delete(marker(spec.dir, IntentMarker), false)
-    f.delete(marker(spec.dir, CommitMarker), false)
-    // last: a stale upTo with neither intent nor commit is inert (readers
-    // only consult it while a compaction is pending)
-    f.delete(marker(spec.dir, UpToMarker), false)
-  }
-
-  /** Compaction crash recovery — runs on every open; a no-op unless a
-    * previous compaction died between markers.
-    */
-  private def recover(spark: SparkSession, spec: StoreSpec): Unit = {
-    val p = new Path(spec.dir)
-    val f = fs(spark, spec.dir)
-    if (!f.exists(p)) return
-    readMarker(f, spec.dir, CommitMarker) match {
-      case Some(c) => finishCompaction(spark, spec, c) // roll forward
-      case None => readMarker(f, spec.dir, IntentMarker) match {
-        case Some(c) => // roll back: the consolidation never became visible
-          f.delete(new Path(spec.dir, s"_batch=$c"), true)
-          f.delete(new Path(spec.dir.stripSuffix("/") + "_compacting"), true)
-          spark.sql(s"DROP TABLE IF EXISTS ${tableName(spec.dir)}_compacting")
-          // a non-mutating reader may have registered the table WITH the
-          // orphan partition — drop it so the next use re-registers clean
-          spark.sql(s"DROP TABLE IF EXISTS ${tableName(spec.dir)}")
-          f.delete(marker(spec.dir, IntentMarker), false)
-          f.delete(marker(spec.dir, UpToMarker), false)
-        case None => ()
-      }
+    override def refresh(spark: SparkSession, published: Boolean): Unit = {
+      spark.sql(s"DROP TABLE IF EXISTS $scratchTbl")
+      // the consolidated rewrite is sorted per bucket — a legacy unsorted
+      // store earns the marker here
+      if (published) BatchLog.writeMarker(BatchLog.fs(spark, dir), dir, SortedMarker, 1L)
+      // a non-mutating reader may have registered the table WITH an orphan
+      // partition, or without the consolidation: re-register from the dir
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      if (published) tryRegister(spark, spec)
     }
   }
 
@@ -635,8 +452,8 @@ object BucketedStore {
     * missing the bucket columns — the caller decides how to read those.
     */
   private def tryRegister(spark: SparkSession, spec: StoreSpec): Boolean = {
-    val f = fs(spark, spec.dir)
-    if (!hasParquet(f, spec.dir)) return false
+    val f = BatchLog.fs(spark, spec.dir)
+    if (!BatchLog.hasParquet(f, spec.dir)) return false
     // migrate a top-level (unpartitioned) bucketed layout into _batch=<base>
     val top = f.listStatus(new Path(spec.dir)).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
@@ -644,7 +461,7 @@ object BucketedStore {
     if (top.nonEmpty) {
       if (!top.forall(st => bucketNamed.findFirstIn(st.getPath.getName).isDefined))
         return false // plain un-bucketed parquet: not ours to claim
-      val base = new Path(spec.dir, s"_batch=${nextBasePartition(spark, spec)}")
+      val base = new Path(spec.dir, s"_batch=${BatchLog.nextBase(f, spec.dir)}")
       f.mkdirs(base)
       top.foreach(st => f.rename(st.getPath, new Path(base, st.getPath.getName)))
     }
@@ -659,7 +476,7 @@ object BucketedStore {
     // over legacy unsorted files would let a merge join skip a needed sort
     val nb = effectiveBuckets(spark, spec)
     val sorted =
-      if (readMarker(f, spec.dir, SortedMarker).contains(1L))
+      if (BatchLog.readMarker(f, spec.dir, SortedMarker).contains(1L))
         s"SORTED BY (${spec.bucketCols.map(cn => s"`$cn`").mkString(", ")}) "
       else ""
     spark.sql(

@@ -62,16 +62,17 @@ class JdbcSpec extends AnyFunSuite {
     val src = (1 to 50).map(i => (i.toLong, i * 2.0)).toDF("id", "price")
     Jdbc.write(src, url, "ticks_v2", Jdbc.props(driver), SaveMode.Overwrite)
     // the DSv2 JDBC catalog is where LIMIT pushdown lives (V1 scans push
-    // only filters); a MySQL endpoint differs only in url/driver here too
-    spark.conf.set("spark.sql.catalog.graftdb",
-      "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog")
-    spark.conf.set("spark.sql.catalog.graftdb.url", url)
-    spark.conf.set("spark.sql.catalog.graftdb.driver", driver)
-    spark.conf.set("spark.sql.catalog.graftdb.pushDownLimit", "true")
-    try {
+    // only filters); a MySQL endpoint differs only in url/driver here too.
+    // The catalog lives on a clone, so the shared session never names it
+    obs.Sessions.withConf(spark,
+        "spark.sql.catalog.graftdb" ->
+          "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog",
+        "spark.sql.catalog.graftdb.url" -> url,
+        "spark.sql.catalog.graftdb.driver" -> driver,
+        "spark.sql.catalog.graftdb.pushDownLimit" -> "true") { c =>
       // Derby folds unquoted identifiers to upper case and puts V1-written
       // tables in the default APP schema (the V2 catalog's namespace)
-      val df = spark.sql(
+      val df = c.sql(
         "SELECT ID, PRICE FROM graftdb.APP.TICKS_V2 WHERE ID <= 10 LIMIT 5")
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("PushedFilters") && plan.contains("id <= 10"),
@@ -87,11 +88,6 @@ class JdbcSpec extends AnyFunSuite {
         "Derby unexpectedly claims LIMIT support — strengthen this pin to PushedLimit")
       val mysql = JdbcDialects.get(graft.sources.Jdbc.mysqlUrl("localhost"))
       assert(mysql.supportsLimit && mysql.supportsOffset)
-    } finally {
-      spark.conf.unset("spark.sql.catalog.graftdb")
-      spark.conf.unset("spark.sql.catalog.graftdb.url")
-      spark.conf.unset("spark.sql.catalog.graftdb.driver")
-      spark.conf.unset("spark.sql.catalog.graftdb.pushDownLimit")
     }
   }
 

@@ -265,24 +265,17 @@ class NativeAsOfSpec extends AnyFunSuite {
     // the exec's zipPartitions contract (equal partition counts, matched
     // key clustering) must survive CoalesceShufflePartitions. Tiny advisory
     // size + many initial partitions forces a real coalesce decision.
-    val ev = Tables.load(spark, sf0001, "events")
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("event_id"))
-    val views = ev.filter(col("event_type") === "view")
-      .groupBy(col("user_id"), col("ts"))
-      .agg(max_by(col("value"), col("event_id")).as("v_value"))
-    val prior = Map(
-      "spark.sql.adaptive.enabled" -> spark.conf.get("spark.sql.adaptive.enabled"),
-      "spark.sql.shuffle.partitions" -> spark.conf.get("spark.sql.shuffle.partitions"),
-      "spark.sql.adaptive.coalescePartitions.enabled" ->
-        spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled"),
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
-        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.shuffle.partitions", "17")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1KB")
+    obs.Sessions.withConf(spark,
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.shuffle.partitions" -> "17",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB") { c =>
+      val ev = Tables.load(c, sf0001, "events")
+      val clicks = ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("ts"), col("event_id"))
+      val views = ev.filter(col("event_type") === "view")
+        .groupBy(col("user_id"), col("ts"))
+        .agg(max_by(col("value"), col("event_id")).as("v_value"))
       def canon(df: org.apache.spark.sql.DataFrame) =
         df.select("event_id", "m_ts", "m_v_value").collect()
           .map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)))).toSet
@@ -297,7 +290,7 @@ class NativeAsOfSpec extends AnyFunSuite {
         assert(executed.contains("AdaptiveSparkPlan"), s"AQE not active:\n$executed")
         assert(executed.contains("AsOfJoin"), s"native exec missing under AQE:\n$executed")
       }
-    } finally prior.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("native as-of over bucketed sorted twins: ZERO exchange below the merge") {
@@ -318,12 +311,10 @@ class NativeAsOfSpec extends AnyFunSuite {
       views, "views_asof_b", "user_id", buckets = 4, sortBy = Seq("user_id", "ts"))
     // sorted-bucket scan ordering is behind a default-off flag (Spark
     // checks one-file-per-bucket lazily; writeBucketed guarantees it)
-    val sortedScanKey = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-    val prior = spark.conf.get(sortedScanKey)
-    try {
-      spark.conf.set(sortedScanKey, "true")
+    try obs.Sessions.withConf(spark,
+        "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") { c =>
       val out = AsOfJoin.backwardNative(
-        spark.table("clicks_asof_b"), spark.table("views_asof_b"),
+        c.table("clicks_asof_b"), c.table("views_asof_b"),
         Seq("user_id"), "ts", Seq("v_value"), "m_")
       val plan = out.queryExecution.executedPlan.toString
       assert(plan.contains("AsOfJoin"), s"native exec missing:\n$plan")
@@ -336,7 +327,6 @@ class NativeAsOfSpec extends AnyFunSuite {
       val plain = AsOfJoin.backwardNative(clicks, views, Seq("user_id"), "ts", Seq("v_value"), "m_")
       assert(canon(out) == canon(plain))
     } finally {
-      spark.conf.set(sortedScanKey, prior)
       spark.sql("DROP TABLE IF EXISTS clicks_asof_b")
       spark.sql("DROP TABLE IF EXISTS views_asof_b")
     }

@@ -67,16 +67,13 @@ class ScaleOpsSpec extends AnyFunSuite {
     BucketedTables.bucketFacts(spark, sf0001, buckets = 4)
     // disable broadcast so the plan must rely on bucketing for co-location
     // (at fixture scale the dim side would otherwise be broadcast, which
-    // hides what we are proving); exception-safe restore — a leaked -1
-    // threshold would poison every later suite on the shared session
-    val (q, plan) = try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      val df = BucketedTables.colocatedRevenue(spark)
+    // hides what we are proving) — on a clone, so the shared session's
+    // thresholds are never written
+    val (q, plan) = obs.Sessions.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") { c =>
+      val df = BucketedTables.colocatedRevenue(c)
       (df, df.queryExecution.executedPlan.toString)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     }
     // the join itself must not introduce a shuffle: the only Exchange allowed
     // is the one for the final groupBy aggregation
@@ -298,12 +295,8 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("AQE skew-join splits the hot partition at runtime") {
-    import spark.implicits._
     // one key owns ~95% of the fact side; thresholds lowered so the
     // fixture-sized skew is visible to AQE's planner
-    val fact = ((1 to 190000).map(_ => 1) ++ (1 to 10000).map(i => i % 100 + 2))
-      .zipWithIndex.map { case (k, i) => (k, i.toLong) }.toDF("k", "v")
-    val dim = (1 to 101).map(i => (i, s"d$i")).toDF("k", "name")
     val keep = Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
@@ -311,14 +304,17 @@ class ScaleOpsSpec extends AnyFunSuite {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "100KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val plan = try {
-      keep.foreach { case (k, v) => spark.conf.set(k, v) }
+    val plan = obs.Sessions.withConf(spark, keep: _*) { c =>
+      import c.implicits._
+      val fact = ((1 to 190000).map(_ => 1) ++ (1 to 10000).map(i => i % 100 + 2))
+        .zipWithIndex.map { case (k, i) => (k, i.toLong) }.toDF("k", "v")
+      val dim = (1 to 101).map(i => (i, s"d$i")).toDF("k", "name")
       val joined = fact.join(dim, Seq("k"))
       // materialize THIS dataset's own QueryExecution (count() would plan a
       // separate aggregate query and leave joined's adaptive plan unexecuted)
       assert(joined.collect().length == 200000)
       joined.queryExecution.executedPlan.toString
-    } finally keep.foreach { case (k, _) => spark.conf.unset(k) }
+    }
     assert(plan.contains("skew=true"),
       s"AQE did not mark the skewed join:\n${plan.take(2000)}")
   }
@@ -422,18 +418,12 @@ class ScaleOpsSpec extends AnyFunSuite {
     // dim's surviving keys statically. Thresholds are tuned down because
     // the fixture scans are tiny; at scale the defaults (10 GB application
     // side) gate it to genuinely large scans.
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold"
-    ).map(k => k -> conf.getOption(k))
-    try {
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // no broadcast: SMJ + runtime filter
-      val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
-      val ord = spark.read.parquet(s"$sf0001/orders.parquet")
+    obs.Sessions.withConf(spark,
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") { c => // no broadcast: SMJ + runtime filter
+      val li = c.read.parquet(s"$sf0001/lineitem.parquet")
+      val ord = c.read.parquet(s"$sf0001/orders.parquet")
         .filter(col("o_totalprice") > 400000) // selective creation side
       val j = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
         .groupBy(ord("o_orderkey")).agg(sum(li("l_quantity")))
@@ -441,8 +431,6 @@ class ScaleOpsSpec extends AnyFunSuite {
       assert(optimized.contains("bloom_filter") || optimized.contains("BloomFilter") ||
         optimized.contains("might_contain"), s"no runtime bloom filter in:\n$optimized")
       assert(j.count() > 0)
-    } finally saved.foreach { case (k, v) =>
-      v.fold(conf.unset(k))(conf.set(k, _))
     }
   }
 

@@ -87,18 +87,23 @@ class ScopedConfSpec extends AnyFunSuite {
   }
 
   test("source guard: only Sessions.scala writes a session conf") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val banned = """\.conf\.(set|unset)\(""".r
-    val hits = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        p.toString.replace('\\', '/') != "src/main/scala/graft/obs/Sessions.scala")
-      .flatMap { p =>
-        Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if banned.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
-        }
-      }.toList
-    assert(hits.isEmpty, s"scope confs with graft.obs.Sessions.withConf instead:\n${hits.mkString("\n")}")
+    // under src/main nothing outside Sessions.scala writes a conf; under
+    // src/test no spec writes the shared test session's
+    def hits(root: String, banned: scala.util.matching.Regex, skip: String): List[String] = {
+      val r = Paths.get(root)
+      assert(Files.isDirectory(r), s"run from the repository root: $r")
+      Files.walk(r).iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && p.toString.replace('\\', '/') != skip)
+        .flatMap { p =>
+          Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (line, i) if banned.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+          }
+        }.toList
+    }
+    val all = hits("src/main/scala", """\.conf\.(set|unset)\(""".r,
+        "src/main/scala/graft/obs/Sessions.scala") ++
+      hits("src/test/scala", """\bspark\.conf\.(set|unset)\(""".r, "")
+    assert(all.isEmpty, s"scope confs with graft.obs.Sessions.withConf instead:\n${all.mkString("\n")}")
   }
 
   test("envInt: unset gives the default; a bad value names the variable") {

@@ -55,35 +55,38 @@ class SemDeDupSpec extends AnyFunSuite {
   }
 
   test("cluster-count scale law: gate default is fixed; docsPerCluster wires k ∝ corpus") {
-    import spark.implicits._
-    val docs = (0L until 200L)
-      .map(i => (i, s"alpha$i beta${i % 7} gamma common")).toDF("doc_id", "text")
     val key = "spark.graft.semdedup.docsPerCluster"
+    def corpus(c: org.apache.spark.sql.SparkSession) = {
+      import c.implicits._
+      (0L until 200L)
+        .map(i => (i, s"alpha$i beta${i % 7} gamma common")).toDF("doc_id", "text")
+    }
+    // the key is read from the corpus' session: each value gets its own clone
+    def clusterCount(d: Option[String]): Int =
+      obs.Sessions.withConf(spark, d.map(key -> _).toSeq: _*) { c =>
+        if (d.isEmpty) c.conf.unset(key)
+        SemDeDup.clusterCount(corpus(c), 16)
+      }
+    val docs = corpus(spark)
     // gate shape: conf unset → the pinned base, NO count job, oracle-stable
-    spark.conf.unset(key)
-    assert(SemDeDup.clusterCount(docs, 16) == 16)
-    try {
-      // the law: k = max(base, ceil(n/d)) — per-cluster population stays ≤ d
-      spark.conf.set(key, "10")
-      assert(SemDeDup.clusterCount(docs, 16) == 20) // ceil(200/10)
-      spark.conf.set(key, "1000")
-      assert(SemDeDup.clusterCount(docs, 16) == 16) // floor at base
-      // a malformed value names the key and the value, not a bare NumberFormatException
-      spark.conf.set(key, "10k")
-      val bad = intercept[IllegalArgumentException](SemDeDup.clusterCount(docs, 16))
-      assert(bad.getMessage.contains(key) && bad.getMessage.contains("10k"))
-      // and what the law BUYS: the pair stage is Σ n_c·(n_c−1); growing k
-      // with the corpus must shrink it vs the fixed-k gate shape. Pair-row
-      // bound measured through the same argmax assignment markDropped uses.
-      def pairRows(k: Int): Long =
-        SemDeDup.assignArgmax(SemDeDup.embedBow(docs, k))
-          .groupBy("cluster").count()
-          .agg(sum(col("count") * (col("count") - 1L))).collect().head.getLong(0)
-      val fixed = pairRows(16)
-      val scaled = pairRows(64)
-      assert(scaled < fixed,
-        s"k∝corpus must bound the pair stage: k=16 → $fixed rows, k=64 → $scaled")
-    } finally spark.conf.unset(key)
+    assert(clusterCount(None) == 16)
+    // the law: k = max(base, ceil(n/d)) — per-cluster population stays ≤ d
+    assert(clusterCount(Some("10")) == 20) // ceil(200/10)
+    assert(clusterCount(Some("1000")) == 16) // floor at base
+    // a malformed value names the key and the value, not a bare NumberFormatException
+    val bad = intercept[IllegalArgumentException](clusterCount(Some("10k")))
+    assert(bad.getMessage.contains(key) && bad.getMessage.contains("10k"))
+    // and what the law BUYS: the pair stage is Σ n_c·(n_c−1); growing k
+    // with the corpus must shrink it vs the fixed-k gate shape. Pair-row
+    // bound measured through the same argmax assignment markDropped uses.
+    def pairRows(k: Int): Long =
+      SemDeDup.assignArgmax(SemDeDup.embedBow(docs, k))
+        .groupBy("cluster").count()
+        .agg(sum(col("count") * (col("count") - 1L))).collect().head.getLong(0)
+    val fixed = pairRows(16)
+    val scaled = pairRows(64)
+    assert(scaled < fixed,
+      s"k∝corpus must bound the pair stage: k=16 → $fixed rows, k=64 → $scaled")
   }
 
   test("hashed-BoW embedding is a pure function of the text (partitioning-invariant)") {

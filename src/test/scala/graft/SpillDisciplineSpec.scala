@@ -27,12 +27,10 @@ class SpillDisciplineSpec extends AnyFunSuite {
     test(s"$name: identical rows under forced sort-based aggregation fallback") {
       val fn = SparkEntry.queries(name)
       val normal = fn(spark, sf0001).collect().map(_.toString).sorted.toSeq
-      val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-      val saved = spark.conf.getOption(key)
-      val spilled = try {
-        spark.conf.set(key, "2")
-        fn(spark, sf0001).collect().map(_.toString).sorted.toSeq
-      } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      val spilled = obs.Sessions.withConf(spark,
+          "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2") { c =>
+        fn(c, sf0001).collect().map(_.toString).sorted.toSeq
+      }
       assert(normal.nonEmpty)
       assert(spilled == normal,
         s"$name diverged under sort-based fallback: ${spilled.size} vs ${normal.size} rows")

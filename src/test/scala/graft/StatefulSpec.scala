@@ -239,36 +239,33 @@ class StatefulSpec extends AnyFunSuite {
   }
 
   test("runningOhlcTws (transformWithState) emits the same bars as the v1 operator") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ms = MemoryStream[TradeTick]
-    val base = 1700000040000L
-    def tick(id: Long, p: String, tMs: Long) = TradeTick(id, "BTCUSDT", p, "2.00000000", tMs, true)
-    val q = Stateful.runningOhlcTws(ms.toDS())
-      .writeStream.outputMode("append").format("memory").queryName("twsbars").start()
-    try {
-      // same scenario as the v1 late-tick test: rotation on later minute,
-      // cross-batch late tick dropped, multi-batch state carry
-      ms.addData(tick(1, "10", base), tick(2, "11", base + 1000), tick(3, "20", base + 60000))
-      q.processAllAvailable()
-      ms.addData(tick(4, "99", base + 2000)) // late -> dropped
-      q.processAllAvailable()
-      ms.addData(tick(5, "30", base + 120000))
-      q.processAllAvailable()
-      val bars = spark.sql(
-        "SELECT windowStartSec, open, high, low, close, volume, count FROM twsbars ORDER BY windowStartSec")
-        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3),
-          r.getDouble(4), r.getDouble(5), r.getLong(6))).toList
-      assert(bars == List(
-        (base / 1000, 10.0, 11.0, 10.0, 11.0, 4.0, 2L),
-        (base / 1000 + 60, 20.0, 20.0, 20.0, 20.0, 2.0, 1L)))
-    } finally {
-      q.stop()
-      saved.fold(spark.conf.unset(providerKey))(spark.conf.set(providerKey, _))
+    obs.Sessions.withConf(spark, providerKey ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") { c =>
+      import c.implicits._
+      implicit val ctx = c.sqlContext
+      val ms = MemoryStream[TradeTick]
+      val base = 1700000040000L
+      def tick(id: Long, p: String, tMs: Long) = TradeTick(id, "BTCUSDT", p, "2.00000000", tMs, true)
+      val q = Stateful.runningOhlcTws(ms.toDS())
+        .writeStream.outputMode("append").format("memory").queryName("twsbars").start()
+      try {
+        // same scenario as the v1 late-tick test: rotation on later minute,
+        // cross-batch late tick dropped, multi-batch state carry
+        ms.addData(tick(1, "10", base), tick(2, "11", base + 1000), tick(3, "20", base + 60000))
+        q.processAllAvailable()
+        ms.addData(tick(4, "99", base + 2000)) // late -> dropped
+        q.processAllAvailable()
+        ms.addData(tick(5, "30", base + 120000))
+        q.processAllAvailable()
+        val bars = c.sql(
+          "SELECT windowStartSec, open, high, low, close, volume, count FROM twsbars ORDER BY windowStartSec")
+          .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3),
+            r.getDouble(4), r.getDouble(5), r.getLong(6))).toList
+        assert(bars == List(
+          (base / 1000, 10.0, 11.0, 10.0, 11.0, 4.0, 2L),
+          (base / 1000 + 60, 20.0, 20.0, 20.0, 20.0, 2.0, 1L)))
+      } finally q.stop()
     }
   }
 
@@ -339,14 +336,9 @@ class StatefulSpec extends AnyFunSuite {
     implicit val ctx = spark.sqlContext
     // the production state backend: per-key buffers live in RocksDB, so the
     // encoder round-trip of AsOfBufV1 through the store is exercised too
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val savedProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try { runRandomizedAsOfReplay("ss_asof_rnd_rocks") }
-    finally savedProvider match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
+    obs.Sessions.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") { c =>
+      runRandomizedAsOfReplay("ss_asof_rnd_rocks", c)
     }
   }
 
@@ -354,9 +346,10 @@ class StatefulSpec extends AnyFunSuite {
     runRandomizedAsOfReplay("ss_asof_rnd")
   }
 
-  private def runRandomizedAsOfReplay(sink: String): Unit = {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
+  private def runRandomizedAsOfReplay(sink: String,
+      session: org.apache.spark.sql.SparkSession = spark): Unit = {
+    import session.implicits._
+    implicit val ctx = session.sqlContext
     val rnd = new scala.util.Random(0x55A0F)
     // 3 keys, coarse millisecond grid (forces equal-ts inclusive ties),
     // rights unique per (key, ts) per the operator contract
@@ -382,7 +375,7 @@ class StatefulSpec extends AnyFunSuite {
       batches.foreach { b => ms.addData(b: _*); q.processAllAvailable() }
       ms.addData(Stateful.AsOfEv("zz", new java.sql.Timestamp(10000000L), 0, 0L, 0.0))
       q.processAllAvailable()
-      val got = spark.sql(s"SELECT key, tsUs, id, mTsUs, mV FROM $sink")
+      val got = session.sql(s"SELECT key, tsUs, id, mTsUs, mV FROM $sink")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           Option(r.get(3)), Option(r.get(4)))).toSet
       val expect = graft.operators.AsOfJoin.backward(
@@ -447,10 +440,11 @@ class StatefulSpec extends AnyFunSuite {
     * (latest-row-wins) funnel table.
     */
   private def runFunnel(batches: Seq[Seq[Stateful.FunnelEv]],
-      watermarkDelay: Option[String] = None)
+      watermarkDelay: Option[String] = None,
+      session: org.apache.spark.sql.SparkSession = spark)
       : Map[Long, (Option[Long], Option[Long], Option[Long])] = {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
+    import session.implicits._
+    implicit val ctx = session.sqlContext
     val ms = MemoryStream[(Long, Long, Byte)]
     val acc = scala.collection.concurrent.TrieMap
       .empty[Long, (Option[Long], Option[Long], Option[Long])]
@@ -486,7 +480,8 @@ class StatefulSpec extends AnyFunSuite {
       2L -> ((Some(10L), Some(20L), Some(30L)))))
   }
 
-  private def runRandomizedFunnel(): Unit = {
+  private def runRandomizedFunnel(
+      session: org.apache.spark.sql.SparkSession = spark): Unit = {
     val rnd = new scala.util.Random(4242)
     val events = (1 to 400).map { _ =>
       Stateful.FunnelEv(rnd.nextInt(25).toLong + 1,
@@ -495,7 +490,7 @@ class StatefulSpec extends AnyFunSuite {
     // arbitrary arrival order, 4 uneven micro-batches
     val shuffled = rnd.shuffle(events)
     val batches = shuffled.grouped(math.max(1, shuffled.size / 4 + 1)).toSeq
-    val got = runFunnel(batches)
+    val got = runFunnel(batches, session = session)
     val ref = events.groupBy(_.userId).map { case (u, evs) =>
       def times(t: Byte) = evs.filter(_.etype == t).map(_.tsUs).sorted
       val v = times(0).headOption
@@ -755,14 +750,9 @@ class StatefulSpec extends AnyFunSuite {
 
   test("streaming funnel randomized parity (RocksDB state store)") {
     // FunnelStV1 round-trips through the production state backend too
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runRandomizedFunnel()
-    finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
+    obs.Sessions.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") { c =>
+      runRandomizedFunnel(c)
     }
   }
 }
