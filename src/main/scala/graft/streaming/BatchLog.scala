@@ -164,10 +164,9 @@ object BatchLog {
     val dir = layout.dir
     val m = layout.markers
     val f = fs(spark, dir)
-    val ids = partitionIds(f, dir)
-    val foldIds = ids.filter(id => id < 0 || id <= upTo)
+    val foldIds = partitionIds(f, dir).filter(id => id < 0 || id <= upTo)
     if (!layout.worthFolding(foldIds)) return
-    val c = math.min(0L, ids.min) - 1L
+    val c = nextBase(f, dir)
     // only ids inside the bound advance the frontier — a later (possibly
     // crash-partial, not yet replayed) partition must stay replayable
     foldIds.filter(_ >= 0).maxOption.foreach { maxReal =>
