@@ -96,84 +96,7 @@ object AnnIvf {
     BucketedTables.writeBucketed(assign(emb, centroids), table, "cluster",
       graft.streaming.BucketedStore.resolveWidth(emb.sparkSession, buckets))
 
-  /** INCREMENTAL index maintenance: assign a batch of NEW vectors to their
-    * centroids and APPEND into the existing bucketed index table (the
-    * bucket spec must match buildIndex's — Spark validates it). Per-batch
-    * cost is the batch's own assignment plus one bucketed write; the
-    * resident corpus is never re-read, re-assigned, or re-shuffled, and the
-    * index stays queryable throughout. Centroid drift is handled by a
-    * periodic full `buildIndex` — the standard IVF split between cheap
-    * append maintenance and occasional re-clustering.
-    *
-    * A bare append is NOT idempotent: re-appending a batch (an at-least-once
-    * replay, an operator retry) duplicates its vec_ids, and duplicates
-    * surface verbatim in topKIndexed results. `dedupVecIds = true` makes the
-    * append idempotent via a left-anti join of the batch against the stored
-    * vec_ids — per-batch cost is one scan of the index's id column (a few
-    * bytes/row; at 100 TB an id-only column scan, not a corpus read) against
-    * the batch's hash side. Keep it off only when the caller already
-    * guarantees uniqueness (e.g. an upstream exactly-once source).
-    *
-    * The id scan also SHUFFLES the ids (the table is bucketed by cluster,
-    * not vec_id, so the anti-join cannot reuse its layout) — a per-batch
-    * O(index) term. This name-based managed-table API keeps it because the
-    * main-table anti-join is its only replay guard; the STORE-based API
-    * below ([[appendToIndexStore]]/[[maintainIndexStream]]) eliminates it:
-    * a `_batch`-partitioned [[graft.streaming.BucketedStore]] makes every
-    * write a per-batch partition REWRITE (replay converges structurally),
-    * which is what finally makes an id-bucketed sidecar SAFE — the crash
-    * window between the two writes that disqualified a sidecar here closes,
-    * and the re-arrival anti-join becomes exchange-free on the store side.
-    * AnnIvfStoreSpec pins the resulting growth law (per-batch shuffle flat
-    * as the index doubles). Prefer the store API for streaming maintenance.
-    */
-  def appendToIndex(batch: DataFrame, centroids: Array[Array[Double]],
-      table: String, buckets: Int = 0, dedupVecIds: Boolean = false): Unit = {
-    val spark = batch.sparkSession
-    // width is LAYOUT STATE: an existing table's own bucket spec is
-    // authoritative (the catalog twin of the dir store's _store_buckets
-    // marker) — appending at the session-derived width from a session with
-    // different shuffle partitions would make Spark reject every batch
-    // ("Specified bucketing does not match that of the existing table")
-    val width =
-      if (spark.catalog.tableExists(table))
-        // parse, don't wrap: TableIdentifier("db.tbl") would look up an
-        // UNQUALIFIED name containing a dot and throw NoSuchTableException
-        spark.sessionState.catalog
-          .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-          .bucketSpec.map(_.numBuckets)
-          .getOrElse(graft.streaming.BucketedStore.resolveWidth(spark, buckets))
-      else graft.streaming.BucketedStore.resolveWidth(spark, buckets)
-    val assigned = assign(batch, centroids)
-    val toWrite =
-      if (dedupVecIds)
-        assigned.join(spark.table(table).select("vec_id"),
-          Seq("vec_id"), "left_anti")
-      else assigned
-    toWrite.write.mode("append").format("parquet")
-      .bucketBy(width, "cluster")
-      .saveAsTable(table)
-  }
-
-  /** Streaming twin of [[appendToIndex]]: maintain the index from an
-    * unbounded stream of (vec_id, e). foreachBatch is AT-LEAST-ONCE — a
-    * batch replayed after a failure re-runs its append — so the default
-    * here guards the sink with `dedupVecIds = true`: a replayed batch's ids
-    * anti-join away and the append becomes idempotent without a
-    * transactional table format.
-    */
-  def maintainIndexStream(stream: DataFrame, centroids: Array[Array[Double]],
-      table: String, checkpoint: String, buckets: Int = 0,
-      dedupVecIds: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        appendToIndex(b, centroids, table, buckets, dedupVecIds)
-      }
-      .start()
-
-  import graft.streaming.{BucketedStore, Concurrently}
+  import graft.streaming.{BucketedStore, IndexTables}
   import graft.streaming.BucketedStore.StoreSpec
 
   /** StoreSpec of the dir-based inverted-list store (bucketed by cluster —
@@ -187,6 +110,23 @@ object AnnIvf {
     */
   private def idsSpec(dir: String, buckets: Int) =
     StoreSpec(dir.stripSuffix("/") + "_ids", Seq("vec_id"), buckets)
+
+  /** StoreSpec of the PQ-codes sidecar (bucketed by cluster like the main
+    * store — the probed ADC search prunes on the same key).
+    */
+  private def codesSpec(dir: String, buckets: Int) =
+    StoreSpec(codesDir(dir), Seq("cluster"), buckets)
+
+  private def codesDir(dir: String): String = dir.stripSuffix("/") + "_codes"
+
+  /** The store's tables: inverted lists, vec_id sidecar and PQ-codes
+    * sidecar (a plain IVF store has no `_codes` dir, and folding a dir
+    * that does not exist is a no-op). `tables(dir).sink(n)(appendToIndexStore
+    * ...)` is the streaming maintenance, folding every n batches (0 =
+    * never); `tables(dir).compact(spark)` is the owner's offline fold.
+    */
+  def tables(dir: String, buckets: Int = 0): IndexTables =
+    IndexTables(Seq(storeSpec(dir, buckets), idsSpec(dir, buckets), codesSpec(dir, buckets)))
 
   /** Build the DIR-BASED index store once: inverted lists bucketed by
     * cluster + a vec_id-bucketed sidecar. Same layout the streaming
@@ -202,8 +142,7 @@ object AnnIvf {
       idsSpec(dir, width))
   }
 
-  /** INCREMENTAL maintenance of the dir-based store — the scale path that
-    * closes [[appendToIndex]]'s per-batch O(index) dedup term. Per batch:
+  /** INCREMENTAL maintenance of the dir-based store. Per batch:
     * assign the new vectors (batch-sized), anti-join against the PRE-batch
     * sidecar (store side bucketed on vec_id ⇒ zero exchange; only the
     * batch's ids shuffle), then rewrite the batch's own `_batch` partition
@@ -216,69 +155,31 @@ object AnnIvf {
     * shuffle records stay flat as the accumulated index doubles.
     */
   def appendToIndexStore(batch: DataFrame, centroids: Array[Array[Double]],
-      dir: String, batchId: Long, buckets: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val width = BucketedStore.resolveWidth(spark, buckets)
-    val priorIds = BucketedStore.read(spark, idsSpec(dir, width)) match {
-      case Some(ids) => BucketedStore.excludeBatch(ids, batchId).select(col("vec_id"))
-      case None => batch.select(col("vec_id")).limit(0)
-    }
+      dir: String, batchId: Long, buckets: Int = 0): Unit =
+    appendFresh(batch, centroids, dir, batchId, buckets, codes = None)
+
+  /** The batch's fresh vectors (anti-joined against the PRE-batch sidecar),
+    * assigned once and appended as the batch's own partition in every
+    * table, `codes` (the PQ encoder) adding the codes sidecar — the
+    * order-independent appends overlap as concurrent driver jobs
+    * (guide §2.6).
+    */
+  private def appendFresh(batch: DataFrame, centroids: Array[Array[Double]],
+      dir: String, batchId: Long, buckets: Int, codes: Option[Column => Column]): Unit = {
+    val width = BucketedStore.resolveWidth(batch.sparkSession, buckets)
     val fresh = assign(batch, centroids)
-      .join(priorIds, Seq("vec_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // materialize the shared batch frame ONCE, then overlap the two
-      // order-independent table appends as concurrent driver jobs
-      // (guide §2.6; appendBatch never writes the session's conf)
-      fresh.count()
-      Concurrently(spark)(Seq(
+      .join(IndexTables.priorIds(batch, idsSpec(dir, width), batchId), Seq("vec_id"), "left_anti")
+    IndexTables.write(fresh) { fresh =>
+      Seq(
         () => BucketedStore.appendBatch(fresh, storeSpec(dir, width), batchId),
         () => BucketedStore.appendBatch(
           fresh.select(col("vec_id")).dropDuplicates("vec_id"),
-          idsSpec(dir, width), batchId)))
-    } finally fresh.unpersist()
+          idsSpec(dir, width), batchId)) ++
+        codes.map(c => () => BucketedStore.appendBatch(
+          fresh.select(col("vec_id"), col("cluster"), c(col("e")).as("c")),
+          codesSpec(dir, width), batchId))
+    }
   }
-
-  /** foreachBatch maintenance of the dir-based store (at-least-once safe by
-    * construction — see [[appendToIndexStore]]). `compactEvery = n` runs
-    * [[compactIndexStore]] after every n-th batch inside the sink —
-    * foreachBatch serializes batches, so the compaction's single-writer
-    * contract holds with no external scheduler, and files-per-probe stays
-    * bounded for the life of the stream.
-    */
-  def maintainIndexStore(stream: DataFrame, centroids: Array[Array[Double]],
-      dir: String, checkpoint: String, buckets: Int = 0, compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        appendToIndexStore(b, centroids, dir, id, buckets)
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0)
-          compactIndexStore(b.sparkSession, dir, buckets, upTo = id)
-      }
-      .start()
-
-  /** Bucket-preserving compaction of the dir-based store + sidecar (the
-    * read-side file-count prune; see [[graft.streaming.BucketedStore.compact]]).
-    * `upTo` bounds the fold to batches ≤ it — in-sink maintenance passes
-    * the just-committed batch id so a crash-partial later partition (an
-    * old-checkpoint restore mid-replay) can never be fossilized by the
-    * fold's frontier advance.
-    */
-  def compactIndexStore(spark: SparkSession, dir: String, buckets: Int = 0,
-      upTo: Long = Long.MaxValue): Unit = {
-    val width = BucketedStore.resolveWidth(spark, buckets)
-    BucketedStore.compact(spark, storeSpec(dir, width), upTo)
-    BucketedStore.compact(spark, idsSpec(dir, width), upTo)
-  }
-
-  /** StoreSpec of the PQ-codes sidecar (bucketed by cluster like the main
-    * store — the probed ADC search prunes on the same key).
-    */
-  private def codesSpec(dir: String, buckets: Int) =
-    StoreSpec(dir.stripSuffix("/") + "_codes", Seq("cluster"), buckets)
-
-  private def codesDir(dir: String): String = dir.stripSuffix("/") + "_codes"
 
   /** Build the IVF-PQ composition (the faiss shape): the inverted-list
     * store + id sidecar of [[buildIndexStore]] PLUS a PQ-codes sidecar —
@@ -316,56 +217,9 @@ object AnnIvf {
     */
   def appendToIndexStorePq(batch: DataFrame, centroids: Array[Array[Double]],
       dir: String, batchId: Long, buckets: Int = 0,
-      m: Int = 8, dsub: Int = 8): Unit = {
-    val spark = batch.sparkSession
-    val width = BucketedStore.resolveWidth(spark, buckets)
-    val priorIds = BucketedStore.read(spark, idsSpec(dir, width)) match {
-      case Some(ids) => BucketedStore.excludeBatch(ids, batchId).select(col("vec_id"))
-      case None => batch.select(col("vec_id")).limit(0)
-    }
-    val fresh = assign(batch, centroids)
-      .join(priorIds, Seq("vec_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // materialize the shared batch frame ONCE, then overlap the three
-      // order-independent table appends (lists/ids/codes) as concurrent
-      // driver jobs (guide §2.6) — replay converges from any crash point
-      // between them exactly as it did when they ran back to back, and
-      // appendBatch never writes the session's conf.
-      fresh.count()
-      Concurrently(spark)(Seq(
-        () => BucketedStore.appendBatch(fresh, storeSpec(dir, width), batchId),
-        () => BucketedStore.appendBatch(
-          fresh.select(col("vec_id")).dropDuplicates("vec_id"),
-          idsSpec(dir, width), batchId),
-        () => BucketedStore.appendBatch(
-          fresh.select(col("vec_id"), col("cluster"),
-            ProductQuantizer.codes(col("e"), m, dsub).as("c")),
-          codesSpec(dir, width), batchId)))
-    } finally fresh.unpersist()
-  }
-
-  /** foreachBatch maintenance of the IVF-PQ store (the streaming leg of
-    * the composition — vectors are coded the moment they arrive, so the
-    * ADC-searchable index is always current). Same at-least-once safety
-    * and compaction policy as [[maintainIndexStore]].
-    */
-  def maintainIndexStorePq(stream: DataFrame, centroids: Array[Array[Double]],
-      dir: String, checkpoint: String, buckets: Int = 0, compactEvery: Int = 0,
-      m: Int = 8, dsub: Int = 8)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        appendToIndexStorePq(b, centroids, dir, id, buckets, m, dsub)
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-          compactIndexStore(b.sparkSession, dir, buckets, upTo = id)
-          BucketedStore.compact(b.sparkSession,
-            codesSpec(dir, BucketedStore.resolveWidth(b.sparkSession, buckets)),
-            upTo = id)
-        }
-      }
-      .start()
+      m: Int = 8, dsub: Int = 8): Unit =
+    appendFresh(batch, centroids, dir, batchId, buckets,
+      Some(e => ProductQuantizer.codes(e, m, dsub)))
 
   /** Probed ADC search — the read side of the IVF-PQ composition: the
     * probed-cluster IN filter is pushed onto a PLAIN-FILE read of the

@@ -57,26 +57,15 @@ object BloomFilter {
 
   /** Ingest one micro-batch: its delta as a replay-idempotent `_batch`
     * partition (the CMS feed discipline — markers skip committed batches,
-    * a replay rewrites its own partition).
+    * a replay rewrites its own partition). Stream it through
+    * `IndexTables(feeds = Seq(feedDir)).sink(n)` to fold the feed every n
+    * batches (content-preserving: the fold is a set union either way, and
+    * union is idempotent).
     */
   def ingestBatch(batch: DataFrame, keyCol: String, feedDir: String,
       batchId: Long, markersDir: String = null, k: Int = 4, m: Int = 2048): Unit =
     graft.streaming.Loader.writeBatchIdempotent(
       delta(batch, keyCol, k, m), feedDir, batchId, markersDir)
-
-  /** foreachBatch sink; `compactEvery = n` folds the feed's per-batch
-    * partitions with `Loader.compactBatches` (content-preserving — the
-    * fold is a set union either way, and union is idempotent, so even a
-    * position present in MANY batches collapses to one row).
-    */
-  def ingestSink(keyCol: String, feedDir: String, markersDir: String = null,
-      k: Int = 4, m: Int = 2048, compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, id) => {
-      ingestBatch(batch, keyCol, feedDir, id, markersDir, k, m)
-      if (compactEvery > 0 && (id + 1) % compactEvery == 0)
-        graft.streaming.Loader.compactBatches(batch.sparkSession, feedDir,
-          upTo = id)
-    }
 
   /** Membership probes for a frame of keys against the maintained feed:
     * fold the deltas to the occupied-position set (≤ m rows, broadcast),

@@ -56,26 +56,15 @@ object BottomKSample {
       .limit(k)
 
   /** Ingest one micro-batch: its bottom-k delta as a replay-idempotent
-    * `_batch` partition.
+    * `_batch` partition. Stream it through
+    * `IndexTables(feeds = Seq(feedDir)).sink(n)` to fold the feed every n
+    * batches (content-preserving: the fold is a global bottom-k either way;
+    * the DISTINCT inside [[fold]] absorbs keys repeated across batches).
     */
   def ingestBatch(batch: DataFrame, keyCol: String, feedDir: String,
       batchId: Long, markersDir: String = null, k: Int = 64): Unit =
     graft.streaming.Loader.writeBatchIdempotent(
       delta(batch, keyCol, k), feedDir, batchId, markersDir)
-
-  /** foreachBatch sink; `compactEvery = n` folds the per-batch partitions
-    * (content-preserving: the fold is a global bottom-k either way; the
-    * DISTINCT inside [[fold]] absorbs the duplicate keys a multi-batch
-    * feed legitimately carries).
-    */
-  def ingestSink(keyCol: String, feedDir: String, markersDir: String = null,
-      k: Int = 64, compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, id) => {
-      ingestBatch(batch, keyCol, feedDir, id, markersDir, k)
-      if (compactEvery > 0 && (id + 1) % compactEvery == 0)
-        graft.streaming.Loader.compactBatches(batch.sparkSession, feedDir,
-          upTo = id)
-    }
 
   /** The maintained sample: fold the feed to the global bottom-k (distinct
     * keys first — the same key may appear in several batch deltas), ranked

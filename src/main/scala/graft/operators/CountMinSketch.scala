@@ -41,25 +41,14 @@ object CountMinSketch {
 
   /** Ingest one micro-batch: write its sketch delta as a replay-idempotent
     * `_batch` partition (at-least-once safe — the feed rewrites its own
-    * partition, markers skip committed batches).
+    * partition, markers skip committed batches). Stream it through
+    * `IndexTables(feeds = Seq(feedDir)).sink(n)` to fold the feed every n
+    * batches (content-preserving: the fold is a sum either way).
     */
   def ingestBatch(batch: DataFrame, keyCol: String, feedDir: String,
       batchId: Long, markersDir: String = null, d: Int = 4, w: Int = 1024): Unit =
     graft.streaming.Loader.writeBatchIdempotent(
       delta(batch, keyCol, d, w), feedDir, batchId, markersDir)
-
-  /** foreachBatch sink; `compactEvery = n` folds the feed's per-batch
-    * partitions with `Loader.compactBatches` (content-preserving — the
-    * fold is a sum either way).
-    */
-  def ingestSink(keyCol: String, feedDir: String, markersDir: String = null,
-      d: Int = 4, w: Int = 1024, compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, id) => {
-      ingestBatch(batch, keyCol, feedDir, id, markersDir, d, w)
-      if (compactEvery > 0 && (id + 1) % compactEvery == 0)
-        graft.streaming.Loader.compactBatches(batch.sparkSession, feedDir,
-          upTo = id)
-    }
 
   /** SKETCH-THEN-VERIFY heavy-hitter ingest — the standard production
     * composition of the maintained sketch (q273) and exact verification

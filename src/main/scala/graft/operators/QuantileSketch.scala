@@ -66,24 +66,13 @@ object QuantileSketch {
 
   /** Ingest one micro-batch: replay-idempotent `_batch` partition write of
     * the delta (at-least-once safe; markers + feed frontier skip replays).
+    * Stream it through `IndexTables(feeds = Seq(feedDir)).sink(n)` to fold
+    * the feed every n batches.
     */
   def ingestBatch(batch: DataFrame, valueCol: String, feedDir: String,
       batchId: Long, markersDir: String = null): Unit =
     graft.streaming.Loader.writeBatchIdempotent(
       delta(batch, valueCol), feedDir, batchId, markersDir)
-
-  /** foreachBatch sink; `compactEvery = n` folds the feed's per-batch
-    * partitions, bounded at the just-committed batch id (the round-13
-    * compaction contract).
-    */
-  def ingestSink(valueCol: String, feedDir: String, markersDir: String = null,
-      compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, id) => {
-      ingestBatch(batch, valueCol, feedDir, id, markersDir)
-      if (compactEvery > 0 && (id + 1) % compactEvery == 0)
-        graft.streaming.Loader.compactBatches(batch.sparkSession, feedDir,
-          upTo = id)
-    }
 
   /** The cumulative sketch: fold the delta feed (one sketch-sized GROUP BY). */
   def fold(spark: SparkSession, feedDir: String): DataFrame =

@@ -838,8 +838,7 @@ object ScaleQueries extends QueryModule {
     // one-shot batch sketch EXACTLY under any batch split — which is the
     // gate: q273 shares q271's oracle byte-for-byte. Per-batch cost is the
     // batch's own key-count aggregate + a few-KB write; the feed's file
-    // growth is prunable with Loader.compactBatches (the sink's
-    // compactEvery knob).
+    // growth is prunable with Loader.compactBatches (IndexTables.sink).
     Declared("q273_stream_cms",
       (s, dir) => {
         import graft.operators.CountMinSketch

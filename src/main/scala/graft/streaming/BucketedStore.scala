@@ -132,11 +132,11 @@ object BucketedStore {
     else {
       // a foreign process's compaction committed AFTER this session
       // registered the table: the session catalog has no partition
-      // `_batch=c` yet (RECOVER PARTITIONS only ran at registration), so
+      // `_batch=c` yet (partitions are only added at registration), so
       // filtering without a resync would prune to zero partitions and
       // silently read an empty store. Resync is cheap (one dir listing)
       // and only runs in the transient commit-pending window.
-      if (pending.exists(_.committed)) spark.sql(s"ALTER TABLE $tbl RECOVER PARTITIONS")
+      if (pending.exists(_.committed)) addPartitions(spark, spec)
       Some(BatchLog.view(spark.table(tbl), pending))
     }
   }
@@ -486,7 +486,19 @@ object BucketedStore {
          |CLUSTERED BY (${spec.bucketCols.map(cn => s"`$cn`").mkString(", ")})
          |${sorted}INTO $nb BUCKETS
          |LOCATION '${spec.dir}'""".stripMargin)
-    spark.sql(s"ALTER TABLE $tbl RECOVER PARTITIONS")
+    addPartitions(spark, spec)
     true
+  }
+
+  /** Registers every `_batch=<id>` dir of the store (negative consolidation
+    * ids included) as a partition of its table. Named, not discovered:
+    * `RECOVER PARTITIONS` would scan the store root and log a warning for
+    * every marker file it finds there.
+    */
+  private def addPartitions(spark: SparkSession, spec: StoreSpec): Unit = {
+    val ids = BatchLog.partitionIds(BatchLog.fs(spark, spec.dir), spec.dir)
+    if (ids.nonEmpty)
+      spark.sql(s"ALTER TABLE ${tableName(spec.dir)} ADD IF NOT EXISTS " +
+        ids.map(id => s"PARTITION (_batch=$id)").mkString(" "))
   }
 }

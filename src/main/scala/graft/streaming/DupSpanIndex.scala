@@ -46,6 +46,13 @@ object DupSpanIndex {
   private def gramsSpec(dir: String, buckets: Int) =
     BucketedStore.StoreSpec(dir, Seq("gh"), buckets)
 
+  /** The index's tables: the gram store and the flag feed.
+    * `tables(dir, hitsDir).sink(n)(ingestBatch ...)` folds them every n
+    * batches.
+    */
+  def tables(dir: String, hitsDir: String, buckets: Int = 0): IndexTables =
+    IndexTables(Seq(gramsSpec(dir, buckets)), Seq(hitsDir))
+
   /** Ingest one micro-batch of (doc_id, text): flag the non-first gram
     * occurrences against history + this batch, append the batch's grams to
     * the store, write the flags. Idempotent per batchId.
@@ -54,11 +61,9 @@ object DupSpanIndex {
       batchId: Long, width: Int = 8, buckets: Int = 0): Unit = {
     val spark = batch.sparkSession
     val nb = BucketedStore.resolveWidth(spark, buckets)
-    val g = DupSpans.grams(batch, width)
-      .withColumn("okey", DupSpans.orderKey)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      g.count() // materialize once; probed, aggregated and appended below
+    val g = DupSpans.grams(batch, width).withColumn("okey", DupSpans.orderKey)
+    // materialized once; probed, aggregated and appended below
+    IndexTables.write(g) { g =>
       // history = every gram hash seen in a STRICTLY earlier batch, by
       // ORIGINAL batch id (BucketedStore.strictlyBefore reads `_src_batch`
       // through consolidations): a replay of an earlier batch sees only
@@ -86,30 +91,13 @@ object DupSpanIndex {
       // job's history read PRUNES the batch's own partition
       // (strictlyBefore's `_batch < batchId` partition conjunct), so the
       // concurrent rewrite of that partition is invisible to it.
-      Concurrently(spark)(Seq(
+      Seq(
         () => Loader.writeBatchIdempotent(flagged, hitsDir, batchId),
         () => BucketedStore.appendBatch(
           g.select(col("gh"), col("doc_id"), col("pos")),
-          gramsSpec(dir, nb), batchId)))
-    } finally g.unpersist()
-  }
-
-  /** foreachBatch sink; `compactEvery = n` compacts the gram store after
-    * every n-th batch (same policy contract as the other index sinks).
-    */
-  def ingestSink(dir: String, hitsDir: String, width: Int = 8,
-      buckets: Int = 0, compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, id) => {
-      ingestBatch(batch, dir, hitsDir, id, width, buckets)
-      if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-        // bounded to the just-committed batch: a crash-partial LATER
-        // partition (old-checkpoint restore mid-replay) stays replayable
-        BucketedStore.compact(batch.sparkSession, gramsSpec(dir,
-          BucketedStore.resolveWidth(batch.sparkSession, buckets)), upTo = id)
-        // fold the flag FEED's per-batch partitions on the same policy
-        Loader.compactBatches(batch.sparkSession, hitsDir, upTo = id)
-      }
+          gramsSpec(dir, nb), batchId))
     }
+  }
 
   /** The maximal ingest-time duplicated spans accumulated so far: the
     * flagged positions, islands-coalesced per document (the same

@@ -113,7 +113,7 @@ object IncrementalCC {
       // publish the store FIRST (replay: readBefore above already pinned
       // the pre-batch snapshots, so a crash between the two publishes
       // recomputes the identical map)
-      VersionedView.versionedSinkShared(edgesOut)((_, _) => newStore)(batch, batchId)
+      VersionedView.versionedSink(edgesOut)((_, _) => newStore)(batch, batchId)
       // post-publish store read: file-backed with real size stats, so the
       // map plan below never re-executes the merge plan a second time
       val storeNow = VersionedView.read(sp, edgesOut).get
@@ -170,7 +170,7 @@ object IncrementalCC {
             .join(untouchedMembers.select(col("node")), Seq("node"), "left_anti")
           relabeled.unionByName(direct)
       }
-      VersionedView.versionedSinkShared(stateOut)((_, _) => newMap)(batch, batchId)
+      VersionedView.versionedSink(stateOut)((_, _) => newMap)(batch, batchId)
     }
   }
 
@@ -212,7 +212,7 @@ object IncrementalCC {
     * pointer-double self-joins.
     */
   def ccSink(stateOut: String): (DataFrame, Long) => Unit =
-    VersionedView.versionedSinkShared(stateOut) { (batch, cur) =>
+    VersionedView.versionedSink(stateOut) { (batch, cur) =>
       // self-loops carry no connectivity and are dropped up front, so a
       // node appearing ONLY in self-loops is consistently absent from the
       // map in both the first-batch and incremental branches

@@ -50,8 +50,8 @@ import graft.queries.{DedupQueries, Protocol}
   * WHOLE store every micro-batch — per-batch cost grew linearly with
   * corpus history, the classic streaming-index scale killer). The
   * remaining per-batch store cost — file opens growing with append
-  * history — is pruned by [[compactStore]] (bucket-preserving rewrite,
-  * LshIndexSpec pins files-per-probe bounded after it). The bucketed
+  * history — is pruned by folding the index's [[tables]] (bucket-preserving
+  * rewrite, LshIndexSpec pins files-per-probe bounded after it). The bucketed
   * layout SURVIVES restarts: a new session re-registers the table from the
   * store's own metadata instead of degrading to a plain re-shuffling read.
   */
@@ -125,6 +125,13 @@ object LshIndex {
   private def idsSpec(storeDir: String, width: Int) =
     BucketedStore.StoreSpec(idsDir(storeDir), Seq("doc_id"), width)
 
+  /** The index's tables: the banded store, its doc_id sidecar and the pair
+    * feed. `tables(...).sink(n)(nearDupSink(...))` folds them every n
+    * batches; `tables(...).compact(spark)` is the owner's offline fold.
+    */
+  def tables(storeDir: String, pairsDir: String, buckets: Int = 0): IndexTables =
+    IndexTables(Seq(storeSpec(storeDir, buckets), idsSpec(storeDir, buckets)), Seq(pairsDir))
+
   /** One micro-batch against the index: emit every pair this batch
     * completes into `pairsDir`, then append the batch's signatures to
     * `storeDir`. Idempotent on replay (see object doc). `markersDir`
@@ -157,9 +164,8 @@ object LshIndex {
     // pre-batch state, not its own half-written rows.
     val bban = bbanAll
       .join(storedIds(spark, storeDir, storeBan, batchId, width), Seq("doc_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      bban.count() // materialize once; probed up to twice below
+    // materialized once; probed up to twice below
+    IndexTables.write(bban) { bban =>
       val pairs = pairsBetween(bban, bban, threshold)
         .unionByName(pairsBetween(bban, storeBan, threshold))
         .dropDuplicates("id_a", "id_b")
@@ -175,33 +181,19 @@ object LshIndex {
       // store append landing its partition mid-overlap is invisible to it.
       val fresh = bban.dropDuplicates("doc_id", "band_idx")
         .select(col("doc_id"), col("sig"), col("band_idx"), col("band"))
-      Concurrently(spark)(Seq(
+      Seq(
         () => Loader.writeBatchIdempotent(pairs, pairsDir, batchId, markersDir),
         () => BucketedStore.appendBatch(fresh, storeSpec(storeDir, width), batchId),
         // id sidecar (batch-sized write): keeps the NEXT batch's re-arrival
         // anti-join exchange-free on the store side
         () => BucketedStore.appendBatch(
           bban.select(col("doc_id")).dropDuplicates("doc_id"),
-          idsSpec(storeDir, width), batchId)))
-    } finally bban.unpersist()
+          idsSpec(storeDir, width), batchId))
+    }
   }
 
   private def idsDir(storeDir: String): String =
     storeDir.stripSuffix("/") + "_ids"
-
-  /** Bucket-preserving compaction of the signature store AND its id
-    * sidecar: collapses the one-partition-per-batch append history into a
-    * single consolidated partition per table (one file per bucket), so
-    * per-probe file opens stop growing with batch count. Run it from the
-    * store's owner between batches — the deployment prune the round-9
-    * scaladoc promised, now an operator.
-    */
-  def compactStore(spark: org.apache.spark.sql.SparkSession, storeDir: String,
-      buckets: Int = 0, upTo: Long = Long.MaxValue): Unit = {
-    val width = BucketedStore.resolveWidth(spark, buckets)
-    BucketedStore.compact(spark, storeSpec(storeDir, width), upTo)
-    BucketedStore.compact(spark, idsSpec(storeDir, width), upTo)
-  }
 
   /** The stored doc_id set for the re-arrival anti-join (pre-batch
     * snapshot) — the bucketed id sidecar when present; derived from the
@@ -299,30 +291,12 @@ object LshIndex {
   }
 
   /** `foreachBatch` sink closing over the three dirs — plug straight into
-    * `docs.writeStream.foreachBatch(LshIndex.nearDupSink(...))`.
-    *
-    * `compactEvery = n` (0 = never) runs [[compactStore]] after every n-th
-    * batch, INSIDE the sink — foreachBatch serializes batches, so the
-    * single-writer contract holds with no external scheduler, and the
-    * files-per-probe bound becomes a standing property of the stream
-    * instead of an operational chore. Compaction is content-preserving and
-    * crash-recovered on next open, so a replayed batch re-running it (or a
-    * crash mid-compaction) changes nothing.
+    * `docs.writeStream.foreachBatch(LshIndex.nearDupSink(...))`, or through
+    * [[tables]]`.sink(n)` to fold the index every n batches.
     */
   def nearDupSink(storeDir: String, pairsDir: String, markersDir: String = null,
-      threshold: Double = 0.5, compactEvery: Int = 0, buckets: Int = 0)
-      : (DataFrame, Long) => Unit =
-    (batch, id) => {
-      processBatch(batch, storeDir, pairsDir, id, markersDir, threshold, buckets)
-      if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-        // bounded to the just-committed batch: a crash-partial LATER
-        // partition (old-checkpoint restore mid-replay) stays replayable
-        compactStore(batch.sparkSession, storeDir, buckets, upTo = id)
-        // the pair FEED accumulates one partition per batch too — fold it
-        // on the same policy (markers survive, so replays stay skipped)
-        Loader.compactBatches(batch.sparkSession, pairsDir, upTo = id)
-      }
-    }
+      threshold: Double = 0.5, buckets: Int = 0): (DataFrame, Long) => Unit =
+    (batch, id) => processBatch(batch, storeDir, pairsDir, id, markersDir, threshold, buckets)
 
   /** Build a STATIC banded signature index over a bounded document set —
     * the same bucketed layout the streaming store uses, for PROBE-ONLY

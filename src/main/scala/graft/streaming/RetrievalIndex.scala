@@ -55,6 +55,14 @@ object RetrievalIndex {
 
   private def statsDir(dir: String): String = dir.stripSuffix("/") + "_stats"
 
+  /** The index's tables: postings, id sidecar and the stats feed — one
+    * file per batch each until folded, so query cost would creep with
+    * history as open/seek overhead. `tables(dir).sink(n)(ingestBatch ...)`
+    * folds them every n batches.
+    */
+  def tables(dir: String, buckets: Int = 0): IndexTables =
+    IndexTables(Seq(postingsSpec(dir, buckets), idsSpec(dir, buckets)), Seq(statsDir(dir)))
+
   /** Ingest one micro-batch of (doc_id, text): postings + sidecar + stats,
     * each write independently replay-idempotent. First arrival wins — a
     * re-arriving doc_id (including a changed text) is discarded, keeping
@@ -64,56 +72,23 @@ object RetrievalIndex {
       buckets: Int = 0): Unit = {
     val spark = batch.sparkSession
     val width = BucketedStore.resolveWidth(spark, buckets)
-    val priorIds = BucketedStore.read(spark, idsSpec(dir, width)) match {
-      case Some(ids) => BucketedStore.excludeBatch(ids, batchId).select(col("doc_id"))
-      case None => batch.select(col("doc_id")).limit(0)
-    }
     val fresh = batch.select(col("doc_id"), tokens(col("text")).as("tk"))
-      .join(priorIds, Seq("doc_id"), "left_anti")
+      .join(IndexTables.priorIds(batch, idsSpec(dir, width), batchId), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("tk"), size(col("tk")).cast("long").as("dl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      fresh.count() // materialize once; read three times below
+    // materialized once; read three times below
+    IndexTables.write(fresh) { fresh =>
       val postings = fresh
         .select(col("doc_id"), col("dl"), explode(col("tk")).as("t"))
         .groupBy(col("t"), col("doc_id"), col("dl")).agg(count(lit(1)).as("c"))
-      // three independently replay-idempotent writes — overlap them as
-      // concurrent driver jobs (guide §2.6; none writes the session's conf)
-      Concurrently(spark)(Seq(
+      Seq(
         () => BucketedStore.appendBatch(postings, postingsSpec(dir, width), batchId),
         () => BucketedStore.appendBatch(
           fresh.select(col("doc_id")), idsSpec(dir, width), batchId),
         () => Loader.writeBatchIdempotent(
           fresh.agg(count(lit(1)).as("n_docs"),
             coalesce(sum(col("dl")), lit(0L)).as("t_tokens")),
-          statsDir(dir), batchId)))
-    } finally fresh.unpersist()
-  }
-
-  /** foreachBatch sink; `compactEvery = n` compacts postings + sidecar
-    * after every n-th batch inside the serialized sink (the same policy
-    * contract as [[LshIndex.nearDupSink]]).
-    */
-  def ingestSink(dir: String, buckets: Int = 0, compactEvery: Int = 0)
-      : (DataFrame, Long) => Unit = (batch, id) => {
-    ingestBatch(batch, dir, id, buckets)
-    if (compactEvery > 0 && (id + 1) % compactEvery == 0)
-      compact(batch.sparkSession, dir, buckets, upTo = id)
-  }
-
-  /** Bucket-preserving compaction of postings + sidecar, plus the
-    * `_batch`-collapse prune of the stats FEED: the stats rows are two
-    * BIGINTs per batch, but each batch is its own parquet FILE, so query
-    * cost creeps back as open/seek overhead with history length — the same
-    * read-side term the store compaction kills, closed with
-    * `Loader.compactBatches` (crash-safe, recovery on next read).
-    */
-  def compact(spark: SparkSession, dir: String, buckets: Int = 0,
-      upTo: Long = Long.MaxValue): Unit = {
-    val width = BucketedStore.resolveWidth(spark, buckets)
-    BucketedStore.compact(spark, postingsSpec(dir, width), upTo)
-    BucketedStore.compact(spark, idsSpec(dir, width), upTo)
-    Loader.compactBatches(spark, statsDir(dir), upTo)
+          statsDir(dir), batchId))
+    }
   }
 
   /** EXACT integer-micro BM25 (k1=1.2, b=0.75) from a postings frame

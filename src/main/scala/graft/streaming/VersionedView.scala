@@ -204,8 +204,38 @@ object VersionedView {
     */
   def retractAggSink(stateOut: String, aggOut: String, keys: Seq[String],
       ordCols: Seq[String], opCol: String, groupCol: Column,
-      valueMicro: Column, deleteOp: String = "D"): (DataFrame, Long) => Unit = {
-    require(ordCols.nonEmpty, "retract agg needs at least one ordering column")
+      valueMicro: Column, deleteOp: String = "D"): (DataFrame, Long) => Unit =
+    retractSink(stateOut, aggOut, keys, ordCols, opCol, groupCol, valueMicro, deleteOp) {
+      (applied, curAgg) =>
+        val z = org.apache.spark.sql.functions.lit(0L)
+        val deltas = applied.groupBy(col("_g").as("g"))
+          .agg(
+            org.apache.spark.sql.functions.sum(col("_live") -
+              org.apache.spark.sql.functions.coalesce(col("_old_live"), z)).as("dn"),
+            org.apache.spark.sql.functions.sum(col("_v") -
+              org.apache.spark.sql.functions.coalesce(col("_old_v"), z)).as("dsum"))
+        curAgg match {
+          case None => deltas
+          case Some(a) => graft.operators.MergeInto.merge(a, deltas, Seq("g"),
+            setOnMatch = Map(
+              "dn" -> (col("t_dn") + col("s_dn")),
+              "dsum" -> (col("t_dsum") + col("s_dsum"))),
+            insertOnUnmatched = Map(
+              "dn" -> col("s_dn"), "dsum" -> col("s_dsum")),
+            checkCardinality = false)
+        }
+    }
+
+  /** The body both retract sinks share: one applied-changes pass feeds the
+    * first view (`firstOut`, built by `first` from the applied set and its
+    * current version) and the state view; the two prepares overlap, and
+    * the publishes stay ordered — first view, then state.
+    */
+  private def retractSink(stateOut: String, firstOut: String, keys: Seq[String],
+      ordCols: Seq[String], opCol: String, groupCol: Column, valueMicro: Column,
+      deleteOp: String)(first: (DataFrame, Option[DataFrame]) => DataFrame)
+      : (DataFrame, Long) => Unit = {
+    require(ordCols.nonEmpty, "a retract sink needs at least one ordering column")
     (batch, batchId) => {
       val sp = batch.sparkSession
       // state publishes LAST, so state-at-batchId ⇒ the whole batch
@@ -223,30 +253,14 @@ object VersionedView {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         applied.count() // materialize once; both prepares read the cache
-        val z = org.apache.spark.sql.functions.lit(0L)
-        val deltas = applied.groupBy(col("_g").as("g"))
-          .agg(
-            org.apache.spark.sql.functions.sum(col("_live") -
-              org.apache.spark.sql.functions.coalesce(col("_old_live"), z)).as("dn"),
-            org.apache.spark.sql.functions.sum(col("_v") -
-              org.apache.spark.sql.functions.coalesce(col("_old_v"), z)).as("dsum"))
-        val Seq(aggStaged, stateStaged) = Concurrently(sp)(Seq(
-          () => prepareVersion(sp, aggOut, batchId, {
-            case None => deltas
-            case Some(a) => graft.operators.MergeInto.merge(a, deltas, Seq("g"),
-              setOnMatch = Map(
-                "dn" -> (col("t_dn") + col("s_dn")),
-                "dsum" -> (col("t_dsum") + col("s_dsum"))),
-              insertOnUnmatched = Map(
-                "dn" -> col("s_dn"), "dsum" -> col("s_dsum")),
-              checkCardinality = false)
-          }),
+        val Seq(firstStaged, stateStaged) = Concurrently(sp)(Seq(
+          () => prepareVersion(sp, firstOut, batchId, first(applied, _)),
           () => prepareVersion(sp, stateOut, batchId,
             applyAppliedToState(batch, applied, keys))))
-        // publish order is the replay invariant: agg FIRST, state second
-        // (see the class doc) — only the POINTER SWAPS are ordered; the
-        // heavy writes above ran concurrently (guide §2.6).
-        aggStaged.foreach(publishVersion(sp, aggOut, _))
+        // publish order is the replay invariant: first view FIRST, state
+        // second (see retractAggSink) — only the POINTER SWAPS are ordered;
+        // the heavy writes above ran concurrently (guide §2.6).
+        firstStaged.foreach(publishVersion(sp, firstOut, _))
         stateStaged.foreach(publishVersion(sp, stateOut, _))
       } finally applied.unpersist()
       }
@@ -282,20 +296,9 @@ object VersionedView {
     */
   def retractMinMaxSink(stateOut: String, idxOut: String, keys: Seq[String],
       ordCols: Seq[String], opCol: String, groupCol: Column,
-      valueMicro: Column, deleteOp: String = "D"): (DataFrame, Long) => Unit = {
-    require(ordCols.nonEmpty, "retract min/max needs at least one ordering column")
-    (batch, batchId) => {
-      val sp = batch.sparkSession
-      // state publishes LAST: state-at-batchId ⇒ fully published replay
-      if (currentVersion(sp, stateOut).contains(s"v=$batchId")) () else {
-      // same r14 job diet as retractAggSink: one applied pass feeds both
-      // views; the two prepares overlap; publishes stay ordered (index
-      // first, state second).
-      val applied = appliedChanges(batch, read(sp, stateOut),
-        keys, ordCols, opCol, groupCol, valueMicro, deleteOp)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        applied.count() // materialize once; both prepares read the cache
+      valueMicro: Column, deleteOp: String = "D"): (DataFrame, Long) => Unit =
+    retractSink(stateOut, idxOut, keys, ordCols, opCol, groupCol, valueMicro, deleteOp) {
+      (applied, curIdx) =>
         // every applied change contributes up to two index rows: retract the
         // old live value, insert the new one
         val adds = applied.filter(col("_live") === 1L)
@@ -307,32 +310,22 @@ object VersionedView {
         val deltas = adds.unionByName(retracts)
           .groupBy(col("g"), col("v"))
           .agg(org.apache.spark.sql.functions.sum(col("dcnt")).as("dcnt"))
-        val Seq(idxStaged, stateStaged) = Concurrently(sp)(Seq(
-          () => prepareVersion(sp, idxOut, batchId, { curIdx =>
-            // COMPACT at publish: a (g, v) row whose live multiplicity
-            // drained to 0 carries no information, and under adversarial
-            // value churn (one key cycling through ever-new values) keeping
-            // them would grow the index with HISTORY cardinality instead of
-            // live-value cardinality — the classic unbounded-state leak.
-            // Dropping them here pins index rows == live distinct (g, v)
-            // values (StateScaleSpec enforces it).
-            val merged = curIdx match {
-              case None => deltas
-              case Some(a) => graft.operators.MergeInto.merge(a, deltas, Seq("g", "v"),
-                setOnMatch = Map("dcnt" -> (col("t_dcnt") + col("s_dcnt"))),
-                insertOnUnmatched = Map("dcnt" -> col("s_dcnt")),
-                checkCardinality = false)
-            }
-            merged.filter(col("dcnt") =!= 0L)
-          }),
-          () => prepareVersion(sp, stateOut, batchId,
-            applyAppliedToState(batch, applied, keys))))
-        idxStaged.foreach(publishVersion(sp, idxOut, _))
-        stateStaged.foreach(publishVersion(sp, stateOut, _))
-      } finally applied.unpersist()
-      }
+        // COMPACT at publish: a (g, v) row whose live multiplicity drained
+        // to 0 carries no information, and under adversarial value churn
+        // (one key cycling through ever-new values) keeping them would grow
+        // the index with HISTORY cardinality instead of live-value
+        // cardinality — the classic unbounded-state leak. Dropping them
+        // here pins index rows == live distinct (g, v) values
+        // (StateScaleSpec enforces it).
+        val merged = curIdx match {
+          case None => deltas
+          case Some(a) => graft.operators.MergeInto.merge(a, deltas, Seq("g", "v"),
+            setOnMatch = Map("dcnt" -> (col("t_dcnt") + col("s_dcnt"))),
+            insertOnUnmatched = Map("dcnt" -> col("s_dcnt")),
+            checkCardinality = false)
+        }
+        merged.filter(col("dcnt") =!= 0L)
     }
-  }
 
   /** Fold a [[retractMinMaxSink]] index to (g, n_live, min_v, max_v) —
     * drained groups (no live values) disappear.
@@ -453,14 +446,7 @@ object VersionedView {
     * sibling sinks like [[IncrementalCC]] build on the same protocol):
     * `mk` builds the new version from (batch, current version contents).
     */
-  private[streaming] def versionedSinkShared(out: String)(
-      mk: (DataFrame, Option[DataFrame]) => DataFrame): (DataFrame, Long) => Unit =
-    versionedSink(out)(mk)
-
-  /** Write-audit-publish core shared by the sinks: `mk` builds the new
-    * version from (batch, current version contents).
-    */
-  private def versionedSink(out: String)(
+  private[streaming] def versionedSink(out: String)(
       mk: (DataFrame, Option[DataFrame]) => DataFrame): (DataFrame, Long) => Unit = {
     (batch, batchId) =>
       val sp = batch.sparkSession

@@ -273,8 +273,11 @@ class AnnIvfStoreSpec extends AnyFunSuite {
     val dir = tmpDir("ivfstore-ce") + "/idx"
     AnnIvf.buildIndexStore(vecs(0, 30), centroids, dir, buckets = 4)
     val ms = MemoryStream[(Long, Seq[Double])]
-    val q = AnnIvf.maintainIndexStore(ms.toDF().toDF("vec_id", "e"), centroids,
-      dir, tmpDir("ivfstore-ce-ck"), buckets = 4, compactEvery = 1)
+    val q = ms.toDF().toDF("vec_id", "e").writeStream
+      .option("checkpointLocation", tmpDir("ivfstore-ce-ck"))
+      .foreachBatch(AnnIvf.tables(dir, buckets = 4).sink(1)(
+        AnnIvf.appendToIndexStore(_, centroids, dir, _, buckets = 4)))
+      .start()
     try {
       for (b <- 0 until 3) {
         ms.addData(vecs(30 + b * 20, 50 + b * 20).collect()
@@ -301,8 +304,11 @@ class AnnIvfStoreSpec extends AnyFunSuite {
     val dir = tmpDir("ivfstore-stream") + "/idx"
     AnnIvf.buildIndexStore(vecs(0, 30), centroids, dir, buckets = 4)
     val ms = MemoryStream[(Long, Seq[Double])]
-    val q = AnnIvf.maintainIndexStore(ms.toDF().toDF("vec_id", "e"), centroids,
-      dir, tmpDir("ivfstore-ck"), buckets = 4)
+    val q = ms.toDF().toDF("vec_id", "e").writeStream
+      .option("checkpointLocation", tmpDir("ivfstore-ck"))
+      .foreachBatch(AnnIvf.tables(dir, buckets = 4).sink(0)(
+        AnnIvf.appendToIndexStore(_, centroids, dir, _, buckets = 4)))
+      .start()
     try {
       ms.addData(vecs(30, 60).collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq)
       q.processAllAvailable()
@@ -321,7 +327,7 @@ class AnnIvfStoreSpec extends AnyFunSuite {
     // compaction keeps content and bounds files
     val before = spark.read.parquet(dir).select("vec_id", "cluster").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
-    AnnIvf.compactIndexStore(spark, dir, buckets = 4)
+    AnnIvf.tables(dir, buckets = 4).compact(spark)
     assert(spark.read.parquet(dir).select("vec_id", "cluster").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet == before)
     assert(BucketedStore.parquetFiles(spark, dir).size <= 4)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.BloomFilter
+import graft.streaming.IndexTables
 
 /** Pins the maintained Bloom filter (q289's operator): the NO-FALSE-
   * NEGATIVE law (every ingested key probes positive, under any batch
@@ -66,7 +67,8 @@ class BloomSketchSpec extends AnyFunSuite {
   test("replay rewrites its delta; compaction preserves the filter (union idempotent)") {
     val all = keyDf(0, 90)
     val feed = tmpDir("bloom-replay") + "/feed"
-    val sink = BloomFilter.ingestSink("k", feed, m = 256, compactEvery = 3)
+    val sink = IndexTables(feeds = Seq(feed)).sink(3)(
+      BloomFilter.ingestBatch(_, "k", feed, _, m = 256))
     for (b <- 0L until 3L)
       sink(all.filter(pmod(xxhash64(col("k")), lit(3L)) === b), b)
     val before = maybeMap(feed, all)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.BottomKSample
+import graft.streaming.IndexTables
 
 /** Pins the maintained bottom-k sample (q290/q291's operator):
   * mergeability (any batch split folds to the IDENTICAL sample — bottomK
@@ -73,7 +74,8 @@ class BottomKSpec extends AnyFunSuite {
   test("replay rewrites its delta; compaction preserves the sample") {
     val all = keyDf(0, 120)
     val feed = tmpDir("bk-replay") + "/feed"
-    val sink = BottomKSample.ingestSink("k", feed, k = 16, compactEvery = 3)
+    val sink = IndexTables(feeds = Seq(feed)).sink(3)(
+      BottomKSample.ingestBatch(_, "k", feed, _, k = 16))
     for (b <- 0L until 3L)
       sink(all.filter(pmod(xxhash64(col("k")), lit(3L)) === b), b)
     val before = sampleIds(feed)

@@ -201,7 +201,7 @@ class BucketedStoreSpec extends AnyFunSuite {
     val want = rows(s)
     // now a FOREIGN process compacts: consolidated partition appears +
     // commit marker lands, but this session's catalog entry predates both
-    // (its RECOVER PARTITIONS ran at registration, so it knows nothing of
+    // (its partitions were added at registration, so it knows nothing of
     // _batch=-1). The commit view must resync, not prune to zero.
     val fs = new org.apache.hadoop.fs.Path(s.dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.CountMinSketch
+import graft.streaming.IndexTables
 
 /** Pins the maintained Count-Min sketch (q273's operator): linearity
   * (stream fold == one-shot sketch under any batch split), CMS's
@@ -57,7 +58,8 @@ class CmsSketchSpec extends AnyFunSuite {
   test("replayed batch rewrites its delta partition; compaction preserves estimates") {
     val all = keys(0, 200, 1)
     val feed = tmpDir("cms-replay") + "/feed"
-    val sink = CountMinSketch.ingestSink("k", feed, d = 4, w = 64, compactEvery = 3)
+    val sink = IndexTables(feeds = Seq(feed)).sink(3)(
+      CountMinSketch.ingestBatch(_, "k", feed, _, d = 4, w = 64))
     for (b <- 0L until 3L) sink(all.filter(pmod(col("k"), lit(3L)) === b), b)
     val before = estMap(feed, all)
     // at-least-once replay of the last batch AFTER its delta was folded by

@@ -134,7 +134,8 @@ class DupSpanIndexSpec extends AnyFunSuite {
 
   test("compaction preserves the answer and bounds the store's file count") {
     val (store, hits) = (tmp("dsi-comp-store"), tmp("dsi-comp-hits"))
-    val sink = DupSpanIndex.ingestSink(store, hits, width = 3, compactEvery = 4)
+    val sink = DupSpanIndex.tables(store, hits).sink(4)(
+      DupSpanIndex.ingestBatch(_, store, hits, _, width = 3))
     sink(df(4L -> "p q r s t"), 0L)
     sink(df(0L -> "a b c d", 8L -> "a b c d"), 1L)
     sink(df(1L -> "p q r s t"), 2L)

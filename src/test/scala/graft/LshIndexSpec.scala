@@ -200,7 +200,7 @@ class LshIndexSpec extends AnyFunSuite {
     val contentBefore = spark.read.parquet(store)
       .select("doc_id", "band_idx", "band").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    LshIndex.compactStore(spark, store)
+    LshIndex.tables(store, pairs).compact(spark)
     val after = BucketedStore.parquetFiles(spark, store).size +
       BucketedStore.parquetFiles(spark, idsDir).size
     info(s"files per probe: $before -> $after (buckets=${LshIndex.defaultBuckets(spark)})")
@@ -223,7 +223,7 @@ class LshIndexSpec extends AnyFunSuite {
           concat(lit(s"w$i"), (col("id") * 31 + i) % 9973)): _*).as("text"))
     val (store, pairs) = (tmp("lsh-ce-store"), tmp("lsh-ce-pairs"))
     val mk = tmp("lsh-ce-markers")
-    val sink = LshIndex.nearDupSink(store, pairs, mk, compactEvery = 2)
+    val sink = LshIndex.tables(store, pairs).sink(2)(LshIndex.nearDupSink(store, pairs, mk))
     for (b <- 0L until 6L) sink(mkDocs(b * 30, b * 30 + 30), b)
     val idsDir = store.stripSuffix("/") + "_ids"
     val files = BucketedStore.parquetFiles(spark, store).size +
@@ -262,8 +262,7 @@ class LshIndexSpec extends AnyFunSuite {
     val pairsBefore = spark.read.parquet(pairs)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    LshIndex.compactStore(spark, store)
-    graft.streaming.Loader.compactBatches(spark, pairs)
+    LshIndex.tables(store, pairs).compact(spark)
     // old checkpoint restored: batch 1 replays with its checkpoint-tied
     // pair marker GONE. The pair feed must skip at the frontier (a rewrite
     // would re-emit batch 1's pairs next to the folded copy — and worse,
@@ -304,7 +303,7 @@ class LshIndexSpec extends AnyFunSuite {
     LshIndex.processBatch(mkDocs(200L, 220L), store, pairs, 1L)
     assert(stamped(store) == "16")
     // compaction preserves the stamped width: one consolidated file per bucket
-    LshIndex.compactStore(spark, store)
+    LshIndex.tables(store, pairs).compact(spark)
     val files = BucketedStore.parquetFiles(spark, store).size
     assert(files == 16, s"compacted store should hold one file per stamped bucket, got $files")
 

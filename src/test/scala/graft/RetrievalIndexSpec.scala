@@ -121,7 +121,7 @@ class RetrievalIndexSpec extends AnyFunSuite {
         concat_ws(" ", (0 to 5).map(i =>
           concat(lit(s"w$i"), (col("id") * 13 + i) % 997)): _*).as("text"))
     val dir = tmpDir("ri-compact") + "/idx"
-    val sink = RetrievalIndex.ingestSink(dir, compactEvery = 2)
+    val sink = RetrievalIndex.tables(dir).sink(2)(RetrievalIndex.ingestBatch(_, dir, _))
     for (b <- 0L until 6L) sink(mkDocs(b * 50, b * 50 + 50), b)
     val files = BucketedStore.parquetFiles(spark, dir).size +
       BucketedStore.parquetFiles(spark, dir.stripSuffix("/") + "_ids").size

@@ -434,64 +434,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("IVF index incremental maintenance: streamed appends equal a full rebuild") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val e = graft.model.Tables.load(spark, sf0001, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-    val centroids = graft.operators.AnnIvf.trainCentroids(e, k = 4, iters = 1, dim = 64)
-    // index starts with a third of the corpus; the rest arrives as a stream
-    val base = e.filter(col("vec_id") % 3 === 0)
-    val rest = e.filter(col("vec_id") % 3 =!= 0).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    graft.operators.AnnIvf.buildIndex(base, centroids, "ivf_idx_maint", buckets = 4)
-    val ms = MemoryStream[(Long, Seq[Double])]
-    val q = graft.operators.AnnIvf.maintainIndexStream(
-      ms.toDF().toDF("vec_id", "e"), centroids, "ivf_idx_maint",
-      tmpDir("ivf_maint_ck"), buckets = 4)
-    try {
-      val (h1, h2) = rest.splitAt(rest.length / 2)
-      ms.addData(h1.toSeq)
-      q.processAllAvailable()
-      ms.addData(h2.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    // the maintained index answers exactly like a from-scratch rebuild
-    graft.operators.AnnIvf.buildIndex(e, centroids, "ivf_idx_full", buckets = 4)
-    val probes = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("e").as("qe"))
-    def res(t: String) = graft.operators.AnnIvf
-      .topKIndexed(spark, t, probes, k = 3, centroids, nprobe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(res("ivf_idx_maint") == res("ivf_idx_full"))
-    assert(res("ivf_idx_maint").nonEmpty)
-    // appends preserved the bucket spec (co-location / pruning intact)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier("ivf_idx_maint"))
-    assert(meta.bucketSpec.exists(b =>
-      b.numBuckets == 4 && b.bucketColumnNames == Seq("cluster")))
-  }
-
-  test("IVF append with dedupVecIds: a replayed batch is idempotent") {
-    val e = graft.model.Tables.load(spark, sf0001, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-    val centroids = graft.operators.AnnIvf.trainCentroids(e, k = 4, iters = 1, dim = 64)
-    val base = e.filter(col("vec_id") % 3 === 0)
-    val batch = e.filter(col("vec_id") % 3 === 1)
-    graft.operators.AnnIvf.buildIndex(base, centroids, "ivf_idx_dedup", buckets = 4)
-    val want = base.count() + batch.count()
-    // the same batch lands twice — an at-least-once foreachBatch replay —
-    // and the anti-join guard must make the second append a no-op
-    graft.operators.AnnIvf.appendToIndex(batch, centroids, "ivf_idx_dedup",
-      buckets = 4, dedupVecIds = true)
-    graft.operators.AnnIvf.appendToIndex(batch, centroids, "ivf_idx_dedup",
-      buckets = 4, dedupVecIds = true)
-    assert(spark.table("ivf_idx_dedup").count() == want)
-    assert(spark.table("ivf_idx_dedup").groupBy("vec_id").count()
-      .filter(col("count") > 1).count() == 0)
-  }
-
   test("ZOrderLayout: zKey2 column matches the bit-interleave reference") {
     import spark.implicits._
     val rnd = new scala.util.Random(99)
