@@ -718,25 +718,15 @@ object DedupQueries extends QueryModule {
     // compaction pass; scale shape on graft.streaming.LshIndex.
     Declared("q236_stream_lsh_dedup",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val docs = Tables.load(s, dir, "documents").select("doc_id", "text")
         val base = SharedStages.scratchDir("q236")
-        val (src, store, pairs, ck) =
-          (s"$base/src", s"$base/store", s"$base/pairs", s"$base/ck")
-        docs.repartition(4).write.mode("overwrite").parquet(src)
-        // no partition-width wrap (round 11): the store builds at the
-        // session's width per the bucket-width law — the gate's 8-cpu
-        // harness still lands on 8, and the decade runs get 32/320
-        val q = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ck)
-          .foreachBatch(graft.streaming.LshIndex.nearDupSink(
-            store, pairs, s"$ck/graft_commits"))
-          .start()
-        q.awaitTermination()
+        val pairs = s"$base/pairs"
+        // no replay conf (round 11): the store builds at the session's
+        // width per the bucket-width law — the gate's 8-cpu harness still
+        // lands on 8, and the decade runs get 32/320
+        Replay(s, base, docs, "append", confs = Nil,
+          sink = Some(graft.streaming.LshIndex.nearDupSink(
+            s"$base/store", pairs, Replay.commitMarkers(base))))(identity)
         graft.streaming.Loader.readTable(s, pairs)
           .orderBy(col("id_a"), col("id_b"))
       },
@@ -754,27 +744,15 @@ object DedupQueries extends QueryModule {
     // oracle recomputes exactly that in DuckDB).
     Declared("q253_stream_decontaminate",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val docs = Tables.load(s, dir, "documents").select("doc_id", "text")
         val bench = docs.filter(col("doc_id") % 97 === 0)
         val corpus = docs.filter(col("doc_id") % 97 =!= 0)
         val base = SharedStages.scratchDir("q253")
-        val (src, idx, hits, ck) =
-          (s"$base/src", s"$base/idx", s"$base/hits", s"$base/ck")
+        val (idx, hits) = (s"$base/idx", s"$base/hits")
         graft.streaming.LshIndex.buildStaticIndex(bench, idx)
-        corpus.repartition(4).write.mode("overwrite").parquet(src)
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val q = c.readStream.schema(corpus.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .writeStream
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch(graft.streaming.LshIndex.decontaminateSink(
-              idx, hits, s"$ck/graft_commits"))
-            .start()
-          q.awaitTermination()
-        }
+        Replay(s, base, corpus, "append",
+          sink = Some(graft.streaming.LshIndex.decontaminateSink(
+            idx, hits, Replay.commitMarkers(base))))(identity)
         graft.streaming.Loader.readTable(s, hits)
           .orderBy(col("doc_id"), col("bench_id"))
       },
@@ -811,7 +789,7 @@ object DedupQueries extends QueryModule {
           (s"$base/store", s"$base/pairs", s"$base/idx2", s"$base/hits")
         // the batches and the backfill size their stores from the session
         // they run in, so their inputs are built from the scoped one
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
+        Sessions.withConf(s, Replay.Conf) { c =>
           val docs = Tables.load(c, dir, "documents").select("doc_id", "text")
           val corpus = docs.filter(col("doc_id") % 97 =!= 0 && col("doc_id") % 89 =!= 0)
           val bench2 = docs.filter(col("doc_id") % 97 === 0 || col("doc_id") % 89 === 0)

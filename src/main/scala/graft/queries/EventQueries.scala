@@ -1,12 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.ColumnOps.idiv
 import graft.model.Tables
-import graft.obs.Sessions
+import graft.streaming.{Stateful, VersionedView}
 import Protocol._
 
 /** Declared queries over the `events` table — the batch mirror of the
@@ -26,29 +26,16 @@ object EventQueries extends QueryModule {
     * maintaining it.
     */
   private def retractIdx(s: SparkSession, dir: String): String =
-    SharedStages.materializePath(s, dir, "retract-idx") { out =>
-      import org.apache.spark.sql.streaming.Trigger
+    SharedStages.materializePath(s, dir, "retract-idx") { base =>
       val changes = Tables.load(s, dir, "events")
         .select((col("user_id") % 500).as("k"), col("ts"), col("event_id"),
           col("value"),
           when(col("event_id") % 11 === 0, "D").otherwise("U").as("op"))
-      val (src, st, idx, ck) =
-        (s"$out/src", s"$out/state", s"$out/idx", s"$out/ck")
-      changes.repartition(4).write.mode("overwrite").parquet(src)
-      Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-        val q = c.readStream.schema(changes.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ck)
-          .foreachBatch(graft.streaming.VersionedView.retractMinMaxSink(
-            st, idx, Seq("k"), Seq("ts", "event_id"), "op",
-            groupCol = col("k") % 50,
-            valueMicro = (dec(col("value")) * 1000000L).cast("long")))
-          .start()
-        q.awaitTermination()
-      }
+      Replay(s, base, changes, "append",
+        sink = Some(VersionedView.retractMinMaxSink(
+          s"$base/state", s"$base/idx", Seq("k"), Seq("ts", "event_id"), "op",
+          groupCol = col("k") % 50,
+          valueMicro = (dec(col("value")) * 1000000L).cast("long"))))(identity)
     }
 
   override val declared: Seq[Declared] = Seq(
@@ -142,29 +129,13 @@ object EventQueries extends QueryModule {
     // pattern (a Lambda retry = batch replay = same files rewritten).
     Declared("q66_stream_tumbling",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val events = Tables.load(s, dir, "events")
           .select(col("ts"), col("event_type"), col("value"))
-        val base = SharedStages.scratchDir("q66")
-        val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val stream = c.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-          val agg = stream
-            .groupBy(window(col("ts"), "1 minute"), col("event_type"))
+        val out = Replay(s, SharedStages.scratchDir("q66"), events, "complete") {
+          _.groupBy(window(col("ts"), "1 minute"), col("event_type"))
             .agg(count(lit(1)).as("n"), out6(sum(dec(col("value")))).as("sum_value"))
             .select(tsec(col("window").getField("start")).as("w"),
               col("event_type"), col("n"), col("sum_value"))
-          val q = agg.writeStream
-            .outputMode("complete")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.write.mode("overwrite").parquet(out)
-            }
-            .start()
-          q.awaitTermination()
         }
         s.read.parquet(out).orderBy(col("w"), col("event_type"))
       },
@@ -186,26 +157,10 @@ object EventQueries extends QueryModule {
     // (StatefulSpec).
     Declared("q70_stream_dedup",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val docs = Tables.load(s, dir, "documents")
           .select(col("doc_id"), md5(col("text")).as("h"))
-        val base = SharedStages.scratchDir("q70")
-        val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
-        docs.repartition(4).write.mode("overwrite").parquet(src)
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val q = c.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .dropDuplicates("h")
-            .writeStream
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.write.mode("append").parquet(out)
-            }
-            .start()
-          q.awaitTermination()
-        }
+        val out = Replay(s, SharedStages.scratchDir("q70"), docs, "append")(
+          _.dropDuplicates("h"))
         s.read.parquet(out)
           .agg(big(count(lit(1))).as("n_kept"),
             big(countDistinct(col("h"))).as("n_distinct"))
@@ -223,7 +178,6 @@ object EventQueries extends QueryModule {
     // tick stream against the warehouse dimension at load time.
     Declared("q71_stream_static_join",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val ev = Tables.load(s, dir, "events")
           .select(col("event_id"), col("user_id"), col("value"))
         // The static side of a stream-static join is RE-EXECUTED every
@@ -235,23 +189,8 @@ object EventQueries extends QueryModule {
         val userDim = ev.groupBy(col("user_id"))
           .agg(count(lit(1)).as("user_events")).persist()
         userDim.count()
-        val base = SharedStages.scratchDir("q71")
-        val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
-        ev.repartition(4).write.mode("overwrite").parquet(src)
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val q = c.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .join(userDim, "user_id")
-            .writeStream
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.write.mode("append").parquet(out)
-            }
-            .start()
-          q.awaitTermination()
-        }
+        val out = Replay(s, SharedStages.scratchDir("q71"), ev, "append")(
+          _.join(userDim, "user_id"))
         userDim.unpersist() // sink is landed; the read-back below never re-joins
         s.read.parquet(out)
           .groupBy(col("user_id"), col("user_events"))
@@ -319,26 +258,11 @@ object EventQueries extends QueryModule {
     // true contract, not the fixture's luck).
     Declared("q76_stream_session",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val events = Tables.load(s, dir, "events")
           .select(col("user_id"), col("ts"))
-        val base = SharedStages.scratchDir("q76")
-        val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val agg = c.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+        val out = Replay(s, SharedStages.scratchDir("q76"), events, "complete") {
+          _.groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
             .agg(count(lit(1)).as("n_events"))
-          val q = agg.writeStream
-            .outputMode("complete")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.write.mode("overwrite").parquet(out)
-            }
-            .start()
-          q.awaitTermination()
         }
         s.read.parquet(out)
           .groupBy(col("user_id"))
@@ -368,28 +292,18 @@ object EventQueries extends QueryModule {
     // one MERGE INTO keyed on (w, event_type). Same q22 oracle.
     Declared("q92_stream_rollup_merge",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val events = Tables.load(s, dir, "events")
           .select(col("ts"), col("event_type"), col("value"))
         val base = SharedStages.scratchDir("q92")
-        val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val agg = c.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .groupBy(window(col("ts"), "1 minute"), col("event_type"))
+        val view = s"$base/view"
+        Replay(s, base, events, "update",
+            sink = Some(VersionedView.mergeSink(view, Seq("w", "event_type")))) {
+          _.groupBy(window(col("ts"), "1 minute"), col("event_type"))
             .agg(count(lit(1)).as("n"), out6(sum(dec(col("value")))).as("sum_value"))
             .select(tsec(col("window").getField("start")).as("w"),
               col("event_type"), col("n"), col("sum_value"))
-          val q = agg.writeStream
-            .outputMode("update")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch(SharedStages.latestRowMergeSink(out, Seq("w", "event_type")))
-            .start()
-          q.awaitTermination()
         }
-        graft.streaming.VersionedView.read(s, out).get
+        VersionedView.read(s, view).get
           .select(col("w"), col("event_type"), col("n"), col("sum_value"))
           .orderBy(col("w"), col("event_type"))
       },
@@ -411,52 +325,24 @@ object EventQueries extends QueryModule {
     // must equal the batch oracle row-for-row.
     Declared("q93_stream_asof",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val ev = Tables.load(s, dir, "events")
         val asofEv = ev.filter(col("event_type").isin("click", "view"))
           .select(col("user_id").cast("string").as("key"), col("ts"),
             when(col("event_type") === "click", lit(1)).otherwise(lit(0))
               .cast("byte").as("side"),
             col("event_id").as("id"), col("value").as("v"))
-        val base = SharedStages.scratchDir("q93")
-        val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
-        val fs = new org.apache.hadoop.fs.Path(src)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.mkdirs(new org.apache.hadoop.fs.Path(src))
-        def writeOne(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-          val tmp = s"$base/tmp_$name"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = fs.globStatus(new org.apache.hadoop.fs.Path(s"$tmp/part-*.parquet"))
-            .head.getPath
-          fs.rename(part, new org.apache.hadoop.fs.Path(s"$src/$name.parquet"))
-        }
-        (0 until 4).foreach(i => writeOne(asofEv.filter(pmod(col("id"), lit(4)) === i), s"data_$i"))
-        // the pusher: its own key, event time one delay-unit past the max —
-        // modTime must be newest (the source replays oldest-first)
-        Thread.sleep(1200)
+        // the pusher: its own key, event time one delay-unit past the max,
+        // replayed last
         val maxTs = asofEv.agg(max(col("ts"))).head().getTimestamp(0)
         val pusher = {
           import s.implicits._
           Seq(("zz~pusher", new java.sql.Timestamp(maxTs.getTime + 87601L * 3600 * 1000),
             0.toByte, 0L, 0.0)).toDF("key", "ts", "side", "id", "v")
         }
-        writeOne(pusher, "zz_pusher")
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val stream = c.readStream.schema(asofEv.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .as[graft.streaming.Stateful.AsOfEv](
-              org.apache.spark.sql.Encoders.product[graft.streaming.Stateful.AsOfEv])
-          val q = graft.streaming.Stateful.asOfJoinStream(stream, delay = "87600 hours")
-            .toDF()
-            .writeStream
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.write.mode("append").parquet(out)
-            }
-            .start()
-          q.awaitTermination()
+        val parts = (0 until 4).map(i => asofEv.filter(pmod(col("id"), lit(4)) === i)) :+ pusher
+        val out = Replay.ordered(s, SharedStages.scratchDir("q93"), parts) { stream =>
+          Stateful.asOfJoinStream(stream.as[Stateful.AsOfEv](Encoders.product[Stateful.AsOfEv]),
+            delay = "87600 hours").toDF()
         }
         s.read.parquet(out)
           .select(col("id").as("event_id"), col("key").cast("long").as("user_id"),
@@ -485,28 +371,13 @@ object EventQueries extends QueryModule {
     // breaks the hash.
     Declared("q85_stream_sliding",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val events = Tables.load(s, dir, "events")
           .select(col("ts"), col("event_type"))
-        val base = SharedStages.scratchDir("q85")
-        val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val agg = c.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .groupBy(window(col("ts"), "10 minutes", "1 minute").as("w"), col("event_type"))
+        val out = Replay(s, SharedStages.scratchDir("q85"), events, "complete") {
+          _.groupBy(window(col("ts"), "10 minutes", "1 minute").as("w"), col("event_type"))
             .agg(count(lit(1)).as("n"))
             .select(tsec(col("w").getField("start")).as("w_start"),
               col("event_type"), col("n"))
-          val q = agg.writeStream
-            .outputMode("complete")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.write.mode("overwrite").parquet(out)
-            }
-            .start()
-          q.awaitTermination()
         }
         s.read.parquet(out).orderBy(col("w_start"), col("event_type"))
       },
@@ -528,7 +399,6 @@ object EventQueries extends QueryModule {
     // q92 merge shape); final stage counts read from the merged table.
     Declared("q94_stream_funnel",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val ev = Tables.load(s, dir, "events")
           .filter(col("event_type").isin("view", "click", "purchase"))
           .select(col("user_id").as("userId"),
@@ -537,24 +407,13 @@ object EventQueries extends QueryModule {
               .when(col("event_type") === "click", lit(1))
               .otherwise(lit(2)).cast("byte").as("etype"))
         val base = SharedStages.scratchDir("q94")
-        val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
-        ev.repartition(4).write.mode("overwrite").parquet(src)
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val stream = c.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .as[graft.streaming.Stateful.FunnelEv](
-              org.apache.spark.sql.Encoders.product[graft.streaming.Stateful.FunnelEv])
-          val q = graft.streaming.Stateful.funnelStream(stream)
+        val view = s"$base/view"
+        Replay(s, base, ev, "update",
+            sink = Some(VersionedView.mergeSink(view, Seq("userId")))) { stream =>
+          Stateful.funnelStream(stream.as[Stateful.FunnelEv](Encoders.product[Stateful.FunnelEv]))
             .toDF()
-            .writeStream
-            .outputMode("update")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch(SharedStages.latestRowMergeSink(out, Seq("userId")))
-            .start()
-          q.awaitTermination()
         }
-        val fin = graft.streaming.VersionedView.read(s, out).get
+        val fin = VersionedView.read(s, view).get
         def stage(c: String, name: String) =
           fin.filter(col(c).isNotNull)
             .agg(big(count(lit(1))).as("n_users"))
@@ -696,9 +555,8 @@ object EventQueries extends QueryModule {
     // instead of duplicating segments.
     Declared("q104_logtopic_ingest",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val base = SharedStages.scratchDir("q104")
-        val (topic, out, ck) = (s"$base/topic", s"$base/out", s"$base/ck")
+        val topic = s"$base/topic"
         Tables.load(s, dir, "events")
           .select(col("event_id"), unix_micros(col("ts")).as("us"),
             col("event_type"), col("value"))
@@ -723,31 +581,20 @@ object EventQueries extends QueryModule {
             }
             flush()
           }
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val stream = c.readStream.format("graft.sources.LogTopicProvider")
+        val out = Replay.run(s, base, "complete") { c =>
+          c.readStream.format("graft.sources.LogTopicProvider")
             .option("path", topic)
             .option("maxPerTrigger", "4000")
             .load()
-          val parsed = stream
             .select(split(col("value"), "\t").as("f"))
             .select(
               timestamp_micros(element_at(col("f"), 1).cast("long")).as("ts"),
               element_at(col("f"), 2).as("event_type"),
               element_at(col("f"), 3).cast("double").as("value"))
-          val agg = parsed
             .groupBy(window(col("ts"), "1 minute"), col("event_type"))
             .agg(count(lit(1)).as("n"), out6(sum(dec(col("value")))).as("sum_value"))
             .select(tsec(col("window").getField("start")).as("w"),
               col("event_type"), col("n"), col("sum_value"))
-          val q = agg.writeStream
-            .outputMode("complete")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.write.mode("overwrite").parquet(out)
-            }
-            .start()
-          q.awaitTermination()
         }
         s.read.parquet(out).orderBy(col("w"), col("event_type"))
       },
@@ -999,27 +846,11 @@ object EventQueries extends QueryModule {
     // the streaming route is indistinguishable from reading the table.
     Declared("q149_stream_adoption",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         import graft.operators.GlobalCumSum
         val events = Tables.load(s, dir, "events").select(col("user_id"), col("ts"))
-        val base = SharedStages.scratchDir("q149")
-        val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val stream = c.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-          val firstSeen = stream
-            .select(col("user_id"), idiv(unix_micros(col("ts")), lit(86400000000L)).as("d"))
+        val out = Replay(s, SharedStages.scratchDir("q149"), events, "complete") {
+          _.select(col("user_id"), idiv(unix_micros(col("ts")), lit(86400000000L)).as("d"))
             .groupBy(col("user_id")).agg(min(col("d")).as("d0"))
-          val q = firstSeen.writeStream
-            .outputMode("complete")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.write.mode("overwrite").parquet(out)
-            }
-            .start()
-          q.awaitTermination()
         }
         val daily = s.read.parquet(out)
           .groupBy(col("d0").as("d")).agg(count(lit(1)).as("new_users"))
@@ -1049,30 +880,15 @@ object EventQueries extends QueryModule {
     // watermark-bounded.
     Declared("q165_stream_dedup_agg",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val events = Tables.load(s, dir, "events")
           .select(col("event_id"), col("ts"), col("event_type"), col("value"))
         val withDups = events.unionByName(events.where(col("event_id") % 7 === 0))
-        val base = SharedStages.scratchDir("q165")
-        val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
-        withDups.repartition(4).write.mode("overwrite").parquet(src)
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val agg = c.readStream.schema(withDups.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .dropDuplicates("event_id")
+        val out = Replay(s, SharedStages.scratchDir("q165"), withDups, "complete") {
+          _.dropDuplicates("event_id")
             .groupBy(window(col("ts"), "1 minute"), col("event_type"))
             .agg(count(lit(1)).as("n"), out6(sum(dec(col("value")))).as("sum_value"))
             .select(tsec(col("window").getField("start")).as("w"),
               col("event_type"), col("n"), col("sum_value"))
-          val q = agg.writeStream
-            .outputMode("complete")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.write.mode("overwrite").parquet(out)
-            }
-            .start()
-          q.awaitTermination()
         }
         s.read.parquet(out).orderBy(col("w"), col("event_type"))
       },
@@ -1146,7 +962,6 @@ object EventQueries extends QueryModule {
     // sides resolve equal-ts references to the max event_id.
     Declared("q185_stream_attr",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val ev = Tables.load(s, dir, "events")
         val asofEv = ev
           .filter(col("event_type").isin("purchase", "click", "view", "signup"))
@@ -1158,43 +973,16 @@ object EventQueries extends QueryModule {
               .when(col("event_type") === "view", lit(2.0))
               .when(col("event_type") === "signup", lit(3.0))
               .otherwise(lit(0.0)).as("v"))
-        val base = SharedStages.scratchDir("q185")
-        val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
-        val fs = new org.apache.hadoop.fs.Path(src)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.mkdirs(new org.apache.hadoop.fs.Path(src))
-        def writeOne(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-          val tmp = s"$base/tmp_$name"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = fs.globStatus(new org.apache.hadoop.fs.Path(s"$tmp/part-*.parquet"))
-            .head.getPath
-          fs.rename(part, new org.apache.hadoop.fs.Path(s"$src/$name.parquet"))
-        }
-        (0 until 4).foreach(i => writeOne(asofEv.filter(pmod(col("id"), lit(4)) === i), s"data_$i"))
-        Thread.sleep(1200)
         val maxTs = asofEv.agg(max(col("ts"))).head().getTimestamp(0)
         val pusher = {
           import s.implicits._
           Seq(("zz~pusher", new java.sql.Timestamp(maxTs.getTime + 87601L * 3600 * 1000),
             0.toByte, -1L, 0.0)).toDF("key", "ts", "side", "id", "v")
         }
-        writeOne(pusher, "zz_pusher")
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val stream = c.readStream.schema(asofEv.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .as[graft.streaming.Stateful.AsOfEv](
-              org.apache.spark.sql.Encoders.product[graft.streaming.Stateful.AsOfEv])
-          val q = graft.streaming.Stateful.asOfJoinStream(stream, delay = "87600 hours")
-            .toDF()
-            .writeStream
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.write.mode("append").parquet(out)
-            }
-            .start()
-          q.awaitTermination()
+        val parts = (0 until 4).map(i => asofEv.filter(pmod(col("id"), lit(4)) === i)) :+ pusher
+        val out = Replay.ordered(s, SharedStages.scratchDir("q185"), parts) { stream =>
+          Stateful.asOfJoinStream(stream.as[Stateful.AsOfEv](Encoders.product[Stateful.AsOfEv]),
+            delay = "87600 hours").toDF()
         }
         val vmicro = ev.select(col("event_id").as("id"),
           (dec(col("value")) * lit(1000000)).cast("long").as("v_micro"))
@@ -1242,27 +1030,15 @@ object EventQueries extends QueryModule {
     // on cdcSink records that trade.
     Declared("q240_stream_cdc_apply",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val changes = Tables.load(s, dir, "events")
           .select((col("user_id") % 500).as("k"), col("ts"), col("event_id"),
             col("value"),
             when(col("event_id") % 11 === 0, "D").otherwise("U").as("op"))
         val base = SharedStages.scratchDir("q240")
-        val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
-        changes.repartition(4).write.mode("overwrite").parquet(src)
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val q = c.readStream.schema(changes.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .writeStream
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch(graft.streaming.VersionedView.cdcSink(
-              out, Seq("k"), Seq("ts", "event_id")))
-            .start()
-          q.awaitTermination()
-        }
-        graft.streaming.VersionedView.readState(s, out, "op").get
+        val view = s"$base/view"
+        Replay(s, base, changes, "append",
+          sink = Some(VersionedView.cdcSink(view, Seq("k"), Seq("ts", "event_id"))))(identity)
+        VersionedView.readState(s, view, "op").get
           .select(col("k"), col("event_id"), col("value"))
           .orderBy(col("k"))
       },
@@ -1286,30 +1062,18 @@ object EventQueries extends QueryModule {
     // batch aggregate over the global argmax state.
     Declared("q241_stream_retract_agg",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val changes = Tables.load(s, dir, "events")
           .select((col("user_id") % 500).as("k"), col("ts"), col("event_id"),
             col("value"),
             when(col("event_id") % 11 === 0, "D").otherwise("U").as("op"))
         val base = SharedStages.scratchDir("q241")
-        val (src, st, agg, ck) =
-          (s"$base/src", s"$base/state", s"$base/agg", s"$base/ck")
-        changes.repartition(4).write.mode("overwrite").parquet(src)
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val q = c.readStream.schema(changes.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .writeStream
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch(graft.streaming.VersionedView.retractAggSink(
-              st, agg, Seq("k"), Seq("ts", "event_id"), "op",
-              groupCol = col("k") % 50,
-              valueMicro = (dec(col("value")) * 1000000L).cast("long")))
-            .start()
-          q.awaitTermination()
-        }
-        graft.streaming.VersionedView.readAgg(s, agg).get
+        val agg = s"$base/agg"
+        Replay(s, base, changes, "append",
+          sink = Some(VersionedView.retractAggSink(
+            s"$base/state", agg, Seq("k"), Seq("ts", "event_id"), "op",
+            groupCol = col("k") % 50,
+            valueMicro = (dec(col("value")) * 1000000L).cast("long"))))(identity)
+        VersionedView.readAgg(s, agg).get
           .select(col("g"), big(col("n_live")).as("n_live"),
             big(col("sum_micro")).as("sum_micro"))
           .orderBy(col("g"))
@@ -1418,7 +1182,7 @@ object EventQueries extends QueryModule {
     // min/max/count per group over the final argmax state.
     Declared("q244_stream_retract_minmax",
       (s, dir) => {
-        graft.streaming.VersionedView.readMinMax(s, s"${retractIdx(s, dir)}/idx").get
+        VersionedView.readMinMax(s, s"${retractIdx(s, dir)}/idx").get
           .select(col("g"), big(col("n_live")).as("n_live"),
             col("min_v"), col("max_v"))
           .orderBy(col("g"))
@@ -1443,7 +1207,7 @@ object EventQueries extends QueryModule {
     // hot value contributes k rows, never its full key count.
     Declared("q245_stream_leaderboard",
       (s, dir) => {
-        graft.streaming.VersionedView.readTopK(s, s"${retractIdx(s, dir)}/idx", 3).get
+        VersionedView.readTopK(s, s"${retractIdx(s, dir)}/idx", 3).get
           .select(col("g"), big(col("rank")).as("rank"), col("v"))
           .orderBy(col("g"), col("rank"))
       },
@@ -1466,7 +1230,7 @@ object EventQueries extends QueryModule {
     // integer-exact; oracle derives the same from the final argmax state.
     Declared("q248_stream_running_median",
       (s, dir) => {
-        graft.streaming.VersionedView.readMedian(s, s"${retractIdx(s, dir)}/idx").get
+        VersionedView.readMedian(s, s"${retractIdx(s, dir)}/idx").get
           .select(col("g"), big(col("n_live")).as("n_live"), col("median_v"))
           .orderBy(col("g"))
       },

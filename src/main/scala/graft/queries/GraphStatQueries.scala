@@ -6,7 +6,6 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.functions.ColumnOps.{idiv, ppm}
 import graft.model.Tables
-import graft.obs.Sessions
 import graft.operators.Materialize.pin
 import Protocol._
 
@@ -769,25 +768,14 @@ object GraphStatQueries extends QueryModule {
     // deterministic (u, v) pair on a 997-node id space.
     Declared("q250_stream_incremental_cc",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val edges = Tables.load(s, dir, "events")
           .filter(col("event_id") % 17 === 0)
           .select((col("event_id") % 997).as("u"),
             ((col("event_id") * 31 + 7) % 997).as("v"))
         val base = SharedStages.scratchDir("q250")
-        val (src, st, ck) = (s"$base/src", s"$base/state", s"$base/ck")
-        edges.repartition(4).write.mode("overwrite").parquet(src)
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val q = c.readStream.schema(edges.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .writeStream
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch(graft.streaming.IncrementalCC.ccSink(st))
-            .start()
-          q.awaitTermination()
-        }
+        val st = s"$base/state"
+        Replay(s, base, edges, "append",
+          sink = Some(graft.streaming.IncrementalCC.ccSink(st)))(identity)
         graft.streaming.VersionedView.read(s, st).get
           .select(col("node"), col("rep"))
           .orderBy(col("node"))
@@ -818,7 +806,6 @@ object GraphStatQueries extends QueryModule {
     // recomputes CC over exactly the net-live multiset.
     Declared("q252_stream_cc_deletes",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val changes = Tables.load(s, dir, "events")
           .filter(col("event_id") % 13 === 0)
           .select((col("event_id") % 997).as("u"),
@@ -826,19 +813,9 @@ object GraphStatQueries extends QueryModule {
             when(expr("(event_id div 13) % 4") === 0, lit("D"))
               .otherwise(lit("I")).as("op"))
         val base = SharedStages.scratchDir("q252")
-        val (src, st, es, ck) = (s"$base/src", s"$base/state", s"$base/edges", s"$base/ck")
-        changes.repartition(4).write.mode("overwrite").parquet(src)
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val q = c.readStream.schema(changes.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .writeStream
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch(graft.streaming.IncrementalCC.ccDeleteSink(st, es))
-            .start()
-          q.awaitTermination()
-        }
+        val st = s"$base/state"
+        Replay(s, base, changes, "append",
+          sink = Some(graft.streaming.IncrementalCC.ccDeleteSink(st, s"$base/edges")))(identity)
         graft.streaming.VersionedView.read(s, st).get
           .select(col("node"), col("rep"))
           .orderBy(col("node"))

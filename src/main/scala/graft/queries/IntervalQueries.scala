@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.ColumnOps.idiv
 import graft.model.Tables
-import graft.obs.Sessions
 import Protocol._
 
 /** Interval and sequence analytics ([EXT], SURVEY §2.2): the
@@ -377,27 +376,11 @@ object IntervalQueries extends QueryModule {
     // aggregate alone.
     Declared("q207_stream_balance",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         import graft.streaming.Stateful
         val balEv = tape(s, dir)
           .select(col("user_id").cast("string").as("key"),
             timestamp_micros(col("us")).as("ts"), col("event_id").as("id"),
             col("delta"))
-        val base = SharedStages.scratchDir("q207")
-        val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
-        val fs = new org.apache.hadoop.fs.Path(src)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.mkdirs(new org.apache.hadoop.fs.Path(src))
-        def writeOne(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-          val tmp = s"$base/tmp_$name"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = fs.globStatus(new org.apache.hadoop.fs.Path(s"$tmp/part-*.parquet"))
-            .head.getPath
-          fs.rename(part, new org.apache.hadoop.fs.Path(s"$src/$name.parquet"))
-        }
-        (0 until 4).foreach(i =>
-          writeOne(balEv.filter(pmod(col("id"), lit(4)) === i), s"data_$i"))
-        Thread.sleep(1200)
         val maxTs = balEv.agg(max(col("ts"))).head().getTimestamp(0)
         val pusher = {
           import s.implicits._
@@ -405,22 +388,11 @@ object IntervalQueries extends QueryModule {
             new java.sql.Timestamp(maxTs.getTime + 87601L * 3600 * 1000),
             -1L, 0L)).toDF("key", "ts", "id", "delta")
         }
-        writeOne(pusher, "zz_pusher")
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val stream = c.readStream.schema(balEv.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .as[Stateful.BalEv](org.apache.spark.sql.Encoders.product[Stateful.BalEv])
-          val q = Stateful.clampedFoldStream(stream, delay = "87600 hours")
-            .toDF()
-            .writeStream
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.write.mode("append").parquet(out)
-            }
-            .start()
-          q.awaitTermination()
+        val parts = (0 until 4).map(i => balEv.filter(pmod(col("id"), lit(4)) === i)) :+ pusher
+        val out = Replay.ordered(s, SharedStages.scratchDir("q207"), parts) { stream =>
+          Stateful.clampedFoldStream(
+            stream.as[Stateful.BalEv](org.apache.spark.sql.Encoders.product[Stateful.BalEv]),
+            delay = "87600 hours").toDF()
         }
         val wLast = Window.partitionBy(col("user_id"))
           .orderBy(col("tsUs").desc, col("id").desc)
@@ -612,27 +584,12 @@ object IntervalQueries extends QueryModule {
     // session store, per-user rollup batch-side.
     Declared("q222_stream_interval_union",
       (s, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val events = Tables.load(s, dir, "events")
           .select(col("user_id"), col("ts"), col("event_id"))
-        val base = SharedStages.scratchDir("q222")
-        val (src, out, ck) = (s"$base/src", s"$base/out", s"$base/ck")
-        events.repartition(4).write.mode("overwrite").parquet(src)
-        Sessions.withConf(s, SharedStages.ReplayConf) { c =>
-          val agg = c.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .groupBy(col("user_id"),
+        val out = Replay(s, SharedStages.scratchDir("q222"), events, "complete") {
+          _.groupBy(col("user_id"),
               session_window(col("ts"), "1800000001 microseconds").as("w"))
             .agg(count(lit(1)).as("n_events"))
-          val q = agg.writeStream
-            .outputMode("complete")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ck)
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.write.mode("overwrite").parquet(out)
-            }
-            .start()
-          q.awaitTermination()
         }
         s.read.parquet(out)
           .select(col("user_id"),

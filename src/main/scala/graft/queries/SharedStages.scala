@@ -29,7 +29,7 @@ object SharedStages {
   private val scratch = scala.collection.mutable.ArrayBuffer.empty[String]
 
   /** A temp dir reclaimed on JVM exit — for stage copies and per-query
-    * scratch (q66's replay source/sink/checkpoint). Repeated Verify/Bench
+    * scratch (a [[Replay]]'s source/sink/checkpoint). Repeated Verify/Bench
     * runs would otherwise accumulate dead dirs under java.io.tmpdir (each
     * new SparkContext gets a new stage key).
     */
@@ -38,30 +38,6 @@ object SharedStages {
     scratch += d
     d
   }
-
-  /** The conf the streaming REPLAY harnesses run their stream under,
-    * through [[graft.obs.Sessions.withConf]]: a stateful micro-batch query
-    * materializes one state-store instance per shuffle partition per
-    * trigger, so the fixture replays (tens of thousands of rows across 4
-    * triggers) pay pure per-instance overhead at the session's scan-sized
-    * setting — 8 is right for the harness, and a cluster deployment sizes
-    * it to cores as usual. Only the stream is built from the scoped
-    * session: the returned read-back frame is built from the caller's and
-    * executes at its settings.
-    */
-  val ReplayConf: (String, String) = "spark.sql.shuffle.partitions" -> "8"
-
-  /** LATEST-ROW-WINS merge sink for the incremental materialized-view shape
-    * shared by q92's rollup and q94's funnel — now the write-audit-publish
-    * implementation in [[graft.streaming.VersionedView]]: each batch merges
-    * into a NEW immutable version dir and publishes via atomic renames, so
-    * a crash mid-batch can never lose the view (the old in-place
-    * `mode("overwrite")` deleted the live files before committing new
-    * ones). Read the view back with [[graft.streaming.VersionedView.read]].
-    */
-  def latestRowMergeSink(out: String, keys: Seq[String])
-      : (DataFrame, Long) => Unit =
-    graft.streaming.VersionedView.mergeSink(out, keys)
 
   sys.addShutdownHook {
     (built.values ++ scratch).foreach { dir =>

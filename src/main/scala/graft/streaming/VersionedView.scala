@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions.col
   *    FileContext.rename(OVERWRITE) (atomic on posix/HDFS). A crash at ANY
   *    point leaves `_CURRENT` on the previous complete version — the view
   *    is never lost and never observably partial, fixing the
-  *    overwrite-in-place sink's at-most-once window (old
-  *    latestRowMergeSink: delete-before-commit).
+  *    overwrite-in-place sink's at-most-once window (it deleted the live
+  *    files before committing the new ones).
   *  - READERS resolve `_CURRENT` once and then read an immutable dir; the
   *    previous version is retained one publish cycle so an in-flight
   *    reader that resolved just before a swap still finds its files.
