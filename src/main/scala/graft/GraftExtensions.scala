@@ -24,6 +24,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // classloader a session clone (graft.obs.Sessions.withConf) runs on the
     // classes its parent compiled (DEPLOY.md "Scoped confs")
     GraftSqlBridge.setContextConfIfMissing("spark.sql.artifact.isolation.enabled", "false")
+    // the whole-stage id otherwise names each generated class, so a plan
+    // whose stages AQE numbers in another order compiles again (DEPLOY.md
+    // "Generated-code cache")
+    GraftSqlBridge.setContextConfIfMissing(GraftExtensions.UseIdInClassNameKey, "false")
+    // file: without a chmod, readlink or ls child process per create,
+    // mkdir, checkpoint rename and listed entry (DEPLOY.md "Local
+    // filesystem")
+    GraftSqlBridge.activeHadoopConf.foreach(graft.fs.NioLocalFs.register)
     ext.injectFunction((
       FunctionIdentifier("cosine_similarity"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
@@ -76,6 +84,13 @@ object GraftExtensions {
     * evicts each before its next use.
     */
   val CodegenCacheEntries = 1000
+
+  /** Whether a generated class's name carries its whole-stage id; the
+    * engine defaults it to false. The id enters the generated body only
+    * as a comment, so without it one stage's code is one cache entry
+    * whatever its number.
+    */
+  val UseIdInClassNameKey = "spark.sql.codegen.useIdInClassName"
 
   /** Arity-checked builder with array<double> coercion: the expressions
     * assume double-backed arrays, but SQL callers naturally pass e.g. the

@@ -102,6 +102,13 @@ object GraftSqlBridge {
   def setContextConfIfMissing(key: String, value: String): Unit =
     org.apache.spark.SparkContext.getActive.foreach(_.conf.setIfMissing(key, value))
 
+  /** The running SparkContext's Hadoop conf, the one every session's
+    * Hadoop conf is copied from (`SparkContext.getActive` is
+    * `private[spark]`).
+    */
+  def activeHadoopConf: Option[org.apache.hadoop.conf.Configuration] =
+    org.apache.spark.SparkContext.getActive.map(_.hadoopConfiguration)
+
   /** Block until the listener bus has delivered all queued events —
     * `private[spark]`, needed to attribute SparkListener task metrics to
     * the query that just ran (graft.obs.QueryProfile).

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -16,9 +14,10 @@ import graft.queries.SharedStages
 import graft.streaming.{BucketedStore, Ingest, Loader}
 
 /** Generated classes are compiled once and then served from Spark's codegen
-  * cache: the extension sizes the cache to the engine's working set, and the
-  * loader feeds each trigger's batch id to generated code as a parameter, not
-  * as an inlined literal.
+  * cache: the extension sizes the cache to the engine's working set and
+  * keeps whole-stage ids out of class names, and the loader feeds each
+  * trigger's batch id to generated code as a parameter, not as an inlined
+  * literal.
   */
 class CodegenCacheSpec extends AnyFunSuite {
   import TestSpark._
@@ -28,17 +27,7 @@ class CodegenCacheSpec extends AnyFunSuite {
   test("the extension sets the cache default; an explicit value wins") {
     // the cache size is static per JVM, so each session needs a JVM that
     // has not built one yet
-    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
-    val opens = jvm.zip(jvm.drop(1) :+ "").collect {
-      case (a, v) if a == "--add-opens" => Seq(a, v)
-      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
-    }.flatten
-    val cmd = Seq(Paths.get(sys.props("java.home"), "bin", "java").toString) ++ opens ++
-      Seq("-Xmx512m", "-Dspark.master=local[1]", "-Dspark.ui.enabled=false",
-        "-cp", sys.props("java.class.path"), CodegenCacheProbe.getClass.getName.stripSuffix("$"))
-    val p = new ProcessBuilder(cmd: _*).redirectError(ProcessBuilder.Redirect.DISCARD).start()
-    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-    assert(p.waitFor() == 0, out)
+    val out = freshJvm(CodegenCacheProbe)
     val seen = out.linesIterator.filter(_.startsWith("probe ")).toSeq
     assert(seen == Seq(s"probe bare ${GraftExtensions.CodegenCacheEntries}", "probe explicit 42"), out)
   }
@@ -54,6 +43,25 @@ class CodegenCacheSpec extends AnyFunSuite {
     }
     classesFor(1)
     assert(classesFor(2) == 0)
+  }
+
+  test("one aggregate planned under two stage numberings compiles once") {
+    // AQE numbers a query's whole-stage codegen stages in the order it
+    // plans them, so one stage can carry another id from run to run; here
+    // the union's child order moves the aggregate's ids
+    def renumbered(kvs: (String, String)*): Long =
+      obs.Sessions.withConf(spark, kvs :+ ("spark.sql.adaptive.enabled" -> "false"): _*) { c =>
+        val agg = c.range(1000).selectExpr("id % 7919 AS k").groupBy("k").count()
+        val other = c.range(10).selectExpr("id AS k", "id AS count")
+        agg.union(other).collect()
+        val before = compiledSoFar
+        other.union(agg).collect()
+        compiledSoFar - before
+      }
+    assert(spark.conf.get(GraftExtensions.UseIdInClassNameKey) == "false")
+    assert(renumbered() == 0)
+    // with the id in the class name, each numbering is its own class
+    assert(renumbered(GraftExtensions.UseIdInClassNameKey -> "true") > 0)
   }
 
   test("a session clone runs on the classes its parent compiled") {
