@@ -11,12 +11,20 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleEx
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.json4s._
 
-/** Totals of the tasks of one stage that ended inside a profiled block. */
+/** Totals of the tasks of one stage that ended inside a profiled block.
+  *
+  * Before its tasks run, a stage waits `schedulerDelayMs` (its first task's
+  * launch minus the stage's submission: task serialization and scheduling;
+  * -1 when the submission fell outside the block) and its tasks spend
+  * `deserializeMs` (summed executor deserialize time) unpacking what the
+  * driver shipped them.
+  */
 final case class StageProfile(id: Int, name: String, tasks: Long,
     runMs: Long, cpuMs: Long, gcMs: Long,
     shuffleReadBytes: Long, shuffleReadRecords: Long,
     shuffleWriteBytes: Long, shuffleWriteRecords: Long,
-    spillBytes: Long, outputBytes: Long) {
+    spillBytes: Long, outputBytes: Long,
+    schedulerDelayMs: Long, deserializeMs: Long) {
 
   def toJson: JObject = JObject(
     "id" -> JInt(id), "name" -> JString(name), "tasks" -> JLong(tasks),
@@ -26,7 +34,8 @@ final case class StageProfile(id: Int, name: String, tasks: Long,
     "shuffle_read_records" -> JLong(shuffleReadRecords),
     "shuffle_write_bytes" -> JLong(shuffleWriteBytes),
     "shuffle_write_records" -> JLong(shuffleWriteRecords),
-    "spill_bytes" -> JLong(spillBytes), "output_bytes" -> JLong(outputBytes))
+    "spill_bytes" -> JLong(spillBytes), "output_bytes" -> JLong(outputBytes),
+    "scheduler_delay_ms" -> JLong(schedulerDelayMs), "deserialize_ms" -> JLong(deserializeMs))
 }
 
 /** Where one block of work spent its time, as Spark's scheduler saw it.
@@ -69,6 +78,7 @@ final case class QueryProfile(wallSec: Double, jobs: Int, driverGapSec: Double,
       "shuffle_write_bytes" -> sum(_.shuffleWriteBytes),
       "shuffle_write_records" -> sum(_.shuffleWriteRecords),
       "spill_bytes" -> sum(_.spillBytes), "output_bytes" -> sum(_.outputBytes),
+      "scheduler_delay_ms" -> sum(s => math.max(0L, s.schedulerDelayMs)), "deserialize_ms" -> sum(_.deserializeMs),
       "top_stages" -> JArray(stages.sortBy(-_.runMs).take(topStages).map(_.toJson).toList))
   }
 }
@@ -123,7 +133,7 @@ object QueryProfile {
   // per-stage counters, in StageProfile field order after id and name
   private val Tasks = 0; private val Run = 1; private val Cpu = 2; private val Gc = 3
   private val ShRB = 4; private val ShRR = 5; private val ShWB = 6; private val ShWR = 7
-  private val Spill = 8; private val Out = 9
+  private val Spill = 8; private val Out = 9; private val Deser = 10
 
   /** Listener-bus callbacks arrive on one thread; reads come from the
     * caller's, hence the lock.
@@ -131,13 +141,16 @@ object QueryProfile {
   private final class Recorder extends SparkListener {
     private val stages = mutable.LinkedHashMap.empty[Int, Array[Long]]
     private val names = mutable.Map.empty[Int, String]
+    private val submitted = mutable.Map.empty[Int, Long]
+    private val firstLaunch = mutable.Map.empty[Int, Long]
     private val jobStarts = mutable.Map.empty[Int, Long]
     private val jobSpans = mutable.ArrayBuffer.empty[(Long, Long)]
     private var jobs = 0
     private var lastQuery: Option[QueryExecution] = None
 
     def reset(): Unit = synchronized {
-      stages.clear(); names.clear(); jobStarts.clear(); jobSpans.clear()
+      stages.clear(); names.clear(); submitted.clear(); firstLaunch.clear()
+      jobStarts.clear(); jobSpans.clear()
       jobs = 0; lastQuery = None
     }
 
@@ -155,12 +168,13 @@ object QueryProfile {
 
     override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = synchronized {
       names(s.stageInfo.stageId) = s.stageInfo.name.takeWhile(_ != '\n')
+      s.stageInfo.submissionTime.foreach(submitted(s.stageInfo.stageId) = _)
     }
 
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
       val m = t.taskMetrics
       if (m != null) {
-        val a = stages.getOrElseUpdate(t.stageId, new Array[Long](10))
+        val a = stages.getOrElseUpdate(t.stageId, new Array[Long](11))
         a(Tasks) += 1
         a(Run) += m.executorRunTime
         a(Cpu) += m.executorCpuTime // ns; ms once per stage below
@@ -171,6 +185,9 @@ object QueryProfile {
         a(ShWR) += m.shuffleWriteMetrics.recordsWritten
         a(Spill) += m.diskBytesSpilled
         a(Out) += m.outputMetrics.bytesWritten
+        a(Deser) += m.executorDeserializeTime
+        val launch = t.taskInfo.launchTime
+        firstLaunch(t.stageId) = firstLaunch.get(t.stageId).fold(launch)(math.min(_, launch))
       }
     }
 
@@ -195,7 +212,10 @@ object QueryProfile {
       val wall = (t1 - t0) / 1e9
       val ss = stages.toSeq.map { case (id, a) =>
         StageProfile(id, names.getOrElse(id, "?"), a(Tasks), a(Run), a(Cpu) / 1000000L, a(Gc),
-          a(ShRB), a(ShRR), a(ShWB), a(ShWR), a(Spill), a(Out))
+          a(ShRB), a(ShRR), a(ShWB), a(ShWR), a(Spill), a(Out),
+          (for (s <- submitted.get(id); l <- firstLaunch.get(id)) yield math.max(0L, l - s))
+            .getOrElse(-1L),
+          a(Deser))
       }
       QueryProfile(wall, jobs, wall - covered / 1e9, ss, lastQuery, codegenClasses, codegenMs)
     }

@@ -44,9 +44,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    to, not a fixed count, and a trigger under
   *    `spark.sql.files.openCostInBytes` (4 MB by default) is ONE slice.
   *    Each slice is one task downstream — in a landing sink one parquet
-  *    write task, whose fixed cost (Spark ships the whole Hadoop
-  *    Configuration inside every file-write task) is far larger than the
-  *    parse and transform of a live trigger's 10-150 KB.
+  *    write task, whose fixed cost (scheduling, deserializing its closure,
+  *    opening a file) is larger than the parse and transform of a live
+  *    trigger's 10-150 KB. `Loader.writeBatchIdempotent` keeps that cost
+  *    small: its `streaming.BatchPartitionWriter` ships the few Hadoop
+  *    conf keys that differ from the defaults, not the whole conf.
   */
 class TickSocketProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =

@@ -207,13 +207,17 @@ object BatchLog {
     finish(spark, layout, f, c)
   }
 
-  /** Roll-back/roll-forward of a fold that died between its markers; a
+  /** Roll-back/roll-forward of a fold that died between its markers, and
+    * removal of the staging dirs a crashed [[BatchPartitionWriter]] left
+    * (with a single writer, any staging dir at writer entry is stale); a
     * no-op otherwise. Every writer entry point runs it first.
     */
   def recover(spark: SparkSession, layout: Layout): Unit = {
     val dir = layout.dir
     val m = layout.markers
     val f = fs(spark, dir)
+    Option(f.globStatus(new Path(dir, BatchPartitionWriter.StagingPrefix + "*")))
+      .foreach(_.foreach(st => f.delete(st.getPath, true)))
     val upTo = new Path(dir, m.upTo)
     readMarker(f, dir, m.commit) match {
       case Some(c) => finish(spark, layout, f, c)
@@ -272,17 +276,19 @@ object BatchLog {
   private[streaming] def nextBase(f: FileSystem, dir: String): Long =
     math.min(0L, partitionIds(f, dir).minOption.getOrElse(0L)) - 1L
 
-  /** Whether any parquet file lives under `dir` (a write of zero rows
-    * creates none).
+  /** Whether a parquet file that a read of `dir` would see lives under it
+    * (a write of zero rows creates none). Hidden paths are skipped as
+    * Spark's file listing skips them (a `.` prefix, or a `_` prefix without
+    * `=`), so a crashed write's staging files never read as data.
     */
   private[streaming] def hasParquet(f: FileSystem, dir: String): Boolean = {
-    val p = new Path(dir)
-    f.exists(p) && {
-      val it = f.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) found = it.next().getPath.getName.endsWith(".parquet")
-      found
+    def hidden(name: String) = name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+    def visit(p: Path): Boolean = f.listStatus(p).exists { st =>
+      !hidden(st.getPath.getName) &&
+        (if (st.isDirectory) visit(st.getPath) else st.getPath.getName.endsWith(".parquet"))
     }
+    val p = new Path(dir)
+    f.exists(p) && visit(p)
   }
 
   private[streaming] def writeMarker(f: FileSystem, dir: String, name: String, v: Long): Unit = {

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.collection.immutable.ListMap
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -56,10 +54,18 @@ object Loader {
     * overwrites its own partition only, so rows are never duplicated. This
     * is the `foreachBatch` pattern from SURVEY §2.1 (exactly-once fix).
     *
+    * The rows land through [[BatchPartitionWriter]]: each write task stages
+    * one parquet file in a hidden `.batch-<id>-<uuid>` dir, and the driver's
+    * commit renames each staged file into a fresh `_batch=<id>` (replacing
+    * the old one) and deletes the staging dir. There is no `_SUCCESS` file,
+    * and a committer set through `spark.sql.sources.commitProtocolClass` is
+    * not used on this path. An empty batch lands no file, so an empty feed
+    * stays file-less ([[readTableIfAny]]).
+    *
     * Commit markers live under `markersDir`, which `start` ties to the
     * CHECKPOINT — not the table — so resetting the checkpoint (a routine
     * reprocess) also resets the markers: replayed batchIds then re-run and
-    * dynamically overwrite their own `_batch=` partitions instead of being
+    * overwrite their own `_batch=` partitions instead of being
     * silently skipped against a stale marker. ONE carve-out since the
     * round-12 frontier: batches already FOLDED by [[compactBatches]]
     * (real ids at/below the feed's frontier) stay skipped even after a
@@ -72,8 +78,8 @@ object Loader {
     * would land them next to the fold, not replace it.
     *
     * `df` MUST derive from the SOURCE (as it does inside foreachBatch) —
-    * never from the target table: the dynamic overwrite deletes the very
-    * files a target-derived scan would be reading.
+    * never from the target table: the commit deletes the very files a
+    * target-derived scan of the batch's partition would be reading.
     */
   def writeBatchIdempotent(
       df: org.apache.spark.sql.DataFrame, tableDir: String, batchId: Long,
@@ -90,18 +96,11 @@ object Loader {
     // not re-append its rows next to the folded copy: the frontier guard
     if (!fs.exists(marker) &&
         !BatchLog.replayed(spark, tableDir, BatchLog.FeedMarkers, batchId)) {
-      // one projection, one analyzer pass over the micro-batch plan;
-      // `_src_batch` survives feed compaction. Dynamic overwrite of the
-      // batch's partition, not a direct write to `_batch=<id>`: the direct
-      // write lands a schema-only file for an EMPTY batch, and an empty
-      // feed must stay file-less (readTableIfAny)
-      // not lit(batchId): an inlined literal compiles new classes per trigger
-      val id = graft.functions.LongParam.column(batchId)
-      df.withColumns(ListMap("_src_batch" -> id, "_batch" -> id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch")
-        .parquet(tableDir)
+      // `_src_batch` survives feed compaction; not lit(batchId): an inlined
+      // literal compiles new classes per trigger
+      BatchPartitionWriter.write(
+        df.withColumn("_src_batch", graft.functions.LongParam.column(batchId)),
+        tableDir, batchId)
       fs.create(marker, true).close()
     }
   }

@@ -23,8 +23,8 @@ import graft.queries.{DedupQueries, Protocol}
   *
   * Failure model: foreachBatch is at-least-once, so EVERY write of the
   * batch is independently idempotent — pairs go through
-  * `Loader.writeBatchIdempotent` (dynamic `_batch` partition overwrite +
-  * commit marker), and the signature store and its id sidecar are
+  * `Loader.writeBatchIdempotent` (`_batch` partition replace + commit
+  * marker), and the signature store and its id sidecar are
   * [[BucketedStore]]s whose per-batch append REWRITES the batch's own
   * `_batch` partition. Both per-batch reads take the PRE-batch snapshot
   * by ORIGINAL batch id ([[BucketedStore.excludeBatch]] — `_src_batch`

@@ -12,7 +12,9 @@ import graft.queries.SharedStages
   * after Bench's warm-up and prints one JSON line per entry — wall, task,
   * CPU and GC seconds, job count, driver gap (wall not covered by any
   * running job), generated classes compiled and their compile ms,
-  * shuffle/spill/output totals, and the 10 stages with the most task time
+  * shuffle/spill/output totals, the scheduler delay (each stage's first
+  * task launch minus its submission) and summed task deserialize time, and
+  * the 10 stages with the most task time, each with the same fields
   * (graft.obs.QueryProfile).
   *
   * `--plan DIR` also writes each entry's final (post-AQE) formatted

@@ -109,6 +109,22 @@ object GraftSqlBridge {
   def activeHadoopConf: Option[org.apache.hadoop.conf.Configuration] =
     org.apache.spark.SparkContext.getActive.map(_.hadoopConfiguration)
 
+  /** A new Hadoop conf of `spark`'s session: its SparkContext's plus the
+    * session's SQL confs, as a file write starts from.
+    */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** Sets the running task's output metrics (the setters are
+    * `private[spark]`), as Spark's own file writers do when they commit.
+    */
+  def setTaskOutputMetrics(bytes: Long, records: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { c =>
+      val m = c.taskMetrics().outputMetrics
+      m.setBytesWritten(bytes)
+      m.setRecordsWritten(records)
+    }
+
   /** Block until the listener bus has delivered all queued events —
     * `private[spark]`, needed to attribute SparkListener task metrics to
     * the query that just ran (graft.obs.QueryProfile).

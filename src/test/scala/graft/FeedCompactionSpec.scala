@@ -153,6 +153,18 @@ class FeedCompactionSpec extends AnyFunSuite {
     assert(rows(dir) == before ++ (100L until 110L).map(i => (i, i * 10)).toSet)
   }
 
+  test("a crashed write's staging files never read as data; the next write deletes them") {
+    val dir = tmp("feed-stale-staging")
+    // a crash mid-write leaves parquet in a hidden staging dir of an
+    // otherwise empty feed: Spark's listing skips it, so must the feed
+    batch(0, 5).write.parquet(s"$dir/.batch-0-crashed")
+    assert(Loader.readTableIfAny(spark, dir).isEmpty,
+      "staging files read as data: the feed has no visible file to infer a schema from")
+    Loader.writeBatchIdempotent(batch(0, 10), dir, 0L)
+    assert(!new java.io.File(s"$dir/.batch-0-crashed").exists, "the stale staging dir survived")
+    assert(rows(dir) == (0L until 10L).map(i => (i, i * 10)).toSet)
+  }
+
   test("crash after the commit marker rolls FORWARD: source partitions finish dying") {
     val dir = tmp("feed-rollfwd")
     for (b <- 0L until 3L) Loader.writeBatchIdempotent(batch(b * 10, b * 10 + 10), dir, b)
