@@ -143,13 +143,14 @@ object AnnIvf {
   }
 
   /** INCREMENTAL maintenance of the dir-based store. Per batch:
-    * assign the new vectors (batch-sized), anti-join against the PRE-batch
-    * sidecar (store side bucketed on vec_id ⇒ zero exchange; only the
-    * batch's ids shuffle), then rewrite the batch's own `_batch` partition
-    * in BOTH tables. Idempotency is structural: a replay overwrites its own
-    * partitions with identical content no matter which of the two writes a
-    * crash fell between, because the anti-join reads the PRE-batch snapshot
-    * (`_batch =!= batchId`), never the batch's own half-committed rows.
+    * assign the new vectors (batch-sized), anti-join against the
+    * strictly-earlier sidecar (store side bucketed on vec_id ⇒ zero
+    * exchange; only the batch's ids shuffle), then rewrite the batch's own
+    * `_batch` partition in BOTH tables. Idempotency is structural: a
+    * replay overwrites its own partitions with identical content no matter
+    * which of the two writes a crash fell between, because the anti-join
+    * reads the strictly-earlier snapshot (`IndexTables.priorIds`), never
+    * the batch's own half-committed rows or a later batch's.
     * First arrival wins across batches (insert-only contract, like the LSH
     * signature store). AnnIvfStoreSpec pins the flat-work law: per-batch
     * shuffle records stay flat as the accumulated index doubles.
@@ -158,9 +159,9 @@ object AnnIvf {
       dir: String, batchId: Long, buckets: Int = 0): Unit =
     appendFresh(batch, centroids, dir, batchId, buckets, codes = None)
 
-  /** The batch's fresh vectors (anti-joined against the PRE-batch sidecar),
-    * assigned once and appended as the batch's own partition in every
-    * table, `codes` (the PQ encoder) adding the codes sidecar — the
+  /** The batch's fresh vectors (anti-joined against the strictly-earlier
+    * sidecar), assigned once and appended as the batch's own partition in
+    * every table, `codes` (the PQ encoder) adding the codes sidecar — the
     * order-independent appends overlap as concurrent driver jobs
     * (guide §2.6).
     */
@@ -212,8 +213,8 @@ object AnnIvf {
     * ingest (one in-row projection — the vector twin of the tokenizer's
     * encode-at-ingest leg) and appended as the batch's own partition in
     * all three tables. Same idempotence story: each write is a partition
-    * rewrite over the PRE-batch snapshot, so replay from any crash point
-    * (including between the three writes) converges.
+    * rewrite over the strictly-earlier snapshot, so replay from any crash
+    * point (including between the three writes) converges.
     */
   def appendToIndexStorePq(batch: DataFrame, centroids: Array[Array[Double]],
       dir: String, batchId: Long, buckets: Int = 0,

@@ -56,16 +56,16 @@ object BloomFilter {
       .distinct()
 
   /** Ingest one micro-batch: its delta as a replay-idempotent `_batch`
-    * partition (the CMS feed discipline — markers skip committed batches,
-    * a replay rewrites its own partition). Stream it through
-    * `IndexTables(feeds = Seq(feedDir)).sink(n)` to fold the feed every n
-    * batches (content-preserving: the fold is a set union either way, and
-    * union is idempotent).
+    * partition (the CMS feed discipline — a replay rewrites its own
+    * partition, a folded batch no-ops at the feed frontier). Stream it
+    * through `IndexTables(feeds = Seq(feedDir)).sink(n)` to fold the feed
+    * every n batches (content-preserving: the fold is a set union either
+    * way, and union is idempotent).
     */
   def ingestBatch(batch: DataFrame, keyCol: String, feedDir: String,
-      batchId: Long, markersDir: String = null, k: Int = 4, m: Int = 2048): Unit =
+      batchId: Long, k: Int = 4, m: Int = 2048): Unit =
     graft.streaming.Loader.writeBatchIdempotent(
-      delta(batch, keyCol, k, m), feedDir, batchId, markersDir)
+      delta(batch, keyCol, k, m), feedDir, batchId)
 
   /** Membership probes for a frame of keys against the maintained feed:
     * fold the deltas to the occupied-position set (≤ m rows, broadcast),

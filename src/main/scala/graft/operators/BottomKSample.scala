@@ -62,9 +62,9 @@ object BottomKSample {
     * the DISTINCT inside [[fold]] absorbs keys repeated across batches).
     */
   def ingestBatch(batch: DataFrame, keyCol: String, feedDir: String,
-      batchId: Long, markersDir: String = null, k: Int = 64): Unit =
+      batchId: Long, k: Int = 64): Unit =
     graft.streaming.Loader.writeBatchIdempotent(
-      delta(batch, keyCol, k), feedDir, batchId, markersDir)
+      delta(batch, keyCol, k), feedDir, batchId)
 
   /** The maintained sample: fold the feed to the global bottom-k (distinct
     * keys first — the same key may appear in several batch deltas), ranked

@@ -228,18 +228,16 @@ object BpeTrainer {
     * (train offline with [[train]], ship the merge table, tokenize every
     * micro-batch the moment it arrives): a foreachBatch sink running
     * [[encode]] on the batch and writing (doc_id, syms) idempotently via
-    * `Loader.writeBatchIdempotent` (`_batch` partition rewrite + commit
-    * marker — an at-least-once replay rewrites its own partition). Because
-    * [[encode]] is per-row (one shuffle-free projection, model inlined as
-    * literals), the union of per-batch outputs is byte-identical to
-    * encoding the whole corpus in one batch — which is exactly what the
-    * q269 gate pins against q261's oracle. `markersDir` follows the
-    * writeBatchIdempotent contract (tie it to the checkpoint).
+    * `Loader.writeBatchIdempotent` (an at-least-once replay rewrites its
+    * own `_batch` partition). Because [[encode]] is per-row (one
+    * shuffle-free projection, model inlined as literals), the union of
+    * per-batch outputs is byte-identical to encoding the whole corpus in
+    * one batch — which is exactly what the q269 gate pins against q261's
+    * oracle.
     */
-  def encodeSink(merges: Seq[Merge], outDir: String, markersDir: String = null)
-      : (DataFrame, Long) => Unit = (batch, id) =>
-    graft.streaming.Loader.writeBatchIdempotent(
-      encode(batch.select(col("doc_id"), col("text")), merges), outDir, id, markersDir)
+  def encodeSink(merges: Seq[Merge], outDir: String): (DataFrame, Long) => Unit =
+    (batch, id) => graft.streaming.Loader.writeBatchIdempotent(
+      encode(batch.select(col("doc_id"), col("text")), merges), outDir, id)
 
   /** A Spark SQL string literal for a DATA-DERIVED symbol: backslashes must
     * be doubled BEFORE quote-doubling — Spark's parser processes backslash

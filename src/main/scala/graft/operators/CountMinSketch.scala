@@ -40,15 +40,15 @@ object CountMinSketch {
   }
 
   /** Ingest one micro-batch: write its sketch delta as a replay-idempotent
-    * `_batch` partition (at-least-once safe — the feed rewrites its own
-    * partition, markers skip committed batches). Stream it through
-    * `IndexTables(feeds = Seq(feedDir)).sink(n)` to fold the feed every n
-    * batches (content-preserving: the fold is a sum either way).
+    * `_batch` partition (at-least-once safe — a replay rewrites its own
+    * partition, a folded batch no-ops at the feed frontier). Stream it
+    * through `IndexTables(feeds = Seq(feedDir)).sink(n)` to fold the feed
+    * every n batches (content-preserving: the fold is a sum either way).
     */
   def ingestBatch(batch: DataFrame, keyCol: String, feedDir: String,
-      batchId: Long, markersDir: String = null, d: Int = 4, w: Int = 1024): Unit =
+      batchId: Long, d: Int = 4, w: Int = 1024): Unit =
     graft.streaming.Loader.writeBatchIdempotent(
-      delta(batch, keyCol, d, w), feedDir, batchId, markersDir)
+      delta(batch, keyCol, d, w), feedDir, batchId)
 
   /** SKETCH-THEN-VERIFY heavy-hitter ingest — the standard production
     * composition of the maintained sketch (q273) and exact verification
@@ -77,20 +77,13 @@ object CountMinSketch {
     */
   def ingestHeavyHitters(batch: DataFrame, keyCol: String, feedDir: String,
       candDir: String, threshold: Long, batchId: Long,
-      markersDir: String = null, d: Int = 4, w: Int = 1024): Unit = {
+      d: Int = 4, w: Int = 1024): Unit = {
     val spark = batch.sparkSession
-    ingestBatch(batch, keyCol, feedDir, batchId, markersDir, d, w)
+    ingestBatch(batch, keyCol, feedDir, batchId, d, w)
     val cands = estimates(spark, feedDir,
         batch.select(col(keyCol)).distinct(), keyCol, d, w)
       .filter(col("est") >= threshold)
-    // the candidates feed follows the SAME marker regime as the sketch
-    // feed (a sibling of the caller's markersDir — distinct from the
-    // sketch's own `_committed_N` names): if one is checkpoint-tied, both
-    // are, so a marker-reset reprocess re-runs BOTH writes and the
-    // superset guarantee can never be broken by half-stale markers.
-    val candMarkers =
-      if (markersDir == null) null else markersDir.stripSuffix("/") + "_cand"
-    graft.streaming.Loader.writeBatchIdempotent(cands, candDir, batchId, candMarkers)
+    graft.streaming.Loader.writeBatchIdempotent(cands, candDir, batchId)
   }
 
   /** The EXACT heavy hitters: count only the candidate keys the sketch

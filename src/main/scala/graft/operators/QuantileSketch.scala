@@ -65,14 +65,15 @@ object QuantileSketch {
       .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
 
   /** Ingest one micro-batch: replay-idempotent `_batch` partition write of
-    * the delta (at-least-once safe; markers + feed frontier skip replays).
+    * the delta (at-least-once safe: a replay rewrites its own partition, a
+    * folded batch no-ops at the feed frontier).
     * Stream it through `IndexTables(feeds = Seq(feedDir)).sink(n)` to fold
     * the feed every n batches.
     */
   def ingestBatch(batch: DataFrame, valueCol: String, feedDir: String,
-      batchId: Long, markersDir: String = null): Unit =
+      batchId: Long): Unit =
     graft.streaming.Loader.writeBatchIdempotent(
-      delta(batch, valueCol), feedDir, batchId, markersDir)
+      delta(batch, valueCol), feedDir, batchId)
 
   /** The cumulative sketch: fold the delta feed (one sketch-sized GROUP BY). */
   def fold(spark: SparkSession, feedDir: String): DataFrame =

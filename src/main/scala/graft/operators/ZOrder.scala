@@ -81,9 +81,9 @@ object ZOrder {
     * restore. ZOrderStoreSpec pins decay → restore by bytes touched.
     */
   def ingestBatchZ(batch: DataFrame, xCol: Column, yCol: Column, bits: Int,
-      files: Int, dir: String, batchId: Long, markersDir: String = null): Unit =
+      files: Int, dir: String, batchId: Long): Unit =
     graft.streaming.Loader.writeBatchIdempotent(
-      clusterByZ(batch, xCol, yCol, bits, files), dir, batchId, markersDir)
+      clusterByZ(batch, xCol, yCol, bits, files), dir, batchId)
 
   /** Z-ORDER MAINTENANCE, restore side: fold the per-batch partitions and
     * re-run the GLOBAL z-layout over the consolidation (the `rewrite` hook

@@ -725,8 +725,7 @@ object DedupQueries extends QueryModule {
         // width per the bucket-width law — the gate's 8-cpu harness still
         // lands on 8, and the decade runs get 32/320
         Replay(s, base, docs, "append", confs = Nil,
-          sink = Some(graft.streaming.LshIndex.nearDupSink(
-            s"$base/store", pairs, Replay.commitMarkers(base))))(identity)
+          sink = Some(graft.streaming.LshIndex.nearDupSink(s"$base/store", pairs)))(identity)
         graft.streaming.Loader.readTable(s, pairs)
           .orderBy(col("id_a"), col("id_b"))
       },
@@ -751,8 +750,7 @@ object DedupQueries extends QueryModule {
         val (idx, hits) = (s"$base/idx", s"$base/hits")
         graft.streaming.LshIndex.buildStaticIndex(bench, idx)
         Replay(s, base, corpus, "append",
-          sink = Some(graft.streaming.LshIndex.decontaminateSink(
-            idx, hits, Replay.commitMarkers(base))))(identity)
+          sink = Some(graft.streaming.LshIndex.decontaminateSink(idx, hits)))(identity)
         graft.streaming.Loader.readTable(s, hits)
           .orderBy(col("doc_id"), col("bench_id"))
       },

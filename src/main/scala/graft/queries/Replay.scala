@@ -33,11 +33,6 @@ object Replay {
     */
   val Conf: (String, String) = "spark.sql.shuffle.partitions" -> "8"
 
-  /** The loader's commit-marker dir under the replay's checkpoint, for a
-    * sink that lands through [[graft.streaming.Loader.writeBatchIdempotent]].
-    */
-  def commitMarkers(base: String): String = s"$base/ck/graft_commits"
-
   /** Replays `input` as 4 parquet files (`repartition(4)`) in arbitrary
     * order and returns the default sink's dir.
     */

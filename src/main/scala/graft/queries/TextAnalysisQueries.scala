@@ -417,7 +417,7 @@ object TextAnalysisQueries extends QueryModule {
         val docs = Tables.load(s, dir, "documents").select("doc_id", "text")
         val model = graft.operators.BpeTrainer.train(s, docs, 3)
         val base = SharedStages.scratchDir("q269")
-        val sink = graft.operators.BpeTrainer.encodeSink(model, s"$base/toks", s"$base/mk")
+        val sink = graft.operators.BpeTrainer.encodeSink(model, s"$base/toks")
         for (b <- 0L until 4L)
           sink(docs.filter(pmod(col("doc_id"), lit(4L)) === b), b)
         graft.streaming.Loader.readTable(s, s"$base/toks")

@@ -181,10 +181,10 @@ object BatchLog {
     f.delete(new Path(scratch), true)
     val expect = layout.source(spark) { src =>
       // `_src_batch` (each row's original batch id) rides through as a data
-      // column, so strictly-earlier, exclude-own-batch and by-revision reads
-      // survive the fold; legacy rows materialize it from their partition
-      // id, and rows inside a legacy consolidation keep its negative id
-      // ("earlier than everything")
+      // column, so strictly-earlier and by-revision reads survive the fold;
+      // legacy rows materialize it from their partition id, and rows inside
+      // a legacy consolidation keep its negative id ("earlier than
+      // everything")
       val all = src.filter(col("_batch") < 0 || col("_batch") <= upTo)
       val rows = (
         if (all.columns.contains("_src_batch"))

@@ -118,11 +118,10 @@ object BucketedStore {
     * None ⇔ the dir holds no data (or holds a layout this store cannot
     * claim — not bucket-named files, missing bucket columns; the caller
     * owns any legacy fallback). The frame includes the batch bookkeeping
-    * columns; take snapshots through [[excludeBatch]] (pre-batch) or
-    * [[strictlyBefore]] (strictly earlier) — NEVER a bare
-    * `col("_batch") =!= batchId`, which anti-joins a replayed batch
-    * against its own rows once a compaction has folded them (the helpers
-    * read `_src_batch`, which survives the fold).
+    * columns; take a batch's snapshot through [[strictlyBefore]] — NEVER a
+    * bare `col("_batch") < batchId`, which anti-joins a replayed batch
+    * against its own rows once a compaction has folded them (the helper
+    * reads `_src_batch`, which survives the fold).
     */
   def read(spark: SparkSession, spec: StoreSpec): Option[DataFrame] = {
     val pending = BatchLog.pending(spark, spec.dir, BatchLog.StoreMarkers)
@@ -282,18 +281,6 @@ object BucketedStore {
     */
   def strictlyBefore(df: DataFrame, batchId: Long): DataFrame =
     df.filter(col("_batch") < batchId && srcBatchCol(df) < batchId)
-
-  /** The PRE-BATCH snapshot of a store frame: everything except the batch's
-    * own rows — by ORIGINAL batch id, so a replay after compaction still
-    * excludes its own (now folded) rows instead of anti-joining against
-    * itself.
-    *
-    * Like [[strictlyBefore]], the `_batch =!= batchId` conjunct is
-    * redundant but prunes the batch's own partition at planning — the
-    * concurrent-rewrite safety property.
-    */
-  def excludeBatch(df: DataFrame, batchId: Long): DataFrame =
-    df.filter(col("_batch") =!= batchId && srcBatchCol(df) =!= batchId)
 
   /** The store's compaction FRONTIER ([[BatchLog.frontier]]): a replayed
     * batch at or below it is already inside the store, so [[appendBatch]]

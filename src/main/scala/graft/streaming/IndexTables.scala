@@ -47,16 +47,17 @@ final case class IndexTables(stores: Seq[StoreSpec] = Nil, feeds: Seq[String] = 
 
 object IndexTables {
 
-  /** First-arrival-wins ids: the PRE-batch snapshot of an id sidecar (its
-    * bucket columns), by original batch id ([[BucketedStore.excludeBatch]]),
-    * so a replay anti-joins against what the first run saw, never its own
-    * half-written rows. Empty, shaped like `batch`'s ids, before the
-    * sidecar exists.
+  /** First-arrival-wins ids: the STRICTLY-EARLIER snapshot of an id
+    * sidecar (its bucket columns), by original batch id
+    * ([[BucketedStore.strictlyBefore]]), so a replay anti-joins against
+    * exactly what the first run saw: never its own half-written rows, nor
+    * a later batch's. Empty, shaped like `batch`'s ids, before the sidecar
+    * exists.
     */
   def priorIds(batch: DataFrame, ids: StoreSpec, batchId: Long): DataFrame = {
     val key = ids.bucketCols.map(col)
     BucketedStore.read(batch.sparkSession, ids) match {
-      case Some(st) => BucketedStore.excludeBatch(st, batchId).select(key: _*)
+      case Some(st) => BucketedStore.strictlyBefore(st, batchId).select(key: _*)
       case None => batch.select(key: _*).limit(0)
     }
   }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -21,9 +20,10 @@ import graft.model.Tables
   *    guarantee is the same post-commit one the reference has, with a lag.
   *
   * Exactly-once upgrade (the reference double-loads on S3 event redelivery):
-  * each batch writes to a `_batch=<id>` subdirectory of the table and drops a
-  * commit marker; a replayed batchId sees its marker and skips. Readers see
-  * the table as plain partitioned Parquet.
+  * each batch writes to a `_batch=<id>` subdirectory of the table; a
+  * replayed batchId rewrites that partition with the same rows, and a batch
+  * already folded by [[compactBatches]] no-ops at the feed's frontier.
+  * Readers see the table as plain partitioned Parquet.
   */
 object Loader {
 
@@ -45,7 +45,7 @@ object Loader {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        writeBatchIdempotent(df, tableDir, batchId, s"$checkpointDir/graft_commits")
+        writeBatchIdempotent(df, tableDir, batchId)
       }
       .start()
   }
@@ -62,48 +62,48 @@ object Loader {
     * not used on this path. An empty batch lands no file, so an empty feed
     * stays file-less ([[readTableIfAny]]).
     *
-    * Commit markers live under `markersDir`, which `start` ties to the
-    * CHECKPOINT — not the table — so resetting the checkpoint (a routine
-    * reprocess) also resets the markers: replayed batchIds then re-run and
-    * overwrite their own `_batch=` partitions instead of being
-    * silently skipped against a stale marker. ONE carve-out since the
-    * round-12 frontier: batches already FOLDED by [[compactBatches]]
-    * (real ids at/below the feed's frontier) stay skipped even after a
-    * marker reset — their rows live inside a consolidated partition that
-    * a partition overwrite cannot replace, so a rewrite would duplicate,
-    * and the skip is what makes an old-checkpoint restore converge. A
-    * DELIBERATE reprocess that must change folded data therefore targets
-    * a fresh (or cleared) table dir — which was already true before the
-    * frontier existed: reprocessing different rows into a compacted feed
-    * would land them next to the fold, not replace it.
+    * Replay has one rule, the same for every `_batch` table
+    * ([[BucketedStore.appendBatch]] too). A replayed batch REWRITES its own
+    * `_batch=<id>` partition: sound because batch content is deterministic,
+    * and a sink that derives the batch's rows from other tables reads them
+    * through the strictly-earlier snapshot
+    * ([[BucketedStore.strictlyBefore]]), so a replay recomputes exactly the
+    * original partition. A batch already FOLDED by [[compactBatches]] (a
+    * real id at/below the feed's frontier) is a no-op instead: its rows
+    * live inside a consolidated partition that a partition rewrite cannot
+    * replace, so a rewrite would duplicate, and the skip is what makes an
+    * old-checkpoint restore converge. A DELIBERATE reprocess that must
+    * change folded data therefore targets a fresh (or cleared) table dir:
+    * reprocessing different rows into a compacted feed would land them
+    * next to the fold, not replace it.
     *
     * `df` MUST derive from the SOURCE (as it does inside foreachBatch) —
     * never from the target table: the commit deletes the very files a
     * target-derived scan of the batch's partition would be reading.
     */
   def writeBatchIdempotent(
-      df: org.apache.spark.sql.DataFrame, tableDir: String, batchId: Long,
-      markersDir: String = null): Unit = {
+      df: org.apache.spark.sql.DataFrame, tableDir: String, batchId: Long): Unit = {
     val spark = df.sparkSession
-    val mdir = if (markersDir == null) tableDir else markersDir
-    val marker = new Path(mdir, s"_committed_$batchId")
-    // markers may live on a different filesystem than the table (checkpoint
-    // on HDFS, table on S3) — resolve the FS from the marker path itself
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     BatchLog.recover(spark, feed(tableDir))
-    // a MARKER-LESS replay of a folded batch (an old checkpoint restored
-    // after maintenance compaction resets the checkpoint-tied markers) must
-    // not re-append its rows next to the folded copy: the frontier guard
-    if (!fs.exists(marker) &&
-        !BatchLog.replayed(spark, tableDir, BatchLog.FeedMarkers, batchId)) {
+    // a replay of a folded batch must not re-append its rows next to the
+    // folded copy: the frontier guard
+    if (!BatchLog.replayed(spark, tableDir, BatchLog.FeedMarkers, batchId)) {
       // `_src_batch` survives feed compaction; not lit(batchId): an inlined
       // literal compiles new classes per trigger
       BatchPartitionWriter.write(
         df.withColumn("_src_batch", graft.functions.LongParam.column(batchId)),
         tableDir, batchId)
-      fs.create(marker, true).close()
     }
   }
+
+  /** The former four-argument shape; the fourth argument is ignored.
+    * Kept only because the benchmark harness (`perfbench/scala/Harness.scala`)
+    * calls this shape; delete it together with that call.
+    */
+  @deprecated("replay needs no marker dir; call writeBatchIdempotent(df, tableDir, batchId)", "0.1.0")
+  def writeBatchIdempotent(df: org.apache.spark.sql.DataFrame, tableDir: String,
+      batchId: Long, ignoredDir: String): Unit =
+    writeBatchIdempotent(df, tableDir, batchId)
 
   /** Read the loaded table back (hides the `_batch` bookkeeping column).
     * Reads are NON-MUTATING: a compaction that is pending (in-flight in
@@ -149,12 +149,10 @@ object Loader {
     * (maintenance sinks pass their just-committed batch id; MaxValue folds
     * the whole feed).
     *
-    * Replay contract: a batch replayed AFTER its partition was folded is
-    * skipped twice over — by its commit marker when it survives (markers
-    * are untouched here), and by the feed's frontier even when the markers
-    * were reset with a restored checkpoint (FeedCompactionSpec pins the
-    * marker-less case). `_src_batch` rides through the fold so by-revision
-    * reads stay addressable.
+    * Replay contract: a batch replayed AFTER its partition was folded
+    * no-ops at the feed's frontier (FeedCompactionSpec pins it).
+    * `_src_batch` rides through the fold so by-revision reads stay
+    * addressable.
     *
     * `rewrite` lets the caller re-LAYOUT the consolidation while it is
     * being staged (e.g. a global Z-order re-sort restoring locality that

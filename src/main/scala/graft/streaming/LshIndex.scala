@@ -23,20 +23,20 @@ import graft.queries.{DedupQueries, Protocol}
   *
   * Failure model: foreachBatch is at-least-once, so EVERY write of the
   * batch is independently idempotent — pairs go through
-  * `Loader.writeBatchIdempotent` (`_batch` partition replace + commit
-  * marker), and the signature store and its id sidecar are
-  * [[BucketedStore]]s whose per-batch append REWRITES the batch's own
-  * `_batch` partition. Both per-batch reads take the PRE-batch snapshot
-  * by ORIGINAL batch id ([[BucketedStore.excludeBatch]] — `_src_batch`
-  * survives compaction), so a replayed batch sees exactly what the
-  * original run saw no matter where the crash fell: after the pair write
-  * (marker skips it, store partitions rewrite to identical content),
-  * between the two store writes (each partition rewrite converges
-  * independently — the crash window the round-9 bare `mode("append")`
-  * layout had, where a replay re-appended already-stored banded rows), or
-  * before anything committed (clean re-run). A replay ACROSS a
-  * maintenance compaction (old checkpoint restored after the fold)
-  * no-ops at the store/feed frontier markers — LshIndexSpec pins it.
+  * `Loader.writeBatchIdempotent`, and the signature store and its id
+  * sidecar are [[BucketedStore]]s; each per-batch write REWRITES the
+  * batch's own `_batch` partition. Both per-batch reads take the
+  * STRICTLY-EARLIER snapshot by ORIGINAL batch id
+  * ([[BucketedStore.strictlyBefore]] — `_src_batch` survives compaction),
+  * so a replayed batch sees exactly what the original run saw no matter
+  * where the crash fell — after the pair write, between the two store
+  * writes (the crash window the round-9 bare `mode("append")` layout had,
+  * where a replay re-appended already-stored banded rows), before
+  * anything committed, or with LATER batches already stored (an
+  * old-checkpoint restore): every partition rewrites to its original
+  * content. A replay ACROSS a maintenance compaction (old checkpoint
+  * restored after the fold) no-ops at the store/feed frontiers —
+  * LshIndexSpec pins both.
   *
   * 100 TB shape: candidate generation is the banded equi-join — never
   * all-pairs — and per-batch cost is the batch's own signing plus one probe
@@ -134,20 +134,16 @@ object LshIndex {
 
   /** One micro-batch against the index: emit every pair this batch
     * completes into `pairsDir`, then append the batch's signatures to
-    * `storeDir`. Idempotent on replay (see object doc). `markersDir`
-    * follows `writeBatchIdempotent`'s contract — tie it to the CHECKPOINT
-    * so a checkpoint reset also resets the pair commit markers.
-    * `buckets` sizes a store that does not exist yet (0 = the session-
-    * derived width of the bucket-width law); an existing dir's stamped
-    * width always wins.
+    * `storeDir`. Idempotent on replay (see object doc). `buckets` sizes a
+    * store that does not exist yet (0 = the session-derived width of the
+    * bucket-width law); an existing dir's stamped width always wins.
     */
   def processBatch(batch: DataFrame, storeDir: String, pairsDir: String,
-      batchId: Long, markersDir: String = null,
-      threshold: Double = 0.5, buckets: Int = 0): Unit = {
+      batchId: Long, threshold: Double = 0.5, buckets: Int = 0): Unit = {
     val spark = batch.sparkSession
     val width = BucketedStore.resolveWidth(spark, buckets)
     val bbanAll = banded(signatures(batch.select("doc_id", "text")))
-    val storeBan = storeOrEmpty(spark, storeDir, bbanAll, batchId, width)
+    val storeBan = storeOrEmpty(spark, storeDir, bbanAll, Some(batchId), width)
     // Re-arrivals (a doc_id already in the store arriving again in a LATER
     // batch, not just a replay) are no-ops BY CONSTRUCTION: the probe side
     // is anti-joined against the stored doc_ids before any pair is
@@ -159,9 +155,9 @@ object LshIndex {
     // against the banded store (bucketed on the band keys) would re-shuffle
     // store-sized doc_id rows every batch — the growth term LshIndexSpec's
     // flat-work law caught when this was a distinct() over the main store.
-    // Both snapshots EXCLUDE the batch's own partition (`_batch =!=
-    // batchId`), so a replay after a partial commit anti-joins against the
-    // pre-batch state, not its own half-written rows.
+    // Both snapshots are STRICTLY EARLIER than the batch, so a replay
+    // anti-joins against the state the first run saw, never its own
+    // half-written rows or a later batch's.
     val bban = bbanAll
       .join(storedIds(spark, storeDir, storeBan, batchId, width), Seq("doc_id"), "left_anti")
     // materialized once; probed up to twice below
@@ -177,12 +173,12 @@ object LshIndex {
       // independently replay-idempotent — no cross-write crash window;
       // that same independence lets the pairs publish and both appends
       // overlap as concurrent driver jobs (guide §2.6). The pairs job
-      // scans the PRE-batch store snapshot (`_batch =!= batchId`), so the
-      // store append landing its partition mid-overlap is invisible to it.
+      // scans the strictly-earlier store snapshot, so the store append
+      // landing its partition mid-overlap is invisible to it.
       val fresh = bban.dropDuplicates("doc_id", "band_idx")
         .select(col("doc_id"), col("sig"), col("band_idx"), col("band"))
       Seq(
-        () => Loader.writeBatchIdempotent(pairs, pairsDir, batchId, markersDir),
+        () => Loader.writeBatchIdempotent(pairs, pairsDir, batchId),
         () => BucketedStore.appendBatch(fresh, storeSpec(storeDir, width), batchId),
         // id sidecar (batch-sized write): keeps the NEXT batch's re-arrival
         // anti-join exchange-free on the store side
@@ -195,7 +191,7 @@ object LshIndex {
   private def idsDir(storeDir: String): String =
     storeDir.stripSuffix("/") + "_ids"
 
-  /** The stored doc_id set for the re-arrival anti-join (pre-batch
+  /** The stored doc_id set for the re-arrival anti-join (strictly-earlier
     * snapshot) — the bucketed id sidecar when present; derived from the
     * banded rows otherwise (one store-sized pass, only ever on a
     * legacy/foreign store dir).
@@ -204,7 +200,7 @@ object LshIndex {
       storeDir: String, storeBan: DataFrame, batchId: Long, width: Int): DataFrame =
     BucketedStore.read(spark, idsSpec(storeDir, width)) match {
       case Some(ids) =>
-        BucketedStore.excludeBatch(ids, batchId).select(col("doc_id"))
+        BucketedStore.strictlyBefore(ids, batchId).select(col("doc_id"))
       case None =>
         val p = new org.apache.hadoop.fs.Path(idsDir(storeDir))
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -219,22 +215,23 @@ object LshIndex {
     */
   def storeTable(storeDir: String): String = BucketedStore.tableName(storeDir)
 
-  /** The banded store's pre-batch snapshot: the registered bucketed table
-    * when available (re-registered on the fly after a restart — the
-    * exchange-free layout survives sessions). A FIRST-GENERATION layout
-    * (one plain-parquet row per doc, no band columns) is MIGRATED in place
-    * on first open — re-banded and rewritten into the bucketed layout, id
-    * sidecar included — because appending the current layout next to
-    * legacy files would leave an unreadable mixed dir, and serving the
-    * probe from an un-banded plain read would re-shuffle the store every
-    * batch (the growth term this store exists to kill). A foreign dir that
-    * is already banded but not bucket-claimable stays a read-only plain
-    * fallback.
+  /** The banded store's snapshot strictly before batch `before` (None: the
+    * whole store — a static index, or the backfill's corpus): the
+    * registered bucketed table when available (re-registered on the fly
+    * after a restart — the exchange-free layout survives sessions). A
+    * FIRST-GENERATION layout (one plain-parquet row per doc, no band
+    * columns) is MIGRATED in place on first open — re-banded and rewritten
+    * into the bucketed layout, id sidecar included — because appending the
+    * current layout next to legacy files would leave an unreadable mixed
+    * dir, and serving the probe from an un-banded plain read would
+    * re-shuffle the store every batch (the growth term this store exists
+    * to kill). A foreign dir that is already banded but not
+    * bucket-claimable stays a read-only plain fallback.
     */
   private def storeOrEmpty(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, like: DataFrame, batchId: Long, width: Int): DataFrame =
+      storeDir: String, like: DataFrame, before: Option[Long], width: Int): DataFrame =
     BucketedStore.read(spark, storeSpec(storeDir, width)) match {
-      case Some(df) => BucketedStore.excludeBatch(df, batchId)
+      case Some(df) => before.fold(df)(BucketedStore.strictlyBefore(df, _))
         .select(col("doc_id"), col("sig"), col("band_idx"), col("band"))
       case None =>
         val p = new org.apache.hadoop.fs.Path(storeDir)
@@ -255,7 +252,7 @@ object LshIndex {
             .select(col("doc_id"), col("sig"), col("band_idx"), col("band"))
         else {
           migrateLegacyStore(spark, storeDir, fs, topFiles, legacyQ, width)
-          storeOrEmpty(spark, storeDir, like, batchId, width)
+          storeOrEmpty(spark, storeDir, like, before, width)
         }
     }
 
@@ -294,9 +291,9 @@ object LshIndex {
     * `docs.writeStream.foreachBatch(LshIndex.nearDupSink(...))`, or through
     * [[tables]]`.sink(n)` to fold the index every n batches.
     */
-  def nearDupSink(storeDir: String, pairsDir: String, markersDir: String = null,
+  def nearDupSink(storeDir: String, pairsDir: String,
       threshold: Double = 0.5, buckets: Int = 0): (DataFrame, Long) => Unit =
-    (batch, id) => processBatch(batch, storeDir, pairsDir, id, markersDir, threshold, buckets)
+    (batch, id) => processBatch(batch, storeDir, pairsDir, id, threshold, buckets)
 
   /** Build a STATIC banded signature index over a bounded document set —
     * the same bucketed layout the streaming store uses, for PROBE-ONLY
@@ -318,23 +315,23 @@ object LshIndex {
     * Orientation is preserved (probe doc → benchmark doc), unlike
     * [[pairsBetween]]'s id-normalized pairs: the consumer drops/quarantines
     * the CORPUS side, never the benchmark. Stateless per batch — no store
-    * append — so replay safety is the pair write's marker protocol alone.
+    * append, and the whole static index is read — so a replay recomputes
+    * the same hits and rewrites its own `_batch` partition.
     *
     * 100 TB shape: per-batch cost is the batch's signing + one probe join
     * whose index side never shuffles (bucketed on the join keys); the
     * benchmark index is built once per benchmark revision.
     */
   def decontaminateSink(indexDir: String, hitsDir: String,
-      markersDir: String = null, threshold: Double = 0.5, buckets: Int = 0)
+      threshold: Double = 0.5, buckets: Int = 0)
       : (DataFrame, Long) => Unit = (batch, batchId) => {
     val spark = batch.sparkSession
     val bban = banded(signatures(batch.select("doc_id", "text")))
-    // static index: no own-batch partition to exclude (probe-only), so the
-    // snapshot filter uses an id no real batch carries
-    val idx = storeOrEmpty(spark, indexDir, bban, Long.MinValue,
+    // static index (probe-only): no batch snapshot, the whole index
+    val idx = storeOrEmpty(spark, indexDir, bban, None,
       BucketedStore.resolveWidth(spark, buckets))
     Loader.writeBatchIdempotent(
-      decontaminationHits(bban, idx, threshold), hitsDir, batchId, markersDir)
+      decontaminationHits(bban, idx, threshold), hitsDir, batchId)
   }
 
   /** Orientation-preserving (corpus doc → benchmark doc) hits between two
@@ -369,8 +366,9 @@ object LshIndex {
     *      ZERO exchange on either side — at 100 TB the backfill shuffles
     *      hits, never the corpus;
     *   3. PUBLISH the full hit set under the new revision as the hits
-    *      table's `_rev=<revisionId>` partition (writeBatchIdempotent's
-    *      marker protocol): a replay rewrites the same partition, and the
+    *      table's `_batch=<revisionId>` partition
+    *      (`Loader.writeBatchIdempotent`): a replay rewrites the same
+    *      partition with the hit set of the store as it then is, and the
     *      LATEST revision partition is always a complete, authoritative
     *      answer — consumers never merge across revisions.
     *
@@ -390,15 +388,14 @@ object LshIndex {
     */
   def backfillDecontaminate(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, bench: DataFrame, indexDir: String, hitsDir: String,
-      revisionId: Long, markersDir: String = null,
-      threshold: Double = 0.5, buckets: Int = 0): DataFrame = {
+      revisionId: Long, threshold: Double = 0.5, buckets: Int = 0): DataFrame = {
     val width = BucketedStore.resolveWidth(spark, buckets)
     buildStaticIndex(bench, indexDir, width)
     val corpusBan = storeOrEmpty(spark, storeDir,
-      banded(signatures(bench.select("doc_id", "text"))).limit(0), Long.MinValue, width)
-    val idx = storeOrEmpty(spark, indexDir, corpusBan, Long.MinValue, width)
+      banded(signatures(bench.select("doc_id", "text"))).limit(0), None, width)
+    val idx = storeOrEmpty(spark, indexDir, corpusBan, None, width)
     Loader.writeBatchIdempotent(
-      decontaminationHits(corpusBan, idx, threshold), hitsDir, revisionId, markersDir)
+      decontaminationHits(corpusBan, idx, threshold), hitsDir, revisionId)
     val hits = spark.read.parquet(hitsDir)
     // by ORIGINAL batch id, so the revision's hits stay addressable after a
     // feed compaction folds its partition into a consolidation

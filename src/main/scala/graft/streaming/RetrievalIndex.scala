@@ -31,9 +31,10 @@ import graft.functions.TextFunctions.tokens
   *     cost proportional to the MATCHED postings only.)
   *
   * Idempotency: every per-batch write is a partition REWRITE keyed by
-  * batchId, and per-batch reads take the pre-batch snapshot
-  * (`_batch =!= batchId`), so an at-least-once replay converges from any
-  * crash point — the [[BucketedStore]] failure model, no new reasoning.
+  * batchId, and per-batch reads take the strictly-earlier snapshot
+  * ([[BucketedStore.strictlyBefore]]), so an at-least-once replay
+  * converges from any crash point — the [[BucketedStore]] failure model,
+  * no new reasoning.
   *
   * 100 TB shape: INGEST is batch-sized (tokenize + one (doc,term)
   * aggregate + bucketed appends — per-batch shuffle flat in corpus

@@ -51,11 +51,12 @@ object PipelineDemo {
     val replayDf = sp.read.schema(graft.model.Tables.btcusdtTsvSchema)
       .option("sep", "\t").csv(s"$root/data_1_min/*/*.tsv")
       .withColumn("maker", col("maker") === 1)
-    Loader.writeBatchIdempotent(replayDf, s"$root/table", 0L, s"$root/cp_load/graft_commits")
+    Loader.writeBatchIdempotent(replayDf, s"$root/table", 0L)
     println("AFTER_REPLAY=" + Loader.readTable(sp, s"$root/table").count())
 
-    // stage 3: per-minute aggregate over the loaded table (the product query)
-    println("OHLC_MINUTES=" + table.groupBy(((unix_seconds($"time") / 60).cast("long") * 60).as("w"))
+    // stage 3: per-minute aggregate over the loaded table (the product
+    // query), read anew: the replay replaced the files `table` had listed
+    println("OHLC_MINUTES=" + Loader.readTable(sp, s"$root/table").groupBy(((unix_seconds($"time") / 60).cast("long") * 60).as("w"))
       .agg(count(lit(1)).as("n"), min("price"), max("price")).count())
 
     // stage 4: stateful running OHLC on the live stream (incremental batches)

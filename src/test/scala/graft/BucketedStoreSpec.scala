@@ -227,23 +227,23 @@ class BucketedStoreSpec extends AnyFunSuite {
     for (b <- 0L until 4L)
       BucketedStore.appendBatch(mk(b * 10, b * 10 + 10), s, b)
     val want = rows(s)
-    // strictly-earlier and pre-batch snapshots BEFORE the fold (baseline)
+    // strictly-earlier snapshot BEFORE the fold (baseline)
     def ks(df: org.apache.spark.sql.DataFrame) =
       df.select("k").collect().map(_.getLong(0)).toSet
     assert(ks(BucketedStore.strictlyBefore(BucketedStore.read(spark, s).get, 2L))
       == (0L until 20L).toSet)
     BucketedStore.compact(spark, s)
     assert(BucketedStore.compactionFrontier(spark, s.dir).contains(3L))
-    // the SAME snapshots after the fold: `_src_batch` keeps per-row batch
+    // the SAME reads after the fold: `_src_batch` keeps per-row batch
     // ids addressable though the partition structure is gone — this is what
     // lets an order-dependent reader (the dup-span history) replay exactly
     val st = BucketedStore.read(spark, s).get
     assert(ks(BucketedStore.strictlyBefore(st, 2L)) == (0L until 20L).toSet,
       "strictly-earlier snapshot did not survive compaction")
-    assert(ks(BucketedStore.excludeBatch(st, 2L))
+    assert(ks(st.filter(BucketedStore.srcBatchCol(st) =!= 2L))
       == ((0L until 20L) ++ (30L until 40L)).toSet,
-      "pre-batch snapshot did not survive compaction")
-    // marker-less replay of a FOLDED batch (old checkpoint restored after
+      "by-batch-id read did not survive compaction")
+    // replay of a FOLDED batch (old checkpoint restored after
     // maintenance compaction): a partition rewrite would put a second copy
     // next to the consolidation — the frontier makes it a no-op
     BucketedStore.appendBatch(mk(10, 20), s, 1L)
@@ -354,8 +354,8 @@ class BucketedStoreSpec extends AnyFunSuite {
     // r14 moved the dynamic overwrite into a conf-frozen CHILD session;
     // this pins it: many concurrent appends, the PARENT conf untouched
     // throughout, every store correct — including replays racing a
-    // same-table snapshot read (the strictlyBefore/excludeBatch
-    // partition-prune conjunct).
+    // same-table snapshot read (strictlyBefore's partition-prune
+    // conjunct).
     val confKey = "spark.sql.sources.partitionOverwriteMode"
     val before = spark.conf.getOption(confKey)
     val specs = (0 until 3).map(i => spec(tmpDir(s"bs-conc-$i")))

@@ -63,7 +63,7 @@ class CmsSketchSpec extends AnyFunSuite {
     for (b <- 0L until 3L) sink(all.filter(pmod(col("k"), lit(3L)) === b), b)
     val before = estMap(feed, all)
     // at-least-once replay of the last batch AFTER its delta was folded by
-    // the compaction: the commit marker skips the write — no double count
+    // the compaction: the feed frontier skips the write — no double count
     sink(all.filter(pmod(col("k"), lit(3L)) === 2L), 2L)
     assert(estMap(feed, all) == before, "replay across compaction changed the sketch")
     val parts = new java.io.File(feed).listFiles()

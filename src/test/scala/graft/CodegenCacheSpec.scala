@@ -84,7 +84,7 @@ class CodegenCacheSpec extends AnyFunSuite {
     val q = Ingest.toBtcusdt(ms.toDF()).writeStream
       .option("checkpointLocation", cp)
       .foreachBatch { (df: DataFrame, id: Long) =>
-        Loader.writeBatchIdempotent(df, table, id, s"$cp/markers") }
+        Loader.writeBatchIdempotent(df, table, id) }
       .start()
     val triggers = 12
     val counts = try (0 until triggers).map { k =>

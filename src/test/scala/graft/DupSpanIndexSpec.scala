@@ -64,13 +64,11 @@ class DupSpanIndexSpec extends AnyFunSuite {
     // maintenance compaction folds all three batches (store AND hits feed)
     BucketedStore.compact(spark, BucketedStore.StoreSpec(store, Seq("gh")))
     graft.streaming.Loader.compactBatches(spark, hits)
-    // a crash restores an OLD checkpoint: batch 1 replays, and the hits
-    // feed's _committed_1 marker is gone (markers are checkpoint-tied in a
-    // deployment — simulate by deleting it). The round-11 contract called
-    // this unsupported; now the strictly-earlier snapshot reads `_src_batch`
-    // THROUGH the consolidation (sees batch 0 only, never batch 2's grams)
-    // and both writes no-op at the compaction frontier.
-    new java.io.File(hits, "_committed_1").delete()
+    // a crash restores an OLD checkpoint: batch 1 replays. The round-11
+    // contract called this unsupported; now the strictly-earlier snapshot
+    // reads `_src_batch` THROUGH the consolidation (sees batch 0 only,
+    // never batch 2's grams) and both writes no-op at the compaction
+    // frontier.
     DupSpanIndex.ingestBatch(df(1L -> "p q r s t"), store, hits, 1L, width = 3)
     assert(spanSet(hits) == before,
       "cross-compaction replay changed the flagged spans")

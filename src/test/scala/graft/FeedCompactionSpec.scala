@@ -8,7 +8,7 @@ import graft.streaming.Loader
 /** Pins the `_batch`-collapse prune for the writeBatchIdempotent FEEDS
   * (hit/flag tables, per-batch delta rows) — the read-side file-count
   * growth term next to the index stores' own BucketedStore.compact:
-  * content-preserving, marker-respecting, crash-recovered on next read.
+  * content-preserving, frontier-respecting, crash-recovered on next read.
   */
 class FeedCompactionSpec extends AnyFunSuite {
   import TestSpark._
@@ -56,8 +56,8 @@ class FeedCompactionSpec extends AnyFunSuite {
     for (b <- 0L until 3L) Loader.writeBatchIdempotent(batch(b * 10, b * 10 + 10), dir, b)
     val before = rows(dir)
     Loader.compactBatches(spark, dir)
-    // at-least-once replay of batch 1: its _committed_1 marker lives at the
-    // table top level and compaction leaves markers alone — the write skips
+    // at-least-once replay of batch 1: the fold advanced the feed's
+    // frontier over it, so the write skips
     Loader.writeBatchIdempotent(batch(10, 20), dir, 1L)
     assert(rows(dir) == before, "replay across a compaction duplicated feed rows")
     assert(Loader.readTable(spark, dir).count() == 30L)
@@ -65,34 +65,29 @@ class FeedCompactionSpec extends AnyFunSuite {
 
   test("a MARKER-LESS replay after compaction is skipped at the feed frontier") {
     val dir = tmp("feed-frontier")
-    val mk = tmp("feed-frontier-mk")
     for (b <- 0L until 3L)
-      Loader.writeBatchIdempotent(batch(b * 10, b * 10 + 10), dir, b, mk)
+      Loader.writeBatchIdempotent(batch(b * 10, b * 10 + 10), dir, b)
     val before = rows(dir)
     Loader.compactBatches(spark, dir)
-    // an old checkpoint is restored: the checkpoint-TIED markers reset with
-    // it (that is the documented reprocess semantics of markersDir), so the
-    // marker guard is gone — the round-11 contract called this replay
-    // unsupported. The frontier marker (permanent, lives with the table)
-    // now skips it: the batch's rows already ride in the consolidation.
-    new java.io.File(mk).listFiles().foreach(_.delete())
-    Loader.writeBatchIdempotent(batch(10, 20), dir, 1L, mk)
+    // an old checkpoint is restored and batch 1 replays — the round-11
+    // contract called this unsupported. The frontier marker (permanent,
+    // lives with the table) skips it: the batch's rows already ride in the
+    // consolidation, which a partition rewrite cannot replace.
+    Loader.writeBatchIdempotent(batch(10, 20), dir, 1L)
     assert(rows(dir) == before,
       "marker-less replay across a compaction duplicated feed rows")
     // batches ABOVE the frontier still write normally
-    Loader.writeBatchIdempotent(batch(30, 40), dir, 3L, mk)
+    Loader.writeBatchIdempotent(batch(30, 40), dir, 3L)
     assert(rows(dir).size == 40)
   }
 
   test("BOUNDED feed fold (upTo) leaves a crash-partial later batch replayable") {
     val dir = tmp("feed-bounded")
-    val mk = tmp("feed-bounded-mk")
     for (b <- 0L until 2L)
-      Loader.writeBatchIdempotent(batch(b * 10, b * 10 + 10), dir, b, mk)
+      Loader.writeBatchIdempotent(batch(b * 10, b * 10 + 10), dir, b)
     // a pre-restore run wrote batch 4 halfway (3 of 10 rows), then an OLD
-    // checkpoint was restored — checkpoint-tied markers reset with it
-    Loader.writeBatchIdempotent(batch(40, 43), dir, 4L, mk)
-    new java.io.File(mk).listFiles().foreach(_.delete())
+    // checkpoint was restored
+    Loader.writeBatchIdempotent(batch(40, 43), dir, 4L)
     // mid-replay maintenance bounded at the just-committed batch 1: the
     // partial partition is neither folded nor frontier-covered (an
     // unbounded fold would make its replay a silent no-op — the partial
@@ -100,9 +95,8 @@ class FeedCompactionSpec extends AnyFunSuite {
     Loader.compactBatches(spark, dir, upTo = 1L)
     assert(partitions(dir).toSet == Set("_batch=-1", "_batch=4"),
       "bounded fold must consolidate only batches at/below the bound")
-    // the replay (marker-less: the restored checkpoint reset them) still
-    // REWRITES the partial partition whole
-    Loader.writeBatchIdempotent(batch(40, 50), dir, 4L, mk)
+    // the replay, above the frontier, REWRITES the partial partition whole
+    Loader.writeBatchIdempotent(batch(40, 50), dir, 4L)
     val want = ((0L until 20L) ++ (40L until 50L)).map(i => (i, i * 10)).toSet
     assert(rows(dir) == want,
       "replay after the bounded feed fold did not restore the full batch")
@@ -110,6 +104,22 @@ class FeedCompactionSpec extends AnyFunSuite {
     Loader.compactBatches(spark, dir, upTo = 4L)
     assert(partitions(dir).size == 1)
     assert(rows(dir) == want)
+  }
+
+  test("the feed root holds only `_batch=` dirs after 50 batches; an unfolded replay changes nothing") {
+    val dir = tmp("feed-flat")
+    for (b <- 0L until 50L) Loader.writeBatchIdempotent(batch(b * 2, b * 2 + 2), dir, b)
+    // every partition listing, `hasParquet` and reader walks the root, so
+    // nothing per batch may pile up next to the partitions
+    val root = new java.io.File(dir).list().toSeq.sorted
+    assert(root == (0 until 50).map(b => s"_batch=$b").sorted,
+      s"feed root holds more than its partitions: ${root.filterNot(_.startsWith("_batch=")).take(6)}")
+    val before = rows(dir)
+    assert(before.size == 100)
+    // an unfolded batch replays with the same rows: it rewrites its own
+    // partition, so the table reads as before
+    Loader.writeBatchIdempotent(batch(20, 22), dir, 10L)
+    assert(rows(dir) == before && Loader.readTable(spark, dir).count() == 100L)
   }
 
   test("the revision partition stays addressable after a feed compaction (_src_batch)") {

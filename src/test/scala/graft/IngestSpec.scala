@@ -166,14 +166,14 @@ class IngestSpec extends AnyFunSuite {
     Loader.start(spark, staging, table, archive, cp).awaitTermination()
     assert(Loader.readTable(spark, table).count() == 2)
 
-    // batchId replay: re-writing the same batch is a no-op (idempotent) —
-    // markers are scoped to the checkpoint, as Loader.start wires them;
-    // replay df derives from the SOURCE per the writeBatchIdempotent contract
+    // batchId replay: re-writing the same batch rewrites its own partition
+    // with the same rows (idempotent); the replay df derives from the
+    // SOURCE per the writeBatchIdempotent contract
     val df = spark.read.schema(Tables.btcusdtTsvSchema)
       .option("sep", "\t").csv(s"$staging/1700000040.tsv")
       .withColumn(
         "maker", org.apache.spark.sql.functions.col("maker") === 1)
-    Loader.writeBatchIdempotent(df, table, 0L, s"$cp/graft_commits")
+    Loader.writeBatchIdempotent(df, table, 0L)
     assert(Loader.readTable(spark, table).count() == 2)
 
     // a new file IS loaded (and only once), old rows intact

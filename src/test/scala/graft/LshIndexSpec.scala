@@ -53,17 +53,38 @@ class LshIndexSpec extends AnyFunSuite {
   test("replayed batch is idempotent: same pairs, no duplicate signatures") {
     val all = docs
     val (store, pairs) = (tmp("lsh-store2"), tmp("lsh-pairs2"))
-    val mk = tmp("lsh-markers")
-    LshIndex.processBatch(all.filter(col("doc_id").isin(1L, 3L)), store, pairs, 0L, mk)
-    LshIndex.processBatch(all.filter(col("doc_id").isin(2L, 4L, 5L)), store, pairs, 1L, mk)
+    LshIndex.processBatch(all.filter(col("doc_id").isin(1L, 3L)), store, pairs, 0L)
+    LshIndex.processBatch(all.filter(col("doc_id").isin(2L, 4L, 5L)), store, pairs, 1L)
     val before = pairSet(graft.streaming.Loader.readTable(spark, pairs))
     val sigsBefore = spark.read.parquet(store).count()
-    // at-least-once replay of batch 1: marker skips the pair write, the
-    // anti-join drops every already-stored signature
-    LshIndex.processBatch(all.filter(col("doc_id").isin(2L, 4L, 5L)), store, pairs, 1L, mk)
+    // at-least-once replay of batch 1: every write rewrites the batch's own
+    // partition from the strictly-earlier snapshot, so it lands the same rows
+    LshIndex.processBatch(all.filter(col("doc_id").isin(2L, 4L, 5L)), store, pairs, 1L)
     assert(pairSet(graft.streaming.Loader.readTable(spark, pairs)) == before)
     assert(spark.read.parquet(store).count() == sigsBefore)
     assert(spark.read.parquet(store).select("doc_id").distinct().count() == 5L)
+  }
+
+  test("an unfolded replay with a later batch stored re-emits no pair (strictly-earlier snapshot)") {
+    val all = docs
+    val (store, pairs) = (tmp("lsh-later-store"), tmp("lsh-later-pairs"))
+    // doc 1 lands in batch 1, its exact twin 4 in batch 2: batch 2
+    // completes the pair (batch×store), batch 1 emits nothing
+    val b1 = all.filter(col("doc_id") === 1L)
+    LshIndex.processBatch(all.filter(col("doc_id").isin(3L, 5L)), store, pairs, 0L)
+    LshIndex.processBatch(b1, store, pairs, 1L)
+    LshIndex.processBatch(all.filter(col("doc_id").isin(2L, 4L)), store, pairs, 2L)
+    val before = pairSet(graft.streaming.Loader.readTable(spark, pairs))
+    assert(before.exists(p => p._1 == 1L && p._2 == 4L), "twin pair expected")
+    // old checkpoint restored with no fold in between: batch 1 replays
+    // while batch 2's signatures are stored. Its probe must see batch 0
+    // only, as the first run did, or it re-emits 1×4 into `_batch=1`
+    LshIndex.processBatch(b1, store, pairs, 1L)
+    assert(pairSet(graft.streaming.Loader.readTable(spark, pairs)) == before)
+    val held = spark.read.parquet(pairs).groupBy("id_a", "id_b")
+      .agg(countDistinct(col("_batch")).as("n")).filter(col("n") > 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(held.isEmpty, s"pairs held by two `_batch=` partitions: ${held.mkString(", ")}")
   }
 
   test("per-batch work stays flat as the store grows (bucketed store, no re-shuffle)") {
@@ -102,8 +123,7 @@ class LshIndexSpec extends AnyFunSuite {
     import graft.streaming.BucketedStore
     val all = docs
     val (store, pairs) = (tmp("lsh-crash-store"), tmp("lsh-crash-pairs"))
-    val mk = tmp("lsh-crash-markers")
-    LshIndex.processBatch(all.filter(col("doc_id").isin(1L, 3L)), store, pairs, 0L, mk)
+    LshIndex.processBatch(all.filter(col("doc_id").isin(1L, 3L)), store, pairs, 0L)
     // simulate batch 1 crashing AFTER the pair write and the banded-store
     // append but BEFORE the id-sidecar append — the exact window ADVICE
     // flagged on the round-9 bare-append layout (a replay there re-appended
@@ -117,12 +137,12 @@ class LshIndexSpec extends AnyFunSuite {
     graft.streaming.Loader.writeBatchIdempotent(
       LshIndex.pairsBetween(bban1, bban1)
         .unionByName(LshIndex.pairsBetween(bban1, storeBan0))
-        .dropDuplicates("id_a", "id_b"), pairs, 1L, mk)
+        .dropDuplicates("id_a", "id_b"), pairs, 1L)
     BucketedStore.appendBatch(
       bban1.select("doc_id", "sig", "band_idx", "band"),
       BucketedStore.StoreSpec(store, Seq("band_idx", "band"), LshIndex.defaultBuckets(spark)), 1L)
     // at-least-once replay of the whole batch
-    LshIndex.processBatch(b1, store, pairs, 1L, mk)
+    LshIndex.processBatch(b1, store, pairs, 1L)
     // store: one row per (doc, band), never doubled; sidecar complete
     val st = spark.read.parquet(store)
     assert(st.count() == st.select("doc_id", "band_idx").distinct().count(),
@@ -222,8 +242,7 @@ class LshIndexSpec extends AnyFunSuite {
         concat_ws(" ", (0 to 11).map(i =>
           concat(lit(s"w$i"), (col("id") * 31 + i) % 9973)): _*).as("text"))
     val (store, pairs) = (tmp("lsh-ce-store"), tmp("lsh-ce-pairs"))
-    val mk = tmp("lsh-ce-markers")
-    val sink = LshIndex.tables(store, pairs).sink(2)(LshIndex.nearDupSink(store, pairs, mk))
+    val sink = LshIndex.tables(store, pairs).sink(2)(LshIndex.nearDupSink(store, pairs))
     for (b <- 0L until 6L) sink(mkDocs(b * 30, b * 30 + 30), b)
     val idsDir = store.stripSuffix("/") + "_ids"
     val files = BucketedStore.parquetFiles(spark, store).size +
@@ -256,21 +275,17 @@ class LshIndexSpec extends AnyFunSuite {
           concat(lit(s"w$i"),
             ((col("id") - pmod(col("id"), lit(2L))) * 31 + i) % 9973)): _*).as("text"))
     val (store, pairs) = (tmp("lsh-cross-store"), tmp("lsh-cross-pairs"))
-    val mk = tmp("lsh-cross-markers")
     for (b <- 0L until 3L)
-      LshIndex.processBatch(mkDocs(b * 30, b * 30 + 30), store, pairs, b, mk)
+      LshIndex.processBatch(mkDocs(b * 30, b * 30 + 30), store, pairs, b)
     val pairsBefore = spark.read.parquet(pairs)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     LshIndex.tables(store, pairs).compact(spark)
-    // old checkpoint restored: batch 1 replays with its checkpoint-tied
-    // pair marker GONE. The pair feed must skip at the frontier (a rewrite
-    // would re-emit batch 1's pairs next to the folded copy — and worse,
-    // the replay's probe snapshot now contains batch 2, so the re-emitted
-    // set would not even match the original); the store and sidecar
-    // appends must no-op the same way.
-    new java.io.File(mk, "_committed_1").delete()
-    LshIndex.processBatch(mkDocs(30, 60), store, pairs, 1L, mk)
+    // old checkpoint restored: batch 1 replays after the fold. The pair
+    // feed must skip at the frontier (a rewrite would re-emit batch 1's
+    // pairs next to the folded copy); the store and sidecar appends must
+    // no-op the same way.
+    LshIndex.processBatch(mkDocs(30, 60), store, pairs, 1L)
     assert(spark.read.parquet(pairs).select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet == pairsBefore,
       "cross-compaction replay changed the emitted pairs")
@@ -279,7 +294,7 @@ class LshIndexSpec extends AnyFunSuite {
     assert(st.count() == st.select("doc_id", "band_idx").distinct().count(),
       "cross-compaction replay duplicated banded store rows")
     // ingest continues above the frontier
-    LshIndex.processBatch(mkDocs(90, 120), store, pairs, 3L, mk)
+    LshIndex.processBatch(mkDocs(90, 120), store, pairs, 3L)
     assert(spark.read.parquet(store).select("doc_id").distinct().count() == 120L)
   }
 
@@ -293,7 +308,7 @@ class LshIndexSpec extends AnyFunSuite {
     val (store, pairs) = (tmp("lsh-width-store"), tmp("lsh-width-pairs"))
     // build at an explicit non-default width — the knob a 2x-larger cluster
     // turns; before this round the flagship store could only ever be 8
-    LshIndex.processBatch(mkDocs(0L, 200L), store, pairs, 0L, null, 0.5, buckets = 16)
+    LshIndex.processBatch(mkDocs(0L, 200L), store, pairs, 0L, 0.5, buckets = 16)
     def stamped(dir: String) = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, "_store_buckets")), "UTF-8").trim
     assert(stamped(store) == "16", "creation width must be stamped on the dir")
@@ -312,7 +327,7 @@ class LshIndexSpec extends AnyFunSuite {
     val all = docs
     val (store2, pairs2) = (tmp("lsh-width-store2"), tmp("lsh-width-pairs2"))
     LshIndex.processBatch(all.filter(col("doc_id").isin(1L, 3L)), store2, pairs2,
-      0L, null, 0.5, buckets = 16)
+      0L, 0.5, buckets = 16)
     LshIndex.processBatch(all.filter(col("doc_id").isin(2L, 4L, 5L)), store2, pairs2, 1L)
     val oneShot = pairSet(LshIndex.pairsBetween(
       LshIndex.banded(LshIndex.signatures(all)),
@@ -336,7 +351,6 @@ class LshIndexSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val (store, pairs, idx, hits) =
       (tmp("lsh-bf-store"), tmp("lsh-bf-pairs"), tmp("lsh-bf-idx"), tmp("lsh-bf-hits"))
-    val mk = tmp("lsh-bf-markers")
     // history ingests FIRST (builds the signature store)...
     LshIndex.processBatch(corpus.filter(col("doc_id") <= 2L), store, pairs, 0L)
     LshIndex.processBatch(corpus.filter(col("doc_id") === 3L), store, pairs, 1L)
@@ -344,16 +358,16 @@ class LshIndexSpec extends AnyFunSuite {
       df.select("doc_id", "bench_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     // ...revision 1 backfills: only doc 1 has a benchmark twin
-    val r1 = hitSet(LshIndex.backfillDecontaminate(spark, store, bench1, idx, hits, 1L, mk))
+    val r1 = hitSet(LshIndex.backfillDecontaminate(spark, store, bench1, idx, hits, 1L))
     assert(r1 == Set(1L -> 101L))
     // revision 2 adds bench 201 AFTER doc 2 was ingested: the backfill must
     // flag the PRE-EXISTING doc — the case ingest-time decontamination
     // alone can never catch
-    val r2 = hitSet(LshIndex.backfillDecontaminate(spark, store, bench2, idx, hits, 2L, mk))
+    val r2 = hitSet(LshIndex.backfillDecontaminate(spark, store, bench2, idx, hits, 2L))
     assert(r2 == Set(1L -> 101L, 2L -> 201L))
-    // at-least-once replay of revision 2 rewrites nothing (marker) and
-    // returns the same authoritative set
-    val r2b = hitSet(LshIndex.backfillDecontaminate(spark, store, bench2, idx, hits, 2L, mk))
+    // at-least-once replay of revision 2 rewrites its partition with the
+    // same hits and returns the same authoritative set
+    val r2b = hitSet(LshIndex.backfillDecontaminate(spark, store, bench2, idx, hits, 2L))
     assert(r2b == r2)
     // each revision partition stays a complete, separately-queryable answer
     assert(hitSet(spark.read.parquet(hits).filter(col("_batch") === 1L)) == r1)

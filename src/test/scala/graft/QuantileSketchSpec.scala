@@ -9,8 +9,8 @@ import graft.streaming.Loader
 /** Pins the maintained quantile sketch's laws (q285/q286):
   *  - SPLIT INVARIANCE: counts are linear, so the folded 4-batch feed
   *    equals the one-shot sketch exactly under any batch split;
-  *  - REPLAY ACROSS COMPACTION: a marker-less replay of a folded batch is
-  *    a no-op (rides the Loader feed frontier);
+  *  - REPLAY ACROSS COMPACTION: a replay of a folded batch is a no-op
+  *    (rides the Loader feed frontier);
   *  - STATE SIZE: the sketch is bucket-bounded by the VALUE DOMAIN
   *    (≤ 16 sub-buckets per octave per sign), never by row count;
   *  - ERROR LAW: the bucket id never overshoots the value, preserves its
@@ -42,13 +42,12 @@ class QuantileSketchSpec extends AnyFunSuite {
   test("replay across compaction is a no-op (feed frontier)") {
     val df = vals(1200)
     val feed = tmpDir("qsk-replay") + "/feed"
-    val mk = tmpDir("qsk-replay-mk")
     for (b <- 0L until 3L)
-      QuantileSketch.ingestBatch(df.filter(pmod(col("id"), lit(3L)) === b), "v", feed, b, mk)
+      QuantileSketch.ingestBatch(df.filter(pmod(col("id"), lit(3L)) === b), "v", feed, b)
     val want = skSet(QuantileSketch.fold(spark, feed))
     Loader.compactBatches(spark, feed)
-    new java.io.File(mk).listFiles().foreach(_.delete()) // restored checkpoint
-    QuantileSketch.ingestBatch(df.filter(pmod(col("id"), lit(3L)) === 1L), "v", feed, 1L, mk)
+    // restored checkpoint: batch 1 replays after the fold
+    QuantileSketch.ingestBatch(df.filter(pmod(col("id"), lit(3L)) === 1L), "v", feed, 1L)
     assert(skSet(QuantileSketch.fold(spark, feed)) == want,
       "marker-less replay across the fold duplicated sketch counts")
   }

@@ -77,17 +77,15 @@ class ZOrderStoreSpec extends AnyFunSuite {
       .map(i => (i, i % 64, (i / 64) % 64, s"t${i % 5}"))
       .toDF("event_id", "x", "y", "event_type")
     val store = tmpDir("zstore-replay") + "/feed"
-    val mk = tmpDir("zstore-replay-mk")
     for (b <- 0L until 3L)
       ZOrder.ingestBatchZ(ev.filter(pmod(col("event_id"), lit(3L)) === b),
-        col("x"), col("y"), bits = 6, files = 2, store, b, mk)
+        col("x"), col("y"), bits = 6, files = 2, store, b)
     val want = Loader.readTable(spark, store).count()
     ZOrder.compactZ(spark, store, col("x"), col("y"), bits = 6, files = 8,
       upTo = 2L)
-    // marker-less replay of a folded batch (restored old checkpoint)
-    new java.io.File(mk).listFiles().foreach(_.delete())
+    // replay of a folded batch (restored old checkpoint)
     ZOrder.ingestBatchZ(ev.filter(pmod(col("event_id"), lit(3L)) === 1L),
-      col("x"), col("y"), bits = 6, files = 2, store, 1L, mk)
+      col("x"), col("y"), bits = 6, files = 2, store, 1L)
     assert(Loader.readTable(spark, store).count() == want,
       "replay across the z-fold duplicated rows")
   }

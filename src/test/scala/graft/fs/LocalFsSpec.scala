@@ -169,7 +169,7 @@ class LocalFsSpec extends AnyFunSuite {
     forkFree {
       val q = Ingest.toBtcusdt(ms.toDF()).writeStream
         .option("checkpointLocation", cp)
-        .foreachBatch { (df: DataFrame, id: Long) => Loader.writeBatchIdempotent(df, table, id, s"$cp/markers") }
+        .foreachBatch { (df: DataFrame, id: Long) => Loader.writeBatchIdempotent(df, table, id) }
         .start()
       try (0 until 3).foreach { k =>
         ms.addData(TradeTick(k, "BTCUSDT", s"100.$k", "0.10000000", 1700000000000L + k, k % 2 == 0))

@@ -17,7 +17,7 @@ import graft.TestSpark.{spark, tmpDir}
   *   2. the next writer call recovers to pre-fold + new rows, with the
   *      fold either wholly undone (crash before commit) or wholly done
   *      (after), no `<dir>_compacting` and no compaction marker left;
-  *   3. a marker-less replay of a folded batch is a no-op.
+  *   3. a replay of a folded batch is a no-op.
   */
 class BatchLogSpec extends AnyFunSuite {
 
@@ -26,8 +26,6 @@ class BatchLogSpec extends AnyFunSuite {
   /** One layout, driven through its public entry points. */
   private abstract class Side(val name: String, val markers: BatchLog.Markers) {
     def append(dir: String, rows: DataFrame, batchId: Long): Unit
-    /** The write an old checkpoint's restore replays: its markers are gone. */
-    def replay(dir: String, rows: DataFrame, batchId: Long): Unit
     def compact(dir: String, upTo: Long): Unit
     def rows(dir: String): Set[(Long, Long)]
   }
@@ -36,7 +34,6 @@ class BatchLogSpec extends AnyFunSuite {
     private def spec(dir: String) = BucketedStore.StoreSpec(dir, Seq("k"), 4)
     def append(dir: String, rows: DataFrame, batchId: Long): Unit =
       BucketedStore.appendBatch(rows, spec(dir), batchId)
-    def replay(dir: String, rows: DataFrame, batchId: Long): Unit = append(dir, rows, batchId)
     def compact(dir: String, upTo: Long): Unit = BucketedStore.compact(spark, spec(dir), upTo)
     def rows(dir: String): Set[(Long, Long)] =
       BucketedStore.read(spark, spec(dir)).get.select("k", "v").collect()
@@ -44,13 +41,8 @@ class BatchLogSpec extends AnyFunSuite {
   }
 
   private val feed = new Side("feed", BatchLog.FeedMarkers) {
-    private def markersDir(dir: String) = dir + "-markers"
     def append(dir: String, rows: DataFrame, batchId: Long): Unit =
-      Loader.writeBatchIdempotent(rows, dir, batchId, markersDir(dir))
-    def replay(dir: String, rows: DataFrame, batchId: Long): Unit = {
-      new File(markersDir(dir)).listFiles().foreach(_.delete())
-      append(dir, rows, batchId)
-    }
+      Loader.writeBatchIdempotent(rows, dir, batchId)
     def compact(dir: String, upTo: Long): Unit = Loader.compactBatches(spark, dir, upTo)
     def rows(dir: String): Set[(Long, Long)] =
       Loader.readTable(spark, dir).select("k", "v").collect()
@@ -103,8 +95,8 @@ class BatchLogSpec extends AnyFunSuite {
         .filter(m => new File(dir, m).exists)
       assert(left.isEmpty, s"compaction markers left after '$step': $left")
 
-      side.replay(dir, batch(10, 20), 1L)
-      assert(side.rows(dir) == want, s"a marker-less replay of folded batch 1 after '$step' wrote rows")
+      side.append(dir, batch(10, 20), 1L) // the replay an old checkpoint's restore runs
+      assert(side.rows(dir) == want, s"a replay of folded batch 1 after '$step' wrote rows")
       // the fold still completes from the recovered state
       side.compact(dir, upTo = 9L)
       assert(partitions(dir).size == 1 && side.rows(dir) == want)
@@ -124,5 +116,42 @@ class BatchLogSpec extends AnyFunSuite {
         }
       }.toList
     assert(hits.isEmpty, s"fold through graft.streaming.BatchLog instead:\n${hits.mkString("\n")}")
+  }
+
+  /** The argument count of every call of `name` in `text` (not its defs). */
+  private def callArities(text: String, name: String): Seq[Int] =
+    s"(?<!def )\\b$name\\(".r.findAllMatchIn(text).map { m =>
+      var (i, depth, args, quoted) = (m.end, 1, 1, false)
+      while (depth > 0 && i < text.length) {
+        text(i) match {
+          case '"' => quoted = !quoted
+          case '(' | '[' | '{' if !quoted => depth += 1
+          case ')' | ']' | '}' if !quoted => depth -= 1
+          case ',' if !quoted && depth == 1 => args += 1
+          case _ =>
+        }
+        i += 1
+      }
+      args
+    }.toSeq
+
+  test("source guard: replay has no commit markers, no marker dir and no exclude-own-batch snapshot") {
+    def sources(dir: String) = {
+      val root = Paths.get(dir)
+      assert(Files.isDirectory(root), s"run from the repository root: $root")
+      Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }
+    val banned = """_committed_|markersDir|excludeBatch|graft_commits|commitMarkers""".r
+    val hits = sources("src/main/scala").flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if banned.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(hits.isEmpty, s"replay rests on the partition rewrite and the frontier:\n${hits.mkString("\n")}")
+    // the four-argument loader write survives only for a caller outside src/
+    val fourArg = sources("src").filter(p =>
+      callArities(new String(Files.readAllBytes(p), "UTF-8"), "writeBatchIdempotent").contains(4))
+    assert(fourArg.isEmpty, s"call the three-argument writeBatchIdempotent in: ${fourArg.mkString(", ")}")
+    assert(callArities("""t.load(f(a, b), dir, g(1), "x,y"); def load(a, b)""", "load") == Seq(4))
   }
 }

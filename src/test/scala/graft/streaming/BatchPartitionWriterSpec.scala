@@ -78,7 +78,7 @@ class BatchPartitionWriterSpec extends AnyFunSuite {
         feeds(s).foreach { case (what, df) =>
           val (v1, v2) = (tmp("bpw-v1"), tmp("bpw-v2"))
           v1Write(df, v1, 4L)
-          Loader.writeBatchIdempotent(df, v2, 4L, tmp("bpw-mk"))
+          Loader.writeBatchIdempotent(df, v2, 4L)
           val (a, b) = (s.read.parquet(v1), s.read.parquet(v2))
           assert(b.schema == a.schema, what)
           assert(b.collect().map(_.toString).sorted.toSeq == a.collect().map(_.toString).sorted.toSeq, what)
@@ -119,7 +119,7 @@ class BatchPartitionWriterSpec extends AnyFunSuite {
   test("an empty batch lands nothing; rewriting an id replaces its rows; a negative id lands") {
     import spark.implicits._
     val dir = tmp("bpw-ids")
-    Loader.writeBatchIdempotent(Seq.empty[(Long, Long)].toDF("k", "v"), dir, 0L, tmp("bpw-mk"))
+    Loader.writeBatchIdempotent(Seq.empty[(Long, Long)].toDF("k", "v"), dir, 0L)
     assert(partitions(dir).isEmpty && staging(dir).isEmpty)
     assert(Loader.readTableIfAny(spark, dir).isEmpty)
     def write(rows: Seq[(Long, Long)], id: Long): Unit =
@@ -168,7 +168,7 @@ class BatchPartitionWriterSpec extends AnyFunSuite {
     GraftSqlBridge.drainListenerBus(spark, 30000)
     spark.sparkContext.addSparkListener(l)
     try {
-      Loader.writeBatchIdempotent(df, dir, 1L, tmp("bpw-mk"))
+      Loader.writeBatchIdempotent(df, dir, 1L)
       GraftSqlBridge.drainListenerBus(spark, 30000)
     } finally spark.sparkContext.removeSparkListener(l)
     val files = sizes(dir).sum
